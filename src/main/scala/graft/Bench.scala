@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -14,11 +13,8 @@ import java.nio.file.{Files, Paths}
   * `BENCH_DETAIL.json` in the working directory; the final line carries
   * the total plus a fixed headline subset.
   *
-  * Materialization is a `noop`-format write, not `count()`: under a count
-  * Catalyst prunes every unreferenced column, so projection-only queries
-  * (t01, t08, q48, ...) would skip the very expressions being benchmarked,
-  * and `EliminateSorts` would drop final orderBys. The noop sink consumes
-  * every row and column at full width and writes nothing.
+  * Every take is [[GraftSession.Timer.take]], the same take QueryTime
+  * prints, so in-battery and fresh-JVM numbers measure one quantity.
   *
   * Session settings mirror the 100 TB posture scaled to one host:
   * shuffle partitions = cores (not 200), AQE on (runtime join re-planning
@@ -162,26 +158,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Experiment/deployment conf passthrough (r18 VERDICT #3 scale
-    // parameterization): "k=v;k=v" pairs applied on top of the fixed
-    // session settings. DEFAULT EMPTY — the driver's canonical bench runs
-    // exactly the historical session; A/B passes and cluster deployments
-    // set it explicitly, and the resolved values ride along in the
-    // BENCH_DETAIL env stamp either way.
-    val extraConf: Seq[(String, String)] =
-      sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "").split(';').toSeq
-        .map(_.trim).filter(_.contains("="))
-        .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    // SPARK_GRAFT_EXTRA_CONF ("k=v;k=v", default empty) reaches this session
+    // through GraftSession; the resolved values ride along in the
+    // BENCH_DETAIL env stamp.
+    val spark = GraftSession.build(cpus)
     // Pay one-time session costs (codegen compiler init, parquet footer
     // reads, shuffle service spin-up, noop-sink classloading) AND first-
     // touch JIT of the hot expression families (decimal aggregation,
@@ -214,56 +195,14 @@ object Bench {
     // unchanged trivial plans "regressing" 0.5 s → 8 s). Take 1 doubles
     // as the JIT/codegen warm-up for take 2; the min is the number with
     // signal. Both takes land in BENCH_DETAIL.json for the record.
-    // driver-side GC time attribution: a query whose wall time is mostly
-    // GC pause is a victim of accumulated session state, not a bad plan
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime).sum
-    }
-    // Stage-metric attribution for EVERY timed take (r6 judged wall-only
-    // numbers unusable: identical builds measured 70-128 s total). Executor
-    // CPU is work the plan actually did — host weather inflates wall and
-    // (less) executorRun, but not cpu — so cpu is the per-query REGRESSION
-    // metric; wall stays the headline the driver trend reads.
-    @volatile var execMs = 0L
-    @volatile var cpuNs = 0L
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        execMs += e.stageInfo.taskMetrics.executorRunTime
-        cpuNs += e.stageInfo.taskMetrics.executorCpuTime
-      }
-    })
-    def drainListenerBus(): Unit =
-      try { // listenerBus/waitUntilEmpty are private[spark] = public bytecode
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: ReflectiveOperationException => Thread.sleep(300) }
-    final case class Take(wall: Double, gc: Double, exec: Double, cpu: Double, ok: Boolean)
+    // Every timed take records driver GC and stage metrics (r6 judged
+    // wall-only numbers unusable: identical builds measured 70-128 s total).
+    val timer = new GraftSession.Timer(spark)
+    import GraftSession.Take
     def timeOnce(q: GraftQuery): Take = {
-      execMs = 0L; cpuNs = 0L
-      val g0 = gcMillis()
-      val t0 = System.nanoTime()
-      val ok =
-        try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] ${q.name}: ${e.getMessage}"); false }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // queries that persist() intermediates (d04's band keys) would
-      // otherwise leak cached blocks into every later query's GC budget;
-      // each query is timed standalone, so drop caches between them
-      spark.catalog.clearCache()
-      // r18 VERDICT #2 de-taint: the g16/g19 shared-HyperBall memo survives
-      // clearCache (localCheckpoint RDD blocks, not SQL cache), so without
-      // this the second sibling's published take read precomputed round
-      // frames. Cleared between takes ⇒ every take pays its own loop;
-      // Verify/production keep the sharing.
-      graft.operators.GraphQueries.clearSharedMemos()
-      // the async listener bus must be drained before reading the stage
-      // counters, or this take's metrics bleed into the next take's reset
-      drainListenerBus()
-      Take(elapsed, (gcMillis() - g0) / 1e3, execMs / 1e3, cpuNs / 1e9, ok)
+      val t = timer.take(q.fn(spark, sfDir))
+      t.error.foreach(e => System.err.println(s"[bench] ${q.name}: ${e.getMessage}"))
+      t
     }
     val takes = SparkEntry.registry.map { q =>
       val a = timeOnce(q); val b = timeOnce(q)
@@ -433,11 +372,9 @@ object Bench {
         val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
         val done = p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
         if (!done) { p.destroyForcibly(); System.err.println(s"[bench-requalify] $name: timed out") }
-        val take = ("""\[querytime\] \S+ take \d+: ([0-9.]+) s wall, ([0-9.]+) s executor, ([0-9.]+) s cpu""").r
         val cc = """\[querytime\] codecache: (.*)""".r
           .findFirstMatchIn(out).map(_.group(1).trim).getOrElse("unreported")
-        (take.findAllMatchIn(out).map(m =>
-          (m.group(1).toDouble, m.group(2).toDouble, m.group(3).toDouble)).toSeq, cc)
+        (GraftSession.parseTakes(out), cc)
       }
       try {
         if (prevWalls.isEmpty || weatherDegraded)
@@ -529,14 +466,9 @@ object Bench {
     // is not billed to the arbitrated query.
     val standalone = resultsPub.sortBy(-_._2).take(10).map { case (n, _) =>
       System.gc()
-      execMs = 0L; cpuNs = 0L
-      val t0 = System.nanoTime()
-      try byName(n).fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench-standalone] $n: ${e.getMessage}") }
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      drainListenerBus()
-      "\"" + n + "\":[" + r3(wall) + "," + r3(execMs / 1e3) + "," + r3(cpuNs / 1e9) + "]"
+      val t = timer.take(byName(n).fn(spark, sfDir))
+      t.error.foreach(e => System.err.println(s"[bench-standalone] $n: ${e.getMessage}"))
+      "\"" + n + "\":[" + r3(t.wall) + "," + r3(t.exec) + "," + r3(t.cpu) + "]"
     }.mkString("{", ",", "}")
     val nRequalified = requalified.count(_ == '{') - 1
     // Resolved env-driven knobs: published timings are not reproducible
@@ -546,7 +478,9 @@ object Bench {
       "advisoryPartitionSizeInBytes" -> conf("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
       "shufflePartitions" -> conf("spark.sql.shuffle.partitions"),
       "cpus" -> cpus,
-      "driverMem" -> sys.env.getOrElse("SPARK_DRIVER_MEM", "24g"),
+      "driverMem" -> java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.toArray.map(_.toString).find(_.startsWith("-Xmx"))
+        .map(_.stripPrefix("-Xmx")).getOrElse("unset"),
       "localDir" -> sys.props.getOrElse("spark.local.dir", "default"),
       "codeCache" -> sys.env.getOrElse("SPARK_GRAFT_CODECACHE", "768m"),
       // end-of-battery occupancy of THIS bench JVM (r17 advisory #2):

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Layout-equivalence gate: every registry query must return the identical
   * row set over the canonical single-file corpus and the partitioned
   * multi-file layout ([[graft.sources.Layout]]). This is the file-layout
@@ -26,15 +24,7 @@ object LayoutCheck {
     require(args.length >= 2, "usage: LayoutCheck <canonicalDir> <layoutDir> [name...]")
     val (canon, layout) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32), shufflePartitions = Some("32"))
 
     def canonical(name: String, dir: String): Seq[String] = {
       val df = SparkEntry.queries(name)(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes the SURVEY §9 partitioned multi-file layout of a fixture corpus.
   *
   * Usage: `sbt "runMain graft.LayoutGen <inDir> <outDir>"`
@@ -10,13 +8,8 @@ import org.apache.spark.sql.SparkSession
 object LayoutGen {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: LayoutGen <inDir> <outDir>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions at any core count: they set the layout's file counts
+    val spark = GraftSession.build(GraftSession.cpus(32), shufflePartitions = Some("32"))
     graft.sources.Layout.writeLayout(spark, args(0), args(1))
     println(s"[layoutgen] wrote partitioned layout: ${args(0)} -> ${args(1)}")
     spark.stop()

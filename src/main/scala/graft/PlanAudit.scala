@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Prints physical plans for representative queries plus automated checks
   * for the properties the 100 TB posture depends on: parquet filter
@@ -8,16 +8,48 @@ import org.apache.spark.sql.SparkSession
   * unbounded cartesian products. Run: `sbt "runMain graft.PlanAudit"`.
   */
 object PlanAudit {
+
+  /** Lazy `*Plan` twins of the entries that materialize while being built
+    * (d04/d10/d20/d21/m15 release their caches before returning; the
+    * g09/g15/g17 loops and u08/u10 fill or checkpoint at construction).
+    * Planning the registry fn would run the whole query and show an
+    * InMemoryTableScan instead of the real dataflow, so PlanAudit audits
+    * and PlanDump dumps these twins instead.
+    */
+  val lazyTwins: Map[String, (SparkSession, String) => DataFrame] = {
+    import graft.operators._
+    Map(
+      "d04_lsh_near_dups" -> (DedupQueries.lshNearDupsPlan(_: SparkSession, _: String)),
+      "d10_contamination" -> (DedupQueries.contaminationPlan(_: SparkSession, _: String)),
+      "d20_substring_duplication" -> (DedupQueries.substringDupPlan(_: SparkSession, _: String)),
+      "d21_span_removal" -> (DedupQueries.spanRemovalPlan(_: SparkSession, _: String)),
+      "m15_image_neardup" -> (MultimodalQueries.imageNearDupPlan(_: SparkSession, _: String)),
+      "g15_hits" -> (GraphQueries.hitsRankingPlan(_: SparkSession, _: String)),
+      "g17_weighted_pagerank" -> (GraphQueries.weightedPageRankPlan(_: SparkSession, _: String)),
+      "g09_personalized_pagerank" ->
+        (GraphQueries.personalizedPagerankPlan(_: SparkSession, _: String)),
+      "u08_deletion_vectors" -> (RelationalQueries.deletionVectorsPlan(_: SparkSession, _: String)),
+      "u10_wap_audit" -> (RelationalQueries.wapAuditPlan(_: SparkSession, _: String)))
+  }
+
+  /** Skipped from the whole-registry sweep: entries that execute real jobs
+    * while being planned or constructed. Iterative loops, streaming queries
+    * and d03's vocabulary rdd.zipWithIndex have loop-level structure that a
+    * static plan sweep cannot see; the [[lazyTwins]] keys are audited
+    * through their twins instead.
+    */
+  private val eager: Set[String] = Set("d03_minhash_signature", "d08_dup_clusters",
+    "s07_kmeans_centroids",
+    "t24_bpe_merges", "t25_bpe_segment", // BPE training rounds run at construction
+    "s14_kmeans_grid", // Lloyd rounds collect the codebook at construction
+    "p06_cluster_representative", // runs d08's label-propagation loop at construction
+    "st01_stream_tumbling", "st02_stream_sessions", "st03_stream_stream_join",
+    "st04_stream_tws_counts", "st05_stream_fmgws_sessions", "st06_stream_dedup",
+    "st07_stream_static_enrich", "st08_stream_sliding") ++ lazyTwins.keySet
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false") // stable plan text
-      .getOrCreate()
+    val spark = GraftSession.build("8", adaptive = false) // AQE off: stable plan text
     spark.sparkContext.setLogLevel("ERROR")
 
     val targets = Seq(
@@ -26,44 +58,14 @@ object PlanAudit {
       "q30_topk_per_group", "q33_price_deciles", "q65_top_purchasers",
       "q70_range_join", "q72_bloom_semi_join", "t10_tfidf", "d04_lsh_near_dups",
       "p01_curation_pipeline")
-    // Skipped from the whole-registry sweep: queries that execute real jobs
-    // while being planned or constructed (iterative loops, streaming
-    // queries, d03's vocabulary rdd.zipWithIndex); their structure is
-    // loop-level, not visible to a static plan sweep. d04/d10 materialize
-    // eagerly (so they can release their intermediate caches before
-    // returning) — auditing the registry fn would both run the full query
-    // and inspect an InMemoryTableScan instead of the real plan, so they
-    // are audited through their lazy `*Plan` twins below instead.
-    val eager = Set("d03_minhash_signature", "d08_dup_clusters", "s07_kmeans_centroids",
-      "t24_bpe_merges", "t25_bpe_segment", // BPE training rounds run at construction
-      "s14_kmeans_grid", // Lloyd rounds collect the codebook at construction
-      "p06_cluster_representative", // runs d08's label-propagation loop at construction
-      "d04_lsh_near_dups", "d10_contamination", "d20_substring_duplication",
-      "d21_span_removal", "m15_image_neardup",
-      "g15_hits", "g17_weighted_pagerank", // r18: per-level rank materialization
-      "g09_personalized_pagerank", // r19: keyed edge cache + round checkpoints
-      "u08_deletion_vectors", "u10_wap_audit", // r18 ADVICE #1: construction fills/checkpoints
-      "st01_stream_tumbling", "st02_stream_sessions", "st03_stream_stream_join",
-      "st04_stream_tws_counts", "st05_stream_fmgws_sessions", "st06_stream_dedup",
-      "st07_stream_static_enrich", "st08_stream_sliding")
-    val lazyTwins: Map[String, org.apache.spark.sql.DataFrame] = Map(
-      "d04_lsh_near_dups" -> graft.operators.DedupQueries.lshNearDupsPlan(spark, sfDir),
-      "d10_contamination" -> graft.operators.DedupQueries.contaminationPlan(spark, sfDir),
-      "d20_substring_duplication" -> graft.operators.DedupQueries.substringDupPlan(spark, sfDir),
-      "d21_span_removal" -> graft.operators.DedupQueries.spanRemovalPlan(spark, sfDir),
-      "m15_image_neardup" -> graft.operators.MultimodalQueries.imageNearDupPlan(spark, sfDir),
-      "g15_hits" -> graft.operators.GraphQueries.hitsRankingPlan(spark, sfDir),
-      "g17_weighted_pagerank" -> graft.operators.GraphQueries.weightedPageRankPlan(spark, sfDir),
-      "g09_personalized_pagerank" -> graft.operators.GraphQueries.personalizedPagerankPlan(spark, sfDir),
-      "u08_deletion_vectors" -> graft.operators.RelationalQueries.deletionVectorsPlan(spark, sfDir),
-      "u10_wap_audit" -> graft.operators.RelationalQueries.wapAuditPlan(spark, sfDir))
+    val twinFrames = lazyTwins.map { case (n, f) => n -> f(spark, sfDir) }
     // plan every audited query exactly once — planning is the expensive
     // step; the target flag lines and the global-window sweep below both
     // read from this map
     val allPlans: Map[String, org.apache.spark.sql.execution.SparkPlan] =
       (SparkEntry.registry.filterNot(q => eager(q.name)).map { q =>
         q.name -> SparkEntry.queries(q.name)(spark, sfDir).queryExecution.executedPlan
-      } ++ lazyTwins.map { case (n, df) => n -> df.queryExecution.executedPlan }).toMap
+      } ++ twinFrames.map { case (n, df) => n -> df.queryExecution.executedPlan }).toMap
     val plans: Map[String, String] = targets.map(n => n -> allPlans(n).toString).toMap
     // Non-empty PartitionFilters marker: "PartitionFilters: [" followed by
     // anything but a closing bracket. Real only over the partitioned layout

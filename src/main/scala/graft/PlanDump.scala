@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round plan capture: writes `.explain("formatted")` output
@@ -13,10 +12,9 @@ import java.nio.file.{Files, Paths}
   * captured at the BENCH corpus so join-strategy/AQE thresholds match the
   * measured configuration; SPARK_GRAFT_CPUS matches the bench session.)
   *
-  * Queries that materialize eagerly (d04/d10/d20/d21/m15 release their
-  * caches before returning; iterative loops run jobs at construction) are
-  * captured through the same lazy `*Plan` twins PlanAudit audits, so the
-  * dumped plan is the real dataflow, not an InMemoryTableScan.
+  * Queries that materialize eagerly are captured through
+  * [[PlanAudit.lazyTwins]], the twins PlanAudit audits, so the dumped plan
+  * is the real dataflow, not an InMemoryTableScan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -32,34 +30,11 @@ object PlanDump {
     val names = rest.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
-    val lazyTwins: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "d04_lsh_near_dups" ->
-        ((s: SparkSession, d: String) => graft.operators.DedupQueries.lshNearDupsPlan(s, d)),
-      "d10_contamination" -> graft.operators.DedupQueries.contaminationPlan _,
-      "d20_substring_duplication" -> graft.operators.DedupQueries.substringDupPlan _,
-      "d21_span_removal" -> graft.operators.DedupQueries.spanRemovalPlan _,
-      "m15_image_neardup" -> graft.operators.MultimodalQueries.imageNearDupPlan _,
-      "g15_hits" ->
-        ((s: SparkSession, d: String) => graft.operators.GraphQueries.hitsRankingPlan(s, d)),
-      "g17_weighted_pagerank" ->
-        ((s: SparkSession, d: String) => graft.operators.GraphQueries.weightedPageRankPlan(s, d)),
-      "g09_personalized_pagerank" ->
-        ((s: SparkSession, d: String) => graft.operators.GraphQueries.personalizedPagerankPlan(s, d)),
-      "u08_deletion_vectors" -> graft.operators.RelationalQueries.deletionVectorsPlan _,
-      "u10_wap_audit" -> graft.operators.RelationalQueries.wapAuditPlan _)
     names.foreach { name =>
       val df = (if (raw) SparkEntry.queries(name)
-                else lazyTwins.getOrElse(name, SparkEntry.queries(name)))(spark, sfDir)
+                else PlanAudit.lazyTwins.getOrElse(name, SparkEntry.queries(name)))(spark, sfDir)
       // queryExecution.explainString is what .explain("formatted") prints
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

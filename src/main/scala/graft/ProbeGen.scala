@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Nonlinearity-probe corpus: a K× replication of a fixture corpus with
@@ -43,13 +43,8 @@ object ProbeGen {
       "usage: ProbeGen <inDir> <outDir> <K> [hub]")
     val (inDir, outDir, k) = (args(0), args(1), args(2).toInt)
     val hubMode = args.length == 4
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions at any core count, as LayoutGen
+    val spark = GraftSession.build(GraftSession.cpus(32), shufflePartitions = Some("32"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val off = 10000000L // replica id offset; far above any fixture key
 
@@ -159,28 +154,17 @@ object WedgeProbe {
     val middleCap = args(0).toInt
     val takes = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32))
+    val timer = new GraftSession.Timer(spark)
     // candidate volume is the quantity the cap bounds — report it beside
     // wall time (at probe scales fixed session costs can drown the join)
     val cands = graft.operators.GraphQueries
       .wedgeCandidates(spark, sfDir, middleCap).count()
     println(s"[wedgeprobe] g14 cap=$middleCap wedge candidates: $cands")
     (1 to takes).foreach { i =>
-      val t0 = System.nanoTime()
-      graft.operators.GraphQueries.adamicAdar(spark, sfDir, middleCap)
-        .write.format("noop").mode("overwrite").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      println(f"[wedgeprobe] g14 cap=$middleCap take $i: $elapsed%.2f s wall")
+      val t = timer.take(graft.operators.GraphQueries.adamicAdar(spark, sfDir, middleCap))
+      t.error.foreach(e => throw e)
+      println(f"[wedgeprobe] g14 cap=$middleCap take $i: ${t.wall}%.2f s wall")
     }
     spark.stop()
   }
@@ -202,23 +186,12 @@ object HitsProbe {
     val broadcastRanks = args(0).toBoolean
     val takes = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32))
+    val timer = new GraftSession.Timer(spark)
     (1 to takes).foreach { i =>
-      val t0 = System.nanoTime()
-      graft.operators.GraphQueries.hitsRanking(spark, sfDir, broadcastRanks)
-        .write.format("noop").mode("overwrite").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      println(f"[hitsprobe] g15 broadcastRanks=$broadcastRanks take $i: $elapsed%.2f s wall")
+      val t = timer.take(graft.operators.GraphQueries.hitsRanking(spark, sfDir, broadcastRanks))
+      t.error.foreach(e => throw e)
+      println(f"[hitsprobe] g15 broadcastRanks=$broadcastRanks take $i: ${t.wall}%.2f s wall")
     }
     spark.stop()
   }
@@ -241,26 +214,15 @@ object AspectProbe {
     val batchShards = args(0).toLong
     val takes = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus(32))
+    val timer = new GraftSession.Timer(spark)
     val maxPart = graft.operators.MultimodalQueries
       .aspectBatchMaxPartition(spark, sfDir, batchShards)
     println(s"[aspectprobe] m14 batchShards=$batchShards max assembly partition rows: $maxPart")
     (1 to takes).foreach { i =>
-      val t0 = System.nanoTime()
-      graft.operators.MultimodalQueries.aspectBuckets(spark, sfDir, batchShards)
-        .write.format("noop").mode("overwrite").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      println(f"[aspectprobe] m14 batchShards=$batchShards take $i: $elapsed%.2f s wall")
+      val t = timer.take(graft.operators.MultimodalQueries.aspectBuckets(spark, sfDir, batchShards))
+      t.error.foreach(e => throw e)
+      println(f"[aspectprobe] m14 batchShards=$batchShards take $i: ${t.wall}%.2f s wall")
     }
     spark.stop()
   }

@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone re-measure tool: times one registry query N times outside the
-  * full bench, with the same session settings and noop materialization.
+  * full bench, with the bench's session and take ([[GraftSession]]).
   * In-bench single-shot timings swing severalfold with JIT first-touch and
   * host load (see BENCH_DETAIL.json's per-take records); this is the
   * arbiter for whether a per-query "regression" is real.
+  *
+  * Each take line is followed by that take's per-stage lines (executor
+  * run/cpu time, record volumes, spill and GC per stage), so a slow take
+  * can be attributed to a stage instead of a whole query.
   *
   * Usage: `sbt "runMain graft.QueryTime <query_name> [takes]"`
   * (SPARK_GRAFT_SF_DIR selects the corpus; defaults to sf0.1)
@@ -17,72 +19,14 @@ object QueryTime {
     val name = args(0)
     val takes = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same passthrough knob as Bench (r18 VERDICT #3): "k=v;k=v", default
-    // empty so plain takes replay the bench session exactly
-    val extraConf: Seq[(String, String)] =
-      sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "").split(';').toSeq
-        .map(_.trim).filter(_.contains("="))
-        .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))) { // experiment knob
-        case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Stage-level attribution separates "the plan is expensive" from "the
-    // host was busy": wall >> sum(executorRunTime)/32 means scheduler or
-    // CPU-steal latency; executorRunTime >> executorCpuTime means JIT/
-    // interpreter first-touch, not steady-state work. This is how the r04
-    // tr02 "reproducible 4.7 s" was diagnosed as correlated host noise
-    // (warm intrinsic cost: 1.7 s executor time, 0.44 s wall).
-    @volatile var execMs = 0L
-    @volatile var cpuNs = 0L
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        execMs += e.stageInfo.taskMetrics.executorRunTime
-        cpuNs += e.stageInfo.taskMetrics.executorCpuTime
-      }
-    })
+    val spark = GraftSession.build(GraftSession.cpus(32))
+    val timer = new GraftSession.Timer(spark)
     val fn = SparkEntry.queries(name)
     (1 to takes).foreach { i =>
-      execMs = 0L; cpuNs = 0L
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      // stop the clock BEFORE dropping caches — Bench.timeOnce does the
-      // same, so the two tools measure the same quantity
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // same memo-blind timing rule as Bench.timeOnce (r18 VERDICT #2):
-      // each take pays its own shared-HyperBall loop
-      graft.operators.GraphQueries.clearSharedMemos()
-      // Drain the async listener bus before reading the counters — a sleep
-      // alone can lose stage metrics to the NEXT take's reset on a loaded
-      // host (exactly the condition this tool diagnoses). listenerBus /
-      // waitUntilEmpty are private[spark], which compiles to public
-      // bytecode — reflection reaches them; fall back to a sleep if the
-      // internals move.
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch {
-        case _: ReflectiveOperationException =>
-          // On a loaded host the sleep path can lose stage metrics to the
-          // next take's reset — mark the take so its executor/cpu split is
-          // read as suspect rather than silently misattributed.
-          println(s"[querytime] WARN listener-bus drain fell back to sleep; " +
-            s"take $i executor/cpu numbers are suspect")
-          Thread.sleep(300)
-      }
-      println(f"[querytime] $name take $i: $elapsed%.2f s wall, ${execMs / 1e3}%.2f s executor, ${cpuNs / 1e9}%.2f s cpu")
+      val t = timer.take(fn(spark, sfDir))
+      t.error.foreach(e => throw e)
+      println(GraftSession.takeLine(name, i, t))
+      t.stages.foreach(s => println(GraftSession.stageLine(s)))
     }
     // Code-cache forensics line (r17 advisory #2): captured by the bench
     // requalifier into the published record, so a fresh-JVM cpu storm

@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only probe: verify every fixture table loads and print schemas. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("4")
     println(s"== entry rows=${SparkEntry.entry(spark).count()}")
     val dir = "/root/testdata/sf0.001"
     graft.sources.Tables.names.foreach { n =>

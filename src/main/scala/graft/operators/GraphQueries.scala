@@ -362,7 +362,7 @@ object GraphQueries {
       // ≈ the SQL form's (13-17 s vs 16-19 s) — its real win is WALL
       // (in-bench 7.4 → ~2.8-4.0 s) from building/partitioning the edge
       // list once and keeping every round's join narrow.
-      // r9 phase attribution (graft.ProfileG01, warm takes): of ~6-9 s
+      // r9 phase attribution (warm takes): of ~6-9 s
       // in-query cpu, the relational edge derivation (orders⋈lineitem →
       // distinct → degree join) is ~2.6-2.8 s, the .rdd pack + partitionBy
       // + persist ~2 s, nodeDeg ~0.5 s, and the 2-iteration loop itself
@@ -1132,45 +1132,14 @@ object GraphQueries {
     * map-side-combined blob merges — O(E) per round, the posture both
     * registry docs claim. Returns the four per-round register frames
     * (h = 0..3, each localCheckpointed so downstream readers never re-run
-    * the loop) plus the estimate-reading udf.
-    *
-    * Memoized per (session, dir) — r17 ADVICE #2: g16 and g19 both read
-    * the SAME four round frames, and the loop runs eagerly at
-    * construction, so without the memo a session running both paid the
-    * full 4-round loop and edge persist twice. The checkpointed frames
-    * are RDD-block-backed (localCheckpoint, not SQL cache), so
-    * `clearCache()` between bench entries does not invalidate them; the
-    * memo holds ≤ 4 node-sized 512 B/row frames per corpus dir for the
-    * session's lifetime — the deliberate cost of sharing. The edge frame
+    * the loop) plus the estimate-reading udf. g16 and g19 each run their
+    * own loop: the round frames are localCheckpoint RDD blocks that
+    * `clearCache()` does not release, so sharing them across entries would
+    * hand one entry's take the other's precomputed rounds. The edge frame
     * itself is unpersisted before returning: every round is already
     * eagerly checkpointed, so no downstream reader needs it.
     */
-  private val hyperballMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Seq[DataFrame], org.apache.spark.sql.expressions.UserDefinedFunction)]()
-
-  /** Drops the g16/g19 shared-HyperBall memo (r18 VERDICT #2 de-taint):
-    * the memo is keyed on (session, dir) and its checkpointed round frames
-    * survive `clearCache()` between bench entries, so without this hook the
-    * SECOND sibling's published take read precomputed frames — ~14 cpu-s of
-    * real HyperBall work invisible to the bench. Bench.timeOnce and
-    * QueryTime call this between takes so every published take pays its own
-    * loop; Verify and production paths never call it, keeping the
-    * legitimate one-loop-per-(session, dir) sharing there. The dropped
-    * frames are localCheckpoint RDD blocks — the ContextCleaner reaps them
-    * once the DataFrame references are GC'd.
-    */
-  private[graft] def clearSharedMemos(): Unit = hyperballMemo.clear()
-
-  /** Memo size probe for the de-taint spec (memo-blind timing pin). */
-  private[graft] def sharedMemoSize: Int = hyperballMemo.size()
-
   private def hyperballRounds(s: SparkSession, dir: String):
-      (Seq[DataFrame], org.apache.spark.sql.expressions.UserDefinedFunction) =
-    hyperballMemo.computeIfAbsent((s, dir),
-      _ => hyperballRoundsUncached(s, dir))
-
-  private def hyperballRoundsUncached(s: SparkSession, dir: String):
       (Seq[DataFrame], org.apache.spark.sql.expressions.UserDefinedFunction) = {
     // KEYED sym cache (r19, §2.4): every merge round joins sym on dst, so
     // the cache materializes under hashpartitioning(dst) and the three

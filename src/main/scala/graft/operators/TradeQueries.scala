@@ -59,7 +59,7 @@ object TradeQueries {
   val all: Seq[GraftQuery] = Seq(
     rowsOnly(
       "tr00_pipeline_throughput",
-      "full reference pipeline (generate → envelope encode → template decode → per-ticker windowed stats) over 1M trades — the throughput headline vs the reference's ~12 rec/s envelope (BASELINE.md); no oracle: the throughput run is the point, and each stage is gated elsewhere (tr01 oracle-replays the generation, tr02 the codec counts — on the REAL interpreted from_json consumer, oracle-backed — StreamingSpec the pipeline). r10 arbitration of r9's apparent 3.3× in-bench regression (0.73→2.40 s, same round the generator went hash-indexed): fresh-JVM QueryTime warm takes read 0.92–1.17 s wall / 14–24 s cpu, and ProfileTr00 phase attribution put generation at only ~0.6 s cpu of it — the double Jackson pass dominated (to_json ~13 s cpu interpreted CodegenFallback, from_json ~+3 s; the hash-indexed generator was NOT the regression). r10 removed the producer term: Envelope.encodeFast, a concat-of-casts template that CodecSpec proves BYTE-IDENTICAL to to_json over the full generated domain (Spark's number casts share Jackson's toString rendering; tickers/types are escape-free) while staying inside whole-stage codegen. r19 removed the consumer term the same way: Envelope.decodeFast slices the template back out with locate/substr expressions CodecSpec proves ROW-IDENTICAL to the PERMISSIVE from_json over the same domain (casts share Jackson's correctly-rounded number parse), guarded by a loud raise_error on any non-template payload; wire bytes are unchanged and tr02 keeps the real Jackson consumer as the oracle-backed codec-contract entry")(
+      "full reference pipeline (generate → envelope encode → template decode → per-ticker windowed stats) over 1M trades — the throughput headline vs the reference's ~12 rec/s envelope (BASELINE.md); no oracle: the throughput run is the point, and each stage is gated elsewhere (tr01 oracle-replays the generation, tr02 the codec counts — on the REAL interpreted from_json consumer, oracle-backed — StreamingSpec the pipeline). r10 arbitration of r9's apparent 3.3× in-bench regression (0.73→2.40 s, same round the generator went hash-indexed): fresh-JVM QueryTime warm takes read 0.92–1.17 s wall / 14–24 s cpu, and phase attribution put generation at only ~0.6 s cpu of it — the double Jackson pass dominated (to_json ~13 s cpu interpreted CodegenFallback, from_json ~+3 s; the hash-indexed generator was NOT the regression). r10 removed the producer term: Envelope.encodeFast, a concat-of-casts template that CodecSpec proves BYTE-IDENTICAL to to_json over the full generated domain (Spark's number casts share Jackson's toString rendering; tickers/types are escape-free) while staying inside whole-stage codegen. r19 removed the consumer term the same way: Envelope.decodeFast slices the template back out with locate/substr expressions CodecSpec proves ROW-IDENTICAL to the PERMISSIVE from_json over the same domain (casts share Jackson's correctly-rounded number parse), guarded by a loud raise_error on any non-template payload; wire bytes are unchanged and tr02 keeps the real Jackson consumer as the oracle-backed codec-contract entry")(
       (s, dir) => {
         // 1M trades for the sf0.1 bench; a lighter volume for the
         // correctness pass (its output is scale-independent: 25 tickers)

@@ -44,8 +44,8 @@ object Envelope {
   /** Codegen'd producer fast path for well-formed trade rows.
     *
     * `to_json` is a CodegenFallback — the Jackson kernel runs interpreted
-    * and dominated tr00's profile (~13 s of its ~16 s warm cpu,
-    * ProfileTr00). For the generated-trade domain the wire bytes are a
+    * and dominated tr00's profile (~13 s of its ~16 s warm cpu).
+    * For the generated-trade domain the wire bytes are a
     * fixed five-field template whose only dynamic parts are two
     * escape-free strings (tickers are [A-Z.], types BUY/SELL) and three
     * numbers — and Spark's number→string casts share Jackson's
@@ -100,7 +100,7 @@ object Envelope {
     *
     * The decode mirror of [[encodeFast]] (r19, guide §4.1 prefer-codegen):
     * `from_json` is a CodegenFallback — the interpreted Jackson kernel was
-    * tr00's largest remaining cpu term (~6-7 of ~14 warm cpu-s, ProfileTr00)
+    * tr00's largest remaining cpu term (~6-7 of ~14 warm cpu-s)
     * — but the trade wire record is the fixed five-field template
     * [[encodeFast]] emits (and CodecSpec proves [[encode]] emits the same
     * bytes), so the fields can be sliced back out with `locate`/`substr`

@@ -36,10 +36,9 @@ object EventStreams {
     */
   def withRocksDBStateStore[T](s: SparkSession)(body: => T): T = {
     // provider + changelog checkpointing together (r19, guide §5 / r18
-    // VERDICT #4): [[Sinks.configureRocksDbState]] has always documented
-    // changelog checkpointing as the deploy posture, but this registry
-    // wrapper only set the provider — so every micro-batch commit uploaded
-    // a FULL RocksDB snapshot instead of the batch's delta. Same results
+    // VERDICT #4): changelog checkpointing is the deploy posture for the
+    // RocksDB provider; with the provider alone every micro-batch commit
+    // uploaded a FULL RocksDB snapshot instead of the batch's delta. Same results
     // (checkpoint mechanics only); st19 A/B best-warm cpu 19.8 → 17.5 s.
     val keys = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Exactly-once-shaped sinks (SURVEY.md §7 M5).
@@ -30,16 +30,4 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
-
-  /** Deployment-scale streaming-state configuration: RocksDB state store
-    * (off-heap, spillable — required once keyed state outgrows executor
-    * heap at 100 TB) plus changelog checkpointing. Local test runs keep
-    * the default in-memory provider; this is the switch a cluster deploy
-    * flips.
-    */
-  def configureRocksDbState(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-  }
 }
