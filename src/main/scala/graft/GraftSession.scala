@@ -31,6 +31,8 @@ object GraftSession {
     * LayoutCheck and ProbeGen's generator pin 32.
     * `SPARK_GRAFT_EXTRA_CONF` applies last, over every setting here. It is
     * empty by default, so a plain run replays the historical session.
+    * Local streaming checkpoints go through
+    * [[streaming.LocalCheckpointFileManager]] unless the conf names a manager.
     */
   def build(cores: String, shufflePartitions: Option[String] = None,
       adaptive: Boolean = true): SparkSession = {
@@ -45,6 +47,7 @@ object GraftSession {
       .foldLeft(fixed) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    streaming.LocalCheckpointFileManager.install(spark)
     spark
   }
 

@@ -17,24 +17,33 @@ object Observability {
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** Per-micro-batch progress logger; returns the listener so callers
-    * (tests, harnesses) can remove it again.
+  /** Logs each micro-batch's `StreamingQueryProgress` as one compact JSON
+    * line: input rows and rates, the `durationMs` phases (offsets, planning,
+    * WAL, addBatch, commit) and `stateOperators` (rows, memory,
+    * `commitTimeMs`). The last line is kept on the listener so tests and
+    * harnesses can assert on it.
     */
-  def attachProgressLogger(spark: SparkSession): StreamingQueryListener = {
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        log.info(s"stream started: name=${e.name} id=${e.id}")
+  final class ProgressLogger extends StreamingQueryListener {
+    @volatile var lastProgress: Option[String] = None
 
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        log.info(s"stream progress: name=${p.name} batch=${p.batchId} " +
-          s"rows=${p.numInputRows} rows/s=${p.processedRowsPerSecond} " +
-          s"durationMs=${p.batchDuration}")
-      }
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      log.info(s"stream started: name=${e.name} id=${e.id}")
 
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        log.info(s"stream terminated: id=${e.id} exception=${e.exception.getOrElse("none")}")
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val line = e.progress.json
+      lastProgress = Some(line)
+      log.info(line)
     }
+
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      log.info(s"stream terminated: id=${e.id} exception=${e.exception.getOrElse("none")}")
+  }
+
+  /** Register a [[ProgressLogger]]; returns it so callers (tests,
+    * harnesses) can read its last line and remove it again.
+    */
+  def attachProgressLogger(spark: SparkSession): ProgressLogger = {
+    val listener = new ProgressLogger
     spark.streams.addListener(listener)
     listener
   }

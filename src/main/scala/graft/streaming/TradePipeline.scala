@@ -22,6 +22,7 @@ object TradePipeline {
     */
   def produce(spark: SparkSession, io: StreamIO, checkpoint: String,
       rowsPerSecond: Int = 10): StreamingQuery = {
+    LocalCheckpointFileManager.install(spark)
     val envelope = Envelope.encode(TradeSource.tradeStream(spark, rowsPerSecond).toDF())
     io.write(envelope, checkpoint)
   }
@@ -52,7 +53,8 @@ object TradePipeline {
     * tests and local smoke (K4's console analogue is `format("console")`).
     */
   def consume(spark: SparkSession, io: StreamIO, queryName: String,
-      trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("2 seconds")): StreamingQuery = {
+    LocalCheckpointFileManager.install(spark)
     tickerStats(ingest(io.read(spark)))
       .writeStream
       .outputMode("update")
@@ -60,4 +62,5 @@ object TradePipeline {
       .queryName(queryName)
       .trigger(trigger)
       .start()
+  }
 }

@@ -26,8 +26,16 @@ class StreamingSpec extends SparkSpec {
     val listener = Observability.attachProgressLogger(spark) // O4 telemetry path
     val q = TradePipeline.consume(spark, io, "trade_stats",
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    try assert(q.awaitTermination(120000), "trade pipeline did not finish in time")
-    finally { q.stop(); spark.streams.removeListener(listener) }
+    val progress =
+      try {
+        assert(q.awaitTermination(120000), "trade pipeline did not finish in time")
+        // listener events are delivered asynchronously: wait for the last batch's line
+        val last = s""""batchId":${q.lastProgress.batchId},"""
+        val deadline = System.currentTimeMillis() + 30000
+        while (!listener.lastProgress.exists(_.contains(last)) && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        listener.lastProgress
+      } finally { q.stop(); spark.streams.removeListener(listener) }
 
     val streamed = spark.table("trade_stats")
       .groupBy("tickerSymbol").agg(sum("n_trades").as("n"))
@@ -35,6 +43,74 @@ class StreamingSpec extends SparkSpec {
     val batch = trades.groupBy("tickerSymbol").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(streamed == batch)
+
+    // the progress line is one JSON object carrying the batch phases and the state commit time
+    assert(progress.isDefined, "progress logger saw no micro-batch of the final batch")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(progress.get)
+    assert(json.path("durationMs").has("walCommit"), s"no durationMs.walCommit in ${progress.get}")
+    assert(json.path("stateOperators").path(0).has("commitTimeMs"),
+      s"no stateOperators[0].commitTimeMs in ${progress.get}")
+  }
+
+  test("trade consumer restarts across checkpoint file managers: state and checksums carry over, exactly once") {
+    // Three runs of the consumer transform on one checkpoint, input appended
+    // before each: run 1 under Spark's FileContext manager, run 2 with the
+    // key unset so `install` applies (as TradePipeline.consume does), run 3
+    // under FileContext again. Every envelope has the same arrival time, so
+    // each run's updates must fold into state that the previous run wrote
+    // and checksummed under the other manager. The memory sink refuses to
+    // restart in update mode, so a foreachBatch sink records each update.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    import org.apache.spark.sql.expressions.Window
+    val key = LocalCheckpointFileManager.ConfKey
+    val fileContext = Some(classOf[FileContextBasedCheckpointFileManager].getName)
+    val prev = spark.conf.getOption(key)
+    val root = tmp("graft-ckpt-managers")
+    val (data, ckpt, out) = (s"$root/data", s"$root/ckpt", s"$root/out")
+    val io = new FileStreamIO(data)
+    def append(seed: Long): Unit =
+      Envelope.encode(TradeSource.trades(spark, 2000, partitions = 2, seed = seed).toDF())
+        .withColumn("approximateArrivalTimestamp", lit("2026-01-01 00:00:00.500").cast("timestamp"))
+        .write.mode("append").json(data)
+    def run(manager: Option[String]): Unit = {
+      manager.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      LocalCheckpointFileManager.install(spark)
+      val q = TradePipeline.tickerStats(TradePipeline.ingest(io.read(spark)))
+        .writeStream
+        .outputMode("update")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          b.withColumn("batch", lit(id)).write.mode("append").parquet(out); ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try assert(q.awaitTermination(120000), "checkpointed trade consumer did not finish")
+      finally q.stop()
+    }
+    try {
+      append(1); run(fileContext)
+      assert(spark.conf.get(key) == fileContext.get)
+      append(2); run(None)
+      assert(spark.conf.get(key) == classOf[LocalCheckpointFileManager].getName)
+      append(3); run(fileContext)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    // an update carries the running totals: the latest one per key is final
+    val cols = Seq("window", "tickerSymbol", "n_trades", "sum_qty", "min_price", "max_price")
+    val latest = Window.partitionBy("window", "tickerSymbol").orderBy(desc("batch"))
+    val streamed = spark.read.parquet(out)
+      .withColumn("rank", row_number().over(latest)).filter(col("rank") === 1)
+      .select(cols.map(col): _*)
+    val batch = TradePipeline.tickerStats(Envelope.decode(spark.read.schema(Envelope.schema).json(data)))
+      .select(cols.map(col): _*)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(streamed) == rows(batch), "restarted totals differ from the batch totals over all input")
+    assert(batch.agg(sum("n_trades")).head().getLong(0) == 6000)
+    // Spark's checkpoint checksum sidecars were written (and so read back on restart)
+    val stateFiles = new java.io.File(s"$ckpt/state/0/0").list().toSeq
+    assert(stateFiles.exists(_.matches("""\d+\.delta\.crc""")),
+      s"no state checksum files in ${stateFiles.sorted.mkString(",")}")
   }
 
   private def eventStream() = {
