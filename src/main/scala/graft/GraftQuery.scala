@@ -13,6 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                the ScalaTest suite instead.
   * @param fn      the Spark-first implementation; receives the scale-factor
   *                directory holding the parquet tables.
+  * @param plan    the lazy plan twin of an entry that materializes while
+  *                it is built (see [[sqlEager]]): the same dataflow with no
+  *                persist, count or checkpoint, so building and planning it
+  *                runs no job. PlanAudit audits and PlanDump dumps it in
+  *                place of `fn`. None for every other entry.
   *
   * Conventions that make the driver's hash-compare deterministic:
   *   - every result ends with an `orderBy` on a unique key set, mirrored by
@@ -27,13 +32,24 @@ final case class GraftQuery(
     name: String,
     doc: String,
     oracle: Option[String],
-    fn: (SparkSession, String) => DataFrame
+    fn: (SparkSession, String) => DataFrame,
+    plan: Option[(SparkSession, String) => DataFrame] = None
 )
 
 object GraftQuery {
   def sql(name: String, doc: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): GraftQuery =
     GraftQuery(name, doc, Some(oracle.stripMargin.trim), fn)
+
+  /** An entry whose body materializes while it is built, declared once
+    * against a [[Materialize]] scope: `fn` runs the body with a fresh eager
+    * scope, `plan` runs it with the lazy one.
+    */
+  def sqlEager(name: String, doc: String, oracle: String)(
+      body: (SparkSession, String, Materialize) => DataFrame): GraftQuery =
+    GraftQuery(name, doc, Some(oracle.stripMargin.trim),
+      (s, dir) => body(s, dir, Materialize.eager()),
+      Some((s, dir) => body(s, dir, Materialize.Lazy)))
 
   def rowsOnly(name: String, doc: String)(
       fn: (SparkSession, String) => DataFrame): GraftQuery =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Prints physical plans for representative queries plus automated checks
   * for the properties the 100 TB posture depends on: parquet filter
   * pushdown, pruned read schemas, broadcast joins on dims, and no
@@ -9,34 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PlanAudit {
 
-  /** Lazy `*Plan` twins of the entries that materialize while being built
-    * (d04/d10/d20/d21/m15 release their caches before returning; the
-    * g09/g15/g17 loops and u08/u10 fill or checkpoint at construction).
-    * Planning the registry fn would run the whole query and show an
-    * InMemoryTableScan instead of the real dataflow, so PlanAudit audits
-    * and PlanDump dumps these twins instead.
-    */
-  val lazyTwins: Map[String, (SparkSession, String) => DataFrame] = {
-    import graft.operators._
-    Map(
-      "d04_lsh_near_dups" -> (DedupQueries.lshNearDupsPlan(_: SparkSession, _: String)),
-      "d10_contamination" -> (DedupQueries.contaminationPlan(_: SparkSession, _: String)),
-      "d20_substring_duplication" -> (DedupQueries.substringDupPlan(_: SparkSession, _: String)),
-      "d21_span_removal" -> (DedupQueries.spanRemovalPlan(_: SparkSession, _: String)),
-      "m15_image_neardup" -> (MultimodalQueries.imageNearDupPlan(_: SparkSession, _: String)),
-      "g15_hits" -> (GraphQueries.hitsRankingPlan(_: SparkSession, _: String)),
-      "g17_weighted_pagerank" -> (GraphQueries.weightedPageRankPlan(_: SparkSession, _: String)),
-      "g09_personalized_pagerank" ->
-        (GraphQueries.personalizedPagerankPlan(_: SparkSession, _: String)),
-      "u08_deletion_vectors" -> (RelationalQueries.deletionVectorsPlan(_: SparkSession, _: String)),
-      "u10_wap_audit" -> (RelationalQueries.wapAuditPlan(_: SparkSession, _: String)))
-  }
-
   /** Skipped from the whole-registry sweep: entries that execute real jobs
     * while being planned or constructed. Iterative loops, streaming queries
     * and d03's vocabulary rdd.zipWithIndex have loop-level structure that a
-    * static plan sweep cannot see; the [[lazyTwins]] keys are audited
-    * through their twins instead.
+    * static plan sweep cannot see. Entries declared with a lazy `plan` twin
+    * (`GraftQuery.sqlEager`) are audited through that twin instead, so
+    * planning never runs their materialization.
     */
   private val eager: Set[String] = Set("d03_minhash_signature", "d08_dup_clusters",
     "s07_kmeans_centroids",
@@ -45,7 +21,7 @@ object PlanAudit {
     "p06_cluster_representative", // runs d08's label-propagation loop at construction
     "st01_stream_tumbling", "st02_stream_sessions", "st03_stream_stream_join",
     "st04_stream_tws_counts", "st05_stream_fmgws_sessions", "st06_stream_dedup",
-    "st07_stream_static_enrich", "st08_stream_sliding") ++ lazyTwins.keySet
+    "st07_stream_static_enrich", "st08_stream_sliding")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -58,14 +34,13 @@ object PlanAudit {
       "q30_topk_per_group", "q33_price_deciles", "q65_top_purchasers",
       "q70_range_join", "q72_bloom_semi_join", "t10_tfidf", "d04_lsh_near_dups",
       "p01_curation_pipeline")
-    val twinFrames = lazyTwins.map { case (n, f) => n -> f(spark, sfDir) }
     // plan every audited query exactly once — planning is the expensive
     // step; the target flag lines and the global-window sweep below both
     // read from this map
     val allPlans: Map[String, org.apache.spark.sql.execution.SparkPlan] =
-      (SparkEntry.registry.filterNot(q => eager(q.name)).map { q =>
-        q.name -> SparkEntry.queries(q.name)(spark, sfDir).queryExecution.executedPlan
-      } ++ twinFrames.map { case (n, df) => n -> df.queryExecution.executedPlan }).toMap
+      SparkEntry.registry.filterNot(q => eager(q.name)).map { q =>
+        q.name -> q.plan.getOrElse(q.fn)(spark, sfDir).queryExecution.executedPlan
+      }.toMap
     val plans: Map[String, String] = targets.map(n => n -> allPlans(n).toString).toMap
     // Non-empty PartitionFilters marker: "PartitionFilters: [" followed by
     // anything but a closing bracket. Real only over the partitioned layout

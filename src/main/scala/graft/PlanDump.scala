@@ -12,9 +12,9 @@ import java.nio.file.{Files, Paths}
   * captured at the BENCH corpus so join-strategy/AQE thresholds match the
   * measured configuration; SPARK_GRAFT_CPUS matches the bench session.)
   *
-  * Queries that materialize eagerly are captured through
-  * [[PlanAudit.lazyTwins]], the twins PlanAudit audits, so the dumped plan
-  * is the real dataflow, not an InMemoryTableScan.
+  * Queries that materialize eagerly are captured through their registry
+  * `plan` twin, the one PlanAudit audits, so the dumped plan is the real
+  * dataflow, not an InMemoryTableScan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -32,9 +32,10 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build(GraftSession.cpus(32))
     spark.sparkContext.setLogLevel("ERROR")
+    val registry = SparkEntry.registry.map(q => q.name -> q).toMap
     names.foreach { name =>
-      val df = (if (raw) SparkEntry.queries(name)
-                else PlanAudit.lazyTwins.getOrElse(name, SparkEntry.queries(name)))(spark, sfDir)
+      val q = registry(name)
+      val df = (if (raw) q.fn else q.plan.getOrElse(q.fn))(spark, sfDir)
       // queryExecution.explainString is what .explain("formatted") prints
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.GraftQuery
-import graft.GraftQuery.{rowsOnly, sql}
+import graft.{GraftQuery, Materialize}
+import graft.GraftQuery.{rowsOnly, sql, sqlEager}
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.functions.VectorFunctions._
 import graft.sources.Tables
@@ -168,21 +168,13 @@ object DedupQueries {
     * bit-exact. At 100 TB the deployment config sets it (64 is the
     * documented starting point); SkewSpec measures the mechanism on a
     * planted flood corpus, alongside the AQE skew-split it composes with.
+    *
+    * The eager scope (default) materializes the result and releases the
+    * band/candidate caches before returning; [[Materialize.Lazy]] gives the
+    * same expression tree with no persist/count, for plan audits.
     */
   def lshNearDups(s: SparkSession, dir: String, threshold: Double = 0.5,
-      bucketCap: Int = 0): DataFrame =
-    lshNearDupsImpl(s, dir, threshold, materialize = true, bucketCap)
-
-  /** Lazy twin of [[lshNearDups]] for plan auditing: same expression tree,
-    * no persist/count (the production entry materializes eagerly so it can
-    * release its band/candidate caches before returning — which would make
-    * a static audit inspect an InMemoryTableScan instead of the real plan).
-    */
-  private[graft] def lshNearDupsPlan(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    lshNearDupsImpl(s, dir, threshold, materialize = false)
-
-  private def lshNearDupsImpl(s: SparkSession, dir: String, threshold: Double,
-      materialize: Boolean, bucketCap: Int = 0): DataFrame = {
+      bucketCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
     // 3-gram shingles, not unigram token sets: with a small vocabulary every
     // document shares nearly all unigrams, so only shingle sets separate
     // near-duplicates from unrelated docs. The fused ShingleMinHash
@@ -201,14 +193,14 @@ object DedupQueries {
       .select(col("doc_id"),
         posexplode(HashFunctions.shingleMinHashBands(toks, k = 32, n = 3, bands = 16, rows = 2))
           .as(Seq("band", "key")))
-    val banded = if (materialize) banded0.persist() else banded0
+    val banded = m.persist(banded0)
     // Materialization barrier (the g02 lesson): the self-join's two leg
     // stages submit concurrently, and against an unfilled cache each would
     // run the minhash kernel — exactly what the persist is here to avoid.
     // The barrier's count doubles as the size estimate for the candidate
     // cache below (band rows = 16 × docs bound the colliding-pair set in a
     // non-degenerate corpus).
-    val bandedRows = if (materialize) banded.count() else 0L
+    val bandedRows = m.count(banded)
     // df-cap prefilter (see lshNearDups scaladoc): one keyed bucket count
     // + anti-join removes flood buckets BEFORE the quadratic self-join —
     // the 16-24 B band rows shuffle once either way, so the cap costs one
@@ -230,8 +222,7 @@ object DedupQueries {
     // join a full round of empty tasks. Sized from the barrier's band-row
     // count, not a constant: 1 partition at bench scale, growing with the
     // corpus instead of funneling a 100 TB candidate set through one core.
-    val candidates =
-      if (materialize) candidates0.coalesce(cacheParts(bandedRows)).persist() else candidates0
+    val candidates = m.persist(candidates0, cacheParts(bandedRows))
     // shingle sets only for documents appearing in some candidate pair, so
     // the exact-Jaccard verification cost scales with candidates, not corpus
     val candIds = candidates
@@ -242,7 +233,7 @@ object DedupQueries {
     // `spark.catalog.clearCache()`), then drop the band/candidate blocks:
     // returning a lazy frame over them would leak both caches into the
     // caller's session until the ContextCleaner got around to them.
-    val out = candidates
+    m.result(candidates
       .join(sets.select(col("doc_id").as("id_a"), col("tokset").as("ts_a")), "id_a")
       .join(sets.select(col("doc_id").as("id_b"), col("tokset").as("ts_b")), "id_b")
       .withColumn("inter", size(array_intersect(col("ts_a"), col("ts_b"))))
@@ -250,15 +241,7 @@ object DedupQueries {
         col("inter") * lit(1.0) / (size(col("ts_a")) + size(col("ts_b")) - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), r4(col("jaccard")).as("jaccard"))
-      .orderBy("id_a", "id_b")
-    if (!materialize) out
-    else {
-      val cached = out.persist()
-      cached.count()
-      banded.unpersist()
-      candidates.unpersist()
-      cached
-    }
+      .orderBy("id_a", "id_b"))
   }
 
   /** SimHash near-dup pairs within Hamming distance `maxHamming`,
@@ -527,7 +510,7 @@ object DedupQueries {
         .orderBy("doc_id")
     },
 
-    sql(
+    sqlEager(
       "d04_lsh_near_dups",
       "MinHash+LSH near-duplicate pairs (banding join), Jaccard-verified. The fused kernel is pure mod-2^64 arithmetic (fnv1a over 0x1f-joined 3-gram shingles, xor-multiply avalanche per permutation, signed-long mins, fnv-fold band keys), so the oracle replays it in DuckDB HUGEINT — large multiplies split into 32-bit halves to stay inside INT128; SimilarityRecallSpec additionally asserts exact equality with all-pairs 3-gram Jaccard",
       s"""$bandKeySql,
@@ -544,7 +527,7 @@ object DedupQueries {
         |SELECT id_a, id_b, floor((inter * 1.0 / (tot - inter)) * 10000 + 0.5) / 10000 AS jaccard
         |FROM verified
         |WHERE inter * 1.0 / (tot - inter) >= 0.5
-        |ORDER BY id_a, id_b""") { (s, dir) => lshNearDups(s, dir) },
+        |ORDER BY id_a, id_b""") { (s, dir, m) => lshNearDups(s, dir, m = m) },
 
     sql(
       "d05_simhash_pairs",
@@ -716,7 +699,7 @@ object DedupQueries {
         .orderBy("id_a", "id_b")
     },
 
-    sql(
+    sqlEager(
       "d10_contamination",
       "train/eval decontamination via n-gram containment: eval set = doc_id % 50 = 0, train = rest; 3-gram inverted-index equi-join on the gram value (never train × eval all-pairs), containment = |grams(train) ∩ grams(eval)| / |grams(train)|, flag pairs ≥ 0.3. Scale posture: the one shuffle is keyed by gram — the same banded-join shape as LSH; at 100 TB add a document-frequency cap to drop stop-grams before the join (skew + no discriminative value)",
       """WITH g AS (
@@ -735,8 +718,8 @@ object DedupQueries {
         |       floor((inter * 1.0 / n_train) * 10000 + 0.5) / 10000 AS containment
         |FROM hits
         |WHERE inter * 1.0 / n_train >= 0.3
-        |ORDER BY train_id, eval_id""") { (s, dir) =>
-      contaminationImpl(s, dir, materialize = true)
+        |ORDER BY train_id, eval_id""") { (s, dir, m) =>
+      contamination(s, dir, m)
     },
 
     sql(
@@ -1199,7 +1182,7 @@ object DedupQueries {
         .limit(20)
     },
 
-    sql(
+    sqlEager(
       "d20_substring_duplication",
       "exact-substring duplication coverage (the Lee et al. 2022 'Deduplicating Training Data' measurement — document-level dedup (d01/t05) and near-dup clustering (d04) both miss PARTIAL duplication: a doc that embeds a verbatim 500-char boilerplate block in otherwise-unique text is a dedup-policy decision the corpus card must surface, and the per-doc duplicated-substring share is THE number that policy reads): every WORD-ANCHORED 32-char window (window starts after each space — content-defined anchors make collision ALIGNMENT-ROBUST, the m06 CDC argument at character grain: two docs sharing a run at different byte offsets still produce identical windows, which fixed-stride windows structurally cannot guarantee) is counted corpus-wide; a window is DUPLICATED if its exact string occurs >= 2 times anywhere (within-doc repeats count — Lee et al. strip those too) and CROSS-DOC if >= 2 distinct docs carry it. Per doc: window count, both duplicated-window counts, and both coverage ppms (flooring; docs too short for one anchored window are out of the audit's domain, documented). Scale posture: the explode is O(total chars) rows pre-filter (~1/6 survive at English space density) — the same O(corpus) cost class as the suffix array the exact algorithm uses, but in three keyed passes: one window-keyed count (map-side combinable; a boilerplate window in 1e6 docs is ONE aggregation key, never a pair explosion), one window-keyed join back (doc-grain output), one doc-keyed rollup",
       """WITH win AS (SELECT doc_id,
@@ -1218,11 +1201,11 @@ object DedupQueries {
         |SELECT doc_id, n_windows, n_dup_windows, n_xdoc_windows,
         |       CAST(n_dup_windows * 1000000 // n_windows AS BIGINT) AS dup_ppm,
         |       CAST(n_xdoc_windows * 1000000 // n_windows AS BIGINT) AS xdoc_ppm
-        |FROM per ORDER BY doc_id""") { (s, dir) =>
-      substringDupImpl(s, dir, materialize = true)
+        |FROM per ORDER BY doc_id""") { (s, dir, m) =>
+      substringDup(s, dir, m)
     },
 
-    sql(
+    sqlEager(
       "d21_span_removal",
       "duplicated-span REMOVAL (the action half of d20's measurement — Lee et al. 2022 dedups by REMOVING the duplicated spans, not just scoring them): every non-first occurrence of a duplicated word-anchored 32-char window (first occurrence = global minimum under (doc_id, position) — d12's first-occurrence-wins discipline at anchored-window grain; within-doc repeats count, matching d20's n_occ >= 2 predicate) marks its character range [p+1, p+32] for removal; per doc the marked ranges MERGE (overlapping-or-adjacent intervals union into maximal dropped runs — overlapping windows of one embedded run collapse to one span, so removal is span-at-a-time, not 32-chars-at-a-time) and the doc is rebuilt from the surviving character segments, byte-exact: the oracle rebuilds the same string and both engines report md5(text_clean). Docs too short for a window, and first occurrences themselves, pass through byte-identical; a doc that was entirely duplicated text rebuilds to the empty string rather than vanishing (the corpus keeps its row — dropping rows is d01's policy, not span removal's). Per doc: char mass, merged-span count, dropped/kept char mass, and the clean md5. Scale posture: first-occurrence selection is groupBy(window).agg(min(struct(doc_id, pos))) — a map-side-combinable min, NOT a row_number window over the window key, so a boilerplate window in 1e6 docs is one aggregation key with partial aggregation upstream (the flood-safe form); the join back's build side pre-filters to DUPLICATED windows only (n_occ >= 2 — a unique window's sole occurrence IS its first, so it cannot mark), shrinking it ~21x at sf0.1 (227k distinct -> 10.8k dup keys) to a broadcastable dup-set index — in that plan the corpus-side occurrence frame never shuffles at all, and past broadcast size the equi-join stays AQE-skew-splittable like d20's; interval merge and rebuild are doc-keyed windows over marked rows only (O(doc length / 6) rows per doc, gaps-and-islands with a running max) — never doc x doc, never a global sort",
       """WITH pos0 AS (
@@ -1270,8 +1253,8 @@ object DedupQueries {
         |       CAST(length(d.text) - coalesce(m.n_dropped, 0) AS BIGINT) AS n_kept,
         |       md5(coalesce(r.text_clean, d.text)) AS clean_md5
         |FROM documents d LEFT JOIN mass m USING (doc_id) LEFT JOIN rebuilt r USING (doc_id)
-        |ORDER BY d.doc_id""") { (s, dir) =>
-      spanRemovalImpl(s, dir, materialize = true)
+        |ORDER BY d.doc_id""") { (s, dir, m) =>
+      spanRemoval(s, dir, m)
     }
   )
 
@@ -1295,30 +1278,25 @@ object DedupQueries {
   private[graft] val anchoredWindowsSql: String =
     s"filter($anchoredWindowsRawSql, x -> x IS NOT NULL)"
 
-  /** Lazy twin for plan auditing (see [[lshNearDupsPlan]]). */
-  private[graft] def substringDupPlan(s: SparkSession, dir: String): DataFrame =
-    substringDupImpl(s, dir, materialize = false)
-
   /** d20's body — see the registry doc. Both the window-keyed occurrence
     * count and the doc-grain join-back read the exploded `win` frame, so
     * the eager form persists it and the O(total chars) explode — the
     * query's dominant stage — runs ONCE per materialization, not once per
-    * leg (r16 advisory #2; the [[contaminationImpl]] discipline — Spark
+    * leg (r16 advisory #2; the [[contamination]] discipline — Spark
     * has no cross-branch common-subexpression reuse). Released after the
     * result materializes, like d04/d10.
     */
-  private def substringDupImpl(s: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+  private[graft] def substringDup(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     val win0 = Tables.documents(s, dir)
       .filter(length(col("text")) >= 33)
       .select(col("doc_id"), explode(expr(anchoredWindowsSql)).as("wd"))
-    val win = if (materialize) win0.persist() else win0
     // Materialization barrier (the g02 lesson): both leg stages submit
     // concurrently and an unfilled cache would run the explode per leg.
-    if (materialize) win.count()
+    val win = m.fill(win0)
     val occ = win.groupBy("wd")
       .agg(count(lit(1)).cast("long").as("n_occ"),
         countDistinct("doc_id").cast("long").as("n_docs"))
-    val out = win.join(occ, Seq("wd"))
+    m.result(win.join(occ, Seq("wd"))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_windows"),
         sum(when(col("n_occ") >= 2, 1L).otherwise(0L)).cast("long").as("n_dup_windows"),
@@ -1326,19 +1304,8 @@ object DedupQueries {
       .select(col("doc_id"), col("n_windows"), col("n_dup_windows"), col("n_xdoc_windows"),
         expr("(n_dup_windows * 1000000) div n_windows").as("dup_ppm"),
         expr("(n_xdoc_windows * 1000000) div n_windows").as("xdoc_ppm"))
-      .orderBy("doc_id")
-    if (!materialize) out
-    else {
-      val cached = out.persist()
-      cached.count()
-      win.unpersist()
-      cached
-    }
+      .orderBy("doc_id"))
   }
-
-  /** Lazy twin for plan auditing (see [[lshNearDupsPlan]]). */
-  private[graft] def spanRemovalPlan(s: SparkSession, dir: String): DataFrame =
-    spanRemovalImpl(s, dir, materialize = false)
 
   /** d21's body — see the registry doc. The Spark side picks each
     * window's first occurrence with `groupBy(wd).agg(min(struct(doc_id,
@@ -1350,10 +1317,10 @@ object DedupQueries {
     * the m15-flood shape — while the min aggregates partially upstream
     * (DuckDB at fixture scale has no such exposure). The positioned
     * explode feeds both the first-occurrence min and the join back, so
-    * the eager form persists it (the [[substringDupImpl]] discipline)
+    * the eager form persists it (the [[substringDup]] discipline)
     * and releases it after the result materializes.
     */
-  private def spanRemovalImpl(s: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+  private def spanRemoval(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     val docs = Tables.documents(s, dir)
     val win0 = docs
       .filter(length(col("text")) >= 33)
@@ -1362,10 +1329,9 @@ object DedupQueries {
       .filter(col("wd").isNotNull)
       .select(col("doc_id"), (col("p0") + lit(2L)).cast("long").as("s"),
         (col("p0") + lit(33L)).cast("long").as("e"), col("wd"))
-    val win = if (materialize) win0.persist() else win0
     // Materialization barrier (the g02 lesson): the first-occurrence agg
     // and the join back both read this frame.
-    if (materialize) win.count()
+    val win = m.fill(win0)
     // Only DUPLICATED windows (n_occ >= 2) can mark anything — a unique
     // window's sole occurrence IS its first. Filtering the join's build
     // side to them shrinks it from |distinct windows| to the (typically
@@ -1418,9 +1384,7 @@ object DedupQueries {
     // join-back + island windows (r18 optimization; the g02 fill
     // discipline). Dropped-run-sized; released after the result
     // materializes.
-    val spans = if (!materialize) spans0 else {
-      val c = spans0.persist(); c.count(); c
-    }
+    val spans = m.fill(spans0)
     // kept segments: the gap before each dropped run + the tail after the
     // last one (the first gap may be empty when a run starts at char 1 —
     // substring(text, 1, 0) = '' in both engines)
@@ -1441,7 +1405,7 @@ object DedupQueries {
     val mass = spans.groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_spans"),
         sum(col("iend") - col("istart") + 1).cast("long").as("n_dropped"))
-    val out = docs.select("doc_id", "text")
+    m.result(docs.select("doc_id", "text")
       .join(mass, Seq("doc_id"), "left")
       .join(rebuilt, Seq("doc_id"), "left")
       .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),
@@ -1449,22 +1413,10 @@ object DedupQueries {
         coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
         (length(col("text")).cast("long") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"),
         md5(coalesce(col("text_clean"), col("text")).cast("binary")).as("clean_md5"))
-      .orderBy("doc_id")
-    if (!materialize) out
-    else {
-      val cached = out.persist()
-      cached.count()
-      win.unpersist()
-      spans.unpersist(blocking = false)
-      cached
-    }
+      .orderBy("doc_id"))
   }
 
-  /** Lazy twin for plan auditing (see [[lshNearDupsPlan]]). */
-  private[graft] def contaminationPlan(s: SparkSession, dir: String): DataFrame =
-    contaminationImpl(s, dir, materialize = false)
-
-  private def contaminationImpl(s: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+  private def contamination(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     val g = Tables.documents(s, dir)
       .select(col("doc_id"), HashFunctions.shingleStrings(toks, 3).as("grams"))
     // Both join legs derive from this frame; persist it so the shingle
@@ -1473,15 +1425,14 @@ object DedupQueries {
     // after the eager result materializes, like d04.
     val ex0 = g.select(col("doc_id"), explode(col("grams")).as("gram"),
       size(col("grams")).as("n_grams"))
-    val ex = if (materialize) ex0.persist() else ex0
     // Materialization barrier (the g02 lesson): both leg stages submit
     // concurrently and an unfilled cache would run the kernel per leg.
-    if (materialize) ex.count()
+    val ex = m.fill(ex0)
     val train = ex.filter(col("doc_id") % 50 =!= 0)
       .select(col("doc_id").as("train_id"), col("gram"), col("n_grams"))
     val eval_ = ex.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("eval_id"), col("gram"))
-    val out = train.join(eval_, "gram")
+    m.result(train.join(eval_, "gram")
       .groupBy("train_id", "eval_id")
       .agg(count(lit(1)).as("inter"), first("n_grams").as("n_train"))
       // the gate compares the RAW ratio (exact: small-int division) and
@@ -1489,13 +1440,6 @@ object DedupQueries {
       .filter(col("inter") * lit(1.0) / col("n_train") >= 0.3)
       .select(col("train_id"), col("eval_id"),
         r4(col("inter") * lit(1.0) / col("n_train")).as("containment"))
-      .orderBy("train_id", "eval_id")
-    if (!materialize) out
-    else {
-      val cached = out.persist()
-      cached.count()
-      ex.unpersist()
-      cached
-    }
+      .orderBy("train_id", "eval_id"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.GraftQuery
-import graft.GraftQuery.sql
+import graft.{GraftQuery, Materialize}
+import graft.GraftQuery.{sql, sqlEager}
 import graft.sources.Tables
 import graft.operators.DedupQueries.persistCompact
 import graft.operators.Det._
@@ -149,13 +149,6 @@ object GraphQueries {
       .unionAll(e0.select(col("s").as("src"), col("c").as("dst")))
   }
 
-  /** g09's lazy audit twin (the d21/g15 convention): same dataflow, no
-    * caches/checkpoint barriers, so PlanAudit/PlanDump sweep the real
-    * join/aggregation structure instead of collapsed cache leaves.
-    */
-  private[graft] def personalizedPagerankPlan(s: SparkSession, dir: String): DataFrame =
-    personalizedPagerank(s, dir, materialize = false)
-
   /** g09's body. r19 (guide §2.4 establish-the-partitioning-once): the
     * rounds equi-join the edge list on src, deg groups by src, and nodes
     * is distinct-on-src — so the edge cache materializes KEYED
@@ -164,29 +157,22 @@ object GraphQueries {
     * (before: one full-edge Exchange per round + the deg and nodes
     * exchanges + persistCompact's double cache build). |sym edges| =
     * 2·|e0| ≤ 2·|lineitem| bounds the cache sizing from parquet row-count
-    * metadata, so the wide first build disappears too.
+    * metadata (counted by the eager scope only), so the wide first build
+    * disappears too.
     */
-  private[graft] def personalizedPagerank(s: SparkSession, dir: String,
-      materialize: Boolean = true): DataFrame = {
-    val eUpper = 2L * Tables.lineitem(s, dir).count()
+  private def personalizedPagerank(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     val (edges, edgeParts) =
-      if (materialize) DedupQueries.persistCompactBy(tradeEdges(s, dir), "src", eUpper)
-      else (tradeEdges(s, dir), 1)
-    def fill(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { val c = df.coalesce(edgeParts).persist(); c.count(); c }
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.coalesce(edgeParts).localCheckpoint(true) else df
-    val deg = fill(edges.groupBy("src").agg(count(lit(1)).as("d")))
-    val nodes = fill(edges.select(col("src").as("node")).distinct())
+      m.compactBy(tradeEdges(s, dir), "src", 2L * Tables.lineitem(s, dir).count())
+    val deg = m.fill(edges.groupBy("src").agg(count(lit(1)).as("d")), edgeParts)
+    val nodes = m.fill(edges.select(col("src").as("node")).distinct(), edgeParts)
     val seeds = nodes.filter(col("node") >= 1000001L && col("node") <= 1000003L)
     val ns = broadcast(seeds.agg(count(lit(1)).as("n")))
     def restart(pct: Long) =
       when(col("is_seed"), expr(s"$pct div n")).otherwise(lit(0L))
-    val base = mat(nodes.crossJoin(ns)
+    val base = m.checkpoint(nodes.crossJoin(ns)
       .join(seeds.select(col("node"), lit(true).as("is_seed")), Seq("node"), "left")
-      .withColumn("is_seed", coalesce(col("is_seed"), lit(false))))
-    var r = mat(base.select(col("node"), restart(1000000000000L).as("r")))
+      .withColumn("is_seed", coalesce(col("is_seed"), lit(false))), edgeParts)
+    var r = m.checkpoint(base.select(col("node"), restart(1000000000000L).as("r")), edgeParts)
     for (_ <- 1 to 2) {
       // sparse-frontier push: only r > 0 rows probe the edge join
       val contrib = edges
@@ -195,24 +181,15 @@ object GraphQueries {
         .join(deg.hint("shuffle_hash"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("r div d")).as("m"))
-      r = mat(base
+      r = m.checkpoint(base
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
           (restart(150000000000L)
-            + expr("85 * coalesce(m, 0) div 100")).as("r")))
+            + expr("85 * coalesce(m, 0) div 100")).as("r")), edgeParts)
     }
-    val result = r.filter(col("r") > 0)
+    m.result(r.filter(col("r") > 0)
       .select(col("node"), col("r").as("rank_scaled"))
-      .orderBy(desc("rank_scaled"), col("node")).limit(20)
-    if (!materialize) result
-    else {
-      val out = result.persist()
-      out.count()
-      nodes.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      out
-    }
+      .orderBy(desc("rank_scaled"), col("node")).limit(20))
   }
 
   /** DuckDB side of the degree-ordered orientation: `deg` + `ori` CTEs
@@ -476,7 +453,7 @@ object GraphQueries {
       out
     },
 
-    sql(
+    sqlEager(
       "g09_personalized_pagerank",
       "personalized PageRank from a seed set (2 unrolled iterations, restart mass on suppliers 1-3) over the same trade graph as g01 — SEEDED relevance vs g01's global authority: the recommendation/similar-entity primitive ('what is close to THESE nodes'), and the curation variant that scores documents by proximity to a trusted seed domain set rather than by global degree. Same 1e12 integer grid and integer-division contract as g01 (bit-identical ranks, no float drift), with the restart term (15% of the mass, split over |S| seeds) landing ONLY on seeds. Sparse-frontier shape: r0 is nonzero on 3 nodes, round 1 touches their neighborhoods, round 2 two hops — the Spark side filters r > 0 before the contribution join, so each round's join probe is frontier-sized, not graph-sized (semantically free: zero ranks contribute zero). Scale posture: this forward-push sparsity is exactly why production PPR (GraphX/Pregel personalized variants) scales as O(frontier x rounds) per seed batch while global PageRank pays O(V) per round; the edge list builds once (one order-keyed join) and each round is one edge-keyed join + dst-keyed sum, the g01 shape on a shrinking-from-sparse frontier",
       s"""WITH $tradeGraphSql,
@@ -506,8 +483,8 @@ object GraphQueries {
         |       LEFT JOIN seeds sd ON sd.node = n0.node
         |       LEFT JOIN c2 ON c2.node = n0.node)
         |SELECT node, CAST(r AS BIGINT) AS rank_scaled
-        |FROM r2 WHERE r > 0 ORDER BY rank_scaled DESC, node LIMIT 20""") { (s, dir) =>
-      personalizedPagerank(s, dir)
+        |FROM r2 WHERE r > 0 ORDER BY rank_scaled DESC, node LIMIT 20""") { (s, dir, m) =>
+      personalizedPagerank(s, dir, m)
     },
 
     sql(
@@ -953,7 +930,7 @@ object GraphQueries {
         |       LEFT JOIN pairs p ON p.u = cn.a AND p.v = cn.b WHERE p.u IS NULL)
         |SELECT a, b, common, aa_score FROM ne ORDER BY a, b""") { (s, dir) => adamicAdar(s, dir) },
 
-    sql(
+    sqlEager(
       "g15_hits",
       "HITS hubs-and-authorities ranking (Kleinberg's dual of g01's PageRank on the DIRECTED bipartite trade graph — PageRank scores one stationary walk, HITS mutually recurses two roles: a good buyer (hub) is one who buys from good suppliers (authorities), and a good supplier is one good buyers buy from; the supplier-quality signal a marketplace or curation pipeline reads when endorsement direction matters): two unrolled iterations over the distinct customer->supplier edge set, every step an edge-keyed join + destination-keyed sum with L1 NORMALIZATION back to the 1e12 integer grid (score*1e12 div total — the grid absorbs HITS's scale-invariance, so no float norm exists to diverge; per-node sums widen through HUGEINT/DECIMAL(38,0) because 1e9 edges x 1e12-grid scores brush 1e21). Output: top-20 authorities under the (auth_scaled DESC, node) total order with in-degree carried — the rank-vs-degree gap IS the signal (an authority beats its in-degree when GOOD hubs point at it). Scale posture: the edge list derives once (one fact join + distinct) and persists compact; each half-iteration is one rank-join into the edges + one keyed aggregation; the three normalization TOTALS are broadcast 1-row scalars (g01's shape), while the NODE-sized rank tables join under the wired `broadcastRanks` knob — true (default, the bench plan) broadcasts them into the cached edges so only the map-side-combined destination agg shuffles, false runs the rank join shuffle-hash co-partitioned on the edge key, the 1e9-node plan where an O(V) broadcast would materialize on the driver; both positions are bit-identical (spec-pinned) because the knob moves the join STRATEGY, never the arithmetic",
       """WITH e AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) AS c,
@@ -976,7 +953,7 @@ object GraphQueries {
         |deg AS (SELECT s, CAST(count(*) AS BIGINT) AS in_deg FROM e GROUP BY s)
         |SELECT a2.s AS node, deg.in_deg, a2.a AS auth_scaled
         |FROM a2 JOIN deg ON deg.s = a2.s
-        |ORDER BY auth_scaled DESC, node LIMIT 20""") { (s, dir) => hitsRanking(s, dir) },
+        |ORDER BY auth_scaled DESC, node LIMIT 20""") { (s, dir, m) => hitsRanking(s, dir, m = m) },
 
     sql(
       "g16_hyperball_anf",
@@ -1011,7 +988,7 @@ object GraphQueries {
         .orderBy("h")
     },
 
-    sql(
+    sqlEager(
       "g17_weighted_pagerank",
       "strength-weighted PageRank (2 unrolled iterations) over the customer<->supplier trade graph with edge weight = DISTINCT shared orders — the repeat-business-weighted authority g01 cannot express: g01's uniform 1/deg walk scores a supplier by HOW MANY customers touch it, this scores by how much RECURRING business flows through each edge (one 50-order relationship outweighs fifty 1-order drive-bys — the domain-trust weighting a curation pipeline wants when edge strength, not mere adjacency, is the signal). Same 1e12 integer grid and bit-identical-ranks contract as g01: per-edge contribution = rank * w div strength (the flooring division per edge, summed exactly), strength = each node's total edge weight (replacing g01's degree), restart term (15% div n) identical. Output: top-20 nodes under (rank_scaled DESC, node) with strength carried — rank-vs-strength divergence is the signal (a node outranks its raw volume when its partners are themselves authoritative). Scale posture: the weighted edge list derives once (one fact join + (cust, supp)-keyed distinct-order count) and persists compact WITH the loop-invariant strength pre-joined, so each half-iteration is ONE rank join + one dst-keyed sum; rank tables are node-sized and take g15's wired broadcastRanks knob (default true = the measured bench plan, false = shuffle-hash co-partitioned on the edge key — the 1e9-node plan); the per-edge product rank * w stays LONG in the hot path (a DECIMAL product measured +25-30% cpu) under an a19-style LOUD bound — exact while max edge weight <= 8e6 distinct shared orders per (customer, supplier) pair, asserted via raise_error inside the used rank column so an exceeded bound fails the query instead of silently wrapping against the HUGEINT oracle",
       """WITH e0 AS (SELECT CAST(o.o_custkey AS BIGINT) AS c,
@@ -1038,8 +1015,8 @@ object GraphQueries {
         |       FROM nodes n0 CROSS JOIN nn LEFT JOIN c2 ON c2.node = n0.node)
         |SELECT r2.node, str.wt AS strength, CAST(r2.r AS BIGINT) AS rank_scaled
         |FROM r2 JOIN str ON str.src = r2.node
-        |ORDER BY rank_scaled DESC, node LIMIT 20""") { (s, dir) =>
-      weightedPageRank(s, dir)
+        |ORDER BY rank_scaled DESC, node LIMIT 20""") { (s, dir, m) =>
+      weightedPageRank(s, dir, m = m)
     },
 
     sql(
@@ -1183,19 +1160,13 @@ object GraphQueries {
     * co-partitioned degradation path, now selectable rather than an edit —
     * the d04/s20/g12/g05 graduation). The 1-row normalization totals stay
     * broadcast in both positions: they are scalars, not node tables.
+    * Under [[Materialize.Lazy]] the same dataflow plans with no
+    * materialization barriers, so PlanAudit and the knob spec read the
+    * real join strategies instead of InMemoryTableScan leaves.
     */
-  /** Lazy twin of [[hitsRanking]] for plan auditing (the lshNearDupsPlan
-    * convention): same dataflow, no materialization barriers, so PlanAudit
-    * and the knob spec read the real join strategies instead of
-    * InMemoryTableScan leaves.
-    */
-  private[graft] def hitsRankingPlan(s: SparkSession, dir: String,
-      broadcastRanks: Boolean = true): DataFrame =
-    hitsRanking(s, dir, broadcastRanks, materialize = false)
-
   private[graft] def hitsRanking(s: SparkSession, dir: String,
-      broadcastRanks: Boolean = true, materialize: Boolean = true): DataFrame = {
-    val (e, eParts) = DedupQueries.persistCompact(
+      broadcastRanks: Boolean = true, m: Materialize = Materialize.eager()): DataFrame = {
+    val (e, eParts) = m.compact(
       Tables.orders(s, dir)
         .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").cast("long").as("c"),
@@ -1214,17 +1185,8 @@ object GraphQueries {
     // plans/r18/g15_hits_before.txt). A persist + count barrier per level
     // (the g02/persistCompact fill discipline) makes each half-iteration
     // run exactly once; caches release after the result materializes.
-    val levelCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def matLevel(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else {
-        val c = df.coalesce(eParts).persist()
-        c.count()
-        levelCaches += c
-        c
-      }
     def normalize(raw0: DataFrame, key: String, out: String): DataFrame = {
-      val raw = matLevel(raw0)
+      val raw = m.fill(raw0, eParts)
       val t = raw.agg(sum("r").cast("decimal(38,0)").as("t"))
       raw.crossJoin(broadcast(t))
         .select(col(key), expr("(r * 1000000000000) div t").cast("long").as(out))
@@ -1246,20 +1208,12 @@ object GraphQueries {
     // plan verbatim); in the false position it is node-sized like the
     // ranks, so it takes the same shuffle-hash pin
     val degSide = if (broadcastRanks) deg else deg.hint("shuffle_hash")
-    val result = a2.join(degSide, Seq("s"))
+    // g01's lifecycle: materialize the (20-row) result, then release the
+    // level caches and the edge cache — no reader remains
+    m.result(a2.join(degSide, Seq("s"))
       .select(col("s").as("node"), col("in_deg"), col("a").as("auth_scaled"))
       .orderBy(desc("auth_scaled"), col("node"))
-      .limit(20)
-    if (!materialize) result
-    else {
-      // g01's lifecycle: materialize the (20-row) result, then release the
-      // level caches and the edge cache — no reader remains
-      val out = result.persist()
-      out.count()
-      levelCaches.foreach(_.unpersist(blocking = false))
-      e.unpersist(blocking = false)
-      out
-    }
+      .limit(20))
   }
 
   /** Exact per-seed frontier expansion over the support-2 co-purchase
@@ -1311,16 +1265,10 @@ object GraphQueries {
     * tables are node-sized, so they take the SAME wired `broadcastRanks`
     * knob [[hitsRanking]] graduated to (true = broadcast, the bench
     * plan; false = shuffle-hash co-partitioned on the edge key).
+    * [[Materialize.Lazy]] plans the same dataflow with no caches.
     */
-  /** Lazy twin of [[weightedPageRank]] for plan auditing (the
-    * lshNearDupsPlan convention).
-    */
-  private[graft] def weightedPageRankPlan(s: SparkSession, dir: String,
-      broadcastRanks: Boolean = true): DataFrame =
-    weightedPageRank(s, dir, broadcastRanks, materialize = false)
-
   private[graft] def weightedPageRank(s: SparkSession, dir: String,
-      broadcastRanks: Boolean = true, materialize: Boolean = true): DataFrame = {
+      broadcastRanks: Boolean = true, m: Materialize = Materialize.eager()): DataFrame = {
     val e00 = Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").cast("long").as("c"),
@@ -1332,9 +1280,7 @@ object GraphQueries {
     // later nodes/nn evaluation re-expanded it again (282 parquet scans in
     // the audited before-plan, plans/r18/g17_weighted_pagerank_before.txt).
     // e0 is (customer, supplier)-pair-sized; released once e fills.
-    val e0 = if (!materialize) e00 else {
-      val c = e00.persist(); c.count(); c
-    }
+    val e0 = m.fill(e00)
     val sym = e0.select(col("c").as("src"), col("sk").as("dst"), col("w"))
       .unionAll(e0.select(col("sk").as("src"), col("c").as("dst"), col("w")))
     val str = sym.groupBy("src").agg(sum("w").cast("long").as("wt"))
@@ -1353,23 +1299,14 @@ object GraphQueries {
     // and replans as a full shuffle join under the keyed exchange; in the
     // broadcast position the rounds never re-exchange e anyway, so the
     // keyed cache had nothing to save. Kept on the two-step helper.
-    val (e, eParts) = DedupQueries.persistCompact(sym.join(strSide, Seq("src")))
-    if (materialize) e0.unpersist(blocking = false)
+    val (e, eParts) = m.compact(sym.join(strSide, Seq("src")))
+    m.release(e0)
     // Per-level materialization (r18 optimization, the hitsRanking
     // discipline): nodes and each round's rank table are node-sized;
     // un-materialized, every broadcast/round consumer re-expanded their
     // full lineage. persist + count barrier per frame, released after the
     // result materializes.
-    val levelCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def matLevel(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else {
-        val c = df.coalesce(eParts).persist()
-        c.count()
-        levelCaches += c
-        c
-      }
-    val nodes = matLevel(e.select("src").distinct())
+    val nodes = m.fill(e.select("src").distinct(), eParts)
     // the per-edge contribution r * w stays LONG in the hot path (a
     // DECIMAL product here measured 23 s cpu vs 16-20 at sf0.1 — 25-30%
     // of the whole query): r < 1.1e12 on the grid, so the product is
@@ -1399,26 +1336,16 @@ object GraphQueries {
     // round 1 materializes so round 2's plan starts from the cached rank
     // table instead of re-expanding the whole first round; round 2 feeds
     // only the final join, so it stays lazy
-    val r2 = round(matLevel(round(r0)))
-    // final strength column: in materialize mode read (src, wt) off the
-    // CACHED edge list (wt is functionally determined by src there — it was
-    // joined in per src), instead of re-deriving str from the raw fact pass
-    val strOut =
-      if (!materialize) str
-      else e.groupBy("src").agg(max("wt").cast("long").as("wt"))
-    val result = r2.join(rankSide(strOut), Seq("src"))
+    val r2 = round(m.fill(round(r0), eParts))
+    // final strength column: read (src, wt) off the CACHED edge list (wt
+    // is functionally determined by src there — it was joined in per src),
+    // instead of re-deriving str from the raw fact pass
+    val strOut = e.groupBy("src").agg(max("wt").cast("long").as("wt"))
+    m.result(r2.join(rankSide(strOut), Seq("src"))
       .select(col("src").as("node"), col("wt").as("strength"),
         col("r").cast("long").as("rank_scaled"))
       .orderBy(desc("rank_scaled"), col("node"))
-      .limit(20)
-    if (!materialize) result
-    else {
-      val out = result.persist()
-      out.count()
-      levelCaches.foreach(_.unpersist(blocking = false))
-      e.unpersist(blocking = false)
-      out
-    }
+      .limit(20))
   }
 
   /** Symmetrized edge list (both directions of each u<v edge) — the wedge

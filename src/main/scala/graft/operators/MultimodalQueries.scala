@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.GraftQuery
-import graft.GraftQuery.{rowsOnly, sql}
+import graft.{GraftQuery, Materialize}
+import graft.GraftQuery.{rowsOnly, sql, sqlEager}
 import graft.multimodal.Multimodal
 import graft.sources.Tables
 import graft.operators.Det._
@@ -643,7 +643,7 @@ object MultimodalQueries {
       aspectBuckets(s, dir)
     },
 
-    sql(
+    sqlEager(
       "m15_image_neardup",
       "perceptual-hash image near-dup detection (aHash + Hamming banding — the IMAGE member the dedup family lacked: d01/d04/d20 dedupe text, but a multimodal corpus dedupes images by PERCEPTUAL similarity, and byte-identity (m01's sha) misses every re-encode; aHash is the canonical cheap perceptual hash — resize to 8x8, threshold each cell against the global mean, compare by Hamming distance): each image's 64-bit aHash comes from Multimodal.imageBandHashes (the decode-stub discipline — PROPORTIONAL 64-block byte means standing in for the pixel resize, every bit decided by the exact integer cross-multiply sum_b*L > total*len_b, so the oracle replays the full hash), carried as four 16-bit band keys; candidates pair on ANY equal (band, key) — d04's banding shape at Hamming grain with the pigeonhole guarantee that Hamming <= 3 ALWAYS collides on some band (4 bands, 3 flips cannot dirty all) and misses beyond are the documented LSH trade; exact Hamming = sum of per-band bit_count(xor) reranks candidates, near-dup at <= 6 of 64 bits. Output is the per-IMAGE ledger (every in-domain image reports, the d19/st12 rollup grain): distinct band-collision partners, best neighbor under the (hamming, neighbor) total order, its distance, and the near-dup flag — collision-free images report -1 sentinels rather than vanish (the a20 discipline; at the test SFs most images are unrelated word-salad, and an audit that only printed matches would read empty while the machinery idles). Scale posture: hashing is one map-side pass fused with the scan; the only shuffles are the (band, key) equi-join and a doc-keyed window over candidate rows; 16-bit keys bound the key space, so at web scale the bands widen (a 128-bit pHash in 4x32-bit bands), and the flood defence is WIRED from day one — imageNearDup(bucketCap) drops over-cap buckets with a keyed count + anti-join before the self-join, d04's discipline (default 0 so this oracle replays the uncapped join; SkewSpec plants a 64-blank-image flood, measures the quadratic candidate collapse, and pins non-flood rows bit-identical)",
       s"""$imageBandSql,
@@ -670,14 +670,10 @@ object MultimodalQueries {
         |       CAST(coalesce(b.hamming, -1) AS BIGINT) AS best_hamming,
         |       CAST(CASE WHEN b.hamming <= 6 THEN 1 ELSE 0 END AS BIGINT) AS is_near_dup
         |FROM img i LEFT JOIN agg a ON a.id = i.doc_id LEFT JOIN best b ON b.id = i.doc_id
-        |ORDER BY i.doc_id""") { (s, dir) =>
-      imageNearDup(s, dir)
+        |ORDER BY i.doc_id""") { (s, dir, m) =>
+      imageNearDup(s, dir, m = m)
     }
   )
-
-  /** Lazy twin for plan auditing (the d20/d21 convention). */
-  private[graft] def imageNearDupPlan(s: SparkSession, dir: String): DataFrame =
-    imageNearDup(s, dir, materialize = false)
 
   /** m15's band rows: one (doc_id, band, key) per image per band. */
   private def imageBands(s: SparkSession, dir: String): DataFrame =
@@ -697,7 +693,7 @@ object MultimodalQueries {
     * to the uncapped form (SkewSpec plants the flood and pins both).
     */
   private[graft] def imageNearDup(s: SparkSession, dir: String,
-      bucketCap: Int = 0, materialize: Boolean = true): DataFrame = {
+      bucketCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE aHash pass per materialization (r17 ADVICE #1): the hash frame
     // feeds the band explode, the optional cap prefilter, the self-join,
@@ -708,8 +704,7 @@ object MultimodalQueries {
     // the result materializes.
     val h0frame = Multimodal.imageBandHashes(
       Multimodal.packBlobs(s, Tables.documents(s, dir))).toDF()
-    val h = if (materialize) h0frame.persist() else h0frame
-    if (materialize) h.count()
+    val h = m.fill(h0frame)
     val bands0 = h.select(col("doc_id"),
       posexplode(array(col("h0"), col("h1"), col("h2"), col("h3"))).as(Seq("band", "key")))
     val bands =
@@ -735,7 +730,7 @@ object MultimodalQueries {
     val best = scored.withColumn("rk", row_number().over(wBest)).filter(col("rk") === 1)
       .select(col("id"), col("nbr"), col("hamming"))
     val agg = scored.groupBy("id").agg(count(lit(1)).cast("long").as("n_candidates"))
-    val out = h.select(col("doc_id"))
+    m.result(h.select(col("doc_id"))
       .join(agg, col("doc_id") === agg("id"), "left").drop("id")
       .join(best, col("doc_id") === best("id"), "left").drop("id")
       .select(col("doc_id"),
@@ -743,14 +738,7 @@ object MultimodalQueries {
         coalesce(col("nbr"), lit(-1L)).as("best_neighbor"),
         coalesce(col("hamming"), lit(-1L)).as("best_hamming"),
         when(col("hamming") <= 6, 1L).otherwise(0L).as("is_near_dup"))
-      .orderBy("doc_id")
-    if (!materialize) out
-    else {
-      val cached = out.persist()
-      cached.count()
-      h.unpersist()
-      cached
-    }
+      .orderBy("doc_id"))
   }
 
   /** Directed candidate-pair volume the (band, key) equi-join would

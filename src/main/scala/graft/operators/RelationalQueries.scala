@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.GraftQuery
-import graft.GraftQuery.sql
+import graft.{GraftQuery, Materialize}
+import graft.GraftQuery.{sql, sqlEager}
 import graft.sources.Tables
 import graft.operators.Det._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -689,7 +689,7 @@ object RelationalQueries {
         .orderBy("user_id", "version_id")
     },
 
-    sql(
+    sqlEager(
       "u08_deletion_vectors",
       "deletion-vector merge-on-read — the lakehouse delete mechanic (Delta deletion vectors / Iceberg positional deletes) that u06's key-based anti-join deliberately is NOT: a delete commit writes only (file_id, position) pairs, and every subsequent read subtracts those POSITIONS from the immutable base files without rewriting a byte — the delete is O(deleted rows) instead of O(table), the difference between a 100 TB copy-on-write rewrite and a KB-sized tombstone file. Modeled faithfully: files are the l_orderkey%16 buckets, position is row_number over the file's (l_orderkey, l_linenumber) order (the physical row order both engines reproduce exactly), the DV holds positions of returned-early rows, and the READ path touches only (file_id, pos) — a left-anti join, never re-evaluating the delete predicate. Output is the per-file maintenance report (live rows, DV cardinality, live revenue) a compaction planner consumes to decide when accumulated DVs justify rewriting a file. Scale posture: the anti-join shuffles on (file_id, pos) but in production the DV side is file-local and TINY (positions, not rows) — per-file broadcast/bitmap-probe with zero shuffle of the base, exactly how the readers implement it; the report is one file-keyed aggregation with map-side partials",
       """WITH base AS (
@@ -709,7 +709,7 @@ object RelationalQueries {
         |      FROM live GROUP BY file_id) l
         |LEFT JOIN (SELECT file_id, CAST(count(*) AS BIGINT) AS n_deleted
         |           FROM dv GROUP BY file_id) d USING (file_id)
-        |ORDER BY file_id""") { (s, dir) => deletionVectorsImpl(s, dir, materialize = true) },
+        |ORDER BY file_id""") { (s, dir, m) => deletionVectors(s, dir, m) },
 
     sql(
       "u02_scd2_versioning",
@@ -1123,7 +1123,7 @@ object RelationalQueries {
         .orderBy("segment", "r_tile", "f_tile", "m_tile")
     },
 
-    sql(
+    sqlEager(
       "u10_wap_audit",
       "write-audit-publish gate (the Iceberg WAP / Delta-constraints commit protocol u01-u09 presuppose: a staged batch is NOT visible until a battery of integrity audits passes, and the publish decision is itself data): the staged batch is synthesized deterministically in both dialects (the t23/p02 discipline) — every 97th order key as the incoming delta, plus four planted violations that each trip exactly one audit (a duplicated primary key, an orphan o_custkey=-1 foreign key, a NULL o_orderdate, a negative o_totalprice). Five audits run against the stage: pk_duplicates (keys with >1 row), fk_orphans (anti-join to customer), null_orderdate, negative_price, and size_bound (batch must stay under 5% of the base table — the fat-finger/backfill-gone-wrong guard, exact integer cross-multiply n*20 > base so no ratio float). The report is one row per audit (violation count + pass bit) plus the publish row folding them: publish passes iff every audit does — the bit a commit service reads before swapping snapshot pointers. All counts exact integers. Scale posture: every audit is batch-sized except fk_orphans, which anti-joins the batch (broadcast — it is bounded by the 5%% gate itself) against the dimension; the base table contributes ONE count(*); the verdict fold is 5 rows. At 100 TB this is exactly why WAP works: audits cost O(batch), not O(table)",
       """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
@@ -1155,7 +1155,7 @@ object RelationalQueries {
         |  SELECT 'publish', CAST(sum(n_violations) AS BIGINT) FROM checks)
         |SELECT check_name, n_violations,
         |       CAST(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END AS BIGINT) AS passed
-        |FROM rep ORDER BY check_name""") { (s, dir) => wapAuditImpl(s, dir, materialize = true) },
+        |FROM rep ORDER BY check_name""") { (s, dir, m) => wapAudit(s, dir, m) },
 
     sql(
       "q105_assoc_rules",
@@ -2032,17 +2032,11 @@ object RelationalQueries {
       .head().getLong(0)
   }
 
-  /** Lazy twin of u10 for plan auditing (the d21/g15 convention, r18
-    * ADVICE #1): same dataflow with no localCheckpoint barriers, so the
-    * audited plan carries the real audit join/aggregation structure
-    * instead of Scan ExistingRDD leaves — and construction is job-free.
+  /** u10's body — see the registry doc. The lazy scope drops the two
+    * localCheckpoint barriers, so the audited plan carries the real audit
+    * join/aggregation structure instead of Scan ExistingRDD leaves.
     */
-  private[graft] def wapAuditPlan(s: SparkSession, dir: String): DataFrame =
-    wapAuditImpl(s, dir, materialize = false)
-
-  /** u10's body — see the registry doc. */
-  private def wapAuditImpl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private def wapAudit(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     val orders = Tables.orders(s, dir)
     val base = orders.filter(col("o_orderkey") % 97 === 0)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
@@ -2059,7 +2053,7 @@ object RelationalQueries {
     // nodes in the audited before-plan, 22 s executor on 1.1 s cpu
     // (r18 optimization). In production WAP the staged batch is a
     // TABLE; the checkpoint just models that.
-    val staged = if (materialize) staged0.coalesce(1).localCheckpoint(true) else staged0
+    val staged = m.checkpoint(staged0, 1)
     def one(name: String, v: org.apache.spark.sql.DataFrame) =
       v.select(lit(name).as("check_name"), col("v").as("n_violations"))
     val pk = one("pk_duplicates", staged.groupBy("o_orderkey").count()
@@ -2078,7 +2072,7 @@ object RelationalQueries {
     // the publish row folds the same five audit rows the report lists —
     // checkpointing the 5-row frame runs each audit once, not twice
     val checks0 = pk.unionAll(fk).unionAll(nl).unionAll(ng).unionAll(sz)
-    val checks = if (materialize) checks0.coalesce(1).localCheckpoint(true) else checks0
+    val checks = m.checkpoint(checks0, 1)
     checks
       .unionAll(checks.agg(sum("n_violations").cast("long").as("v"))
         .select(lit("publish").as("check_name"), col("v").as("n_violations")))
@@ -2087,17 +2081,8 @@ object RelationalQueries {
       .orderBy("check_name")
   }
 
-  /** Lazy twin of u08 for plan auditing (the d21/g15 convention, r18
-    * ADVICE #1): same dataflow with no persist/fill barrier, so PlanAudit
-    * and PlanDump read the real window/anti-join structure instead of
-    * InMemoryTableScan leaves — and the registry sweep stays job-free.
-    */
-  private[graft] def deletionVectorsPlan(s: SparkSession, dir: String): DataFrame =
-    deletionVectorsImpl(s, dir, materialize = false)
-
   /** u08's body — see the registry doc. */
-  private def deletionVectorsImpl(s: SparkSession, dir: String,
-      materialize: Boolean): DataFrame = {
+  private def deletionVectors(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     // position order spans EVERY column the query reads: the fixture's
     // (l_orderkey, l_linenumber) is not unique, and rows tied on the full
     // list are interchangeable in both the predicate and the aggregate,
@@ -2116,14 +2101,13 @@ object RelationalQueries {
         col("l_shipdate"), col("l_extendedprice"), col("l_discount"))
       .withColumn("file_id", pmod(col("l_orderkey"), lit(16)).cast("int"))
       .withColumn("pos", row_number().over(w).cast("long"))
-    val base = if (materialize) base0.persist() else base0
     // Materialization barrier (r18 optimization; the g02 lesson): the
     // anti-join probe stage and the two broadcast builds (dv, dvAgg)
     // submit concurrently, and an unfilled cache ran the 16-partition
     // window sort once PER LEG (measured executor 11.5-26 s on 7.5 s
     // cpu). One count fills it; the plan is unchanged (persist was
     // already here).
-    if (materialize) base.count()
+    val base = m.fill(base0)
     val dv = base
       .filter(col("l_returnflag") === "R" &&
         col("l_shipdate") < expr("TIMESTAMP_NTZ '1996-01-01'"))
@@ -2135,20 +2119,13 @@ object RelationalQueries {
         dsum2(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("live_revenue"))
     val dvAgg = dv.groupBy(col("d_file").as("file_id"))
       .agg(count(lit(1)).as("n_deleted"))
-    val out = live.join(dvAgg, Seq("file_id"), "left")
+    // the scope releases the fact-sized base cache once the 16-row report
+    // is materialized (the d21 lifecycle, r18 ADVICE #2): retained caches
+    // otherwise accumulate across registry constructions
+    m.result(live.join(dvAgg, Seq("file_id"), "left")
       .select(col("file_id"), col("n_live"),
         coalesce(col("n_deleted"), lit(0L)).as("n_deleted"), col("live_revenue"))
-      .orderBy("file_id")
-    if (!materialize) out
-    else {
-      // release the fact-sized base cache once the 16-row report is
-      // materialized (the d21 lifecycle, r18 ADVICE #2): retained caches
-      // otherwise accumulate across registry constructions
-      val cached = out.persist()
-      cached.count()
-      base.unpersist()
-      cached
-    }
+      .orderBy("file_id"))
   }
 
   /** q120's body — see the registry doc; [[fifoPairs]] documents the

@@ -2169,7 +2169,7 @@ class PipelineOpsSpec extends SparkSpec {
     // deliberately leaves to AQE. The result equality above plus the twin's
     // strategy pins are the contract.
     spark.catalog.clearCache()
-    val plan = GraphQueries.hitsRankingPlan(spark, dir, broadcastRanks = false)
+    val plan = GraphQueries.hitsRanking(spark, dir, broadcastRanks = false, m = Materialize.Lazy)
       .queryExecution.executedPlan.toString
     val bhjKeys = """BroadcastHashJoin \[(\w+)#""".r
       .findAllMatchIn(plan).map(_.group(1)).toSeq
@@ -2178,7 +2178,7 @@ class PipelineOpsSpec extends SparkSpec {
     val shjCount = "ShuffledHashJoin".r.findAllIn(plan).size
     assert(shjCount >= 4,
       s"expected 4 shuffle-hash rank joins, saw $shjCount:\n$plan")
-    val planTrue = GraphQueries.hitsRankingPlan(spark, dir, broadcastRanks = true)
+    val planTrue = GraphQueries.hitsRanking(spark, dir, broadcastRanks = true, m = Materialize.Lazy)
       .queryExecution.executedPlan.toString
     assert(planTrue.contains("BroadcastHashJoin"),
       s"broadcastRanks=true lost the measured bench plan:\n$planTrue")
@@ -2228,7 +2228,7 @@ class PipelineOpsSpec extends SparkSpec {
     // per level); clear the eager runs' caches first (hint-insensitive
     // cache matching, as above).
     spark.catalog.clearCache()
-    val plan = GraphQueries.weightedPageRankPlan(spark, dir, broadcastRanks = false)
+    val plan = GraphQueries.weightedPageRank(spark, dir, broadcastRanks = false, m = Materialize.Lazy)
       .queryExecution.executedPlan.toString
     val bhjKeys = """BroadcastHashJoin \[(\w+)#""".r
       .findAllMatchIn(plan).map(_.group(1)).toSeq
@@ -2569,7 +2569,7 @@ class PipelineOpsSpec extends SparkSpec {
       nodes(p).count(pf.isDefinedAt)
     // the lazy PlanAudit twin (no persist) carries the explode on BOTH
     // legs — the 2x shape r16 advisory #2 flagged
-    val lazyPlan = graft.operators.DedupQueries.substringDupPlan(spark, sf0001)
+    val lazyPlan = graft.operators.DedupQueries.substringDup(spark, sf0001, Materialize.Lazy)
       .queryExecution.executedPlan
     assert(count(lazyPlan) { case _: GenerateExec => } === 2,
       "un-persisted twin must show the per-leg explode")
