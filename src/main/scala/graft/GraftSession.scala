@@ -89,7 +89,8 @@ object GraftSession {
       * the SQL cache and drains the listener bus. The noop sink consumes
       * every row and column at full width: under a count Catalyst would
       * prune unreferenced columns and drop final sorts. Clearing the cache
-      * keeps one query's persisted intermediates out of the next one's GC
+      * drops the query's result cache (its `Materialize` scope has already
+      * released every intermediate), keeping it out of the next query's GC
       * budget. The drain must come before the stage records are read, or
       * this take's metrics bleed into the next take.
       */

@@ -1,16 +1,22 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 
-import graft.operators.DedupQueries
-
-/** The materialization scope of an eager registry entry. The entry's body
-  * is written once against this trait and runs in two forms:
+/** The materialization scope of a registry entry: the only way an operator
+  * persists, fills, compacts or checkpoints an intermediate (outside the
+  * pair-RDD loops of g01 and d08 and MlLsh's validation barrier, which
+  * CompactPersistSpec allowlists). The entry's body is written once against
+  * this trait and runs in two forms:
   *
   *   - [[Materialize.eager]] — what the registry `fn` runs. Each method
-  *     persists, counts or checkpoints as named and records the caches it
-  *     builds; [[result]] fills the result and then releases every recorded
-  *     cache, so no intermediate outlives the call.
+  *     persists, counts or checkpoints as named and records the cache or
+  *     checkpoint blocks it builds; [[result]] fills the result and then
+  *     releases every recorded cache and checkpoint, so no intermediate
+  *     outlives the call and only the result's own cache remains (the
+  *     runner's `clearCache()` frees that one).
   *   - [[Materialize.Lazy]] — the plan twin PlanAudit audits and PlanDump
   *     dumps. Every method hands its frame back unchanged and runs no job,
   *     so the twin's plan is the real dataflow instead of
@@ -34,35 +40,65 @@ sealed trait Materialize {
     c
   }
 
-  /** Eagerly `localCheckpoint`s `df`, truncating its lineage. */
+  /** Eagerly `localCheckpoint`s `df`, truncating its lineage; the blocks
+    * are released with the caches by [[result]].
+    */
   def checkpoint(df: DataFrame, parts: Int = 0): DataFrame
 
-  /** [[DedupQueries.persistCompact]]; the lazy form returns `(wide, 1)`. */
-  def compact(wide: DataFrame): (DataFrame, Int)
-
-  /** [[DedupQueries.persistCompactBy]]; the lazy form returns `(wide, 1)`
-    * and never evaluates `rowsUpper`.
+  /** Compact cache for an expensive small intermediate (the g02 pattern);
+    * returns the cache and its partition count, `(wide, 1)` in the lazy
+    * form. Cached plans keep their materialized partitioning (AQE's shuffle
+    * coalescing does not apply to cache scans —
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is off by
+    * default), so a small frame cached at full shuffle parallelism charges
+    * every downstream stage the full task count — the bulk of r7's 164 s
+    * g02 executor blowup and r10's 51 s g06 wart. Two forms:
+    *
+    *   - no `key`: persist `wide`, fill it with one count (a barrier, and
+    *     the row count that sizes the cache), re-persist at
+    *     [[Materialize.cacheParts]] partitions, fill, and drop the wide copy;
+    *   - `key` (r19, guide §2.4 establish-the-partitioning-once): one cache
+    *     under `hashpartitioning(key, parts)` sized from `rowsUpper`, a row
+    *     upper bound (parquet row-count metadata, or a cache's partition
+    *     budget), so an iterative consumer's key-equi-joins, groupBy(key)
+    *     and distinct-on-key read the cache partitions with no Exchange, and
+    *     the wide first build disappears. Over-estimating rows only adds
+    *     partitions. The lazy form never evaluates `rowsUpper`.
     */
-  def compactBy(wide: DataFrame, key: String, rowsUpper: => Long): (DataFrame, Int)
+  def compact(wide: DataFrame, key: Option[String] = None,
+      rowsUpper: => Long = 0L): (DataFrame, Int)
 
   /** Releases one recorded cache before the result is built. */
   def release(df: DataFrame): Unit
 
-  /** Persists and fills the result, then releases every recorded cache:
-    * the frames from [[persist]]/[[fill]] in the order they were recorded,
-    * then the [[compact]]/[[compactBy]] edge caches they were derived from.
+  /** Persists and fills the result, then releases every recorded cache and
+    * then every recorded checkpoint, each in the order they were recorded.
     */
   def result(df: DataFrame): DataFrame
 }
 
 object Materialize {
 
+  /** Partition count for a small cached intermediate, sized from a row count
+    * the cache-fill barrier already produced (never a constant): one cache
+    * partition per ~4M rows, floor 1. A fixed `1` would serialize
+    * materialization and every downstream scan once the intermediate
+    * outgrows one core at production scale; deriving the count from the
+    * data keeps bench-scale behavior (1 partition) and grows linearly with
+    * the corpus.
+    */
+  def cacheParts(rows: Long): Int =
+    math.max(1L, (rows + RowsPerPartition - 1) / RowsPerPartition).toInt
+
+  /** The rows [[cacheParts]] budgets per cache partition. */
+  val RowsPerPartition: Long = 4000000L
+
   /** A fresh eager scope; one per entry call, never shared. */
   def eager(): Materialize = new Eager
 
   private final class Eager extends Materialize {
     private val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private val compacts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val checkpoints = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
     private def coalesced(df: DataFrame, parts: Int) = if (parts > 0) df.coalesce(parts) else df
 
@@ -74,20 +110,29 @@ object Materialize {
 
     def count(df: DataFrame): Long = df.count()
 
-    def checkpoint(df: DataFrame, parts: Int): DataFrame =
-      coalesced(df, parts).localCheckpoint(true)
-
-    def compact(wide: DataFrame): (DataFrame, Int) = {
-      val r = DedupQueries.persistCompact(wide)
-      compacts += r._1
-      r
+    // the checkpoint's blocks live in the RDD behind its LogicalRDD leaf
+    def checkpoint(df: DataFrame, parts: Int): DataFrame = {
+      val c = coalesced(df, parts).localCheckpoint(true)
+      checkpoints ++= c.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      c
     }
 
-    def compactBy(wide: DataFrame, key: String, rowsUpper: => Long): (DataFrame, Int) = {
-      val r = DedupQueries.persistCompactBy(wide, key, rowsUpper)
-      compacts += r._1
-      r
-    }
+    def compact(wide: DataFrame, key: Option[String], rowsUpper: => Long): (DataFrame, Int) =
+      key match {
+        case Some(k) =>
+          // floor 2, not 1: repartition(1, key) plans as Exchange
+          // SinglePartition, which erases the hashpartitioning(key) the
+          // keyed form exists to materialize — downstream joins would
+          // re-exchange the cache (verified against Spark 4.1)
+          val parts = math.max(2, cacheParts(rowsUpper))
+          (fill(wide.repartition(parts, col(k))), parts)
+        case None =>
+          val w = wide.persist()
+          val parts = cacheParts(w.count())
+          val c = fill(w.repartition(parts))
+          w.unpersist(blocking = false)
+          (c, parts)
+      }
 
     def release(df: DataFrame): Unit = {
       caches -= df
@@ -97,7 +142,8 @@ object Materialize {
     def result(df: DataFrame): DataFrame = {
       val out = df.persist()
       out.count()
-      (caches ++ compacts).foreach(_.unpersist(blocking = false))
+      caches.foreach(_.unpersist(blocking = false))
+      checkpoints.foreach(_.unpersist(blocking = false))
       out
     }
   }
@@ -107,8 +153,8 @@ object Materialize {
     def persist(df: DataFrame, parts: Int): DataFrame = df
     def count(df: DataFrame): Long = 0L
     def checkpoint(df: DataFrame, parts: Int): DataFrame = df
-    def compact(wide: DataFrame): (DataFrame, Int) = (wide, 1)
-    def compactBy(wide: DataFrame, key: String, rowsUpper: => Long): (DataFrame, Int) = (wide, 1)
+    def compact(wide: DataFrame, key: Option[String], rowsUpper: => Long): (DataFrame, Int) =
+      (wide, 1)
     def release(df: DataFrame): Unit = ()
     def result(df: DataFrame): DataFrame = df
   }

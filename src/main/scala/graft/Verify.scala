@@ -28,7 +28,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally spark.catalog.clearCache() // persisted intermediates must not leak across queries
+      finally spark.catalog.clearCache() // the result's cache must not leak across queries
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

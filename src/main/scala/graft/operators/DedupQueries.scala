@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{GraftQuery, Materialize}
 import graft.GraftQuery.{rowsOnly, sql, sqlEager}
+import graft.Materialize.cacheParts
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.functions.VectorFunctions._
 import graft.sources.Tables
@@ -28,71 +29,6 @@ import org.apache.spark.sql.functions._
 object DedupQueries {
 
   private def toks = TextFunctions.tokens(col("text"))
-
-  /** Partition count for a small cached intermediate, sized from a row count
-    * the cache-fill barrier already produced (never a constant): one cache
-    * partition per ~4M rows, floor 1. Cached plans keep their materialized
-    * partitioning (AQE's shuffle coalescing does not apply to cache scans —
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is off by
-    * default), so a tiny frame persisted at 32 shuffle partitions charges
-    * every downstream stage 32 near-empty tasks, while a fixed `1` would
-    * serialize materialization and every downstream scan once the
-    * intermediate outgrows one core at production scale. Deriving the count
-    * from the data keeps bench-scale behavior (1 partition) and grows
-    * linearly with the corpus.
-    */
-  private[graft] def cacheParts(rows: Long, rowsPerPartition: Long = 4000000L): Int =
-    math.max(1L, (rows + rowsPerPartition - 1) / rowsPerPartition).toInt
-
-  /** Two-step compact cache for an expensive small result (the g02 pattern,
-    * shared by every [[GraphQueries.copurchasePairs]] consumer —
-    * CompactPersistSpec enforces that convention across both modules since
-    * the r13 dedup/graph split): persist the wide plan, fill it with one
-    * count() (a materialization barrier, and the row count that sizes the
-    * cache), re-persist at the data-derived [[cacheParts]] partitioning,
-    * then drop the wide copy. Cached plans keep their materialized
-    * partitioning, so without the re-persist a post-threshold ~4k-row frame
-    * cached at full shuffle parallelism charges every downstream stage the
-    * full task count (the bulk of r7's 164 s g02 executor blowup, and r10's
-    * 51 s g06 wart). Returns the compact frame and its partition count;
-    * the caller owns the eventual unpersist.
-    */
-  private[graft] def persistCompact(wide: DataFrame): (DataFrame, Int) = {
-    val w = wide.persist()
-    val parts = cacheParts(w.count())
-    val compact = w.repartition(parts).persist()
-    compact.count()
-    w.unpersist(blocking = false)
-    (compact, parts)
-  }
-
-  /** KEYED compact cache (r19, guide §2.4 establish-the-partitioning-once):
-    * like [[persistCompact]] but the cache materializes under
-    * `hashpartitioning(key, parts)`, so every downstream key-equi-join,
-    * groupBy(key) and distinct-on-key reads the cache partitions directly
-    * instead of re-exchanging the full frame — for an iterative consumer
-    * (per-round frontier joins against a cached edge list) that removes one
-    * full-edge Exchange per round plus the degree/nodes exchanges (verified:
-    * ShuffledHashJoin probes the InMemoryTableScan with only the small side
-    * shuffled to match, and groupBy(key) plans partial+final against the
-    * cache with no Exchange). Partition count is sized from a caller-
-    * supplied ROW UPPER BOUND (parquet row-count metadata — free) through
-    * the same [[cacheParts]] rule, which also removes persistCompact's
-    * first wide cache build + fill count: over-estimating rows only adds
-    * partitions, so the bound stays safe at any scale. Callers own the
-    * unpersist, as with persistCompact.
-    */
-  private[graft] def persistCompactBy(wide: DataFrame, key: String,
-      rowsUpper: Long): (DataFrame, Int) = {
-    // floor 2, not 1: repartition(1, key) plans as Exchange SinglePartition,
-    // which erases the hashpartitioning(key) the whole helper exists to
-    // materialize — downstream joins would re-exchange the cache (verified
-    // against Spark 4.1; with parts >= 2 the join/groupBy reuse kicks in)
-    val parts = math.max(2, cacheParts(rowsUpper))
-    val compact = wide.repartition(parts, col(key)).persist()
-    compact.count()
-    (compact, parts)
-  }
 
   // Fixed MinHash permutation constants, shared by the Spark impl and the
   // generated DuckDB oracle of d03.
@@ -848,7 +784,7 @@ object DedupQueries {
         .orderBy("doc_id")
     },
 
-    sql(
+    sqlEager(
       "d15_bloom_index_dedup",
       "bloom-shipped incremental dedup — d13's daily-crawl check with the INDEX SHIPPING problem solved the q72 way: at 100 TB the corpus band-key index is corpus-sized, and joining a batch against it shuffles the batch across the whole index layout; instead the index folds into a 16 KB Bloom bitset (word-OR mergeable, built in one pass, broadcast to every executor), the batch's keys pre-filter MAP-SIDE against it, and only might-contain keys — true collisions plus a bounded false-positive trickle — reach the exact (band, key) semi-join that removes the FPs. The result is EXACTLY d13's survivor set (Bloom filters have no false negatives, so no collision escapes; a spec asserts set equality), which is why the oracle is the exact-join form: the bloom is a plan-side shipping optimization, invisible to semantics. Output adds each survivor's band-key count (0 = too short to shingle — survives vacuously). Scale posture: corpus pass builds the bitset once per index epoch (in production: read back, not rebuilt); daily cost = batch keys x one broadcast probe + an exact join over the pruned residue — batch-sized, never corpus-shuffle-sized",
       s"""$bandKeySql,
@@ -861,7 +797,7 @@ object DedupQueries {
         |FROM documents d LEFT JOIN bk ON bk.doc_id = d.doc_id
         |WHERE d.doc_id % 10 = 0
         |  AND d.doc_id NOT IN (SELECT doc_id FROM collided)
-        |ORDER BY d.doc_id""") { (s, dir) =>
+        |ORDER BY d.doc_id""") { (s, dir, m) =>
       import graft.functions.{Aggregators, BloomOps}
       val NumBits = 1 << 17
       val NumHashes = 5
@@ -870,12 +806,11 @@ object DedupQueries {
       // build + the exact-join build side on the corpus leg, the bloom
       // probe + the n_keys count on the batch leg — and unpersisted the
       // fused shingle kernel would run for each (ReuseExchange can't dedup
-      // them: different exchanges). Runner clearCache() covers cleanup.
-      val banded = docs
+      // them: different exchanges). The scope releases it once the result fills.
+      val banded = m.persist(docs
         .select(col("doc_id"),
           posexplode(HashFunctions.shingleMinHashBands(toks, k = 32, n = 3, bands = 16, rows = 2))
-            .as(Seq("band", "key")))
-        .persist()
+            .as(Seq("band", "key"))))
       // fold (band, key) to one long for the bitset (xor with a
       // prime-scaled band — overflow-free under ANSI); both build and
       // probe use the same fold, and the exact join removes any fold- or
@@ -895,11 +830,11 @@ object DedupQueries {
           col("band") === col("o_band") && col("key") === col("o_key"), "left_semi")
         .select("doc_id").distinct()
       val bk = batch.groupBy("doc_id").agg(count(lit(1)).as("n_keys"))
-      docs.filter(col("doc_id") % 10 === 0)
+      m.result(docs.filter(col("doc_id") % 10 === 0)
         .join(bk, Seq("doc_id"), "left")
         .join(collided, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("source"), coalesce(col("n_keys"), lit(0L)).as("n_keys"))
-        .orderBy("doc_id")
+        .orderBy("doc_id"))
     },
 
     sql(

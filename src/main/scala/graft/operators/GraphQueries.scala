@@ -3,7 +3,6 @@ package graft.operators
 import graft.{GraftQuery, Materialize}
 import graft.GraftQuery.{sql, sqlEager}
 import graft.sources.Tables
-import graft.operators.DedupQueries.persistCompact
 import graft.operators.Det._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,10 +22,11 @@ import org.apache.spark.sql.functions._
   *   - the symmetrized customer<->supplier bipartite trade graph
   *     ([[tradeEdges]]), used by g01/g09 PageRank.
   *
-  * Shared iterative discipline: edge lists cache through
-  * [[DedupQueries.persistCompact]] (data-derived partition count), every
-  * bounded-round loop localCheckpoint-truncates its lineage, and each
-  * round is an edge-keyed equi-/semi-join plus keyed aggregation — the
+  * Shared iterative discipline: edge lists cache through the entry's
+  * [[Materialize]] scope (`compact`, data-derived partition count), every
+  * bounded-round loop checkpoint-truncates its lineage through the same
+  * scope, which releases caches and checkpoints once the result fills,
+  * and each round is an edge-keyed equi-/semi-join plus keyed aggregation — the
   * Pregel superstep shape, O(rounds x E) shuffle rows. The pointer-jumping
   * connected-components twin lives with its dedup consumer (d08
   * [[DedupQueries.dupClusters]]).
@@ -50,7 +50,7 @@ object GraphQueries {
     * (≤7-element) arrays, no fact-table self-join/SMJ; measured 1.6× the
     * self-join form at sf0.1, and the multiset of (u,v) instances is
     * identical (x<y filter drops same-part repeats exactly as the join's
-    * u<v did). Un-persisted: callers own caching.
+    * u<v did). Un-persisted: every caller compacts it through its scope.
     */
   private def copurchasePairs(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
@@ -136,8 +136,8 @@ object GraphQueries {
     * costs ~3× the recompute — warm executor CPU 13-17 s unpersisted vs
     * 43-92 s persisted — because AQE's ReuseExchange already shares the
     * one expensive shuffle under multiple consumers); callers cache
-    * downstream where it pays (g01's row-format edgeRdd, g09's
-    * persistCompact).
+    * downstream where it pays (g01's row-format edgeRdd, g09's keyed
+    * compact).
     */
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     val e0 = Tables.orders(s, dir)
@@ -152,17 +152,17 @@ object GraphQueries {
   /** g09's body. r19 (guide §2.4 establish-the-partitioning-once): the
     * rounds equi-join the edge list on src, deg groups by src, and nodes
     * is distinct-on-src — so the edge cache materializes KEYED
-    * (persistCompactBy hashpartitioning(src)) and all five consumers read
+    * (`m.compact` by src) and all five consumers read
     * its partitioning instead of re-exchanging the full edge list
     * (before: one full-edge Exchange per round + the deg and nodes
-    * exchanges + persistCompact's double cache build). |sym edges| =
+    * exchanges + the two-step compact's double cache build). |sym edges| =
     * 2·|e0| ≤ 2·|lineitem| bounds the cache sizing from parquet row-count
     * metadata (counted by the eager scope only), so the wide first build
     * disappears too.
     */
   private def personalizedPagerank(s: SparkSession, dir: String, m: Materialize): DataFrame = {
     val (edges, edgeParts) =
-      m.compactBy(tradeEdges(s, dir), "src", 2L * Tables.lineitem(s, dir).count())
+      m.compact(tradeEdges(s, dir), Some("src"), 2L * Tables.lineitem(s, dir).count())
     val deg = m.fill(edges.groupBy("src").agg(count(lit(1)).as("d")), edgeParts)
     val nodes = m.fill(edges.select(col("src").as("node")).distinct(), edgeParts)
     val seeds = nodes.filter(col("node") >= 1000001L && col("node") <= 1000003L)
@@ -206,59 +206,58 @@ object GraphQueries {
       |         CASE WHEN du.d < dv.d OR (du.d = dv.d AND p.u < p.v) THEN p.v ELSE p.u END AS dst
       |  FROM pairs p JOIN deg du ON du.node = p.u JOIN deg dv ON dv.node = p.v)""".stripMargin
 
-  /** Cached support-2 pairs, degree table, degree-ordered oriented edges,
-    * and the two-phase shuffle wedge-close triangle triples (a, b, c) —
-    * the machinery g02 (global count) and g08 (per-node credit) share, so
-    * the orientation tie-break and the shuffle_hash hints cannot drift
-    * between them (the persistCompact lesson applied one level up; r10's
-    * g06 wart was exactly a sibling skipping the shared pattern).
+  /** Cached support-2 pairs and degree table, and the two-phase shuffle
+    * wedge-close triangle triples (a, b, c) over the cached degree-ordered
+    * oriented edges — the machinery g02 (global count) and g08 (per-node
+    * credit) share, so the orientation tie-break and the shuffle_hash hints
+    * cannot drift between them (the compact-cache lesson applied one level
+    * up; r10's g06 wart was exactly a sibling skipping the shared pattern).
     *
-    * Two-step compact caches (see persistCompact): each fill count() is a
-    * materialization barrier — downstream branches launch together, and an
-    * un-populated cache makes each of them run the full fact-table pair
-    * build (measured 5× the whole query at 10× sf0.1). deg feeds ori twice
-    * plus the callers' degree branches; the wedge join is two SHUFFLE
-    * equi-joins (O(wedges) 16 B rows, no broadcast of E — valid at any
-    * edge-list size; shuffle_hash keeps AQE from re-planning tiny
+    * Two-step compact caches (see [[Materialize.compact]]): each fill
+    * count() is a materialization barrier — downstream branches launch
+    * together, and an un-populated cache makes each of them run the full
+    * fact-table pair build (measured 5× the whole query at 10× sf0.1). deg
+    * feeds ori twice plus the callers' degree branches; the wedge join is
+    * two SHUFFLE equi-joins (O(wedges) 16 B rows, no broadcast of E — valid
+    * at any edge-list size; shuffle_hash keeps AQE from re-planning tiny
     * bench-scale sides back into broadcasts). Each triangle closes exactly
-    * once under the orientation. Callers own unpersist of pairs/deg/ori.
+    * once under the orientation. pairs/deg/ori cache in the caller's scope.
     */
-  private def orientedTriangles(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, Int) = {
-    val (pairs, edgeParts) = persistCompact(copurchasePairs(s, dir))
-    val deg = pairs.select(col("u").as("node")).unionAll(pairs.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-      .coalesce(edgeParts).persist()
-    deg.count()
+  private def orientedTriangles(s: SparkSession, dir: String, m: Materialize)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (pairs, edgeParts) = m.compact(copurchasePairs(s, dir))
+    val deg = m.fill(pairs.select(col("u").as("node")).unionAll(pairs.select(col("v").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d")), edgeParts)
     val lower = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val ori = pairs
+    val ori = m.fill(pairs
       .join(deg.select(col("node").as("u"), col("d").as("du")).hint("shuffle_hash"), "u")
       .join(deg.select(col("node").as("v"), col("d").as("dv")).hint("shuffle_hash"), "v")
       .select(when(lower, col("u")).otherwise(col("v")).as("src"),
-        when(lower, col("v")).otherwise(col("u")).as("dst"))
-      .coalesce(edgeParts).persist()
-    ori.count()
+        when(lower, col("v")).otherwise(col("u")).as("dst")), edgeParts)
     val e1 = ori.select(col("src").as("a"), col("dst").as("b"))
     val e2 = ori.select(col("src").as("b2"), col("dst").as("c"))
     val e3 = ori.select(col("src").as("a3"), col("dst").as("c3"))
     val tris = e1.join(e2.hint("shuffle_hash"), col("b2") === col("b"))
       .join(e3.hint("shuffle_hash"), col("a3") === col("a") && col("c3") === col("c"))
       .select(col("a"), col("b"), col("c"))
-    (pairs, deg, ori, tris, edgeParts)
+    (pairs, deg, tris)
   }
 
   /** g03's bounded-round 2-core peel; returns (result, roundsRun) so
-    * KCoreSpec can assert the 16-round oracle budget has margin.
+    * KCoreSpec can assert the 16-round oracle budget has margin. The loop
+    * stops on a data-dependent fixpoint, so it owns an eager scope and has
+    * no lazy twin.
     */
   private[graft] def kcorePeel(s: SparkSession, dir: String): (DataFrame, Int) = {
+    val m = Materialize.eager()
     // KEYED compact cache (r19, §2.4): every peel round's FIRST semi-join
     // probes the edge list on u, so the cache materializes under
     // hashpartitioning(u) and all ≤16 rounds read its partitions directly
     // (the v-side semi-join exchanges the already-filtered live set, which
     // shrinks with peeling). Sizing bound: |pairs| ≤ 3·|lineitem| (≤7-part
     // order arrays), parquet metadata — no wide first build.
-    val (edges, parts) = DedupQueries.persistCompactBy(
-      copurchasePairs(s, dir), "u", 3L * Tables.lineitem(s, dir).count())
+    val (edges, parts) = m.compact(
+      copurchasePairs(s, dir), Some("u"), 3L * Tables.lineitem(s, dir).count())
     // Each round is checkpointed EAGERLY: the loop references `alive`
     // twice per round, so carrying the logical plan forward doubles the
     // tree every iteration — by round 8 plan traversal (Catalyst rules,
@@ -268,9 +267,9 @@ object GraphQueries {
     // round output — the d08/g01 RDD-iteration lesson in DataFrame form.
     // At 100 TB: same loop with reliable checkpoint(dir) instead of
     // executor-local blocks, rounds are edge-keyed semi-joins either way.
-    var alive = edges.select(col("u").as("node"))
+    var alive = m.checkpoint(edges.select(col("u").as("node"))
       .unionAll(edges.select(col("v").as("node")))
-      .distinct().coalesce(parts).localCheckpoint(true)
+      .distinct(), parts)
     var aliveCount = alive.count()
     var result: DataFrame = alive.withColumn("d_core", lit(0L)) // replaced in round 1
     var round = 0
@@ -280,11 +279,10 @@ object GraphQueries {
       val live = edges
         .join(alive.select(col("node").as("u")).hint("shuffle_hash"), Seq("u"), "left_semi")
         .join(alive.select(col("node").as("v")).hint("shuffle_hash"), Seq("v"), "left_semi")
-      val next = live.select(col("u").as("node"))
+      val next = m.checkpoint(live.select(col("u").as("node"))
         .unionAll(live.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).cast("long").as("d_core"))
-        .filter(col("d_core") >= 2)
-        .coalesce(parts).localCheckpoint(true)
+        .filter(col("d_core") >= 2), parts)
       val c = next.count()
       // peeling only shrinks the alive set, so equal count == equal set
       // == this round's d_core equals every later round's (incl. a16)
@@ -293,7 +291,7 @@ object GraphQueries {
       alive = next.select("node")
       result = next
     }
-    (result.select("node", "d_core").orderBy("node"), round)
+    (m.result(result.select("node", "d_core").orderBy("node")), round)
   }
 
   val all: Seq[GraftQuery] = Seq(
@@ -487,7 +485,7 @@ object GraphQueries {
       personalizedPagerank(s, dir, m)
     },
 
-    sql(
+    sqlEager(
       "g10_neighborhood_anf",
       "sampled approximate-neighborhood-function (ANF / HyperBall shape) over the co-purchase graph: for a deterministic seed sample (nodes ≡ 0 mod 100) grow exact balls B(s,h) for h = 0..3 and report the neighborhood-function curve — seeds, Σ|B(s,h)|, mean ball size in ppm, and how many seeds SATURATED (ball stopped growing) at each radius; the curve is how effective-diameter and reachability profiles are read off web/citation-scale graphs. The expansion is frontier-only (g04's bounded-round contract, per-seed): each round joins ONLY last round's new (seed, node) pairs against the cached symmetric edge list, anti-joins the ball, and localCheckpoints — O(rounds × frontier × degree) shuffle rows of 16 B. Scale posture: at 100 TB the exact per-seed pair set is replaced by one b-bit HyperLogLog register per NODE, merged along edges per round (HyperBall — Boldi/Vigna WWW'13); the sampled exact legs here are precisely the truth column that calibrates those registers, and a06 already carries the engine's replayable HLL. Oracle unrolls the same three rounds as chained MATERIALIZED CTEs over the shared co-purchase edge SQL; every metric is a flooring division on non-negative integers",
       s"""WITH $copurchasePairsSql,
@@ -523,8 +521,8 @@ object GraphQueries {
         |SELECT CAST(3 AS BIGINT), ns.n, c.n, (1000000 * c.n) // ns.n, ns.n - f.n
         |FROM ns, (SELECT CAST(count(*) AS BIGINT) AS n FROM b3) c,
         |     (SELECT CAST(count(DISTINCT seed) AS BIGINT) AS n FROM f3) f
-        |ORDER BY h""") { (s, dir) =>
-      val (seeds, b0, fs) = seedFrontiers(s, dir)
+        |ORDER BY h""") { (s, dir, m) =>
+      val (seeds, b0, fs) = seedFrontiers(s, dir, m)
       val nSeeds = seeds.agg(count(lit(1)).cast("long").as("n_seeds"))
       def curveRow(h: Int, ball: DataFrame, grew: DataFrame): DataFrame =
         ball.agg(count(lit(1)).cast("long").as("n_pairs"))
@@ -541,7 +539,7 @@ object GraphQueries {
         out = out.unionAll(curveRow(h, ball,
           fs(h - 1).agg(countDistinct("seed").cast("long").as("grew"))))
       }
-      out.orderBy("h")
+      m.result(out.orderBy("h"))
     },
 
     sql(
@@ -575,7 +573,10 @@ object GraphQueries {
           |FROM e4 e LEFT JOIN sf ON sf.u = e.u AND sf.v = e.v
           |ORDER BY e.u, e.v"""
       }) { (s, dir) =>
-      val (pairs, parts) = persistCompact(copurchasePairs(s, dir))
+      // the loop exits on a data-dependent fixpoint: an eager scope of its
+      // own, no lazy twin
+      val m = Materialize.eager()
+      val (pairs, parts) = m.compact(copurchasePairs(s, dir))
       def triangles(edges: DataFrame): DataFrame = {
         def pfx(p: String) = edges.select(col("u").as(p + "u"), col("v").as(p + "v"))
         pfx("x").join(pfx("y"), col("yu") === col("xv"))
@@ -587,7 +588,7 @@ object GraphQueries {
           .unionAll(tri.select(col("b").as("u"), col("c").as("v")))
           .unionAll(tri.select(col("a").as("u"), col("c").as("v")))
           .groupBy("u", "v").agg(count(lit(1)).cast("long").as("c"))
-      var edges = pairs.coalesce(parts).localCheckpoint(true)
+      var edges = m.checkpoint(pairs, parts)
       // Early exit on fixpoint (r18 optimization; g03's converged check —
       // a pure optimization under the bounded-round contract): peeling
       // only removes edges, so an unchanged count == unchanged set ==
@@ -604,11 +605,10 @@ object GraphQueries {
       var lastSup: DataFrame = null
       while (round < 4 && !converged) {
         round += 1
-        val sup = support(triangles(edges)).coalesce(parts).localCheckpoint(true)
-        val next = edges
+        val sup = m.checkpoint(support(triangles(edges)), parts)
+        val next = m.checkpoint(edges
           .join(sup.filter(col("c") >= 1).select("u", "v").hint("shuffle_hash"),
-            Seq("u", "v"), "left_semi")
-          .coalesce(parts).localCheckpoint(true)
+            Seq("u", "v"), "left_semi"), parts)
         val c = next.count()
         converged = c == eCount
         eCount = c
@@ -618,12 +618,12 @@ object GraphQueries {
       // at a fixpoint the last round's support was computed over a set
       // identical to the settled one, so it IS the final support
       val supF = if (converged) lastSup else support(triangles(edges))
-      edges.join(supF, Seq("u", "v"), "left")
+      m.result(edges.join(supF, Seq("u", "v"), "left")
         .select(col("u"), col("v"), coalesce(col("c"), lit(0L)).as("support"))
-        .orderBy("u", "v")
+        .orderBy("u", "v"))
     },
 
-    sql(
+    sqlEager(
       "g02_triangle_count",
       "exact triangle counting with degree-ordered orientation over the frequent co-purchase graph (the clustering-coefficient / community-density primitive beside g01's centrality): part pairs sharing an order (TPC-H caps lines per order at 7, so per-order pair fan-out is bounded ≤21, never quadratic) become edges only at co-occurrence support ≥ 2 — the frequent-itemset support threshold that is ALSO the scale lever: the raw pair graph at sf0.1 is 1.2M edges with an 83M-row wedge set, the support-2 graph is ~4k edges, and at 100 TB a support threshold is the only thing keeping a co-occurrence graph tractable at all. Edges orient from the (degree, id)-smaller endpoint — the classic trick bounding out-degree to O(√E) so the wedge join is O(E^1.5) worst-case — and each triangle appears as exactly ONE directed path a→b→c closed by a→c: exact count, no /3 correction. Wholly oracle-replayed integers. Scale posture: edge build = one order-keyed self-join + support-filtered keyed count (the one pass over facts); everything after runs on the support-thresholded edge list via two-phase SHUFFLE wedge joins — O(wedges) 16-byte shuffle rows, no broadcast of E, valid at any edge-list size",
       s"""WITH $copurchasePairsSql,
@@ -637,18 +637,17 @@ object GraphQueries {
         |        FROM deg),
         |es  AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM pairs)
         |SELECT vs.n_nodes, es.n_edges, vs.max_degree, tri.n_triangles
-        |FROM vs CROSS JOIN es CROSS JOIN tri""") { (s, dir) =>
+        |FROM vs CROSS JOIN es CROSS JOIN tri""") { (s, dir, m) =>
       // Edge/degree/orientation/wedge machinery lives in orientedTriangles
       // (shared with g08 — tie-break and hints in one place; its scaladoc
       // carries the r7/r8/r10 history: full-parallel support aggregation,
       // the two-phase shuffle wedge join, the compact-cache barriers).
-      // Query runners clearCache() the persisted intermediates after.
-      val (pairs, deg, _, tris, _) = orientedTriangles(s, dir)
+      val (pairs, deg, tris) = orientedTriangles(s, dir, m)
       val tri = tris.agg(count(lit(1)).as("n_triangles"))
       val vs = deg.agg(count(lit(1)).as("n_nodes"), max("d").as("max_degree"))
       val es = pairs.agg(count(lit(1)).as("n_edges"))
-      vs.crossJoin(es).crossJoin(tri)
-        .select("n_nodes", "n_edges", "max_degree", "n_triangles")
+      m.result(vs.crossJoin(es).crossJoin(tri)
+        .select("n_nodes", "n_edges", "max_degree", "n_triangles"))
     },
 
     sql(
@@ -673,7 +672,7 @@ object GraphQueries {
           |SELECT node, d_core FROM a16 ORDER BY node"""
       }) { (s, dir) => kcorePeel(s, dir)._1 },
 
-    sql(
+    sqlEager(
       "g04_bfs_distance",
       "multi-source BFS distance over the co-purchase graph (the reachability / neighborhood-expansion primitive beside g01 centrality, g02 density, and g03 coreness — graph-shaped corpora use bounded BFS for 'everything within k hops of a seed set' expansion queries): seeds = graph nodes with partkey % 50 = 0, distances computed frontier-by-frontier for 4 rounds; output every reached node with its hop distance. Bounded-round contract (the g03 pattern): both engines run the SAME 4 expansion rounds, the oracle unrolls them as chained MATERIALIZED CTEs over the shared co-purchase edge SQL, and the frontier/visited sets are exact (anti-join, not min-dist relaxation — BFS frontiers on an unweighted graph ARE the min distances). Scale posture: each round is one edge-keyed semi-join (frontier against the cached symmetric edge list) + one anti-join against visited — O(rounds × E) shuffle rows of 8 B, the Pregel superstep shape; frontiers are localCheckpoint-truncated so round r's plan never re-derives rounds 1..r-1 (the kcorePeel lineage lesson), and at 100 TB the same loop runs on reliable checkpoints with the visited set growing monotonically (never the full node set per round)",
       {
@@ -693,34 +692,30 @@ object GraphQueries {
           |v0 AS MATERIALIZED (SELECT node, CAST(0 AS BIGINT) AS dist FROM f0),
           |$rounds
           |SELECT node, dist FROM v4 ORDER BY node"""
-      }) { (s, dir) =>
-      // Two-step compact cache (the shared persistCompact pattern):
-      // thresholded edges re-persist at a data-derived partition count
-      // before the round loop.
-      val (edges, parts) = persistCompact(copurchasePairs(s, dir))
+      }) { (s, dir, m) =>
+      // Two-step compact cache (Materialize.compact): thresholded edges
+      // re-persist at a data-derived partition count before the round loop.
+      val (edges, parts) = m.compact(copurchasePairs(s, dir))
       val sym = edges.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
       // seeds restricted to graph nodes: BFS distance is defined on the
       // graph, and the oracle's f0 derives from sym the same way
-      var frontier = sym.select("src").distinct()
-        .filter(col("src") % 50 === 0).select(col("src").as("node"))
-        .coalesce(parts).localCheckpoint(true)
-      var visited = frontier.withColumn("dist", lit(0L))
-        .coalesce(parts).localCheckpoint(true)
+      var frontier = m.checkpoint(sym.select("src").distinct()
+        .filter(col("src") % 50 === 0).select(col("src").as("node")), parts)
+      var visited = m.checkpoint(frontier.withColumn("dist", lit(0L)), parts)
       for (d <- 1 to 4) {
         val nbrs = sym
           .join(frontier.select(col("node").as("src")).hint("shuffle_hash"), Seq("src"), "left_semi")
           .select(col("dst").as("node")).distinct()
-        frontier = nbrs
-          .join(visited.select("node").hint("shuffle_hash"), Seq("node"), "left_anti")
-          .coalesce(parts).localCheckpoint(true)
-        visited = visited.unionAll(frontier.withColumn("dist", lit(d.toLong)))
-          .coalesce(parts).localCheckpoint(true)
+        frontier = m.checkpoint(nbrs
+          .join(visited.select("node").hint("shuffle_hash"), Seq("node"), "left_anti"), parts)
+        visited = m.checkpoint(
+          visited.unionAll(frontier.withColumn("dist", lit(d.toLong))), parts)
       }
-      visited.orderBy("node")
+      m.result(visited.orderBy("node"))
     },
 
-    sql(
+    sqlEager(
       "g05_common_neighbors",
       "common-neighbor link prediction over the co-purchase graph (the similarity/recommendation primitive the g-family was missing: 'parts bought with the same companions' — rank NON-adjacent node pairs by shared-neighbor structure): for every unordered non-edge pair with >= 2 common neighbors, the common-neighbor count and neighborhood Jaccard |N(a) ∩ N(b)| / |N(a) ∪ N(b)|. Integer wedge counts, r4 ratio; the oracle replays wedge join, degree join, and the existing-edge anti-join exactly. Scale posture: candidate pairs form ONLY through the wedge equi-join on the shared middle vertex (never nodes × nodes), the same O(Σ deg²) bound as g02's wedge phase, which the support-2 edge threshold keeps corpus-proportional; on the power-law degrees g13 measures a mega-hub middle alone contributes a quadratic term, so the hub cap is WIRED, not a note: commonNeighbors(middleCap=...) drops over-degree middles with one keyed count + anti-join BEFORE the self-join (the d04/s20/g12 df-cap shape, default-off so this oracle replays the uncapped join bit-exact; SkewSpec plants a part-in-every-order hub and measures the wedge collapse with endpoint degrees — the Jaccard denominator — kept TRUE)",
       s"""WITH $copurchasePairsSql,
@@ -736,9 +731,9 @@ object GraphQueries {
         |SELECT ne.a, ne.b, ne.common,
         |       floor(ne.common * 1.0 / (da.d + db.d - ne.common) * 10000 + 0.5) / 10000 AS jaccard
         |FROM ne JOIN deg da ON da.node = ne.a JOIN deg db ON db.node = ne.b
-        |ORDER BY ne.a, ne.b""") { (s, dir) => commonNeighbors(s, dir) },
+        |ORDER BY ne.a, ne.b""") { (s, dir, m) => commonNeighbors(s, dir, m = m) },
 
-    sql(
+    sqlEager(
       "g06_assortativity",
       "degree assortativity of the co-purchase graph (Newman's r — the graph-profiling scalar that tells you whether hubs link to hubs (r>0, social-style) or to leaves (r<0, dependency-style), which decides whether g02-style wedge work concentrates or spreads and whether a hub degree cap is even needed): every moment (Σjk, Σ(j+k), Σ(j²+k²) over edge-endpoint degree pairs) is an EXACT integer aggregate the driver hash pins directly; floats appear only in the final Pearson assembly, built from the same shared subterms in the same order in both engines (b = S2/2M computed once, then b·b — never pow(), whose libm rounding is not contractual), rounded r6, with a zero-variance guard. Scale posture: one keyed degree aggregation + one edge-keyed degree join (the g02 ori shape) + a single scalar fold — no new join shapes beyond what g02 already pays",
       s"""WITH $copurchasePairsSql,
@@ -762,13 +757,13 @@ object GraphQueries {
         |       CASE WHEN c - b * b = 0 THEN 0.0
         |            ELSE floor(((a - b * b) / (c - b * b)) * 1000000 + 0.5) / 1000000 END
         |         AS assortativity
-        |FROM terms""") { (s, dir) =>
-      // Two-step compact cache (the shared persistCompact pattern — r10's
-      // one weak flag was this site skipping it: the wide cache, left at
-      // full shuffle parallelism post-r10's full-parallel support agg,
-      // charged the deg agg + two edge joins 51 s of near-empty executor
-      // tasks for a one-row answer).
-      val (pairs, _) = persistCompact(copurchasePairs(s, dir))
+        |FROM terms""") { (s, dir, m) =>
+      // Two-step compact cache (Materialize.compact — r10's one weak flag
+      // was this site skipping it: the wide cache, left at full shuffle
+      // parallelism post-r10's full-parallel support agg, charged the deg
+      // agg + two edge joins 51 s of near-empty executor tasks for a
+      // one-row answer).
+      val (pairs, _) = m.compact(copurchasePairs(s, dir))
       val deg = pairs.select(col("u").as("node")).unionAll(pairs.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).cast("long").as("d"))
       val nn = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
@@ -779,7 +774,7 @@ object GraphQueries {
           sum(col("j") * col("k")).cast("long").as("s1"),
           sum(col("j") + col("k")).cast("long").as("s2"),
           sum(col("j") * col("j") + col("k") * col("k")).cast("long").as("s3"))
-      sums.crossJoin(nn)
+      m.result(sums.crossJoin(nn)
         .withColumn("a", col("s1").cast("double") / col("m"))
         .withColumn("b", col("s2").cast("double") / (col("m") * 2))
         .withColumn("c", col("s3").cast("double") / (col("m") * 2))
@@ -787,12 +782,12 @@ object GraphQueries {
           r4(lit(2.0) * col("m") / col("n_nodes")).as("avg_degree"),
           when(col("c") - col("b") * col("b") === 0, lit(0.0))
             .otherwise(r6((col("a") - col("b") * col("b")) / (col("c") - col("b") * col("b"))))
-            .as("assortativity"))
+            .as("assortativity")))
     },
 
-    sql(
+    sqlEager(
       "g07_label_prop",
-      "synchronous label-propagation community detection over the co-purchase graph (the community-assignment primitive beside g01 centrality, g02 density, g03 coreness: which parts cluster into co-bought families — the graph analog of the d08/p06 duplicate-cluster representative step): labels start as node ids and for 4 synchronous rounds every node adopts its neighbors' MOST FREQUENT label, ties broken by smallest label — the classic LPA update made fully deterministic (no async sweep order, no RNG), so every round is an exact integer relation both engines reproduce; output = per final community its size and min/max member. Bounded-round contract (the g03/g04 pattern): both engines run the SAME 4 rounds, the oracle unrolls them as chained MATERIALIZED CTEs over the shared co-purchase edge SQL. Scale posture: each round is one edge-keyed equi-join (labels against the cached symmetric edge list) + two keyed aggregations — O(rounds x E) shuffle rows of 8-16 B, the Pregel superstep shape; labels are localCheckpoint-truncated per round (the kcorePeel lineage lesson), the edge list is the persistCompact-cached support-2 graph (corpus-proportional, see g02), and at 100 TB the same loop runs on reliable checkpoints with a hub degree cap exactly as g05 documents",
+      "synchronous label-propagation community detection over the co-purchase graph (the community-assignment primitive beside g01 centrality, g02 density, g03 coreness: which parts cluster into co-bought families — the graph analog of the d08/p06 duplicate-cluster representative step): labels start as node ids and for 4 synchronous rounds every node adopts its neighbors' MOST FREQUENT label, ties broken by smallest label — the classic LPA update made fully deterministic (no async sweep order, no RNG), so every round is an exact integer relation both engines reproduce; output = per final community its size and min/max member. Bounded-round contract (the g03/g04 pattern): both engines run the SAME 4 rounds, the oracle unrolls them as chained MATERIALIZED CTEs over the shared co-purchase edge SQL. Scale posture: each round is one edge-keyed equi-join (labels against the cached symmetric edge list) + two keyed aggregations — O(rounds x E) shuffle rows of 8-16 B, the Pregel superstep shape; labels are localCheckpoint-truncated per round (the kcorePeel lineage lesson), the edge list is the compact-cached support-2 graph (corpus-proportional, see g02), and at 100 TB the same loop runs on reliable checkpoints with a hub degree cap exactly as g05 documents",
       {
         // round k: per-node neighbor-label frequencies, then the
         // deterministic argmax (count DESC, label ASC). MATERIALIZED for
@@ -816,15 +811,14 @@ object GraphQueries {
           |SELECT label AS community, CAST(count(*) AS BIGINT) AS n_members,
           |       min(node) AS min_member, max(node) AS max_member
           |FROM l4 GROUP BY label ORDER BY community"""
-      }) { (s, dir) =>
+      }) { (s, dir, m) =>
       // KEYED sym cache (r19, §2.4): every round joins sym on dst, so it
       // materializes under hashpartitioning(dst) and all four rounds read
       // the cache partitions directly instead of re-exchanging the full
-      // edge list per round (symPairsCachedBy scaladoc)
-      val (sym, parts) = symPairsCachedBy(s, dir, "dst")
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .coalesce(parts).localCheckpoint(true)
+      // edge list per round (symEdges scaladoc)
+      val (sym, parts) = symEdges(s, dir, "dst", m)
+      var labels = m.checkpoint(sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")), parts)
       for (_ <- 1 to 4) {
         val nbr = sym
           .join(labels.select(col("node").as("dst"), col("label")).hint("shuffle_hash"), "dst")
@@ -832,25 +826,20 @@ object GraphQueries {
         // deterministic argmax via struct ordering: min over (-count,
         // label) = highest frequency, then smallest label — no window,
         // no sort, one keyed aggregation
-        labels = nbr
+        labels = m.checkpoint(nbr
           .groupBy(col("src").as("node"))
           .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-          .select(col("node"), col("m.label").as("label"))
-          .coalesce(parts).localCheckpoint(true)
+          .select(col("node"), col("m.label").as("label")), parts)
       }
-      val out = labels.groupBy("label")
+      m.result(labels.groupBy("label")
         .agg(count(lit(1)).as("n_members"),
           min("node").as("min_member"), max("node").as("max_member"))
         .select(col("label").as("community"), col("n_members"),
           col("min_member"), col("max_member"))
-        .orderBy("community")
-        .persist()
-      out.count()
-      sym.unpersist(blocking = false)
-      out
+        .orderBy("community"))
     },
 
-    sql(
+    sqlEager(
       "g08_clustering_coeff",
       "per-degree local clustering-coefficient profile of the co-purchase graph (the transitivity / local-density diagnostic that completes the g-family: g02 counts triangles globally, g08 asks WHERE the closure lives — do high-degree hub parts sit in closed co-bought families or in open stars, the structural signal a graph-curation pass uses to separate organic clusters from crawl/spam hubs): per-node triangle participation t(v) comes from the SAME degree-ordered oriented wedge-close join as g02 — each closed triangle a->b->c emits its three member nodes exactly once — and the report groups nodes by degree so the average coefficient avg(2t / d(d-1)) is computable as one exact expression 2*sum(t) / (d*(d-1)*n) per bucket: integers end-to-end until a single IEEE division, no per-node float averaging whose accumulation order could diverge between engines. Scale posture: identical to g02 (one order-keyed pair build, support-2 threshold bounding E, O(wedges) 16-byte shuffle rows through two shuffle_hash equi-joins), plus one node-keyed explode/count of the triangle triples and one degree-keyed aggregation over |V| rows — the output is degree-histogram-sized, never node-sized",
       s"""WITH $copurchasePairsSql,
@@ -868,17 +857,17 @@ object GraphQueries {
         |            ELSE 0.0 END AS avg_local_cc
         |FROM (SELECT deg.node, deg.d, COALESCE(tc.t, 0) AS t
         |      FROM deg LEFT JOIN tcnt tc ON tc.node = deg.node)
-        |GROUP BY d ORDER BY degree""") { (s, dir) =>
+        |GROUP BY d ORDER BY degree""") { (s, dir, m) =>
       // Shared edge/degree/orientation/wedge build (orientedTriangles, with
       // g02); the only new plan pieces are the triple explode (3 rows per
       // triangle — each triangle closes exactly once under the orientation,
       // so the explode credits every node once per triangle) and the
       // degree-keyed rollup.
-      val (pairs, deg, ori, tris, _) = orientedTriangles(s, dir)
+      val (_, deg, tris) = orientedTriangles(s, dir, m)
       val tcnt = tris
         .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("t"))
-      val out = deg.join(tcnt, Seq("node"), "left")
+      m.result(deg.join(tcnt, Seq("node"), "left")
         .select(col("d"), coalesce(col("t"), lit(0L)).as("t"))
         .groupBy(col("d").as("degree"))
         .agg(count(lit(1)).as("n_nodes"), sum("t").as("tri_sum"))
@@ -887,13 +876,7 @@ object GraphQueries {
             r6(lit(2.0) * col("tri_sum") /
               (col("degree") * (col("degree") - lit(1)) * col("n_nodes"))))
             .otherwise(lit(0.0)).as("avg_local_cc"))
-        .orderBy("degree")
-        .persist()
-      out.count()
-      ori.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
-      out
+        .orderBy("degree"))
     },
 
     sql(
@@ -911,7 +894,7 @@ object GraphQueries {
 
     g13Entry,
 
-    sql(
+    sqlEager(
       "g14_adamic_adar",
       "Adamic-Adar link prediction over the co-purchase graph (the hub-discounting upgrade of g05: a shared RARE companion is strong evidence two parts belong together, a shared EVERYWHERE-hub is weak — AA weights each common neighbor by 1/ln(degree) so mega-hubs stop dominating the candidate ranking, which is why recommender candidate-gen uses AA over raw counts on power-law graphs like g13 measures): for every non-adjacent pair with >= 2 common neighbors, common count and aa_score = Σ over shared middles of 1e12 div ln_grid(deg(m)) — each middle's weight ONE flooring division off the 1e6 ln grid (the t26/t31 idiom; a wedge middle always has degree >= 2 so ln > 0), the per-pair sum an order-independent exact BIGINT. Scale posture: g05's exact join shape (wedge equi-join on the middle, never nodes x nodes) plus one middle-keyed weight join — and g05's WIRED middleCap applies unchanged (adamicAdar(middleCap=...), same keyed-count + anti-join prefilter, shared capMiddles helper, default-off for this oracle): AA's 1/ln(deg) discount shrinks a hub's SCORE, not the join volume, so the cap is the volume defence and the discount the ranking defence",
       s"""WITH $copurchasePairsSql,
@@ -928,7 +911,7 @@ object GraphQueries {
         |       GROUP BY 1, 2 HAVING count(*) >= 2),
         |ne AS (SELECT cn.a, cn.b, cn.common, cn.aa_score FROM cn
         |       LEFT JOIN pairs p ON p.u = cn.a AND p.v = cn.b WHERE p.u IS NULL)
-        |SELECT a, b, common, aa_score FROM ne ORDER BY a, b""") { (s, dir) => adamicAdar(s, dir) },
+        |SELECT a, b, common, aa_score FROM ne ORDER BY a, b""") { (s, dir, m) => adamicAdar(s, dir, m = m) },
 
     sqlEager(
       "g15_hits",
@@ -955,7 +938,7 @@ object GraphQueries {
         |FROM a2 JOIN deg ON deg.s = a2.s
         |ORDER BY auth_scaled DESC, node LIMIT 20""") { (s, dir, m) => hitsRanking(s, dir, m = m) },
 
-    sql(
+    sqlEager(
       "g16_hyperball_anf",
       "HyperBall approximate neighborhood function (Boldi/Vigna WWW'13 — the 100 TB form g10's scaladoc promised: g10 grows EXACT per-seed balls, O(rounds x frontier x degree) pair rows that at web scale become the graph's full transitive neighborhood, while HyperBall replaces each node's ball with one 512-register HyperLogLog COUNTER merged along edges — state O(V x 512) regardless of ball size, every round one edge-keyed join + register-keyed min): each node starts with its own splitmix hash in one register, h rounds of neighbor-merge give counters covering B(v,h), and a06's PROVEN-replayable fixed-order estimator (HUGEINT register sums, one double division chain, linear counting below 2.5m with empty registers) reads each node's ball size — so the whole loop, registers to estimates, replays bit-exact in DuckDB with machinery already behind the gate (the oracle replays the relational (node, idx, min w) register grain — min w IS elementwise max-rho, a06's duplicate-insensitive semantics; the Spark side runs Boldi/Vigna's PACKED layout — one 512-byte blob per node folding through the IDENTICAL HllDistinct reduce/merge/finish the batch a06 runs — because the row-per-register grain multiplies each round's shuffle by registers-per-node: the 10x probe measured it ~100x cpu for 10x edges, while packed blobs carry exactly one <= 520 B message per edge with map-side blob combine, O(E) per round). Output: the h = 0..3 curve — node count, seed count (g10's node % 100 sample), Sigma-ball ANF estimate over ALL nodes AND over the seed sample (the column the error-envelope spec checks against g10's exact Sigma|B(s,h)|), mean ball ppm. Scale posture: one edge-keyed join + one node-keyed blob merge per round, 512 B of state per node regardless of ball size; the estimator is one map-side pass; no frontier, no pair explosion — THE neighborhood primitive that survives 1e9 nodes",
       {
@@ -970,8 +953,8 @@ object GraphQueries {
         s"""WITH $hyperballCtesSql
            |$curve
            |ORDER BY h"""
-      }) { (s, dir) =>
-      val (rounds, readEst) = hyperballRounds(s, dir)
+      }) { (s, dir, m) =>
+      val (rounds, readEst) = hyperballRounds(s, dir, m)
       def curveRow(h: Int, regsH: DataFrame): DataFrame =
         regsH
           .select(col("node"), readEst(col("blob")).as("est"))
@@ -983,9 +966,9 @@ object GraphQueries {
             col("anf_est"), col("seed_anf_est"),
             expr("(1000000 * cast(anf_est as decimal(38,0))) div n_nodes")
               .cast("long").as("avg_ball_ppm"))
-      rounds.zipWithIndex.map { case (r, h) => curveRow(h, r) }
+      m.result(rounds.zipWithIndex.map { case (r, h) => curveRow(h, r) }
         .reduce(_ unionAll _)
-        .orderBy("h")
+        .orderBy("h"))
     },
 
     sqlEager(
@@ -1019,7 +1002,7 @@ object GraphQueries {
       weightedPageRank(s, dir, m = m)
     },
 
-    sql(
+    sqlEager(
       "g18_harmonic_centrality",
       "sampled harmonic centrality over the co-purchase graph (Boldi/Vigna's axiomatic pick — the closeness variant that SURVIVES DISCONNECTION: classic closeness 1/Sigma d(s,v) is undefined when any node is unreachable, harmonic Sigma 1/d(s,v) just scores the unreachable term 0, which is why it is THE centrality reported off web-scale crawls beside the g16 ANF curve it shares machinery with): for g10's deterministic seed sample, C_H(s) = Sigma_{h=1..3} |shell_h(s)| / h over the exact per-seed frontiers (the g04 bounded-round contract — both engines run the same 3 rounds), integerized per shell as n_h * 1e6 div h then summed exactly (flooring per shell, order-independent BIGINT sum). Output: every seed with its three shell sizes and harmonic_ppm, seed-ordered — the rank-vs-1-hop-degree gap is the signal (a seed with modest degree outranks a hub when its 2-3-hop reach is deeper). Scale posture: rides the seedFrontiers machinery g10 already pays for (frontier-only joins, localCheckpoint rounds); the per-seed rollup is three seed-keyed counts + a seed-sample-sized join, and at 100 TB the exact frontiers hand off to g16's per-node HLL registers exactly as the ANF curve does",
       s"""WITH $copurchasePairsSql,
@@ -1050,12 +1033,12 @@ object GraphQueries {
         |FROM seeds s LEFT JOIN c1 ON c1.seed = s.seed
         |             LEFT JOIN c2 ON c2.seed = s.seed
         |             LEFT JOIN c3 ON c3.seed = s.seed
-        |ORDER BY s.seed""") { (s, dir) =>
-      val (seeds, _, fs) = seedFrontiers(s, dir)
+        |ORDER BY s.seed""") { (s, dir, m) =>
+      val (seeds, _, fs) = seedFrontiers(s, dir, m)
       val shells = fs.zipWithIndex.map { case (f, i) =>
         f.groupBy("seed").agg(count(lit(1)).cast("long").as(s"n${i + 1}"))
       }
-      seeds
+      m.result(seeds
         .join(shells(0), Seq("seed"), "left")
         .join(shells(1), Seq("seed"), "left")
         .join(shells(2), Seq("seed"), "left")
@@ -1064,10 +1047,10 @@ object GraphQueries {
           col("n3").as("n_3hop"),
           expr("n1 * 1000000 + (n2 * 1000000) div 2 + (n3 * 1000000) div 3")
             .cast("long").as("harmonic_ppm"))
-        .orderBy("seed")
+        .orderBy("seed"))
     },
 
-    sql(
+    sqlEager(
       "g19_hyperball_harmonic",
       "HyperBall-estimated harmonic centrality (Boldi/Vigna's actual use-case for HyperBall, and g18's promissory note made real — g18's scaladoc says the exact frontiers hand off to g16's per-node HLL registers at 100 TB; this IS that hand-off, closing the r16 verdict's ask #5): C_H(v) = Sigma_h (|B(v,h)| - |B(v,h-1)|)/h read ENTIRELY from the SAME packed 512-byte blobs the g16 ANF loop already carries (one shared hyperballRounds loop and one shared register-grain oracle CTE block, the seedFrontiers sharing discipline — the ball machinery cannot drift between the curve and the centrality), with per-shell estimates differenced as greatest(est_h - est_{h-1}, 0): register merges are monotone but the a06 estimator's linear-counting switchover is not STRICTLY so, and a negative estimated shell is noise, clamped identically in both dialects. Shells integerize as shell*1e6 div h, summed exactly (g18's flooring-per-shell contract). Output: g10/g18's deterministic seed sample (node % 100) with the four estimated ball sizes and harmonic_est_ppm; the error-envelope spec reads it against g18's exact shells on the shared seed set. Scale posture: identical to g16 — O(E) packed-blob messages per round, 512 B state per node, and the centrality read is a seed-filtered map over the ALREADY-checkpointed round frames plus three node-sized joins on the seed sample; no frontier, no pair explosion — the per-node centrality that survives 1e9 nodes, which g18's exact form cannot",
       s"""WITH $hyperballCtesSql
@@ -1081,19 +1064,19 @@ object GraphQueries {
         |JOIN fin2 f2 ON f2.node = f0.node
         |JOIN fin3 f3 ON f3.node = f0.node
         |WHERE f0.node % 100 = 0
-        |ORDER BY f0.node""") { (s, dir) =>
-      val (rounds, readEst) = hyperballRounds(s, dir)
+        |ORDER BY f0.node""") { (s, dir, m) =>
+      val (rounds, readEst) = hyperballRounds(s, dir, m)
       val perRound = rounds.zipWithIndex.map { case (r, h) =>
         r.filter(col("node") % 100 === 0)
           .select(col("node"), readEst(col("blob")).as(s"ball_h$h"))
       }
-      perRound.reduce((a, b) => a.join(b, Seq("node")))
+      m.result(perRound.reduce((a, b) => a.join(b, Seq("node")))
         .select(col("node"), col("ball_h0"), col("ball_h1"), col("ball_h2"), col("ball_h3"),
           (greatest(col("ball_h1") - col("ball_h0"), lit(0L)) * 1000000L
             + expr("(greatest(ball_h2 - ball_h1, 0L) * 1000000) div 2")
             + expr("(greatest(ball_h3 - ball_h2, 0L) * 1000000) div 3"))
             .cast("long").as("harmonic_est_ppm"))
-        .orderBy("node")
+        .orderBy("node"))
     },
   )
 
@@ -1108,43 +1091,39 @@ object GraphQueries {
     * the packed form carries exactly one ≤520 B message per edge +
     * map-side-combined blob merges — O(E) per round, the posture both
     * registry docs claim. Returns the four per-round register frames
-    * (h = 0..3, each localCheckpointed so downstream readers never re-run
-    * the loop) plus the estimate-reading udf. g16 and g19 each run their
-    * own loop: the round frames are localCheckpoint RDD blocks that
-    * `clearCache()` does not release, so sharing them across entries would
-    * hand one entry's take the other's precomputed rounds. The edge frame
-    * itself is unpersisted before returning: every round is already
-    * eagerly checkpointed, so no downstream reader needs it.
+    * (h = 0..3, each checkpointed so downstream readers never re-run the
+    * loop) plus the estimate-reading udf. The round frames are checkpoint
+    * blocks of the caller's scope, released once its result fills, so g16
+    * and g19 each run their own loop. The edge cache itself is released
+    * before returning: every round is already eagerly checkpointed, so no
+    * downstream reader needs it.
     */
-  private def hyperballRounds(s: SparkSession, dir: String):
+  private def hyperballRounds(s: SparkSession, dir: String, m: Materialize):
       (Seq[DataFrame], org.apache.spark.sql.expressions.UserDefinedFunction) = {
     // KEYED sym cache (r19, §2.4): every merge round joins sym on dst, so
     // the cache materializes under hashpartitioning(dst) and the three
     // rounds read its partitions directly instead of re-exchanging the
-    // full edge list each round (symPairsCachedBy scaladoc).
-    val (sym, parts) = symPairsCachedBy(s, dir, "dst")
-    val edges = sym
+    // full edge list each round (symEdges scaladoc).
+    val (sym, parts) = symEdges(s, dir, "dst", m)
     val hll = new graft.functions.Aggregators.HllDistinct(13L)
     val init = udf((node: Long) => hll.reduce(hll.zero, node))
     val readEst = udf((blob: Array[Byte]) => hll.finish(blob))
     val mergeRegs = udaf(new graft.functions.Aggregators.HllRegMerge)
-    var regs = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), init(col("node")).as("blob"))
-      .coalesce(parts).localCheckpoint(true)
+    var regs = m.checkpoint(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), init(col("node")).as("blob")), parts)
     val rounds = Seq.newBuilder[DataFrame]
     rounds += regs
     for (_ <- 1 to 3) {
-      regs = regs.unionAll(
+      regs = m.checkpoint(regs.unionAll(
           sym.join(regs.select(col("node").as("dst"), col("blob"))
             .hint("shuffle_hash"), Seq("dst"))
             .select(col("src").as("node"), col("blob")))
-        .groupBy("node").agg(mergeRegs(col("blob")).as("blob"))
-        .coalesce(parts).localCheckpoint(true)
+        .groupBy("node").agg(mergeRegs(col("blob")).as("blob")), parts)
       rounds += regs
     }
     // every round is eagerly checkpointed above — the edge cache has no
     // remaining reader (r17 ADVICE #2)
-    edges.unpersist()
+    m.release(sym)
     (rounds.result(), readEst)
   }
 
@@ -1183,7 +1162,7 @@ object GraphQueries {
     // whole chain — the final g15 plan re-ran the e-join aggregation ~12×
     // (282 HashAggregate / 376 Exchange nodes in the audited before-plan,
     // plans/r18/g15_hits_before.txt). A persist + count barrier per level
-    // (the g02/persistCompact fill discipline) makes each half-iteration
+    // (the g02 compact-cache fill discipline) makes each half-iteration
     // run exactly once; caches release after the result materializes.
     def normalize(raw0: DataFrame, key: String, out: String): DataFrame = {
       val raw = m.fill(raw0, eParts)
@@ -1221,40 +1200,38 @@ object GraphQueries {
     * (harmonic centrality) so the two entries cannot drift on it: seeds
     * are nodes ≡ 0 mod 100, and each round joins ONLY last round's new
     * (seed, node) pairs against the cached symmetric edge list, anti-joins
-    * the ball, and localCheckpoints (g04's bounded-round contract,
-    * per-seed). Returns (seeds, the h = 0 ball, the h = 1..3 frontiers).
+    * the ball, and checkpoints (g04's bounded-round contract, per-seed)
+    * in the caller's scope. Returns (seeds, the h = 0 ball, the h = 1..3
+    * frontiers).
     */
-  private def seedFrontiers(s: SparkSession, dir: String)
+  private def seedFrontiers(s: SparkSession, dir: String, m: Materialize)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
     // KEYED sym cache (r19, §2.4): every expansion round joins sym on src,
     // so the cache materializes under hashpartitioning(src) and the three
     // rounds read its partitions directly instead of re-exchanging the
-    // full edge list each round (symPairsCachedBy scaladoc).
-    val (sym, parts) = symPairsCachedBy(s, dir, "src")
+    // full edge list each round (symEdges scaladoc).
+    val (sym, parts) = symEdges(s, dir, "src", m)
     // seeds checkpoints like the frontiers (r18 optimization): g10's four
     // curve rows each broadcast a seed-count scalar, and un-materialized
     // every one re-ran the sym distinct over the edge cache (41 cache
     // re-reads in the audited before-plan vs g18's 9)
-    val seeds = sym.select("src").distinct().filter(col("src") % 100 === 0)
-      .select(col("src").as("seed"))
-      .coalesce(parts).localCheckpoint(true)
-    var ball = seeds.select(col("seed"), col("seed").as("node"))
-      .coalesce(parts).localCheckpoint(true)
+    val seeds = m.checkpoint(sym.select("src").distinct().filter(col("src") % 100 === 0)
+      .select(col("src").as("seed")), parts)
+    var ball = m.checkpoint(seeds.select(col("seed"), col("seed").as("node")), parts)
     val b0 = ball
     var frontier = ball
     val fs = (1 to 3).map { _ =>
       val nbrs = sym
         .join(frontier.select(col("seed"), col("node").as("src")).hint("shuffle_hash"), Seq("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
-      frontier = nbrs
-        .join(ball.hint("shuffle_hash"), Seq("seed", "node"), "left_anti")
-        .coalesce(parts).localCheckpoint(true)
-      ball = ball.unionAll(frontier).coalesce(parts).localCheckpoint(true)
+      frontier = m.checkpoint(nbrs
+        .join(ball.hint("shuffle_hash"), Seq("seed", "node"), "left_anti"), parts)
+      ball = m.checkpoint(ball.unionAll(frontier), parts)
       frontier
     }
     // seeds/balls/frontiers are all eagerly checkpointed — the edge cache
     // has no remaining reader (the hyperballRounds lifecycle)
-    sym.unpersist(blocking = false)
+    m.release(sym)
     (seeds, b0, fs)
   }
 
@@ -1275,7 +1252,7 @@ object GraphQueries {
         (col("l_suppkey").cast("long") + 1000000L).as("sk"))
       .agg(countDistinct("o_orderkey").cast("long").as("w"))
     // One fact pass (r18 optimization): e0 feeds sym TWICE (the two edge
-    // directions) and str once more — un-cached, the persistCompact fill
+    // directions) and str once more — un-cached, the compact cache's fill
     // below re-ran the orders⋈lineitem aggregation per consumer and every
     // later nodes/nn evaluation re-expanded it again (282 parquet scans in
     // the audited before-plan, plans/r18/g17_weighted_pagerank_before.txt).
@@ -1293,12 +1270,12 @@ object GraphQueries {
     // the g15 degSide discipline), in the false position it takes the
     // shuffle-hash pin so the plan is broadcast-free END TO END (spec)
     val strSide = if (broadcastRanks) str else str.hint("shuffle_hash")
-    // r19 measured negative: a keyed persistCompactBy cache here (src, the
+    // r19 measured negative: a keyed compact cache here (src, the
     // d09/g09 pattern) read take-3 cpu 6.8 → 13.7 — without the two-step
     // wide persist the sym⋈str pre-join loses its AQE runtime broadcast
     // and replans as a full shuffle join under the keyed exchange; in the
     // broadcast position the rounds never re-exchange e anyway, so the
-    // keyed cache had nothing to save. Kept on the two-step helper.
+    // keyed cache had nothing to save. Kept on the two-step compact.
     val (e, eParts) = m.compact(sym.join(strSide, Seq("src")))
     m.release(e0)
     // Per-level materialization (r18 optimization, the hitsRanking
@@ -1356,24 +1333,23 @@ object GraphQueries {
     edges.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
 
-  /** Symmetrized co-purchase edge list cached KEYED by `key` (r19, guide
-    * §2.4 establish-the-partitioning-once): the pairs derivation lands in
-    * a persistCompact cache first (exact count; building sym straight off
-    * the derivation re-runs its final aggregation once per union branch —
-    * measured +2 cpu-s on g07), then the sym cache materializes under
-    * hashpartitioning(key) FROM the pairs cache and the pairs cache
-    * releases. Iterative consumers that join sym on `key` every round read
-    * the cache partitions directly instead of re-exchanging the full edge
-    * list per round.
+  /** Symmetrized co-purchase edge list compacted KEYED by `key` in `m`
+    * (r19, guide §2.4 establish-the-partitioning-once), shared by g07, g10,
+    * g16, g18 and g19: the pairs derivation compacts first (exact count;
+    * building sym straight off the derivation re-runs its final
+    * aggregation once per union branch — measured +2 cpu-s on g07), then
+    * sym compacts under hashpartitioning(key) FROM the pairs cache, sized
+    * at twice the pairs' partitions (its row bound is twice the pairs'
+    * partition budget), and the pairs cache releases. Iterative consumers
+    * that join sym on `key` every round read the cache partitions directly
+    * instead of re-exchanging the full edge list per round.
     */
-  private def symPairsCachedBy(s: SparkSession, dir: String, key: String)
+  private def symEdges(s: SparkSession, dir: String, key: String, m: Materialize)
       : (DataFrame, Int) = {
-    val (pairs, parts) = persistCompact(copurchasePairs(s, dir))
-    val symParts = math.max(2, 2 * parts)
-    val sym = symmetrize(pairs).repartition(symParts, col(key)).persist()
-    sym.count()
-    pairs.unpersist(blocking = false)
-    (sym, symParts)
+    val (pairs, parts) = m.compact(copurchasePairs(s, dir))
+    val sym = m.compact(symmetrize(pairs), Some(key), 2L * parts * Materialize.RowsPerPartition)
+    m.release(pairs)
+    sym
   }
 
   /** Wedge-middle df-cap shared by g05 [[commonNeighbors]] and g14
@@ -1412,20 +1388,21 @@ object GraphQueries {
     */
   private[graft] def wedgeCandidates(s: SparkSession, dir: String,
       middleCap: Int = 0): DataFrame = {
-    val (edges, _) = persistCompact(copurchasePairs(s, dir))
+    val m = Materialize.eager()
+    val (edges, _) = m.compact(copurchasePairs(s, dir))
     val sym = symmetrize(edges)
     val base = capMiddles(sym, middleCap)
-    base.select(col("src").as("m"), col("dst").as("a"))
+    m.result(base.select(col("src").as("m"), col("dst").as("a"))
       .join(base.select(col("src").as("m"), col("dst").as("b")).hint("shuffle_hash"), "m")
-      .filter(col("a") < col("b"))
+      .filter(col("a") < col("b")))
   }
 
   /** g05's body — see the registry doc and [[capMiddles]] for the
     * `middleCap` df-cap (default-off; the oracle replays uncapped).
     */
   private[graft] def commonNeighbors(s: SparkSession, dir: String,
-      middleCap: Int = 0): DataFrame = {
-    val (edges, _) = persistCompact(copurchasePairs(s, dir))
+      middleCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
+    val (edges, _) = m.compact(copurchasePairs(s, dir))
     val sym = symmetrize(edges)
     // TRUE degrees from the full sym table even under the cap: the cap
     // bounds join volume, it must not redefine the Jaccard denominator
@@ -1441,19 +1418,19 @@ object GraphQueries {
       .filter(col("common") >= 2)
     val ne = cn.join(edges.select(col("u").as("a"), col("v").as("b")).hint("shuffle_hash"),
       Seq("a", "b"), "left_anti")
-    ne.join(deg.select(col("node").as("a"), col("d").as("da")).hint("shuffle_hash"), "a")
+    m.result(ne.join(deg.select(col("node").as("a"), col("d").as("da")).hint("shuffle_hash"), "a")
       .join(deg.select(col("node").as("b"), col("d").as("db")).hint("shuffle_hash"), "b")
       .select(col("a"), col("b"), col("common"),
         r4(col("common") * lit(1.0) / (col("da") + col("db") - col("common"))).as("jaccard"))
-      .orderBy("a", "b")
+      .orderBy("a", "b"))
   }
 
   /** g14's body — see the registry doc and [[capMiddles]] for the
     * `middleCap` df-cap (default-off; the oracle replays uncapped).
     */
   private[graft] def adamicAdar(s: SparkSession, dir: String,
-      middleCap: Int = 0): DataFrame = {
-    val (edges, _) = persistCompact(copurchasePairs(s, dir))
+      middleCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
+    val (edges, _) = m.compact(copurchasePairs(s, dir))
     val sym = symmetrize(edges)
     // middle weights off the FULL degree table: a surviving middle's
     // 1/ln(deg) discount is a property of the graph, not of the cap
@@ -1471,15 +1448,11 @@ object GraphQueries {
       .groupBy("a", "b")
       .agg(count(lit(1)).cast("long").as("common"), sum("w").cast("long").as("aa_score"))
       .filter(col("common") >= 2)
-    val out = cn
+    m.result(cn
       .join(edges.select(col("u").as("a"), col("v").as("b")).hint("shuffle_hash"),
         Seq("a", "b"), "left_anti")
       .select(col("a"), col("b"), col("common"), col("aa_score"))
-      .orderBy("a", "b")
-      .persist()
-    out.count()
-    edges.unpersist(blocking = false)
-    out
+      .orderBy("a", "b"))
   }
 
   /** g12's body — see the registry doc. `basketCap` is the basket-size cap
@@ -1523,7 +1496,7 @@ object GraphQueries {
   }
 
   private lazy val g13Entry =
-    sql(
+    sqlEager(
       "g13_degree_powerlaw",
       "degree-distribution power-law fit over the support-2 co-purchase graph — the one-row graph-health dashboard (t26's Zipf diagnostic pointed at graph degrees: real co-occurrence graphs are heavy-tailed with exponent ~2-3, so a flat or broken slope flags a degenerate or flooded graph BEFORE the iterative family g01-g11 spends rounds on it): node/edge/max-degree counts plus an exact-integer OLS fit of ln(count-of-nodes-with-degree-d) on ln(d) over the degree histogram — log terms on the 1e3 grid (t26's ln-ULP-parity basis), all five co-moments BIGINT-exact and combined through DECIMAL(38,0)/HUGEINT (the p04 widening), slope and R² each one two-op IEEE chain on correctly-rounded double casts, r4-rounded, zero-variance short-circuited (the q98 guard). Scale posture: degrees are one edge-keyed count, the histogram a degree-keyed count (max-degree-sized), the fit a single rollup over that dimension frame — the corpus-scale cost is the shared cached edge build every graph entry amortizes",
       s"""WITH $copurchasePairsSql,
@@ -1553,8 +1526,8 @@ object GraphQueries {
         |            ELSE floor((CAST(cov AS DOUBLE) * CAST(cov AS DOUBLE)
         |                        / (CAST(vx AS DOUBLE) * CAST(vy AS DOUBLE))) * 10000 + 0.5) / 10000
         |            END AS fit_r2
-        |FROM fit""") { (s, dir) =>
-      val (pairs, _) = DedupQueries.persistCompact(copurchasePairs(s, dir))
+        |FROM fit""") { (s, dir, m) =>
+      val (pairs, _) = m.compact(copurchasePairs(s, dir))
       val deg = pairs.select(col("u").as("node")).unionAll(pairs.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).cast("long").as("d"))
       val hist = deg.groupBy("d").agg(count(lit(1)).cast("long").as("nd"))
@@ -1574,7 +1547,7 @@ object GraphQueries {
       val nNodes = deg.agg(count(lit(1)).cast("long").as("n_nodes"))
       val nEdges = pairs.agg(count(lit(1)).cast("long").as("n_edges"))
       val maxDeg = deg.agg(max("d").as("max_degree"))
-      val out = nNodes.crossJoin(broadcast(nEdges)).crossJoin(broadcast(maxDeg))
+      m.result(nNodes.crossJoin(broadcast(nEdges)).crossJoin(broadcast(maxDeg))
         .crossJoin(broadcast(fit))
         .select(col("n_nodes"), col("n_edges"), col("max_degree"),
           col("k").as("n_degree_levels"),
@@ -1582,10 +1555,6 @@ object GraphQueries {
             .otherwise(r4(col("cov").cast("double") / col("vx").cast("double"))).as("slope"),
           when(col("vx") === 0 || col("vy") === 0, lit(0.0))
             .otherwise(r4(col("cov").cast("double") * col("cov").cast("double")
-              / (col("vx").cast("double") * col("vy").cast("double")))).as("fit_r2"))
-        .persist()
-      out.count()
-      pairs.unpersist(blocking = false)
-      out
+              / (col("vx").cast("double") * col("vy").cast("double")))).as("fit_r2")))
     }
 }

@@ -215,7 +215,7 @@ object MultimodalQueries {
         .orderBy("doc_id", "chunk_idx")
     },
 
-    sql(
+    sqlEager(
       "m07_phash_pairs",
       "perceptual-hash near-duplicate pairs over binary payloads — the image-dedup primitive (average-hash: sample a fixed 64-position grid of the payload, threshold each sample against the grid mean, compare 64-bit fingerprints by Hamming distance; re-encoded/resized variants of the same media keep most bits, which byte-exact m01 sha256 dedup cannot see): grid position k reads byte floor((k-1)·n/64)+1, bit_k = 1 iff sample·64 > Σsamples (exact integer compare — no float mean, ties to 0), bits pack into four 16-bit bands, candidate pairs form ONLY via equality on any (band_idx, band_value) key (the d04 LSH-banding shape: Hamming ≤ 8 over 4 bands guarantees ≥ 1 identical band by pigeonhole, so banding is RECALL-LOSSLESS for the threshold), and candidates verify with bit_count(xor) summed across bands. Payload = the m01/m02 text-as-bytes stub contract. Scale posture: fingerprints are map-side codegen arithmetic; the only shuffle is the 10-byte band-key join, never payload×payload; band-bucket skew (e.g. the all-zero hash of blank media) caps exactly like d04's mega-bands",
       """WITH ch AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS n
@@ -244,12 +244,12 @@ object MultimodalQueries {
         |                 j -> bit_count(xor(ba.bs[j], bb.bs[j])))) AS BIGINT) AS hamming
         |        FROM cand c JOIN bands ba ON ba.doc_id = c.a JOIN bands bb ON bb.doc_id = c.b)
         |SELECT a, b, hamming FROM ham WHERE hamming <= 8
-        |ORDER BY a, b""") { (s, dir) =>
+        |ORDER BY a, b""") { (s, dir, m) =>
       // sampled byte k (1-based): position ((k-1)*n div 64)+1 ∈ [1, n];
       // bit threshold is the exact integer compare v*64 > Σv (ties → 0)
       // substring(pos, 1), not split-then-index: sampling 64 bytes must not
       // materialize a |payload|-element char array per row
-      val fpWide = Tables.documents(s, dir)
+      val fp = m.fill(Tables.documents(s, dir)
         .filter(length(col("text")) >= 1)
         .select(col("doc_id"), col("text"),
           length(col("text")).cast("long").as("n"))
@@ -260,8 +260,7 @@ object MultimodalQueries {
           "transform(sequence(0, 3), j -> aggregate(sequence(1, 16), cast(0 as bigint), " +
             "(acc, i) -> acc + CASE WHEN element_at(sv, j*16 + i) * 64 > s " +
             "THEN shiftleft(cast(1 as bigint), i - 1) ELSE cast(0 as bigint) END))"))
-        .select(col("doc_id"), col("bs"))
-        .persist()
+        .select(col("doc_id"), col("bs")))
       // Materialization barrier (the g02/d04 lesson, and this operator's
       // hard-won version of it): the fingerprint chain is a payload-sized
       // split + lambda cascade that collapse-projection would otherwise
@@ -271,8 +270,6 @@ object MultimodalQueries {
       // AQE-coalesced task burned 33 cpu-MINUTES at sf0.1 before this
       // persist; with it the whole query is sub-second). The cache is
       // |docs| rows × 4 longs — always the smallest thing in the plan.
-      fpWide.count()
-      val fp = fpWide
       val keys = fp.select(col("doc_id"),
         posexplode(col("bs")).as(Seq("j", "key")))
       // degenerate-bucket cap: a band value shared by >200 payloads (e.g.
@@ -289,7 +286,7 @@ object MultimodalQueries {
         .join(kf.select(col("doc_id").as("b"), col("j"), col("key")), Seq("j", "key"))
         .filter(col("b") > col("a"))
         .select("a", "b").distinct()
-      cand
+      m.result(cand
         .join(fp.select(col("doc_id").as("a"), col("bs").as("bs_a")), "a")
         .join(fp.select(col("doc_id").as("b"), col("bs").as("bs_b")), "b")
         .withColumn("hamming", expr(
@@ -297,7 +294,7 @@ object MultimodalQueries {
             "(acc, j) -> acc + bit_count(element_at(bs_a, j) ^ element_at(bs_b, j)))"))
         .filter(col("hamming") <= 8)
         .select("a", "b", "hamming")
-        .orderBy("a", "b")
+        .orderBy("a", "b"))
     },
 
     sql(

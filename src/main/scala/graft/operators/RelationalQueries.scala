@@ -1531,7 +1531,7 @@ object RelationalQueries {
         .orderBy("priority")
     },
 
-    sql(
+    sqlEager(
       "u14_overlap_audit",
       "clustering-health file-overlap audit — the metric a re-clustering decision actually reads (u12 scores a WORKLOAD against one layout; this scores the LAYOUT itself: a file whose key range overlaps many siblings defeats min/max skipping for every predicate, and total overlap is what Delta/Iceberg clustering advisors track round over round): the same 16-file synthetic manifest built under two layouts — RANGE (u12's (key*16) div m file assignment: ranges provably disjoint, each file overlaps 0 siblings) and HASH (key % 16: every file spans nearly the whole key domain and overlaps all 15 siblings) — and per (layout, file) the row count, min/max key, and the count of sibling files whose [min,max] interval intersects (a.min <= b.max AND b.min <= a.max, the gaps-and-islands interval test from q80). The range rows reading 0 and the hash rows reading 15 IS the re-cluster evidence, stated as data. Scale posture: manifests are keyed aggregations (u09's shape); the overlap join is |files|² over METADATA rows — dimension-sized, never data-sized",
       """WITH mk AS (SELECT CAST(max(l_orderkey) + 1 AS BIGINT) AS m FROM lineitem),
@@ -1554,7 +1554,7 @@ object RelationalQueries {
         |SELECT f.layout, f.file_id, f.n_rows, f.min_key, f.max_key,
         |       COALESCE(ov.n_overlaps, 0) AS n_overlaps
         |FROM fs f LEFT JOIN ov ON ov.layout = f.layout AND ov.file_id = f.file_id
-        |ORDER BY f.layout, f.file_id""") { (s, dir) =>
+        |ORDER BY f.layout, f.file_id""") { (s, dir, m) =>
       val li = Tables.lineitem(s, dir)
       val mk = li.agg((max("l_orderkey") + 1).cast("long").as("m"))
       def manifest(layout: String, fileId: org.apache.spark.sql.Column) =
@@ -1565,24 +1565,18 @@ object RelationalQueries {
             max("l_orderkey").cast("long").as("max_key"))
           .select(lit(layout).as("layout"), col("file_id"), col("n_rows"),
             col("min_key"), col("max_key"))
-      val fs = manifest("range", expr("cast((l_orderkey * 16) div m as bigint)"))
-        .unionAll(manifest("hash", expr("cast(l_orderkey % 16 as bigint)")))
-        .persist()
-      fs.count()
+      val fs = m.fill(manifest("range", expr("cast((l_orderkey * 16) div m as bigint)"))
+        .unionAll(manifest("hash", expr("cast(l_orderkey % 16 as bigint)"))))
       val ov = fs.as("a")
         .join(fs.as("b"),
           col("b.layout") === col("a.layout") && col("b.file_id") =!= col("a.file_id") &&
             col("a.min_key") <= col("b.max_key") && col("b.min_key") <= col("a.max_key"))
         .groupBy(col("a.layout").as("layout"), col("a.file_id").as("file_id"))
         .agg(count(lit(1)).cast("long").as("n_overlaps"))
-      val out = fs.join(ov, Seq("layout", "file_id"), "left")
+      m.result(fs.join(ov, Seq("layout", "file_id"), "left")
         .select(col("layout"), col("file_id"), col("n_rows"), col("min_key"), col("max_key"),
           coalesce(col("n_overlaps"), lit(0L)).as("n_overlaps"))
-        .orderBy("layout", "file_id")
-        .persist()
-      out.count()
-      fs.unpersist(blocking = false)
-      out
+        .orderBy("layout", "file_id"))
     },
 
     sql(
@@ -2073,12 +2067,12 @@ object RelationalQueries {
     // checkpointing the 5-row frame runs each audit once, not twice
     val checks0 = pk.unionAll(fk).unionAll(nl).unionAll(ng).unionAll(sz)
     val checks = m.checkpoint(checks0, 1)
-    checks
+    m.result(checks
       .unionAll(checks.agg(sum("n_violations").cast("long").as("v"))
         .select(lit("publish").as("check_name"), col("v").as("n_violations")))
       .select(col("check_name"), col("n_violations"),
         when(col("n_violations") === 0, 1L).otherwise(0L).as("passed"))
-      .orderBy("check_name")
+      .orderBy("check_name"))
   }
 
   /** u08's body — see the registry doc. */

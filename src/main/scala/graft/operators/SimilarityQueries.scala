@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.GraftQuery
+import graft.{GraftQuery, Materialize}
 import graft.GraftQuery.{rowsOnly, sql}
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions._
@@ -173,24 +173,24 @@ object SimilarityQueries {
     * two-level mean aggregation — so an iteration costs one corpus scan
     * plus a dim×k-sized shuffle, never a corpus-sized one. Init is
     * deterministic (the k lowest vec_ids). Each iteration's centroid
-    * frame is eagerly localCheckpoint'ed so the lineage stays flat —
+    * frame is eagerly checkpointed in `m` so the lineage stays flat —
     * persist alone would re-embed every previous iteration's plan
-    * (k rows — the materialization is k-row-sized, not a corpus collect).
+    * (k rows — the materialization is k-row-sized, not a corpus collect);
+    * the caller's `m.result` releases the checkpoints.
     *
     * This is the index-build step IVF (s03) presupposes; s03 keeps
     * label-mean centroids because its recall oracle is tuned to them.
     */
-  def kmeansCentroids(s: SparkSession, dir: String, k: Int = 10, iters: Int = 3): DataFrame = {
+  def kmeansCentroids(s: SparkSession, dir: String, k: Int = 10, iters: Int = 3,
+      m: Materialize = Materialize.eager()): DataFrame = {
     val e = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("centroid"))
-      .localCheckpoint(true)
+    var cents = m.checkpoint(e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("centroid")))
     for (_ <- 1 to iters) {
-      cents = meanCentroids(
+      cents = m.checkpoint(meanCentroids(
           assignCells(e, centroidArray(cents))
             .select(col("cell").as("cent_id"), col("embedding")),
-          "cent_id")
-        .localCheckpoint(true)
+          "cent_id"))
     }
     cents
   }
@@ -385,11 +385,12 @@ object SimilarityQueries {
       "s07_kmeans_centroids",
       "Lloyd k-means index build (3 iterations; cosine E-step is the zero-shuffle nearest_centroid argmax, M-step a dim x k mean); no oracle: iterative float means are accumulation-order-specific — SimilarityRecallSpec asserts the objective improves over the deterministic init")(
       (s, dir) => {
-        val cents = kmeansCentroids(s, dir)
-        assignCells(Tables.embeddings(s, dir), centroidArray(cents))
+        val m = Materialize.eager()
+        val cents = kmeansCentroids(s, dir, m = m)
+        m.result(assignCells(Tables.embeddings(s, dir), centroidArray(cents))
           .groupBy("cell").agg(count(lit(1)).as("n_members"))
           .select(col("cell").as("cent_id"), col("n_members"))
-          .orderBy("cent_id")
+          .orderBy("cent_id"))
       }),
 
     rowsOnly(

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.GraftQuery
-import graft.GraftQuery.sql
+import graft.{GraftQuery, Materialize}
+import graft.GraftQuery.{sql, sqlEager}
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.sources.Tables
 import graft.operators.Det._
@@ -80,13 +80,12 @@ object TextQueries {
     // Java's split("", -1) keeps a trailing zero-width match that DuckDB's
     // char split doesn't produce; the length filter drops it so both
     // engines seed identical symbol strings
-    val vocab = Tables.documents(s, dir)
+    val m = Materialize.eager()
+    val vocab = m.fill(Tables.documents(s, dir)
       .select(explode(TextFunctions.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("f"))
-      .select(col("f"), concat(lit(sep), array_join(chars, sep2), lit(sep)).as("s"))
-      .persist()
-    vocab.count()
+      .select(col("f"), concat(lit(sep), array_join(chars, sep2), lit(sep)).as("s")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     try {
       var applied: org.apache.spark.sql.Column = col("s")
@@ -109,7 +108,7 @@ object TextQueries {
             lit(sep + a + sep2 + b + sep), lit(sep + a + b + sep))
         }
       }
-    } finally vocab.unpersist(blocking = false)
+    } finally m.release(vocab)
     merges.toSeq
   }
 
@@ -1190,7 +1189,7 @@ object TextQueries {
         .orderBy("doc_id")
     },
 
-    sql(
+    sqlEager(
       "p11_curation_e2e",
       "end-to-end curation composition — the four-stage funnel every training corpus actually runs, chained inside ONE query so stage interactions are covered, not just the singletons: (1) quality gate on t04's exact composite score (threshold 0.7 on the ROUNDED value — the s11 boundary discipline, so no last-ulp flip can move a doc across the gate), (2) exact content dedup among SURVIVORS (d01's min-doc_id-per-md5 — run after the gate because quality-rejected copies must not shadow a kept duplicate), (3) surviving per-source token mass, (4) p04's α=0.5 temperature weights over that SURVIVING mass (the weights a sampler would actually use — computing them on raw mass, as the singleton necessarily does, overweights sources whose mass was about to be deduped away). Report per source: raw docs, post-gate docs, post-dedup docs, surviving tokens, temperature ppm. Sources that lose every doc stay in the report with zeros (LEFT joins from the raw spine — the funnel must show WHERE a source died, not drop it). Scale posture: the gate is a map-side predicate, dedup shuffles once on the 128-bit content hash (never text x text), the mass rollup and weight table are source-dimension-sized with one scalar broadcast — each stage keeps its singleton's plan shape, and the composition adds zero new shuffle classes",
       """WITH q AS (
@@ -1220,19 +1219,18 @@ object TextQueries {
         |       COALESCE(CAST(CAST(w.w_scaled AS HUGEINT) * 1000000 // tot.t AS BIGINT), 0) AS temp_ppm
         |FROM raw r LEFT JOIN kq k USING (source) LEFT JOIN wts w USING (source)
         |CROSS JOIN tot
-        |ORDER BY source""") { (s, dir) =>
+        |ORDER BY source""") { (s, dir, m) =>
       val toks = TextFunctions.tokens(col("text"))
       val docs = Tables.documents(s, dir)
       // kept feeds two branches (the post-gate count and the dedup window);
       // persisting avoids re-tokenizing the corpus for the second pass
-      val kept = docs
+      val kept = m.persist(docs
         .select(col("doc_id"), col("source"), col("text"),
           r4(lit(0.5) * (size(array_distinct(toks)) * lit(1.0) / size(toks))
             + lit(0.5) * (lit(1) - size(filter(toks, t => length(t) <= 2)) * lit(1.0) / size(toks)))
             .as("quality"))
         .filter(col("quality") >= 0.7)
-        .select("doc_id", "source", "text")
-        .persist()
+        .select("doc_id", "source", "text"))
       val ded = kept
         .withColumn("rn", row_number().over(Window.partitionBy(md5(col("text"))).orderBy("doc_id")))
         .filter(col("rn") === 1)
@@ -1243,7 +1241,7 @@ object TextQueries {
       val wts = kd.withColumn("w_scaled",
         floor(sqrt(col("n_tokens").cast("double")) * 1000000 + lit(0.5)).cast("long"))
       val tot = wts.agg(sum("w_scaled").as("t"))
-      raw.join(kq, Seq("source"), "left").join(wts, Seq("source"), "left")
+      m.result(raw.join(kq, Seq("source"), "left").join(wts, Seq("source"), "left")
         .crossJoin(broadcast(tot))
         .select(col("source"), col("n_raw"),
           coalesce(col("n_quality"), lit(0L)).as("n_quality"),
@@ -1251,7 +1249,7 @@ object TextQueries {
           coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
           coalesce(expr("cast(w_scaled AS DECIMAL(38,0)) * 1000000 div t"), lit(0L))
             .as("temp_ppm"))
-        .orderBy("source")
+        .orderBy("source"))
     },
 
     sql(

@@ -2,70 +2,111 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.operators.DedupQueries
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The compact-cache convention (r10 verdict #2): a small expensive result
   * cached at full shuffle parallelism charges every downstream stage the
   * full near-empty task count (cached plans keep their materialized
   * partitioning — AQE shuffle coalescing does not apply to cache scans).
-  * The fix pattern lives in [[DedupQueries.persistCompact]]; these tests
-  * pin BOTH the helper's behavior and the convention that every
-  * copurchasePairs consumer goes through it, so a future graph query
-  * cannot regress the way r10's g06 did.
+  * The fix pattern lives in [[Materialize.compact]]; these tests pin BOTH
+  * its behavior and the source convention that operators materialize only
+  * through a [[Materialize]] scope — every copurchasePairs consumer
+  * compacts, and no operator persists, unpersists or checkpoints directly —
+  * so a future graph query cannot regress the way r10's g06 did, nor leak
+  * an intermediate past its entry.
   */
 class CompactPersistSpec extends SparkSpec {
 
-  test("persistCompact re-partitions to the data-derived cacheParts count") {
+  test("Materialize.compact re-partitions to the data-derived cacheParts count") {
     import spark.implicits._
     // a deliberately wide plan: 123 rows spread over 8 partitions
     val wide = (1 to 123).toDF("x").repartition(8)
-    val (compact, parts) = DedupQueries.persistCompact(wide)
+    val (compact, parts) = Materialize.eager().compact(wide)
     try {
-      assert(parts === DedupQueries.cacheParts(123L))
+      assert(parts === Materialize.cacheParts(123L))
       assert(compact.rdd.getNumPartitions === parts)
       assert(compact.storageLevel !== StorageLevel.NONE, "compact frame must stay cached")
       assert(compact.as[Int].collect().sorted === (1 to 123).toArray)
     } finally compact.unpersist(blocking = false)
   }
 
-  test("persistCompact drops the wide copy once the compact cache is filled") {
+  test("Materialize.compact drops the wide copy once the compact cache is filled") {
     import spark.implicits._
     val wide = (1 to 10).toDF("x").repartition(8)
-    val (compact, _) = DedupQueries.persistCompact(wide)
+    val (compact, _) = Materialize.eager().compact(wide)
     try {
       // unpersist(blocking = false) is async; the LOGICAL mark is immediate
       assert(wide.storageLevel === StorageLevel.NONE, "wide copy must be unpersisted")
     } finally compact.unpersist(blocking = false)
   }
 
-  test("every copurchasePairs consumer uses persistCompact (source convention)") {
-    // the graph family (and its copurchasePairs machinery) moved to
-    // GraphQueries.scala in r13; scan both files so a future call site in
-    // either module stays under the convention
-    val src = Seq("GraphQueries", "DedupQueries").map { f =>
-      new String(Files.readAllBytes(
-        Paths.get(s"src/main/scala/graft/operators/$f.scala")), "UTF-8")
-    }.mkString("\n")
+  private def operatorSource(file: String): String =
+    new String(Files.readAllBytes(Paths.get(s"src/main/scala/graft/operators/$file")), "UTF-8")
+
+  /** Direct materialization calls on non-comment lines. Calls on the scope
+    * itself (`m.persist(...)`) are the sanctioned form and do not count.
+    */
+  private def directCalls(src: String): Seq[String] = {
+    val call = """(?<!\bm)\.(persist|unpersist|localCheckpoint)\(""".r
+    src.split("\n").toSeq
+      .map(_.trim)
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
+      .flatMap(l => call.findAllMatchIn(l.split("//").head).map(_ => l))
+  }
+
+  /** The only operator code allowed to materialize directly: the region of
+    * one file from anchor `from` to anchor `to` (or the end of the file),
+    * with the number of direct calls it holds and why.
+    */
+  private case class Allowed(file: String, from: String, to: Option[String], calls: Int,
+      reason: String)
+
+  private val allowlist = Seq(
+    Allowed("GraphQueries.scala", "\"g01_pagerank\",", Some("\"g09_personalized_pagerank\","), 5,
+      "g01's primitive pair-RDD loop persists its partitioned edge and degree RDDs and " +
+        "unpersists them itself once its result is persisted"),
+    Allowed("DedupQueries.scala", "def dupClusters(", Some("def exactNearDups("), 7,
+      "d08's pair-RDD label-propagation loop keeps at most two label generations and " +
+        "unpersists its own RDD blocks once its result is persisted"),
+    Allowed("MlLsh.scala", "object MlLsh", None, 1,
+      "the validation localCheckpoint is a correctness barrier: it keeps MLlib's " +
+        "non-total UDFs from seeing unvalidated rows"))
+
+  test("operators materialize only through Materialize (source convention)") {
+    val files = new java.io.File("src/main/scala/graft/operators").listFiles()
+      .map(_.getName).filter(_.endsWith(".scala")).sorted.toSeq
+    assert(files.contains("GraphQueries.scala"))
+    val outside = files.flatMap { f =>
+      val src = operatorSource(f)
+      val regions = allowlist.filter(_.file == f).map { a =>
+        val start = src.indexOf(a.from)
+        assert(start >= 0, s"allowlist anchor ${a.from} not found in $f")
+        val end = a.to.map(src.indexOf(_, start)).getOrElse(src.length)
+        assert(end > start, s"allowlist anchor ${a.to} not found after ${a.from} in $f")
+        val n = directCalls(src.substring(start, end)).size
+        assert(n == a.calls,
+          s"$f region ${a.from}: $n direct materialization calls, allowlist says ${a.calls} (${a.reason})")
+        (start, end)
+      }
+      val rest = regions.sorted.foldRight(src) { case ((s, e), acc) =>
+        acc.substring(0, s) + acc.substring(e)
+      }
+      directCalls(rest).map(l => s"$f: $l")
+    }
+    assert(outside.isEmpty,
+      "direct materialization outside the allowlist — route it through the entry's " +
+        s"Materialize scope:\n${outside.mkString("\n")}")
+
+    // every copurchasePairs consumer caches the thresholded edge list
+    // compactly (the r10 g06 regression class)
+    val src = operatorSource("GraphQueries.scala")
     val calls = "copurchasePairs\\(s, dir\\)".r.findAllMatchIn(src).toList
     assert(calls.nonEmpty, "expected copurchasePairs call sites in GraphQueries")
-    // sanctioned wrappings: persistCompact(...), the r19 keyed
-    // persistCompactBy(...), and persistCompactBy(symmetrize(...)) — the
-    // symmetrized edge list cached keyed in one step
-    def wrappedBy(pos: Int, wrappers: Seq[String]): Boolean = {
-      val upto = src.substring(0, pos).reverse.dropWhile(_.isWhitespace).reverse
-      wrappers.exists(upto.endsWith)
+    val bare = calls.filterNot { c =>
+      src.substring(0, c.start).reverse.dropWhile(_.isWhitespace).reverse.endsWith("m.compact(")
     }
-    val bare = calls.filterNot { m =>
-      wrappedBy(m.start, Seq("persistCompact(", "persistCompactBy(")) ||
-        (wrappedBy(m.start, Seq("symmetrize(")) &&
-          wrappedBy(src.lastIndexOf("symmetrize(", m.start),
-            Seq("persistCompactBy(")))
-    }
-    val lines = bare.map(m => src.substring(0, m.start).count(_ == '\n') + 1)
+    val lines = bare.map(c => src.substring(0, c.start).count(_ == '\n') + 1)
     assert(bare.isEmpty,
-      s"copurchasePairs call(s) at concatenated-source line(s) $lines bypass persistCompact — " +
-        "cache the thresholded edge list through the shared helper (r10 g06 regression class)")
+      s"copurchasePairs call(s) at GraphQueries.scala line(s) $lines bypass m.compact")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -9,8 +10,10 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * nothing (no SQL cache entry, no persisted RDD), and its plan must be the
   * real dataflow rather than cache or checkpoint leaves — that is what
   * PlanAudit and PlanDump read. The twin must also return the eager `fn`'s
-  * rows, and the eager scope must release every intermediate cache, so
-  * only the result's own entry is left once `fn` returns.
+  * rows, and the eager scope must release every intermediate cache and
+  * checkpoint, so only the result's own cache is left once `fn` returns.
+  * Entries whose loops stop on a data-dependent fixpoint own an eager scope
+  * with no twin; the same release contract holds for them.
   */
 class MaterializeScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -19,8 +22,29 @@ class MaterializeScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** Runs `fn` and returns its sorted rows, asserting that only the
+    * result's own cache outlives the call. The rows are collected before
+    * the result is unpersisted: released checkpoint blocks cannot be
+    * recomputed. Afterwards the CacheManager must be empty and no RDD
+    * persisted during the call may remain (RDDs persisted before it may be
+    * dropped meanwhile by the ContextCleaner, so this is a subset check).
+    */
+  private def scopedRows(name: String, fn: => DataFrame): Seq[String] = {
+    val rddsBefore = persistedRdds
+    val out = fn
+    try {
+      val rows = sortedRows(out)
+      // dropping the result's own entry must leave the cache empty
+      out.unpersist(blocking = true)
+      assert(cacheManager.isEmpty, s"$name: fn left intermediate caches behind")
+      val left = persistedRdds -- rddsBefore
+      assert(left.isEmpty, s"$name: fn left persisted RDDs $left (caches or checkpoint blocks)")
+      rows
+    } finally spark.catalog.clearCache()
+  }
 
   private val scoped = SparkEntry.registry.filter(_.plan.isDefined)
 
@@ -48,13 +72,18 @@ class MaterializeScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val twinRows = sortedRows(twin)
       assert(cacheManager.isEmpty, s"${q.name}: running the twin filled a SQL cache")
 
-      val out = q.fn(spark, sf0001)
-      try {
-        // dropping the result's own entry must leave the cache empty
-        out.unpersist(blocking = true)
-        assert(cacheManager.isEmpty, s"${q.name}: fn left intermediate caches behind")
-        assert(sortedRows(out) == twinRows, s"${q.name}: twin rows differ from fn's rows")
-      } finally spark.catalog.clearCache()
+      val fnRows = scopedRows(q.name, q.fn(spark, sf0001))
+      assert(fnRows == twinRows, s"${q.name}: twin rows differ from fn's rows")
     }
   }
+
+  // fixpoint loops (g03, g11), s07's k-means rounds and t24/t25's BPE
+  // training own an eager scope inside fn and declare no twin
+  Seq("g03_kcore", "g11_truss", "s07_kmeans_centroids", "t24_bpe_merges", "t25_bpe_segment")
+    .foreach { name =>
+      test(s"$name: fn's own scope leaves only its result cached") {
+        spark.catalog.clearCache()
+        assert(scopedRows(name, SparkEntry.queries(name)(spark, sf0001)).nonEmpty)
+      }
+    }
 }

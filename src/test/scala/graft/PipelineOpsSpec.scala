@@ -2168,7 +2168,8 @@ class PipelineOpsSpec extends SparkSpec {
     // would pin AQE's level-local choices at spec scale, which the knob
     // deliberately leaves to AQE. The result equality above plus the twin's
     // strategy pins are the contract.
-    spark.catalog.clearCache()
+    bcast.unpersist(blocking = true)
+    copart.unpersist(blocking = true)
     val plan = GraphQueries.hitsRanking(spark, dir, broadcastRanks = false, m = Materialize.Lazy)
       .queryExecution.executedPlan.toString
     val bhjKeys = """BroadcastHashJoin \[(\w+)#""".r
@@ -2207,7 +2208,8 @@ class PipelineOpsSpec extends SparkSpec {
     // r1 = 37.5e9 + 85%*m: 409375000000 / 90625000000
     // round 2: m(c1)=m(s1)=307031250000+90625000000, m(c2)=m(s2)=102343750000
     // r2: 375507812500 / 124492187500
-    val got = SparkEntry.queries("g17_weighted_pagerank")(spark, dir).collect()
+    val gotDf = SparkEntry.queries("g17_weighted_pagerank")(spark, dir)
+    val got = gotDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq(
       (1L, 4L, 375507812500L),
@@ -2218,7 +2220,7 @@ class PipelineOpsSpec extends SparkSpec {
     // matching is HINT-INSENSITIVE, so the false position would silently
     // reuse the true build's broadcast pre-join subtree and the plan
     // assert below would read the wrong plan
-    spark.catalog.clearCache()
+    gotDf.unpersist(blocking = true)
     val copartDf = GraphQueries.weightedPageRank(spark, dir, broadcastRanks = false)
     val copart = copartDf.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(copart == got, s"knob changed the answer: $copart")
@@ -2227,7 +2229,7 @@ class PipelineOpsSpec extends SparkSpec {
     // Plan shape reads off the LAZY twin (r18: the eager form materializes
     // per level); clear the eager runs' caches first (hint-insensitive
     // cache matching, as above).
-    spark.catalog.clearCache()
+    copartDf.unpersist(blocking = true)
     val plan = GraphQueries.weightedPageRank(spark, dir, broadcastRanks = false, m = Materialize.Lazy)
       .queryExecution.executedPlan.toString
     val bhjKeys = """BroadcastHashJoin \[(\w+)#""".r

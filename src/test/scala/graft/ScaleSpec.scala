@@ -458,7 +458,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("cacheParts grows linearly past bench scale: 1 partition at sf0.1/10x, >1 at 100 TB-implied counts") {
-    import graft.operators.DedupQueries.cacheParts
+    import graft.Materialize.cacheParts
     // bench-scale thresholded edge lists (~4k rows at sf0.1, ~40k at the
     // 10x probe) stay single-partition — the measured-optimal cache shape
     assert(cacheParts(4000L) == 1)
