@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 /** The one session builder and the one timed take every tool main shares.
   *
   * Every main (Bench, QueryTime, Verify, PlanAudit, PlanDump, LayoutGen,
-  * LayoutCheck, Smoke, ProbeGen and its probes) builds its session here, so
+  * LayoutCheck, Smoke and ProbeGen) builds its session here, so
   * the fixed settings and the `SPARK_GRAFT_EXTRA_CONF` overrides cannot
   * drift between tools: an A/B's plans and its timings come from one conf.
   * Timing mains measure through [[Timer.take]], so Bench's in-battery takes
@@ -47,8 +47,29 @@ object GraftSession {
       .foldLeft(fixed) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    quietCheckpointRelease
     streaming.LocalCheckpointFileManager.install(spark)
     spark
+  }
+
+  /** Drops the WARN Spark logs each time a locally checkpointed RDD is
+    * unpersisted ("RDD n was locally checkpointed, its lineage has been
+    * truncated ..."). [[Materialize]]'s eager scope releases its
+    * checkpoints on purpose once the result is filled, so the line is one
+    * per released checkpoint and says nothing. Only that message, only at
+    * the RDD class a Dataset checkpoint logs it from; installed once per JVM.
+    */
+  private lazy val quietCheckpointRelease: Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, Logger}
+    import org.apache.logging.log4j.core.filter.StringMatchFilter
+    LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD") match {
+      case l: Logger =>
+        l.addFilter(StringMatchFilter.newBuilder()
+          .setMatchString("was locally checkpointed, its lineage has been truncated")
+          .setOnMatch(Filter.Result.DENY).setOnMismatch(Filter.Result.NEUTRAL).build())
+      case _ => // not log4j-core: leave logging as configured
+    }
   }
 
   /** One completed stage, as the take's listener recorded it. */

@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   * UN-offset across lineitem replicas, so its co-purchase degree grows
   * ~K× (each replica contributes a disjoint partner set) while every
   * other degree stays constant: wedges centered on the hub grow ~K², the
-  * hub-growth signal the capped-vs-uncapped probe row measures (see
-  * [[WedgeProbe]] and README's probe table).
+  * hub-growth signal QueryTime's g05/g14 timings over the probe corpus
+  * measure (README's probe table).
   */
 object ProbeGen {
   def main(args: Array[String]): Unit = {
@@ -133,97 +133,6 @@ object ProbeGen {
       println(s"[probegen] $t copied")
     }
     println(s"[probegen] wrote ${k}x probe corpus: $inDir -> $outDir")
-    spark.stop()
-  }
-}
-
-/** Capped-vs-uncapped wedge-join probe (r14 verdict #3's "done" row):
-  * times g14's [[graft.operators.GraphQueries.adamicAdar]] at a given
-  * `middleCap` over `SPARK_GRAFT_SF_DIR` — point it at a [[ProbeGen]]
-  * `hub`-mode corpus to measure how the planted hub's ~K² wedge growth
-  * responds to the cap (QueryTime can't express the capped variant: the
-  * registry entry is contractually uncapped so its oracle replays).
-  * Session/timing shape mirrors [[QueryTime]] (noop sink, warm takes,
-  * wall seconds on stdout).
-  *
-  * Usage: `runMain graft.WedgeProbe <middleCap> [takes]`.
-  */
-object WedgeProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: WedgeProbe <middleCap> [takes]")
-    val middleCap = args(0).toInt
-    val takes = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.build(GraftSession.cpus(32))
-    val timer = new GraftSession.Timer(spark)
-    // candidate volume is the quantity the cap bounds — report it beside
-    // wall time (at probe scales fixed session costs can drown the join)
-    val cands = graft.operators.GraphQueries
-      .wedgeCandidates(spark, sfDir, middleCap).count()
-    println(s"[wedgeprobe] g14 cap=$middleCap wedge candidates: $cands")
-    (1 to takes).foreach { i =>
-      val t = timer.take(graft.operators.GraphQueries.adamicAdar(spark, sfDir, middleCap))
-      t.error.foreach(e => throw e)
-      println(f"[wedgeprobe] g14 cap=$middleCap take $i: ${t.wall}%.2f s wall")
-    }
-    spark.stop()
-  }
-}
-
-/** g15 `broadcastRanks` A/B (r15 verdict #1): times [[graft.operators
-  * .GraphQueries.hitsRanking]] in both knob positions — `true` broadcasts
-  * the node-sized rank tables into the cached edge list (the measured
-  * bench plan), `false` runs the rank joins shuffle-hash co-partitioned
-  * on the edge key (the plan that survives a 1e9-node corpus where an
-  * O(V) broadcast would materialize on the driver). Session/timing shape
-  * mirrors [[WedgeProbe]].
-  *
-  * Usage: `runMain graft.HitsProbe <true|false> [takes]`.
-  */
-object HitsProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: HitsProbe <true|false> [takes]")
-    val broadcastRanks = args(0).toBoolean
-    val takes = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.build(GraftSession.cpus(32))
-    val timer = new GraftSession.Timer(spark)
-    (1 to takes).foreach { i =>
-      val t = timer.take(graft.operators.GraphQueries.hitsRanking(spark, sfDir, broadcastRanks))
-      t.error.foreach(e => throw e)
-      println(f"[hitsprobe] g15 broadcastRanks=$broadcastRanks take $i: ${t.wall}%.2f s wall")
-    }
-    spark.stop()
-  }
-}
-
-/** m14 `batchShards` A/B (r16 verdict #1): times [[graft.operators
-  * .MultimodalQueries.aspectBuckets]] in both knob positions — `0` is the
-  * oracle-replayed global per-bucket assembly (7-key windows), `S > 0`
-  * assembles within (bucket, splitmix-shard) partitions (the plan that
-  * survives a corpus where corpus/7 rows per window partition cannot).
-  * Also prints the max assembly-partition row count each position
-  * funnels (the quantity the knob bounds). Session/timing shape mirrors
-  * [[HitsProbe]].
-  *
-  * Usage: `runMain graft.AspectProbe <batchShards> [takes]`.
-  */
-object AspectProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: AspectProbe <batchShards> [takes]")
-    val batchShards = args(0).toLong
-    val takes = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.build(GraftSession.cpus(32))
-    val timer = new GraftSession.Timer(spark)
-    val maxPart = graft.operators.MultimodalQueries
-      .aspectBatchMaxPartition(spark, sfDir, batchShards)
-    println(s"[aspectprobe] m14 batchShards=$batchShards max assembly partition rows: $maxPart")
-    (1 to takes).foreach { i =>
-      val t = timer.take(graft.operators.MultimodalQueries.aspectBuckets(spark, sfDir, batchShards))
-      t.error.foreach(e => throw e)
-      println(f"[aspectprobe] m14 batchShards=$batchShards take $i: ${t.wall}%.2f s wall")
-    }
     spark.stop()
   }
 }

@@ -91,26 +91,16 @@ object DedupQueries {
   /** Production near-dup path: MinHash(k=32) → LSH bands(16×2) → exact
     * Jaccard verification of colliding pairs.
     *
-    * `bucketCap` is the df-cap prefilter (the banding join's skew defence,
-    * SURVEY §9): band-key buckets holding more than `bucketCap` documents
-    * are flood classes — identical-doc runs or stop-gram-dominated
-    * signatures — whose candidate contribution is quadratic in the bucket
-    * size while their dedup value is already covered upstream (d01 exact
-    * dedup catches identical docs before LSH runs in every production
-    * pipeline ordering, including p01's). The cap drops those buckets with
-    * one keyed count + anti-join (both scale-shaped). Default 0 = off: the
-    * fixture corpora have no flood buckets (max observed bucket is
-    * single-digit) and the DuckDB oracle replays the uncapped join
-    * bit-exact. At 100 TB the deployment config sets it (64 is the
-    * documented starting point); SkewSpec measures the mechanism on a
-    * planted flood corpus, alongside the AQE skew-split it composes with.
+    * The banding self-join is uncapped, so the DuckDB oracle replays it
+    * bit-exact; AQE's skew split is its one skew defence (SkewSpec plants
+    * a flood bucket and measures the split).
     *
     * The eager scope (default) materializes the result and releases the
     * band/candidate caches before returning; [[Materialize.Lazy]] gives the
     * same expression tree with no persist/count, for plan audits.
     */
   def lshNearDups(s: SparkSession, dir: String, threshold: Double = 0.5,
-      bucketCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
+      m: Materialize = Materialize.eager()): DataFrame = {
     // 3-gram shingles, not unigram token sets: with a small vocabulary every
     // document shares nearly all unigrams, so only shingle sets separate
     // near-duplicates from unrelated docs. The fused ShingleMinHash
@@ -137,18 +127,8 @@ object DedupQueries {
     // cache below (band rows = 16 × docs bound the colliding-pair set in a
     // non-degenerate corpus).
     val bandedRows = m.count(banded)
-    // df-cap prefilter (see lshNearDups scaladoc): one keyed bucket count
-    // + anti-join removes flood buckets BEFORE the quadratic self-join —
-    // the 16-24 B band rows shuffle once either way, so the cap costs one
-    // extra keyed aggregation and saves O(bucket²) join rows per flood.
-    val joinable = if (bucketCap > 0) {
-      val floods = banded.groupBy("band", "key")
-        .agg(count(lit(1)).as("n")).filter(col("n") > bucketCap)
-        .select("band", "key")
-      banded.join(floods, Seq("band", "key"), "left_anti")
-    } else banded
-    val candidates0 = joinable
-      .join(joinable.select(col("band"), col("key"), col("doc_id").as("id_b")), Seq("band", "key"))
+    val candidates0 = banded
+      .join(banded.select(col("band"), col("key"), col("doc_id").as("id_b")), Seq("band", "key"))
       .filter(col("doc_id") < col("id_b"))
       .select(col("doc_id").as("id_a"), col("id_b"))
       .distinct()

@@ -717,7 +717,7 @@ object GraphQueries {
 
     sqlEager(
       "g05_common_neighbors",
-      "common-neighbor link prediction over the co-purchase graph (the similarity/recommendation primitive the g-family was missing: 'parts bought with the same companions' — rank NON-adjacent node pairs by shared-neighbor structure): for every unordered non-edge pair with >= 2 common neighbors, the common-neighbor count and neighborhood Jaccard |N(a) ∩ N(b)| / |N(a) ∪ N(b)|. Integer wedge counts, r4 ratio; the oracle replays wedge join, degree join, and the existing-edge anti-join exactly. Scale posture: candidate pairs form ONLY through the wedge equi-join on the shared middle vertex (never nodes × nodes), the same O(Σ deg²) bound as g02's wedge phase, which the support-2 edge threshold keeps corpus-proportional; on the power-law degrees g13 measures a mega-hub middle alone contributes a quadratic term, so the hub cap is WIRED, not a note: commonNeighbors(middleCap=...) drops over-degree middles with one keyed count + anti-join BEFORE the self-join (the d04/s20/g12 df-cap shape, default-off so this oracle replays the uncapped join bit-exact; SkewSpec plants a part-in-every-order hub and measures the wedge collapse with endpoint degrees — the Jaccard denominator — kept TRUE)",
+      "common-neighbor link prediction over the co-purchase graph (the similarity/recommendation primitive the g-family was missing: 'parts bought with the same companions' — rank NON-adjacent node pairs by shared-neighbor structure): for every unordered non-edge pair with >= 2 common neighbors, the common-neighbor count and neighborhood Jaccard |N(a) ∩ N(b)| / |N(a) ∪ N(b)|. Integer wedge counts, r4 ratio; the oracle replays wedge join, degree join, and the existing-edge anti-join exactly. Scale posture: candidate pairs form ONLY through the wedge equi-join on the shared middle vertex (never nodes × nodes), the same O(Σ deg²) bound as g02's wedge phase, which the support-2 edge threshold keeps corpus-proportional; on the power-law degrees g13 measures a mega-hub middle alone contributes a quadratic term, and the join stays uncapped so this oracle replays it bit-exact",
       s"""WITH $copurchasePairsSql,
         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM pairs
         |                     UNION ALL SELECT v, u FROM pairs),
@@ -881,7 +881,7 @@ object GraphQueries {
 
     sql(
       "g12_edge_jaccard",
-      "co-occurrence edge strength (Jaccard of order sets) over the support-2 co-purchase graph — the edge-weighting step between raw co-occurrence counts and every weighted-graph consumer (g05's link prediction scores candidates by shared neighbors; this scores the EDGE itself, the neighborhood-overlap normalization that demotes popular-item edges whose raw support is high only because both endpoints are everywhere): for each co-purchase pair, |orders(u) ∩ orders(v)| is the pair count the basket kernel already produces, degrees are per-part distinct-order counts, and jaccard_ppm = n_common*1e6 div (n_u + n_v - n_common) is one flooring division on non-negative integers. The Spark side never self-joins the (order, part) table — pairs explode MAP-SIDE from each order's sorted part array (the q105 A-priori kernel at part grain instead of brand grain), so pair generation costs zero shuffle beyond the basket groupBy; the oracle keeps the classical self-join to prove the kernel equivalent. Scale posture: one shuffle to form baskets, combinations local, one (u,v)-keyed count, degree join keyed on part — O(pairs) 16-24 B rows throughout, the d04-class banding discipline: an order with B parts emits B(B−1)/2 pairs map-side, quadratic in the basket, bounded here by the DATA CONTRACT (a TPC-H order holds <= 7 lineitems at every scale factor, so <= 21 pairs/basket) and, for corpora without that contract, by edgeJaccard(basketCap=...) — the df-cap analog, default-off so this oracle replays uncapped; PipelineOpsSpec pins drop-the-whole-basket semantics",
+      "co-occurrence edge strength (Jaccard of order sets) over the support-2 co-purchase graph — the edge-weighting step between raw co-occurrence counts and every weighted-graph consumer (g05's link prediction scores candidates by shared neighbors; this scores the EDGE itself, the neighborhood-overlap normalization that demotes popular-item edges whose raw support is high only because both endpoints are everywhere): for each co-purchase pair, |orders(u) ∩ orders(v)| is the pair count the basket kernel already produces, degrees are per-part distinct-order counts, and jaccard_ppm = n_common*1e6 div (n_u + n_v - n_common) is one flooring division on non-negative integers. The Spark side never self-joins the (order, part) table — pairs explode MAP-SIDE from each order's sorted part array (the q105 A-priori kernel at part grain instead of brand grain), so pair generation costs zero shuffle beyond the basket groupBy; the oracle keeps the classical self-join to prove the kernel equivalent. Scale posture: one shuffle to form baskets, combinations local, one (u,v)-keyed count, degree join keyed on part — O(pairs) 16-24 B rows throughout, the d04-class banding discipline: an order with B parts emits B(B−1)/2 pairs map-side, quadratic in the basket, bounded here by the DATA CONTRACT (a TPC-H order holds <= 7 lineitems at every scale factor, so <= 21 pairs/basket)",
       """WITH ob AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |deg AS (SELECT p, CAST(count(*) AS BIGINT) AS nd FROM ob GROUP BY p),
         |pr AS (SELECT a.p AS u, b.p AS v, CAST(count(*) AS BIGINT) AS nuv
@@ -896,7 +896,7 @@ object GraphQueries {
 
     sqlEager(
       "g14_adamic_adar",
-      "Adamic-Adar link prediction over the co-purchase graph (the hub-discounting upgrade of g05: a shared RARE companion is strong evidence two parts belong together, a shared EVERYWHERE-hub is weak — AA weights each common neighbor by 1/ln(degree) so mega-hubs stop dominating the candidate ranking, which is why recommender candidate-gen uses AA over raw counts on power-law graphs like g13 measures): for every non-adjacent pair with >= 2 common neighbors, common count and aa_score = Σ over shared middles of 1e12 div ln_grid(deg(m)) — each middle's weight ONE flooring division off the 1e6 ln grid (the t26/t31 idiom; a wedge middle always has degree >= 2 so ln > 0), the per-pair sum an order-independent exact BIGINT. Scale posture: g05's exact join shape (wedge equi-join on the middle, never nodes x nodes) plus one middle-keyed weight join — and g05's WIRED middleCap applies unchanged (adamicAdar(middleCap=...), same keyed-count + anti-join prefilter, shared capMiddles helper, default-off for this oracle): AA's 1/ln(deg) discount shrinks a hub's SCORE, not the join volume, so the cap is the volume defence and the discount the ranking defence",
+      "Adamic-Adar link prediction over the co-purchase graph (the hub-discounting upgrade of g05: a shared RARE companion is strong evidence two parts belong together, a shared EVERYWHERE-hub is weak — AA weights each common neighbor by 1/ln(degree) so mega-hubs stop dominating the candidate ranking, which is why recommender candidate-gen uses AA over raw counts on power-law graphs like g13 measures): for every non-adjacent pair with >= 2 common neighbors, common count and aa_score = Σ over shared middles of 1e12 div ln_grid(deg(m)) — each middle's weight ONE flooring division off the 1e6 ln grid (the t26/t31 idiom; a wedge middle always has degree >= 2 so ln > 0), the per-pair sum an order-independent exact BIGINT. Scale posture: g05's exact join shape (wedge equi-join on the middle, never nodes x nodes) plus one middle-keyed weight join: AA's 1/ln(deg) discount shrinks a hub's SCORE, not the join volume",
       s"""WITH $copurchasePairsSql,
         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM pairs
         |                     UNION ALL SELECT v, u FROM pairs),
@@ -915,7 +915,7 @@ object GraphQueries {
 
     sqlEager(
       "g15_hits",
-      "HITS hubs-and-authorities ranking (Kleinberg's dual of g01's PageRank on the DIRECTED bipartite trade graph — PageRank scores one stationary walk, HITS mutually recurses two roles: a good buyer (hub) is one who buys from good suppliers (authorities), and a good supplier is one good buyers buy from; the supplier-quality signal a marketplace or curation pipeline reads when endorsement direction matters): two unrolled iterations over the distinct customer->supplier edge set, every step an edge-keyed join + destination-keyed sum with L1 NORMALIZATION back to the 1e12 integer grid (score*1e12 div total — the grid absorbs HITS's scale-invariance, so no float norm exists to diverge; per-node sums widen through HUGEINT/DECIMAL(38,0) because 1e9 edges x 1e12-grid scores brush 1e21). Output: top-20 authorities under the (auth_scaled DESC, node) total order with in-degree carried — the rank-vs-degree gap IS the signal (an authority beats its in-degree when GOOD hubs point at it). Scale posture: the edge list derives once (one fact join + distinct) and persists compact; each half-iteration is one rank-join into the edges + one keyed aggregation; the three normalization TOTALS are broadcast 1-row scalars (g01's shape), while the NODE-sized rank tables join under the wired `broadcastRanks` knob — true (default, the bench plan) broadcasts them into the cached edges so only the map-side-combined destination agg shuffles, false runs the rank join shuffle-hash co-partitioned on the edge key, the 1e9-node plan where an O(V) broadcast would materialize on the driver; both positions are bit-identical (spec-pinned) because the knob moves the join STRATEGY, never the arithmetic",
+      "HITS hubs-and-authorities ranking (Kleinberg's dual of g01's PageRank on the DIRECTED bipartite trade graph — PageRank scores one stationary walk, HITS mutually recurses two roles: a good buyer (hub) is one who buys from good suppliers (authorities), and a good supplier is one good buyers buy from; the supplier-quality signal a marketplace or curation pipeline reads when endorsement direction matters): two unrolled iterations over the distinct customer->supplier edge set, every step an edge-keyed join + destination-keyed sum with L1 NORMALIZATION back to the 1e12 integer grid (score*1e12 div total — the grid absorbs HITS's scale-invariance, so no float norm exists to diverge; per-node sums widen through HUGEINT/DECIMAL(38,0) because 1e9 edges x 1e12-grid scores brush 1e21). Output: top-20 authorities under the (auth_scaled DESC, node) total order with in-degree carried — the rank-vs-degree gap IS the signal (an authority beats its in-degree when GOOD hubs point at it). Scale posture: the edge list derives once (one fact join + distinct) and persists compact; each half-iteration is one rank-join into the edges + one keyed aggregation; the three normalization TOTALS are broadcast 1-row scalars (g01's shape), and the NODE-sized rank tables broadcast into the cached edges too (the measured bench plan), so only the map-side-combined destination agg shuffles",
       """WITH e AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) AS c,
         |                  CAST(l_suppkey + 1000000 AS BIGINT) AS s
         |           FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
@@ -973,7 +973,7 @@ object GraphQueries {
 
     sqlEager(
       "g17_weighted_pagerank",
-      "strength-weighted PageRank (2 unrolled iterations) over the customer<->supplier trade graph with edge weight = DISTINCT shared orders — the repeat-business-weighted authority g01 cannot express: g01's uniform 1/deg walk scores a supplier by HOW MANY customers touch it, this scores by how much RECURRING business flows through each edge (one 50-order relationship outweighs fifty 1-order drive-bys — the domain-trust weighting a curation pipeline wants when edge strength, not mere adjacency, is the signal). Same 1e12 integer grid and bit-identical-ranks contract as g01: per-edge contribution = rank * w div strength (the flooring division per edge, summed exactly), strength = each node's total edge weight (replacing g01's degree), restart term (15% div n) identical. Output: top-20 nodes under (rank_scaled DESC, node) with strength carried — rank-vs-strength divergence is the signal (a node outranks its raw volume when its partners are themselves authoritative). Scale posture: the weighted edge list derives once (one fact join + (cust, supp)-keyed distinct-order count) and persists compact WITH the loop-invariant strength pre-joined, so each half-iteration is ONE rank join + one dst-keyed sum; rank tables are node-sized and take g15's wired broadcastRanks knob (default true = the measured bench plan, false = shuffle-hash co-partitioned on the edge key — the 1e9-node plan); the per-edge product rank * w stays LONG in the hot path (a DECIMAL product measured +25-30% cpu) under an a19-style LOUD bound — exact while max edge weight <= 8e6 distinct shared orders per (customer, supplier) pair, asserted via raise_error inside the used rank column so an exceeded bound fails the query instead of silently wrapping against the HUGEINT oracle",
+      "strength-weighted PageRank (2 unrolled iterations) over the customer<->supplier trade graph with edge weight = DISTINCT shared orders — the repeat-business-weighted authority g01 cannot express: g01's uniform 1/deg walk scores a supplier by HOW MANY customers touch it, this scores by how much RECURRING business flows through each edge (one 50-order relationship outweighs fifty 1-order drive-bys — the domain-trust weighting a curation pipeline wants when edge strength, not mere adjacency, is the signal). Same 1e12 integer grid and bit-identical-ranks contract as g01: per-edge contribution = rank * w div strength (the flooring division per edge, summed exactly), strength = each node's total edge weight (replacing g01's degree), restart term (15% div n) identical. Output: top-20 nodes under (rank_scaled DESC, node) with strength carried — rank-vs-strength divergence is the signal (a node outranks its raw volume when its partners are themselves authoritative). Scale posture: the weighted edge list derives once (one fact join + (cust, supp)-keyed distinct-order count) and persists compact WITH the loop-invariant strength pre-joined, so each half-iteration is ONE rank join + one dst-keyed sum; node-sized rank tables broadcast as in g15 (the measured bench plan); the per-edge product rank * w stays LONG in the hot path (a DECIMAL product measured +25-30% cpu) under an a19-style LOUD bound — exact while max edge weight <= 8e6 distinct shared orders per (customer, supplier) pair, asserted via raise_error inside the used rank column so an exceeded bound fails the query instead of silently wrapping against the HUGEINT oracle",
       """WITH e0 AS (SELECT CAST(o.o_custkey AS BIGINT) AS c,
         |                  CAST(l.l_suppkey AS BIGINT) + 1000000 AS s,
         |                  CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS w
@@ -1127,35 +1127,22 @@ object GraphQueries {
     (rounds.result(), readEst)
   }
 
-  /** g15's body — see the registry doc for the semantics. `broadcastRanks`
-    * is the wired form of the plan choice the r15 bench measured: the rank
-    * tables (one ~16 B row per customer/supplier with edges) are NODE-sized,
-    * i.e. they grow with the corpus, so the broadcast that wins at bench
-    * scale (SMJ sorted the 600k-edge side three times without it — 7.9 s
-    * wall / 17.9 cpu vs 4.65 s with; the fix is the plan, not the math) is
-    * a forced O(V) driver materialization at a 1e9-node deployment. `true`
-    * (default) keeps the measured bench plan; `false` drops the hints and
-    * pins the rank joins shuffle-hash on the edge key instead (the
-    * co-partitioned degradation path, now selectable rather than an edit —
-    * the d04/s20/g12/g05 graduation). The 1-row normalization totals stay
-    * broadcast in both positions: they are scalars, not node tables.
+  /** g15's body — see the registry doc for the semantics. The rank
+    * tables (one ~16 B row per customer/supplier with edges) broadcast
+    * into the cached edges: without the hint SMJ sorted the 600k-edge side
+    * three times (r15 bench: 7.9 s wall / 17.9 cpu vs 4.65 s with).
     * Under [[Materialize.Lazy]] the same dataflow plans with no
-    * materialization barriers, so PlanAudit and the knob spec read the
-    * real join strategies instead of InMemoryTableScan leaves.
+    * materialization barriers, so PlanAudit reads the real join
+    * strategies instead of InMemoryTableScan leaves.
     */
   private[graft] def hitsRanking(s: SparkSession, dir: String,
-      broadcastRanks: Boolean = true, m: Materialize = Materialize.eager()): DataFrame = {
+      m: Materialize = Materialize.eager()): DataFrame = {
     val (e, eParts) = m.compact(
       Tables.orders(s, dir)
         .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").cast("long").as("c"),
           (col("l_suppkey").cast("long") + 1000000L).as("s"))
         .distinct())
-    // the knob moves the join strategy only — shuffle_hash in the false
-    // position keeps AQE from re-broadcasting a side that is only small
-    // at bench scale (g05's discipline)
-    def rankSide(df: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(df) else df.hint("shuffle_hash")
     // Per-level materialization (r18 optimization): every rank table is
     // node-sized, but un-materialized each level's NORMALIZATION reads its
     // raw sum twice (total + quotient) and each next level re-expands the
@@ -1174,22 +1161,19 @@ object GraphQueries {
     val h0 = e.select("c").distinct().crossJoin(broadcast(nc))
       .select(col("c"), expr("1000000000000 div n").as("h"))
     val a1 = normalize(
-      e.join(rankSide(h0), Seq("c")).groupBy("s")
+      e.join(broadcast(h0), Seq("c")).groupBy("s")
         .agg(sum(col("h").cast("decimal(38,0)")).as("r")), "s", "a")
     val h1 = normalize(
-      e.join(rankSide(a1), Seq("s")).groupBy("c")
+      e.join(broadcast(a1), Seq("s")).groupBy("c")
         .agg(sum(col("a").cast("decimal(38,0)")).as("r")), "c", "h")
     val a2 = normalize(
-      e.join(rankSide(h1), Seq("c")).groupBy("s")
+      e.join(broadcast(h1), Seq("c")).groupBy("s")
         .agg(sum(col("h").cast("decimal(38,0)")).as("r")), "s", "a")
+    // deg stays unhinted: AQE's call, the r15 bench plan verbatim
     val deg = e.groupBy("s").agg(count(lit(1)).cast("long").as("in_deg"))
-    // deg stays unhinted in the true position (AQE's call, the r15 bench
-    // plan verbatim); in the false position it is node-sized like the
-    // ranks, so it takes the same shuffle-hash pin
-    val degSide = if (broadcastRanks) deg else deg.hint("shuffle_hash")
     // g01's lifecycle: materialize the (20-row) result, then release the
     // level caches and the edge cache — no reader remains
-    m.result(a2.join(degSide, Seq("s"))
+    m.result(a2.join(deg, Seq("s"))
       .select(col("s").as("node"), col("in_deg"), col("a").as("auth_scaled"))
       .orderBy(desc("auth_scaled"), col("node"))
       .limit(20))
@@ -1238,14 +1222,12 @@ object GraphQueries {
   /** g17's body — g01's walk on the DISTINCT-shared-orders weighted edge
     * list. The loop-invariant strength (each node's total edge weight)
     * is pre-joined into the compact persisted edges so every iteration
-    * is exactly one rank join + one destination-keyed sum; the rank
-    * tables are node-sized, so they take the SAME wired `broadcastRanks`
-    * knob [[hitsRanking]] graduated to (true = broadcast, the bench
-    * plan; false = shuffle-hash co-partitioned on the edge key).
+    * is exactly one rank join + one destination-keyed sum; the node-sized
+    * rank tables broadcast, as in [[hitsRanking]].
     * [[Materialize.Lazy]] plans the same dataflow with no caches.
     */
   private[graft] def weightedPageRank(s: SparkSession, dir: String,
-      broadcastRanks: Boolean = true, m: Materialize = Materialize.eager()): DataFrame = {
+      m: Materialize = Materialize.eager()): DataFrame = {
     val e00 = Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").cast("long").as("c"),
@@ -1261,22 +1243,17 @@ object GraphQueries {
     val sym = e0.select(col("c").as("src"), col("sk").as("dst"), col("w"))
       .unionAll(e0.select(col("sk").as("src"), col("c").as("dst"), col("w")))
     val str = sym.groupBy("src").agg(sum("w").cast("long").as("wt"))
-    def rankSide(df: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(df) else df.hint("shuffle_hash")
     // strength is loop-invariant: bake it into the cached edge list so
     // the per-round plan is one rank join + one keyed sum, nothing else.
-    // The pre-join's str side is node-sized like the ranks: in the true
-    // position it stays UNHINTED (AQE's call — the measured bench plan,
-    // the g15 degSide discipline), in the false position it takes the
-    // shuffle-hash pin so the plan is broadcast-free END TO END (spec)
-    val strSide = if (broadcastRanks) str else str.hint("shuffle_hash")
+    // The pre-join's str side stays UNHINTED (AQE's call — the measured
+    // bench plan, as g15's deg)
     // r19 measured negative: a keyed compact cache here (src, the
     // d09/g09 pattern) read take-3 cpu 6.8 → 13.7 — without the two-step
     // wide persist the sym⋈str pre-join loses its AQE runtime broadcast
     // and replans as a full shuffle join under the keyed exchange; in the
-    // broadcast position the rounds never re-exchange e anyway, so the
+    // broadcast plan the rounds never re-exchange e anyway, so the
     // keyed cache had nothing to save. Kept on the two-step compact.
-    val (e, eParts) = m.compact(sym.join(strSide, Seq("src")))
+    val (e, eParts) = m.compact(sym.join(str, Seq("src")))
     m.release(e0)
     // Per-level materialization (r18 optimization, the hitsRanking
     // discipline): nodes and each round's rank table are node-sized;
@@ -1302,11 +1279,11 @@ object GraphQueries {
             "LONG contribution bound — widen r * w to DECIMAL')").cast("long"))
           .as("r"))
     def round(r: DataFrame): DataFrame = {
-      val contrib = e.join(rankSide(r), Seq("src"))
+      val contrib = e.join(broadcast(r), Seq("src"))
         .groupBy(col("dst").as("src"))
         .agg(sum(expr("(r * w) div wt")).cast("long").as("m"))
       nodes.crossJoin(broadcast(nn))
-        .join(rankSide(contrib), Seq("src"), "left")
+        .join(broadcast(contrib), Seq("src"), "left")
         .select(col("src"),
           (expr("150000000000 div n") + expr("(85 * coalesce(m, 0)) div 100")).as("r"))
     }
@@ -1318,7 +1295,7 @@ object GraphQueries {
     // is functionally determined by src there — it was joined in per src),
     // instead of re-deriving str from the raw fact pass
     val strOut = e.groupBy("src").agg(max("wt").cast("long").as("wt"))
-    m.result(r2.join(rankSide(strOut), Seq("src"))
+    m.result(r2.join(broadcast(strOut), Seq("src"))
       .select(col("src").as("node"), col("wt").as("strength"),
         col("r").cast("long").as("rank_scaled"))
       .orderBy(desc("rank_scaled"), col("node"))
@@ -1352,67 +1329,17 @@ object GraphQueries {
     sym
   }
 
-  /** Wedge-middle df-cap shared by g05 [[commonNeighbors]] and g14
-    * [[adamicAdar]] — the last member of the d04/s20/g12 banding-join
-    * discipline class to get its cap wired (r14 verdict #1). The wedge
-    * self-join on the shared middle vertex enumerates O(Σ deg(m)²)
-    * candidate pairs concentrated per middle key, and unlike g12's baskets
-    * no data contract bounds a middle's degree: on the power-law degree
-    * distribution the registry itself measures (g13), a mega-hub middle is
-    * the NORM at corpus scale, and its quadratic term grows with the data
-    * (entity-disjoint probe replicas hold degrees constant, which is
-    * exactly why the 10×/100× rows never surfaced it — ProbeGen's `hub`
-    * mode exists to grow one). `middleCap > 0` drops middles whose degree
-    * exceeds the cap with ONE keyed degree count + anti-join BEFORE the
-    * self-join (the hub list is tiny, so the anti-join broadcasts), so no
-    * wedge through a hub is ever materialized. Default 0 = off: the DuckDB
-    * oracles replay the uncapped join bit-exact. Dropping a middle removes
-    * only the wedges it CENTERS — callers keep endpoint degrees (g05's
-    * Jaccard denominator) and middle weights (g14's ln grid) computed from
-    * the FULL sym table, so surviving pairs lose exactly the dropped
-    * middles' contributions and nothing else (SkewSpec plants a
-    * part-in-every-order hub and pins candidates C(60,2)+480 → 480 with
-    * the non-hub contributions bit-identical).
-    */
-  private def capMiddles(sym: DataFrame, middleCap: Int): DataFrame =
-    if (middleCap <= 0) sym
-    else {
-      val hubs = sym.groupBy("src").agg(count(lit(1)).as("n"))
-        .filter(col("n") > middleCap).select("src")
-      sym.join(hubs, Seq("src"), "left_anti")
-    }
-
-  /** Raw wedge candidates (m, a, b) with a < b — the pre-aggregation
-    * volume [[capMiddles]] bounds; exposed so SkewSpec can measure the
-    * hub collapse at the candidate grain (the knnGraphCandidates pattern).
-    */
-  private[graft] def wedgeCandidates(s: SparkSession, dir: String,
-      middleCap: Int = 0): DataFrame = {
-    val m = Materialize.eager()
-    val (edges, _) = m.compact(copurchasePairs(s, dir))
-    val sym = symmetrize(edges)
-    val base = capMiddles(sym, middleCap)
-    m.result(base.select(col("src").as("m"), col("dst").as("a"))
-      .join(base.select(col("src").as("m"), col("dst").as("b")).hint("shuffle_hash"), "m")
-      .filter(col("a") < col("b")))
-  }
-
-  /** g05's body — see the registry doc and [[capMiddles]] for the
-    * `middleCap` df-cap (default-off; the oracle replays uncapped).
-    */
+  /** g05's body — see the registry doc. */
   private[graft] def commonNeighbors(s: SparkSession, dir: String,
-      middleCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
+      m: Materialize = Materialize.eager()): DataFrame = {
     val (edges, _) = m.compact(copurchasePairs(s, dir))
     val sym = symmetrize(edges)
-    // TRUE degrees from the full sym table even under the cap: the cap
-    // bounds join volume, it must not redefine the Jaccard denominator
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("long").as("d"))
-    val base = capMiddles(sym, middleCap)
     // wedge join on the middle vertex; shuffle_hash keeps AQE from
     // broadcasting a side that is only small at bench scale
-    val cn = base.select(col("src").as("m"), col("dst").as("a"))
-      .join(base.select(col("src").as("m"), col("dst").as("b")).hint("shuffle_hash"), "m")
+    val cn = sym.select(col("src").as("m"), col("dst").as("a"))
+      .join(sym.select(col("src").as("m"), col("dst").as("b")).hint("shuffle_hash"), "m")
       .filter(col("a") < col("b"))
       .groupBy("a", "b").agg(count(lit(1)).cast("long").as("common"))
       .filter(col("common") >= 2)
@@ -1425,24 +1352,19 @@ object GraphQueries {
       .orderBy("a", "b"))
   }
 
-  /** g14's body — see the registry doc and [[capMiddles]] for the
-    * `middleCap` df-cap (default-off; the oracle replays uncapped).
-    */
+  /** g14's body — see the registry doc. */
   private[graft] def adamicAdar(s: SparkSession, dir: String,
-      middleCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
+      m: Materialize = Materialize.eager()): DataFrame = {
     val (edges, _) = m.compact(copurchasePairs(s, dir))
     val sym = symmetrize(edges)
-    // middle weights off the FULL degree table: a surviving middle's
-    // 1/ln(deg) discount is a property of the graph, not of the cap
     val wdeg = sym.groupBy(col("src").as("m"))
       .agg(count(lit(1)).cast("long").as("d"))
       .filter(col("d") >= 2)
       .select(col("m"),
         expr("1000000000000 div cast(floor(ln(d * 1.0) * 1000000 + 0.5) as bigint)")
           .cast("long").as("w"))
-    val base = capMiddles(sym, middleCap)
-    val cn = base.select(col("src").as("m"), col("dst").as("a"))
-      .join(base.select(col("src").as("m"), col("dst").as("b")).hint("shuffle_hash"), "m")
+    val cn = sym.select(col("src").as("m"), col("dst").as("a"))
+      .join(sym.select(col("src").as("m"), col("dst").as("b")).hint("shuffle_hash"), "m")
       .filter(col("a") < col("b"))
       .join(wdeg.hint("shuffle_hash"), "m")
       .groupBy("a", "b")
@@ -1455,28 +1377,15 @@ object GraphQueries {
       .orderBy("a", "b"))
   }
 
-  /** g12's body — see the registry doc. `basketCap` is the basket-size cap
-    * every production co-occurrence job sets (the d04 df-cap analog at the
-    * basket grain): pair emission is B(B−1)/2 per basket, so one 10k-item
-    * flood basket alone contributes ~50M low-signal pairs. Oversized
-    * baskets are dropped WHOLE — from pair generation AND the degree
-    * counts, so jaccard_ppm stays a true Jaccard within the capped order
-    * universe instead of mixing capped numerators with uncapped
-    * denominators. Default 0 = off: TPC-H's order contract bounds baskets
-    * at 7 lineitems (<= 21 pairs) at every scale factor, and the DuckDB
-    * oracle replays the uncapped kernel bit-exact. The cap is one
-    * basket-keyed size filter before the explode — no extra shuffle.
+  /** g12's body — see the registry doc. Pair emission is B(B−1)/2 per
+    * basket; TPC-H's order contract bounds baskets at 7 lineitems
+    * (<= 21 pairs) at every scale factor, and the DuckDB oracle replays
+    * the kernel bit-exact.
     */
-  private[graft] def edgeJaccard(s: SparkSession, dir: String,
-      basketCap: Int = 0): DataFrame = {
-    val ob0 = Tables.lineitem(s, dir)
+  private[graft] def edgeJaccard(s: SparkSession, dir: String): DataFrame = {
+    val ob = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-    val ob = if (basketCap > 0) {
-      val big = ob0.groupBy("o").agg(count(lit(1)).as("n"))
-        .filter(col("n") > basketCap).select("o")
-      ob0.join(big, Seq("o"), "left_anti")
-    } else ob0
     val deg = ob.groupBy("p").agg(count(lit(1)).cast("long").as("nd"))
     val baskets = ob.groupBy("o").agg(sort_array(collect_set(col("p"))).as("items"))
     val pairs = baskets

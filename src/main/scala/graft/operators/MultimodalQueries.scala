@@ -611,7 +611,7 @@ object MultimodalQueries {
 
     sql(
       "m14_aspect_buckets",
-      "aspect-ratio bucket batching (the SDXL-style bucketing every image-generation trainer runs — you cannot batch a 512x1024 portrait with a 1024x512 landscape, and naive center-crop-to-square destroys composition, so training assembles batches WITHIN aspect buckets): each well-formed image (m09's header parse — geometry without decoding a pixel) computes aspect_ppm = width * 1e6 div height (one flooring division, the <= 1 ppm quantization grain), snaps to the nearest of a FIXED 7-rung resolution ladder (1:2 .. 2:1, the SDXL shape) by exact integer |aspect - rung| with bucket-id tie-break, and batches of 8 assemble per bucket in doc_id order; the RAGGED TAIL per bucket is reported with batch_idx = slot = -1 (the a20 sentinel discipline — trainers DROP partial batches, and an audit that silently omitted them would hide exactly the images a data loader loses). Output: every image with its geometry, bucket, batch index and slot. Scale posture: the ladder is 7 broadcast literals; bucket pick is a doc-partitioned window; batch assembly takes the WIRED batchShards knob (default 0 = this oracle-replayed global per-bucket form; S > 0 assembles within (bucket_id, splitmix(doc_id) mod S) shards — p08's retry-stable hash discipline, so the 7-value bucket key stops being the window partition key and each assembly partition carries ~corpus/(7*S) rows; per-shard ragged tails documented, SkewSpec pins the collapse and the batch invariants) — the d04/s20/g12/g05/g15/q120 documented-note-to-wired-parameter graduation",
+      "aspect-ratio bucket batching (the SDXL-style bucketing every image-generation trainer runs — you cannot batch a 512x1024 portrait with a 1024x512 landscape, and naive center-crop-to-square destroys composition, so training assembles batches WITHIN aspect buckets): each well-formed image (m09's header parse — geometry without decoding a pixel) computes aspect_ppm = width * 1e6 div height (one flooring division, the <= 1 ppm quantization grain), snaps to the nearest of a FIXED 7-rung resolution ladder (1:2 .. 2:1, the SDXL shape) by exact integer |aspect - rung| with bucket-id tie-break, and batches of 8 assemble per bucket in doc_id order; the RAGGED TAIL per bucket is reported with batch_idx = slot = -1 (the a20 sentinel discipline — trainers DROP partial batches, and an audit that silently omitted them would hide exactly the images a data loader loses). Output: every image with its geometry, bucket, batch index and slot. Scale posture: the ladder is 7 broadcast literals; bucket pick is a doc-partitioned window; batch assembly is one global per-bucket window in doc_id order, so the 7-value bucket key is the window partition key and each assembly partition carries ~corpus/7 rows",
       """WITH ladder(bucket_id, bucket_w, bucket_h) AS (
         |  VALUES (CAST(0 AS BIGINT), CAST(512 AS BIGINT), CAST(1024 AS BIGINT)),
         |         (1, 576, 1024), (2, 768, 1024), (3, 1024, 1024),
@@ -642,7 +642,7 @@ object MultimodalQueries {
 
     sqlEager(
       "m15_image_neardup",
-      "perceptual-hash image near-dup detection (aHash + Hamming banding — the IMAGE member the dedup family lacked: d01/d04/d20 dedupe text, but a multimodal corpus dedupes images by PERCEPTUAL similarity, and byte-identity (m01's sha) misses every re-encode; aHash is the canonical cheap perceptual hash — resize to 8x8, threshold each cell against the global mean, compare by Hamming distance): each image's 64-bit aHash comes from Multimodal.imageBandHashes (the decode-stub discipline — PROPORTIONAL 64-block byte means standing in for the pixel resize, every bit decided by the exact integer cross-multiply sum_b*L > total*len_b, so the oracle replays the full hash), carried as four 16-bit band keys; candidates pair on ANY equal (band, key) — d04's banding shape at Hamming grain with the pigeonhole guarantee that Hamming <= 3 ALWAYS collides on some band (4 bands, 3 flips cannot dirty all) and misses beyond are the documented LSH trade; exact Hamming = sum of per-band bit_count(xor) reranks candidates, near-dup at <= 6 of 64 bits. Output is the per-IMAGE ledger (every in-domain image reports, the d19/st12 rollup grain): distinct band-collision partners, best neighbor under the (hamming, neighbor) total order, its distance, and the near-dup flag — collision-free images report -1 sentinels rather than vanish (the a20 discipline; at the test SFs most images are unrelated word-salad, and an audit that only printed matches would read empty while the machinery idles). Scale posture: hashing is one map-side pass fused with the scan; the only shuffles are the (band, key) equi-join and a doc-keyed window over candidate rows; 16-bit keys bound the key space, so at web scale the bands widen (a 128-bit pHash in 4x32-bit bands), and the flood defence is WIRED from day one — imageNearDup(bucketCap) drops over-cap buckets with a keyed count + anti-join before the self-join, d04's discipline (default 0 so this oracle replays the uncapped join; SkewSpec plants a 64-blank-image flood, measures the quadratic candidate collapse, and pins non-flood rows bit-identical)",
+      "perceptual-hash image near-dup detection (aHash + Hamming banding — the IMAGE member the dedup family lacked: d01/d04/d20 dedupe text, but a multimodal corpus dedupes images by PERCEPTUAL similarity, and byte-identity (m01's sha) misses every re-encode; aHash is the canonical cheap perceptual hash — resize to 8x8, threshold each cell against the global mean, compare by Hamming distance): each image's 64-bit aHash comes from Multimodal.imageBandHashes (the decode-stub discipline — PROPORTIONAL 64-block byte means standing in for the pixel resize, every bit decided by the exact integer cross-multiply sum_b*L > total*len_b, so the oracle replays the full hash), carried as four 16-bit band keys; candidates pair on ANY equal (band, key) — d04's banding shape at Hamming grain with the pigeonhole guarantee that Hamming <= 3 ALWAYS collides on some band (4 bands, 3 flips cannot dirty all) and misses beyond are the documented LSH trade; exact Hamming = sum of per-band bit_count(xor) reranks candidates, near-dup at <= 6 of 64 bits. Output is the per-IMAGE ledger (every in-domain image reports, the d19/st12 rollup grain): distinct band-collision partners, best neighbor under the (hamming, neighbor) total order, its distance, and the near-dup flag — collision-free images report -1 sentinels rather than vanish (the a20 discipline; at the test SFs most images are unrelated word-salad, and an audit that only printed matches would read empty while the machinery idles). Scale posture: hashing is one map-side pass fused with the scan; the only shuffles are the (band, key) equi-join and a doc-keyed window over candidate rows; 16-bit keys bound the key space, so at web scale the bands widen (a 128-bit pHash in 4x32-bit bands), and the self-join stays uncapped so this oracle replays it, with AQE's skew split as the flood defence",
       s"""$imageBandSql,
         |h AS (SELECT doc_id,
         |             CAST(coalesce(max(CASE WHEN band = 0 THEN key END), 0) AS BIGINT) AS h0,
@@ -672,29 +672,15 @@ object MultimodalQueries {
     }
   )
 
-  /** m15's band rows: one (doc_id, band, key) per image per band. */
-  private def imageBands(s: SparkSession, dir: String): DataFrame =
-    Multimodal.imageBandHashes(Multimodal.packBlobs(s, Tables.documents(s, dir))).toDF()
-      .select(col("doc_id"),
-        posexplode(array(col("h0"), col("h1"), col("h2"), col("h3"))).as(Seq("band", "key")))
-
-  /** m15's body — see the registry doc. `bucketCap` is d04's wired flood
-    * defence at aHash grain: a corpus of near-blank images (every bit 0)
-    * collides in EVERY band and the candidate join goes quadratic in the
-    * flood size. `0` (default — the oracle replays this) keeps every
-    * bucket; `cap > 0` drops (band, key) buckets holding more than `cap`
-    * images with a keyed count + anti-join BEFORE the self-join — flood
-    * members then report the −1 sentinels (a bucket past the cap is a
-    * boilerplate/blank-asset class to route to d01-style exact grouping,
-    * not a pairwise question), while every non-flood row is bit-identical
-    * to the uncapped form (SkewSpec plants the flood and pins both).
+  /** m15's body — see the registry doc. The (band, key) self-join is
+    * uncapped, so the oracle replays it bit-exact.
     */
   private[graft] def imageNearDup(s: SparkSession, dir: String,
-      bucketCap: Int = 0, m: Materialize = Materialize.eager()): DataFrame = {
+      m: Materialize = Materialize.eager()): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // ONE aHash pass per materialization (r17 ADVICE #1): the hash frame
-    // feeds the band explode, the optional cap prefilter, the self-join,
-    // and both hamming-lookup joins — five readers of a scan-fused
+    // feeds the band explode, the self-join and both hamming-lookup
+    // joins — four readers of a scan-fused
     // mapPartitions kernel Spark cannot common-subexpression across
     // branches, so the eager form persists it (with the d04/d10 fill
     // barrier) and every band/lookup leg reads the cache; released after
@@ -702,14 +688,8 @@ object MultimodalQueries {
     val h0frame = Multimodal.imageBandHashes(
       Multimodal.packBlobs(s, Tables.documents(s, dir))).toDF()
     val h = m.fill(h0frame)
-    val bands0 = h.select(col("doc_id"),
+    val bands = h.select(col("doc_id"),
       posexplode(array(col("h0"), col("h1"), col("h2"), col("h3"))).as(Seq("band", "key")))
-    val bands =
-      if (bucketCap <= 0) bands0
-      else bands0.join(
-        bands0.groupBy("band", "key").agg(count(lit(1)).as("n"))
-          .filter(col("n") > bucketCap).select("band", "key"),
-        Seq("band", "key"), "left_anti")
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key")
@@ -738,25 +718,13 @@ object MultimodalQueries {
       .orderBy("doc_id"))
   }
 
-  /** Directed candidate-pair volume the (band, key) equi-join would
-    * evaluate — the quantity `bucketCap` bounds, computed WITHOUT running
-    * the join (the fifoEvaluatedPairs pattern, for SkewSpec's flood
-    * measurement).
+  /** m14's body — see the registry doc. Every well-formed image snaps to
+    * its nearest ladder rung (exact integer |aspect − rung|, bucket-id
+    * tie-break), then batches assemble per bucket globally: the
+    * row_number()/count() windows are partitioned by the fixed 7-value
+    * bucket_id, the form the oracle replays.
     */
-  private[graft] def imageCandidateVolume(s: SparkSession, dir: String,
-      bucketCap: Int = 0): Long = {
-    val counts = imageBands(s, dir).groupBy("band", "key").agg(count(lit(1)).as("n"))
-    val kept = if (bucketCap <= 0) counts else counts.filter(col("n") <= bucketCap)
-    kept.agg(coalesce(sum(expr("n * (n - 1)")), lit(0L)).cast("long"))
-      .head().getLong(0)
-  }
-
-  /** m14's bucket assignment: every well-formed image snapped to its
-    * nearest ladder rung (exact integer |aspect − rung|, bucket-id
-    * tie-break). Shared by the production body and the SkewSpec
-    * partition-size probe so the assignment cannot drift between them.
-    */
-  private def aspectAssigned(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def aspectBuckets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val ladder = Seq((0L, 512L, 1024L), (1L, 576L, 1024L), (2L, 768L, 1024L),
@@ -771,80 +739,20 @@ object MultimodalQueries {
     val wPick = Window.partitionBy("doc_id")
       .orderBy(abs(col("aspect_ppm") - expr("(bucket_w * 1000000) div bucket_h")),
         col("bucket_id"))
-    imgs.crossJoin(broadcast(ladder))
+    val asg = imgs.crossJoin(broadcast(ladder))
       .withColumn("rk", row_number().over(wPick)).filter(col("rk") === 1)
       .drop("rk")
-  }
-
-  /** m14's retry-stable shard assignment: splitmix priority of the doc_id
-    * (seed 23, non-negative by construction) mod the shard count — p08's
-    * discipline, so replicas and retries land every image in the same
-    * shard with no RNG or partition-layout dependence.
-    */
-  private def aspectShard(batchShards: Long) =
-    graft.functions.HashFunctions.priorityHash(col("doc_id"), 23L) % lit(batchShards)
-
-  /** m14's body — see the registry doc. `batchShards` is the wired scale
-    * knob (r16 verdict #1, the d04/s20/g12/g05/g15/q120 graduation):
-    *
-    *  - `batchShards <= 0` (default — the oracle replays this): batches
-    *    assemble per bucket globally. The row_number()/count() windows are
-    *    partitioned by the FIXED 7-value bucket_id, so ~corpus/7 images
-    *    funnel into each window partition — correct and hash-green at test
-    *    SFs, a single-reducer bottleneck at the 100 TB posture.
-    *  - `batchShards = S > 0`: batches assemble within (bucket_id, shard)
-    *    where shard = [[aspectShard]] — each assembly partition carries
-    *    ~corpus/(7·S) rows and S scales with the cluster. Sharded
-    *    batch_idx = shard·1e12 + per-shard index (globally unique per
-    *    bucket, deterministic, no cross-shard coordination); each shard
-    *    keeps its OWN ragged tail (batch_idx = slot = −1), so up to 7·S
-    *    partial batches drop instead of 7 — the documented cost of
-    *    distributed assembly (a trainer that must not lose them runs one
-    *    final compaction pass over the ≤ 7·S·7 leftover rows,
-    *    dimension-sized, off the hot path).
-    *
-    * SkewSpec plants a single-bucket corpus and pins: identical doc set
-    * and geometry under both positions, every sharded batch exactly 8
-    * slots 0..7 within one (bucket, shard), per-shard tail arithmetic
-    * exact, and the max assembly-partition row count collapsing by ~S.
-    */
-  private[graft] def aspectBuckets(s: SparkSession, dir: String,
-      batchShards: Long = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val asg = aspectAssigned(s, dir)
-    val (keyed, partCols) =
-      if (batchShards <= 0) (asg, Seq("bucket_id"))
-      else (asg.withColumn("shard", aspectShard(batchShards)), Seq("bucket_id", "shard"))
-    val wBucket = Window.partitionBy(partCols.map(col): _*).orderBy("doc_id")
-    val wSize = Window.partitionBy(partCols.map(col): _*)
-    val idx = expr("(rn - 1) div 8")
-    val batchIdx =
-      if (batchShards <= 0) idx else col("shard") * lit(1000000000000L) + idx
-    keyed
+    val wBucket = Window.partitionBy(col("bucket_id")).orderBy("doc_id")
+    val wSize = Window.partitionBy(col("bucket_id"))
+    asg
       .withColumn("rn", row_number().over(wBucket))
       .withColumn("bn", count(lit(1)).over(wSize))
       .select(col("doc_id"), col("width"), col("height"), col("aspect_ppm"),
         col("bucket_id"), col("bucket_w"), col("bucket_h"),
-        when(col("rn") <= expr("(bn div 8) * 8"), batchIdx)
+        when(col("rn") <= expr("(bn div 8) * 8"), expr("(rn - 1) div 8"))
           .otherwise(lit(-1L)).cast("long").as("batch_idx"),
         when(col("rn") <= expr("(bn div 8) * 8"), expr("(rn - 1) % 8"))
           .otherwise(lit(-1L)).cast("long").as("slot"))
       .orderBy("doc_id")
-  }
-
-  /** Max rows funneled into a single batch-assembly window partition —
-    * the quantity `batchShards` bounds — computed WITHOUT running the
-    * window (the fifoEvaluatedPairs pattern, for SkewSpec's collapse
-    * measurement).
-    */
-  private[graft] def aspectBatchMaxPartition(s: SparkSession, dir: String,
-      batchShards: Long = 0): Long = {
-    val asg = aspectAssigned(s, dir)
-    val keyed =
-      if (batchShards <= 0) asg.groupBy("bucket_id")
-      else asg.withColumn("shard", aspectShard(batchShards)).groupBy("bucket_id", "shard")
-    keyed.agg(count(lit(1)).cast("long").as("n"))
-      .agg(coalesce(max("n"), lit(0L)).cast("long"))
-      .head().getLong(0)
   }
 }

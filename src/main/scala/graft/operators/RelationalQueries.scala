@@ -1159,7 +1159,7 @@ object RelationalQueries {
 
     sql(
       "q105_assoc_rules",
-      "market-basket association-rule mining (A-priori shape): baskets are each order's DISTINCT brand set; directional rules a→b with integer-ppm support, confidence and lift, kept at support ≥ 2% of baskets. The Spark side never self-joins the basket table — baskets group once, and the 2-combinations explode MAP-SIDE from each order's sorted item array (flatten(transform(slice))), so pair generation costs zero extra shuffle beyond the basket groupBy; item supports and the basket count are broadcast back onto the pair aggregate. At 100 TB this is the textbook A-priori layout: one shuffle to form baskets, combinations local, dimension-sized (|items|²) rule table; the per-basket pair explode is B(B−1)/2, bounded here by the BRAND grain itself — TPC-H has exactly 25 brands, so a basket holds <= 25 items and emits <= 300 pairs at every scale factor (corpora without a dimension bound take the g12 edgeJaccard(basketCap=...) discipline instead) — the oracle keeps the classical self-join formulation to prove the combination kernel equivalent. All metrics are integer ppm via flooring division on non-negative operands (Spark div = DuckDB // there); lift_ppm = 1e6·n_ab·N / (n_a·n_b) is widened through DECIMAL(38,0) (HUGEINT in the oracle) before the flooring divide and cast back to BIGINT — enforced, not just documented, because Spark's non-ANSI BIGINT multiply wraps silently at the corpus sizes where n_ab·N overflows, while DuckDB errors (r13 hardening per ADVICE)",
+      "market-basket association-rule mining (A-priori shape): baskets are each order's DISTINCT brand set; directional rules a→b with integer-ppm support, confidence and lift, kept at support ≥ 2% of baskets. The Spark side never self-joins the basket table — baskets group once, and the 2-combinations explode MAP-SIDE from each order's sorted item array (flatten(transform(slice))), so pair generation costs zero extra shuffle beyond the basket groupBy; item supports and the basket count are broadcast back onto the pair aggregate. At 100 TB this is the textbook A-priori layout: one shuffle to form baskets, combinations local, dimension-sized (|items|²) rule table; the per-basket pair explode is B(B−1)/2, bounded here by the BRAND grain itself — TPC-H has exactly 25 brands, so a basket holds <= 25 items and emits <= 300 pairs at every scale factor (corpora without a dimension bound need a basket-size bound of their own) — the oracle keeps the classical self-join formulation to prove the combination kernel equivalent. All metrics are integer ppm via flooring division on non-negative operands (Spark div = DuckDB // there); lift_ppm = 1e6·n_ab·N / (n_a·n_b) is widened through DECIMAL(38,0) (HUGEINT in the oracle) before the flooring divide and cast back to BIGINT — enforced, not just documented, because Spark's non-ANSI BIGINT multiply wraps silently at the corpus sizes where n_ab·N overflows, while DuckDB errors (r13 hardening per ADVICE)",
       """WITH ob AS (SELECT DISTINCT l_orderkey AS o, p_brand AS b
         |            FROM lineitem JOIN part ON l_partkey = p_partkey),
         |n AS (SELECT CAST(count(DISTINCT o) AS BIGINT) AS n_orders FROM ob),
@@ -1819,7 +1819,7 @@ object RelationalQueries {
 
     sql(
       "q120_fifo_matching",
-      "FIFO lot matching (first-in-first-out inventory costing — the warehouse/accounting primitive every ERP closes the books with, and the classic hard case for set-oriented engines because the naive form is a per-part sequential scan): per part, receipt lots (non-returned lines) and issue demands (returned lines) each get cumulative-quantity intervals [lo, hi) in (shipdate, orderkey, linenumber) arrival order — two part-partitioned running sums — and the sequential matching becomes a declarative INTERVAL INTERSECTION: lot l satisfies issue s for greatest(0, least(l.hi, s.hi) - greatest(l.lo, s.lo)) units exactly when the intervals overlap, which replaces the row-at-a-time loop with one part-keyed join (the q70 range shape riding the equi-key). Allocated cost = matched_units * lot_cents div lot_qty (flooring per slice — allocation can under-report a lot's cents by at most lot_qty-1 sub-cent remainders, the documented grain). Per-part rollup: lots, issues, supply/demand units, matched units, FIFO cost cents, and the unmatched remainder on both sides (demand past supply AND stock left over). Output = every part with at least one issue (left join — shortage must be reported, not omitted). Scale posture: two part-partitioned windows + one part-keyed join; per-part candidate pairs are bounded because each issue interval overlaps a CONTIGUOUS lot run (matched pairs <= lots + issues per part, though the equi-join evaluates the rectangle — bounded by TPC-H's fixed lines-per-part contract, the g12 basket argument; for unbounded part histories the cumulative axis IS the secondary bucket key, and it is WIRED: fifoMatching(bucketUnits = W) explodes each interval to its <= q/W + 1 touched buckets, joins on (part, bucket), and keeps each pair exactly once in its intersection-start bucket — SkewSpec plants a 200-lot/200-issue long-history part and pins evaluated pairs collapsing rectangle -> strips with output bit-identical; default-off so this oracle replays the rectangle)",
+      "FIFO lot matching (first-in-first-out inventory costing — the warehouse/accounting primitive every ERP closes the books with, and the classic hard case for set-oriented engines because the naive form is a per-part sequential scan): per part, receipt lots (non-returned lines) and issue demands (returned lines) each get cumulative-quantity intervals [lo, hi) in (shipdate, orderkey, linenumber) arrival order — two part-partitioned running sums — and the sequential matching becomes a declarative INTERVAL INTERSECTION: lot l satisfies issue s for greatest(0, least(l.hi, s.hi) - greatest(l.lo, s.lo)) units exactly when the intervals overlap, which replaces the row-at-a-time loop with one part-keyed join (the q70 range shape riding the equi-key). Allocated cost = matched_units * lot_cents div lot_qty (flooring per slice — allocation can under-report a lot's cents by at most lot_qty-1 sub-cent remainders, the documented grain). Per-part rollup: lots, issues, supply/demand units, matched units, FIFO cost cents, and the unmatched remainder on both sides (demand past supply AND stock left over). Output = every part with at least one issue (left join — shortage must be reported, not omitted). Scale posture: two part-partitioned windows + one part-keyed join; per-part candidate pairs are bounded because each issue interval overlaps a CONTIGUOUS lot run (matched pairs <= lots + issues per part, though the equi-join evaluates the rectangle — bounded by TPC-H's fixed lines-per-part contract, the g12 basket argument)",
       """WITH l AS (SELECT l_partkey AS part, l_returnflag AS f,
         |                  CAST(l_quantity AS BIGINT) AS q,
         |                  CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -1972,60 +1972,6 @@ object RelationalQueries {
     (lots, iss)
   }
 
-  /** The lot × issue intersection join, in both plan shapes. `bucketUnits
-    * <= 0` (default — the oracle replays this) is the plain part-keyed
-    * equi-join, which evaluates each part's full lots × issues rectangle
-    * (bounded at every TPC-H SF by the fixed lines-per-part contract, the
-    * g12 argument). `bucketUnits = W > 0` is the q70 bucket discipline on
-    * the CUMULATIVE-UNITS axis — the "secondary bucket key" the r15
-    * verdict asked to wire: each interval [hi−q, hi) explodes to the
-    * buckets it touches (⌈q/W⌉+1 ≤ 2 at TPC-H quantities with W ≥ 64, and
-    * q/W-proportional generally — the fan-out is interval-width-bounded,
-    * never history-bounded), the join runs on (part, bucket), and each
-    * overlapping pair is kept exactly once, in the bucket holding its
-    * intersection START (both intervals cover it by definition), so the
-    * per-part rectangle becomes per-strip products. Zero-width intervals
-    * (q = 0, impossible under TPC-H's q ≥ 1) match nothing in either
-    * shape — the rectangle gives them units = 0, the bucket path drops
-    * them pre-join; aggregates agree (SkewSpec pins output equality).
-    */
-  private def fifoPairs(lots: DataFrame, iss: DataFrame, bucketUnits: Long): DataFrame = {
-    val overlap = col("lo.hi") - col("lo.q") < col("i.hi") &&
-      col("i.hi") - col("i.q") < col("lo.hi")
-    if (bucketUnits <= 0)
-      iss.as("i").join(lots.as("lo"), col("lo.part") === col("i.part") && overlap)
-    else {
-      def banded(df: DataFrame) = df.filter(col("q") > 0)
-        .withColumn("bkt",
-          explode(expr(s"sequence((hi - q) div $bucketUnits, (hi - 1) div $bucketUnits)")))
-      banded(iss).as("i").join(banded(lots).as("lo").hint("shuffle_hash"),
-        col("lo.part") === col("i.part") && col("lo.bkt") === col("i.bkt") && overlap
-          && expr(s"greatest(lo.hi - lo.q, i.hi - i.q) div $bucketUnits") === col("i.bkt"))
-    }
-  }
-
-  /** Evaluated-pair volume — the quantity the bucket key bounds. An
-    * equi-join evaluates each key group's cross product, so the rectangle
-    * form tests Σ_part (lots × issues) pairs while the bucketed form tests
-    * Σ_(part, bkt) strip products; this computes those counts WITHOUT
-    * running the join (exposed for SkewSpec's planted long-history
-    * collapse measurement, the wedgeCandidates pattern).
-    */
-  private[graft] def fifoEvaluatedPairs(s: SparkSession, dir: String,
-      bucketUnits: Long = 0): Long = {
-    val (lots, iss) = fifoIntervals(s, dir)
-    val keys: DataFrame => DataFrame =
-      if (bucketUnits <= 0) df => df.select("part")
-      else df => df.filter(col("q") > 0).select(col("part"),
-        explode(expr(s"sequence((hi - q) div $bucketUnits, (hi - 1) div $bucketUnits)")).as("bkt"))
-    val keyCols = if (bucketUnits <= 0) Seq("part") else Seq("part", "bkt")
-    val lk = keys(lots).groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("nl"))
-    val ik = keys(iss).groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("ni"))
-    lk.join(ik, keyCols)
-      .agg(coalesce(sum(col("nl") * col("ni")), lit(0L)).cast("long"))
-      .head().getLong(0)
-  }
-
   /** u10's body — see the registry doc. The lazy scope drops the two
     * localCheckpoint barriers, so the audited plan carries the real audit
     * join/aggregation structure instead of Scan ExistingRDD leaves.
@@ -2122,13 +2068,16 @@ object RelationalQueries {
       .orderBy("file_id"))
   }
 
-  /** q120's body — see the registry doc; [[fifoPairs]] documents the
-    * `bucketUnits` knob (default-off rectangle; the oracle replays it).
+  /** q120's body — see the registry doc. The lot × issue intersection is
+    * the plain part-keyed equi-join, which evaluates each part's full
+    * lots × issues rectangle (bounded at every TPC-H SF by the fixed
+    * lines-per-part contract, the g12 argument).
     */
-  private[graft] def fifoMatching(s: SparkSession, dir: String,
-      bucketUnits: Long = 0): DataFrame = {
+  private[graft] def fifoMatching(s: SparkSession, dir: String): DataFrame = {
     val (lots, iss) = fifoIntervals(s, dir)
-    val m = fifoPairs(lots, iss, bucketUnits)
+    val overlap = col("lo.hi") - col("lo.q") < col("i.hi") &&
+      col("i.hi") - col("i.q") < col("lo.hi")
+    val m = iss.as("i").join(lots.as("lo"), col("lo.part") === col("i.part") && overlap)
       .select(col("i.part").as("part"),
         (least(col("lo.hi"), col("i.hi"))
           - greatest(col("lo.hi") - col("lo.q"), col("i.hi") - col("i.q"))).as("units"),

@@ -828,7 +828,7 @@ object SimilarityQueries {
 
     sql(
       "s20_knn_graph",
-      "all-vectors kNN-GRAPH construction (top-3 neighbors for EVERY vector via the s04 LSH buckets + exact rerank — the batch primitive SemDeDup, graph-based ANN indexes, and kNN-classifier featurizers all start from; s01-s19 answer per-QUERY search, this materializes the whole neighbor graph): candidates are the bucket self-join on (table, signature) — ids only, the d04 candIds discipline, embeddings re-join AFTER the distinct so the shuffle carries 20 B rows, never 256 B vectors — then the exact-cosine rerank and a per-vector top-3 under the (sim DESC, neighbor_id) total order. The whole path replays hash-exact in DuckDB because the hyperplanes are the s04 splitmix Rademacher planes. Scale posture: bucket join + distinct + two id-keyed embedding joins + a vec-partitioned window — O(sum of bucket^2) candidate ids bound the work, the banding-join shape with the d04 defences WIRED: knnGraph(bucketCap=...) drops flood buckets with a keyed count + anti-join before the self-join (default-off so this oracle replays the uncapped join bit-exact; SkewSpec plants an identical-vector flood and measures the collapse), and AQE skew-split covers floods that survive a mis-set cap",
+      "all-vectors kNN-GRAPH construction (top-3 neighbors for EVERY vector via the s04 LSH buckets + exact rerank — the batch primitive SemDeDup, graph-based ANN indexes, and kNN-classifier featurizers all start from; s01-s19 answer per-QUERY search, this materializes the whole neighbor graph): candidates are the bucket self-join on (table, signature) — ids only, the d04 candIds discipline, embeddings re-join AFTER the distinct so the shuffle carries 20 B rows, never 256 B vectors — then the exact-cosine rerank and a per-vector top-3 under the (sim DESC, neighbor_id) total order. The whole path replays hash-exact in DuckDB because the hyperplanes are the s04 splitmix Rademacher planes. Scale posture: bucket join + distinct + two id-keyed embedding joins + a vec-partitioned window — O(sum of bucket^2) candidate ids bound the work, the banding-join shape, uncapped so this oracle replays it bit-exact, with AQE skew-split as the skew defence",
       s"""WITH pidx AS (SELECT t.t, b.b, i.i, CAST((t.t * $LshBits + b.b) * $LshDim + i.i AS HUGEINT) AS k
         |              FROM generate_series(0, ${LshTables - 1}) t(t), generate_series(0, ${LshBits - 1}) b(b),
         |                   generate_series(0, ${LshDim - 1}) i(i)),
@@ -1219,47 +1219,12 @@ object SimilarityQueries {
     * carries (t, sig, id) rows, never vectors), exact-cosine rerank,
     * per-vector top-k.
     *
-    * `bucketCap` is the df-cap prefilter on the `(t, sig)` buckets —
-    * the identical defence `lshNearDups(bucketCap=...)` carries for the
-    * d04 banding join, and MORE load-bearing here: s20's SemDeDup use
-    * case feeds a PRE-dedup corpus, where identical-embedding runs are
-    * the norm and collide in every table's buckets, concentrating an
-    * O(bucket²) blowup on single reduce partitions. Buckets holding more
-    * than `bucketCap` vectors are dropped with one keyed count +
-    * anti-join before the quadratic self-join; their dedup value is
-    * already covered by exact dedup upstream. Default 0 = off (the
-    * fixture corpora have single-digit buckets and the DuckDB oracle
-    * replays the uncapped join bit-exact); at 100 TB the deployment
-    * config sets it. SkewSpec plants a 64-identical-vector flood and
-    * measures the mechanism: candidate ids collapse 6968 → 600 (all 6336
-    * flood-touching pairs removed plus 32 collateral cross-cluster pairs
-    * whose only shared bucket was a flood bucket — none of them top-3
-    * edges), with the neighbor graph outside the flood bit-identical
-    * capped vs uncapped and every planted cluster-mate edge preserved.
+    * The bucket self-join is uncapped, so the DuckDB oracle replays it
+    * bit-exact; AQE's skew split covers flood buckets.
     */
   def knnGraph(s: SparkSession, dir: String, k: Int = 3,
-      tables: Int = LshTables, bits: Int = LshBits, bucketCap: Int = 0): DataFrame = {
+      tables: Int = LshTables, bits: Int = LshBits): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val cand = knnGraphCandidates(s, dir, tables, bits, bucketCap)
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("neighbor_id"))
-    cand
-      .join(e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), "q_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
-      .select(col("q_id"), col("neighbor_id"), cosineSim(col("q_emb"), col("n_emb")).as("sim"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), r6(col("sim")).as("sim"))
-      .orderBy("q_id", "rnk")
-  }
-
-  /** s20's candidate-id generation, factored so SkewSpec can measure the
-    * df-cap's candidate collapse directly (the graph's top-k would hide
-    * the quadratic blowup the cap exists to stop). Returns the distinct
-    * `(q_id, neighbor_id)` candidate pairs (both orientations) after the
-    * optional bucket cap; ids only — no embeddings cross this shuffle.
-    */
-  private[graft] def knnGraphCandidates(s: SparkSession, dir: String,
-      tables: Int = LshTables, bits: Int = LshBits, bucketCap: Int = 0): DataFrame = {
     val planes = hyperplanes(tables, bits)
     val sigs = Tables.embeddings(s, dir)
       .select(Seq(col("vec_id")) ++ planes.zipWithIndex.map { case (p, t) =>
@@ -1269,20 +1234,19 @@ object SimilarityQueries {
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("t"), col(s"sig_$t").as("sig"))): _*)).as("b"))
       .select(col("vec_id"), col("b.t").as("t"), col("b.sig").as("sig"))
-    // df-cap prefilter (see knnGraph scaladoc): one keyed bucket count +
-    // anti-join drops flood buckets BEFORE the quadratic self-join — the
-    // 20 B signature rows shuffle once either way, so the cap costs one
-    // extra keyed aggregation and saves O(bucket²) join rows per flood.
-    val joinable = if (bucketCap > 0) {
-      val floods = sigs.groupBy("t", "sig")
-        .agg(count(lit(1)).as("n")).filter(col("n") > bucketCap)
-        .select("t", "sig")
-      sigs.join(floods, Seq("t", "sig"), "left_anti")
-    } else sigs
-    joinable
-      .join(joinable.select(col("t"), col("sig"), col("vec_id").as("neighbor_id")), Seq("t", "sig"))
+    val cand = sigs
+      .join(sigs.select(col("t"), col("sig"), col("vec_id").as("neighbor_id")), Seq("t", "sig"))
       .filter(col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id").as("q_id"), col("neighbor_id"))
       .distinct()
+    val w = Window.partitionBy(col("q_id")).orderBy(desc("sim"), col("neighbor_id"))
+    cand
+      .join(e.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), "q_id")
+      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
+      .select(col("q_id"), col("neighbor_id"), cosineSim(col("q_emb"), col("n_emb")).as("sim"))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("rnk"), col("neighbor_id"), r6(col("sim")).as("sim"))
+      .orderBy("q_id", "rnk")
   }
 }

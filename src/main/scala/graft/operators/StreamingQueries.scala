@@ -614,21 +614,11 @@ object StreamingQueries {
         |       CAST(n_stale_windows * 1000000 // n_windows AS BIGINT) AS stale_ppm
         |FROM per ORDER BY doc_id""") { (s, dir) =>
       EventStreams.withRocksDBStateStore(s) {
-        // Wired key-layout knob (r17 ask #2): default = raw-string state
-        // keys (exactly oracle-replayed); SPARK_GRAFT_ST19_FP=1 = 64-bit
-        // fingerprint keys with the verify-on-collision batch pass
-        // re-deriving the exact counts from d20's raw-string index, so
-        // the entry is hash-green in BOTH positions (StreamingSpec pins
-        // the two flag sets identical at fixture SFs).
-        val fp = sys.env.get("SPARK_GRAFT_ST19_FP").contains("1")
-        val out = runToMemory(s,
-          DocStreams.substringDupMonitor(s, docStream(s, dir),
-            fingerprintKeys = fp).toDF(),
+        val stale = runToMemory(s,
+          DocStreams.substringDupMonitor(s, docStream(s, dir)).toDF(),
           "st19_out", mode = "append", requireSingleBatch = true)
-        val stale =
-          if (!fp) out.groupBy("doc_id")
-            .agg(count(lit(1)).cast("long").as("n_stale_windows"))
-          else DocStreams.verifyStaleFlags(s, out, Tables.documents(s, dir))
+          .groupBy("doc_id")
+          .agg(count(lit(1)).cast("long").as("n_stale_windows"))
         Tables.documents(s, dir)
           .filter(length(col("text")) >= 33)
           .select(col("doc_id"),
@@ -645,7 +635,7 @@ object StreamingQueries {
 
     sql(
       "st20_stream_image_neardup",
-      "STREAMING perceptual-hash image near-dup detection (DocStreams.imageBandDedup — r17 verdict ask #4, m15's streaming twin completing the batch<->stream discipline for the image member: every other dedup family member already has one, d04<->st12, d20<->st19): m15's aHash band keys are exactly the st12 BandMinDedupProcessor shape at perceptual grain, so the streaming form REUSES both kernels verbatim — the SAME Multimodal.imageBandHashes mapPartitions pass (proportional 64-block byte means, exact cross-multiply bits, four 16-bit band keys; one hash grammar via the shared imageBandSql oracle block, batch and stream cannot drift) and the SAME BandMinDedupProcessor st12 runs (per-(band, key) min-doc ValueState, single armed event-time timer evicting at newest + 30 min). An arriving image emits one evidence row per band where a SMALLER image already holds its key — m15's banding-join candidate predicate a.doc_id < b.doc_id ON (band, key) evaluated incrementally — and the bounded single-batch replay (st06's guard) makes each state minimum the global band minimum, so the oracle is m15's bands CTE + the min-doc predicate: per in-domain image, how many of its 4 bands collide with a smaller image, and the any-band flag. The per-image LEDGER grain (every in-domain image reports, -0 rows for collision-free ones — the m15/a20 discipline) rather than m15's full pair rerank: the stream answers the INGESTION question ('does this image's perceptual neighborhood already exist?'); exact-Hamming reranking of flagged candidates is the batch twin's job, downstream. MemoryStream spec pins cross-batch band carry and the post-eviction re-admission boundary. Scale posture: 4 state cells x one long per in-horizon image in RocksDB, timer-bounded; 16-bit band keys shuffle-partition; per-batch cost is O(new images' bytes) — m15's corpus hash pass amortized to the arrival rate; a blank-image band flood stays one long of state per key and one emission per arrival (the incremental shape is its own bucketCap)",
+      "STREAMING perceptual-hash image near-dup detection (DocStreams.imageBandDedup — r17 verdict ask #4, m15's streaming twin completing the batch<->stream discipline for the image member: every other dedup family member already has one, d04<->st12, d20<->st19): m15's aHash band keys are exactly the st12 BandMinDedupProcessor shape at perceptual grain, so the streaming form REUSES both kernels verbatim — the SAME Multimodal.imageBandHashes mapPartitions pass (proportional 64-block byte means, exact cross-multiply bits, four 16-bit band keys; one hash grammar via the shared imageBandSql oracle block, batch and stream cannot drift) and the SAME BandMinDedupProcessor st12 runs (per-(band, key) min-doc ValueState, single armed event-time timer evicting at newest + 30 min). An arriving image emits one evidence row per band where a SMALLER image already holds its key — m15's banding-join candidate predicate a.doc_id < b.doc_id ON (band, key) evaluated incrementally — and the bounded single-batch replay (st06's guard) makes each state minimum the global band minimum, so the oracle is m15's bands CTE + the min-doc predicate: per in-domain image, how many of its 4 bands collide with a smaller image, and the any-band flag. The per-image LEDGER grain (every in-domain image reports, -0 rows for collision-free ones — the m15/a20 discipline) rather than m15's full pair rerank: the stream answers the INGESTION question ('does this image's perceptual neighborhood already exist?'); exact-Hamming reranking of flagged candidates is the batch twin's job, downstream. MemoryStream spec pins cross-batch band carry and the post-eviction re-admission boundary. Scale posture: 4 state cells x one long per in-horizon image in RocksDB, timer-bounded; 16-bit band keys shuffle-partition; per-batch cost is O(new images' bytes) — m15's corpus hash pass amortized to the arrival rate; a blank-image band flood stays one long of state per key and one emission per arrival (the incremental shape is its own flood defence)",
       s"""${MultimodalQueries.imageBandSql},
         |dups AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dup_bands FROM (
         |           SELECT DISTINCT b.doc_id, b.band

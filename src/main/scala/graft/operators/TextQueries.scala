@@ -2374,7 +2374,7 @@ object TextQueries {
 
     sql(
       "p22_context_packing",
-      "context-window packing audit (GPT-style concatenate-and-chunk — the materialization step between p19's epoch manifest and the actual training batches: pretraining consumes FIXED 512-token windows, documents concatenate in a stable order and SPLIT at window boundaries, and the three numbers a data engineer reads off the plan are how many windows the corpus yields, how many documents straddle a boundary (the attention-contamination / truncation proxy — a straddling doc's tokens attend across a reset), and the fill efficiency vs the 512-token budget): per source, docs concatenate in doc_id order (retry-stable, no RNG — the p08 discipline at sequence grain), token counts on the t02 whitespace grid, window arithmetic in exact flooring integers — doc occupying cumulative span [cum-nt, cum) crosses a boundary iff (cum-nt) div 512 <> (cum-1) div 512. Output per source: docs, tokens, windows = ceil(tokens/512), boundary-crossing docs, boundary_ppm, fill_ppm = tokens*1e6 div (windows*512). Scale posture: the cumulative sum takes the WIRED packShards knob (default 0 = this oracle-replayed per-source stream — a window partitioned by the FIXED ~20-value source key, corpus/|sources| rows per partition, exactly m14's graduated weakness; S > 0 packs within (source, splitmix(doc_id) mod S) shards — each shard packs independently exactly as a distributed loader does, at the documented cost of <= S partial tail windows per source, which fill_ppm then honestly reports; SkewSpec pins totals invariant, the window-partition collapse, and the <= S excess-window bound)",
+      "context-window packing audit (GPT-style concatenate-and-chunk — the materialization step between p19's epoch manifest and the actual training batches: pretraining consumes FIXED 512-token windows, documents concatenate in a stable order and SPLIT at window boundaries, and the three numbers a data engineer reads off the plan are how many windows the corpus yields, how many documents straddle a boundary (the attention-contamination / truncation proxy — a straddling doc's tokens attend across a reset), and the fill efficiency vs the 512-token budget): per source, docs concatenate in doc_id order (retry-stable, no RNG — the p08 discipline at sequence grain), token counts on the t02 whitespace grid, window arithmetic in exact flooring integers — doc occupying cumulative span [cum-nt, cum) crosses a boundary iff (cum-nt) div 512 <> (cum-1) div 512. Output per source: docs, tokens, windows = ceil(tokens/512), boundary-crossing docs, boundary_ppm, fill_ppm = tokens*1e6 div (windows*512). Scale posture: the cumulative sum is one per-source stream — a window partitioned by the FIXED ~20-value source key, corpus/|sources| rows per partition, m14's shape",
       """WITH dt AS (SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
         |            FROM documents),
         |cum AS (SELECT doc_id, source, nt,
@@ -2397,32 +2397,20 @@ object TextQueries {
     }
   )
 
-  /** p22's body — see the registry doc. `packShards` mirrors m14's
-    * graduated `batchShards` exactly: 0 (default, oracle-replayed) streams
-    * each source's documents through ONE cumulative-sum window partition;
-    * `S > 0` packs within (source, splitmix(doc_id, seed 29) mod S) shards
-    * — retry-stable, layout-independent, each shard a self-contained
-    * packing stream the way every distributed loader actually shards, with
-    * ≤ S partial tail windows per source as the documented cost (visible
-    * in fill_ppm, never hidden). Totals (docs, tokens) are knob-invariant;
-    * windows and boundary counts legitimately differ per shard layout.
+  /** p22's body — see the registry doc. Each source's documents stream
+    * through ONE cumulative-sum window partition, the form the oracle
+    * replays.
     */
-  private[graft] def contextPacking(s: SparkSession, dir: String,
-      packShards: Long = 0): DataFrame = {
-    val dt0 = Tables.documents(s, dir)
+  private[graft] def contextPacking(s: SparkSession, dir: String): DataFrame = {
+    val dt = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("nt"))
-    val (dt, partCols) =
-      if (packShards <= 0) (dt0, Seq("source"))
-      else (dt0.withColumn("shard",
-        HashFunctions.priorityHash(col("doc_id"), 29L) % lit(packShards)),
-        Seq("source", "shard"))
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy("doc_id")
+    val w = Window.partitionBy(col("source")).orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     dt.withColumn("cum", sum("nt").over(w).cast("long"))
       .withColumn("crosses",
         when(expr("(cum - nt) div 512") =!= expr("(cum - 1) div 512"), 1L).otherwise(0L))
-      .groupBy(partCols.map(col): _*)
+      .groupBy(col("source"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum("nt").cast("long").as("total_tokens"),
         expr("(sum(nt) + 511) div 512").cast("long").as("n_windows"),
@@ -2437,22 +2425,5 @@ object TextQueries {
         expr("(n_boundary_docs * 1000000) div n_docs").as("boundary_ppm"),
         expr("(total_tokens * 1000000) div (n_windows * 512)").as("fill_ppm"))
       .orderBy("source")
-  }
-
-  /** Max rows through a single packing cumulative-sum window partition —
-    * the quantity `packShards` bounds (the aspectBatchMaxPartition
-    * pattern, for SkewSpec's collapse measurement).
-    */
-  private[graft] def packMaxPartition(s: SparkSession, dir: String,
-      packShards: Long = 0): Long = {
-    val dt = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-    val keyed =
-      if (packShards <= 0) dt.groupBy("source")
-      else dt.withColumn("shard",
-        HashFunctions.priorityHash(col("doc_id"), 29L) % lit(packShards))
-        .groupBy("source", "shard")
-    keyed.agg(count(lit(1)).cast("long").as("n"))
-      .agg(coalesce(max("n"), lit(0L)).cast("long"))
-      .head().getLong(0)
   }
 }

@@ -126,7 +126,7 @@ object DocStreams {
     * RocksDB — the m15 band index held incrementally, timer-bounded;
     * 16-bit band keys shuffle-partition; per-batch cost is O(new images'
     * bytes), the amortized form of m15's corpus hash pass. A band-key
-    * flood (near-blank images — m15's `bucketCap` scenario) costs this
+    * flood (near-blank images, whose aHash bits are all 0) costs this
     * monitor nothing quadratic: state per key stays ONE long however many
     * images carry it, and emissions stay one row per arriving image per
     * band — the incremental shape is its own flood defence.
@@ -160,39 +160,29 @@ object DocStreams {
     * holds in the corpus index. */
   final case class StaleWindow(doc_id: Long)
 
-  /** One (64-bit window fingerprint, doc) occurrence, event-timed. */
-  final case class FpRow(fp: Long, doc_id: Long, ts: java.sql.Timestamp)
-
   /** d20's window-keyed counting made incremental (st19 — the d13/d15
-    * shape at substring grain): each window key owns one state cell
-    * holding the smallest doc_id ever seen carrying it (within the
-    * eviction horizon), and an arriving document emits one evidence row
-    * per distinct window key where a smaller document already holds it —
-    * d20's "this exact substring already exists in the corpus index"
-    * predicate, evaluated online. Same single-armed-timer eviction
-    * contract as [[BandMinDedupProcessor]], including the
-    * materialize-before-delete rule. The key type is abstract: the
-    * default monitor keys by the raw 32-char window STRING
-    * ([[WindowMinDedupProcessor]] — exactly oracle-replayable), the
-    * 100 TB form by its 64-bit fingerprint ([[FpMinDedupProcessor]] —
-    * see [[substringDupMonitor]]'s `fingerprintKeys`).
+    * shape at substring grain): each raw 32-char window STRING owns one
+    * state cell holding the smallest doc_id ever seen carrying it (within
+    * the eviction horizon), and an arriving document emits one evidence
+    * row per distinct window key where a smaller document already holds
+    * it — d20's "this exact substring already exists in the corpus index"
+    * predicate, evaluated online and exactly oracle-replayable. Same
+    * single-armed-timer eviction contract as [[BandMinDedupProcessor]],
+    * including the materialize-before-delete rule.
     */
-  sealed abstract class MinDedupBase[K, R](ttlMs: Long)
-      extends StatefulProcessor[K, R, StaleWindow] {
-    protected def docId(r: R): Long
-    protected def eventMs(r: R): Long
-
+  final class WindowMinDedupProcessor(ttlMs: Long)
+      extends StatefulProcessor[String, WinRow, StaleWindow] {
     @transient private var minDoc: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       minDoc = getHandle.getValueState[Long]("minDoc", Encoders.scalaLong, TTLConfig.NONE)
 
-    override def handleInputRows(key: K, rows: Iterator[R],
+    override def handleInputRows(key: String, rows: Iterator[WinRow],
         timerValues: TimerValues): Iterator[StaleWindow] = {
       val batch = rows.toSeq
       val hadPrior = minDoc.exists()
       val prior = if (hadPrior) minDoc.get() else Long.MaxValue
-      val keep = math.min(prior, batch.iterator.map(docId).min)
+      val keep = math.min(prior, batch.iterator.map(_.doc_id).min)
       minDoc.update(keep)
       // one armed eviction timer per key: disarm, re-arm at newest + ttl
       // (materialize the listing first — see SessionTimerProcessor).
@@ -200,12 +190,12 @@ object DocStreams {
       // invariant), so first-encounter keys skip the timer-CF scan.
       if (hadPrior)
         getHandle.listTimers().toList.foreach(e => getHandle.deleteTimer(e.asInstanceOf[Long]))
-      getHandle.registerTimer(batch.iterator.map(eventMs).max + ttlMs)
-      batch.iterator.map(docId).toSeq.distinct.sorted
+      getHandle.registerTimer(batch.iterator.map(_.ts.getTime).max + ttlMs)
+      batch.iterator.map(_.doc_id).toSeq.distinct.sorted
         .filter(_ > keep).map(StaleWindow(_)).iterator
     }
 
-    override def handleExpiredTimer(key: K, timerValues: TimerValues,
+    override def handleExpiredTimer(key: String, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[StaleWindow] = {
       // horizon passed with no re-occurrence: forget the key entirely
       minDoc.clear()
@@ -213,51 +203,14 @@ object DocStreams {
     }
   }
 
-  /** Raw-window-string keys — every evidence row exactly replayable
-    * against d20's inverted index (the default; see [[MinDedupBase]]). */
-  final class WindowMinDedupProcessor(ttlMs: Long)
-      extends MinDedupBase[String, WinRow](ttlMs) {
-    override protected def docId(r: WinRow): Long = r.doc_id
-    override protected def eventMs(r: WinRow): Long = r.ts.getTime
-  }
-
-  /** 64-bit fingerprint keys — the 100 TB state layout (8 B key vs a
-    * 32-char string per cell); see [[substringDupMonitor]]'s
-    * `fingerprintKeys` for the collision contract. */
-  final class FpMinDedupProcessor(ttlMs: Long)
-      extends MinDedupBase[Long, FpRow](ttlMs) {
-    override protected def docId(r: FpRow): Long = r.doc_id
-    override protected def eventMs(r: FpRow): Long = r.ts.getTime
-  }
-
   /** Streaming exact-substring duplication monitor over a document stream
     * with columns (doc_id, text, ts): d20's word-anchored 32-char window
     * kernel (the SAME [[graft.operators.DedupQueries.anchoredWindowsSql]]
     * expression — one grammar, batch and stream), exploded to (window,
-    * doc) rows and fed to a [[MinDedupBase]] processor per window key.
+    * doc) rows and fed to a [[WindowMinDedupProcessor]] per window key.
     * Within-doc repeats of a window dedupe inside the processor (a doc's
     * windows all arrive in its own batch), so emissions are one
     * [[StaleWindow]] per (flagged doc, distinct stale window key).
-    *
-    * `fingerprintKeys` (r17 verdict ask #2 — the knob graduating the
-    * scaladoc's 100 TB note to wired code):
-    *
-    *  - `false` (default): state keys are the raw 32-char window STRINGS —
-    *    every evidence row exactly replayable against d20's inverted
-    *    index, the oracle-replayed form.
-    *  - `true`: state keys are xxhash64 fingerprints of the windows (the
-    *    64-bit-mixer family; 8 B key + one long per cell, shedding the
-    *    ~40 B string key from state AND from every shuffle row). Two
-    *    distinct corpus windows collide with probability ≈ n²/2⁶⁵
-    *    (birthday bound: ~2.7e-9 at n = 1e4 in-horizon windows, still
-    *    ~3e-4 at n = 1e8), and a collision can only OVER-flag: a
-    *    fingerprint cell's minimum is the min over the union of its
-    *    colliding windows' carriers, which is ≤ any single window's own
-    *    minimum, so every truly-stale doc still flags (flags are a
-    *    SUPERSET, never a miss). The documented contract is therefore
-    *    fingerprint flags → [[verifyStaleFlags]] (the downstream batch
-    *    check against d20's raw-string index) before any removal
-    *    decision — false positives rerank to zero there.
     *
     * At-least-once caveat (r17 ADVICE #3): emissions are NOT deduplicated
     * against prior batches' emissions — a source that REPLAYS rows
@@ -265,9 +218,7 @@ object DocStreams {
     * and a doc arriving BEFORE the eventual window minimum emits evidence
     * the batch oracle would not (the minimum only wins from its own batch
     * onward). Both effects vanish under the bounded single-batch replay
-    * the registry harness enforces (`requireSingleBatch` — st06's guard);
-    * outside that harness, route the flags through [[verifyStaleFlags]],
-    * which is idempotent and batch-exact by construction.
+    * the registry harness enforces (`requireSingleBatch` — st06's guard).
     *
     * Scale posture: state is one long per distinct corpus window key
     * within the horizon — the d20 inverted index held incrementally,
@@ -276,54 +227,18 @@ object DocStreams {
     * amortized form of d20's corpus pass.
     */
   def substringDupMonitor(spark: SparkSession, docs: DataFrame,
-      watermark: String = "10 minutes", ttlMs: Long = 30L * 60 * 1000,
-      fingerprintKeys: Boolean = false): Dataset[StaleWindow] = {
+      watermark: String = "10 minutes",
+      ttlMs: Long = 30L * 60 * 1000): Dataset[StaleWindow] = {
     import spark.implicits._
-    val win = docs
+    docs
       .filter(length(col("text")) >= 33)
       .select(col("doc_id"), col("ts"),
         explode(expr(graft.operators.DedupQueries.anchoredWindowsSql)).as("wd"))
       .withWatermark("ts", watermark)
-    if (!fingerprintKeys)
-      win.select(col("wd"), col("doc_id"), col("ts"))
-        .as[WinRow]
-        .groupByKey(_.wd)
-        .transformWithState(new WindowMinDedupProcessor(ttlMs),
-          TimeMode.EventTime(), OutputMode.Append())
-    else
-      win.select(xxhash64(col("wd")).as("fp"), col("doc_id"), col("ts"))
-        .as[FpRow]
-        .groupByKey(_.fp)
-        .transformWithState(new FpMinDedupProcessor(ttlMs),
-          TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Verify-on-collision batch check for [[substringDupMonitor]]'s
-    * fingerprint mode (and the recovery path for its at-least-once
-    * caveat): given the monitor's flagged doc set and the batch corpus,
-    * recompute each flagged doc's EXACT stale-window count from d20's
-    * raw-string inverted index — distinct (doc, window) occurrences,
-    * min doc per window, count of windows where a strictly smaller doc
-    * holds the minimum. Fingerprint-collision false positives rerank to
-    * zero (and drop out of the returned frame); every surviving count is
-    * collision-free and replay-idempotent. Sound because fingerprint
-    * flags are a superset of the truly-stale docs (see the knob's
-    * scaladoc). Cost is corpus-window-keyed aggregation + a semi-join on
-    * the flagged set — d20's cost class, run off the hot path.
-    */
-  def verifyStaleFlags(spark: SparkSession, flagged: DataFrame,
-      corpus: DataFrame): DataFrame = {
-    val win = corpus
-      .filter(length(col("text")) >= 33)
-      .select(col("doc_id"),
-        explode(expr(graft.operators.DedupQueries.anchoredWindowsSql)).as("wd"))
-      .distinct()
-    val mind = win.groupBy("wd").agg(min("doc_id").as("mindoc"))
-    win
-      .join(flagged.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-      .join(mind, Seq("wd"))
-      .filter(col("mindoc") < col("doc_id"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_stale_windows"))
+      .select(col("wd"), col("doc_id"), col("ts"))
+      .as[WinRow]
+      .groupByKey(_.wd)
+      .transformWithState(new WindowMinDedupProcessor(ttlMs),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }

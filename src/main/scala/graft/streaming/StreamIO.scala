@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.functions._
@@ -53,9 +54,10 @@ final class FileStreamIO(dir: String) extends StreamIO {
   *
   * The Structured Streaming Kinesis connector (`spark-sql-kinesis` /
   * `aws-kinesis` data source) is not on this environment's classpath
-  * (zero-egress build), so [[read]]/[[write]] raise a descriptive error if
-  * invoked; the option mapping below is the complete wiring a deployment
-  * needs. Unlike the reference's consumers, the connector reads **all**
+  * (zero-egress build): [[read]]/[[write]] look the source up and turn
+  * Spark's missing-source error into a descriptive one, so they run as
+  * soon as the connector jar is deployed. The option mapping below is the
+  * complete wiring a deployment needs. Unlike the reference's consumers, the connector reads **all**
   * shards and checkpoints offsets — both deliberate fixes of reference
   * quirks (SURVEY.md §2.1, §3.4).
   */
@@ -84,29 +86,30 @@ final case class KinesisStreamIO(
     "kinesis.partitionKey" -> "partitionKey"
   )
 
-  private def unavailable = throw new UnsupportedOperationException(
-    s"Kinesis connector ('$format') jar is not on the classpath in this " +
-      "environment; deploy with the Spark Structured Streaming Kinesis " +
-      "connector and set graft.kinesis.enabled=true to activate this " +
-      "transport. Use FileStreamIO/memory for local runs.")
+  /** Runs `f`, turning Spark's DATA_SOURCE_NOT_FOUND for [[format]]
+    * into a descriptive refusal. */
+  private def withConnector[T](f: => T): T =
+    try f catch {
+      case e: SparkThrowable if e.getCondition == "DATA_SOURCE_NOT_FOUND" =>
+        throw new UnsupportedOperationException(
+          s"Kinesis connector ('$format') jar is not on the classpath; deploy " +
+            "with the Spark Structured Streaming Kinesis connector to activate " +
+            "this transport. Use FileStreamIO/memory for local runs.", e)
+    }
 
-  private def enabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.kinesis.enabled").contains("true")
-
-  override def read(spark: SparkSession): DataFrame = {
-    if (!enabled(spark)) unavailable
+  override def read(spark: SparkSession): DataFrame = withConnector {
     spark.readStream.format(format).options(sourceOptions).load()
   }
 
-  override def write(envelope: DataFrame, checkpoint: String, trigger: Trigger): StreamingQuery = {
-    if (!enabled(envelope.sparkSession)) unavailable
-    envelope.writeStream
-      .format(format)
-      .options(sinkOptions)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
+  override def write(envelope: DataFrame, checkpoint: String, trigger: Trigger): StreamingQuery =
+    withConnector {
+      envelope.writeStream
+        .format(format)
+        .options(sinkOptions)
+        .option("checkpointLocation", checkpoint)
+        .trigger(trigger)
+        .start()
+    }
 }
 
 /** Control-plane verbs (L1-L4: create/validate/describe/delete) behind a

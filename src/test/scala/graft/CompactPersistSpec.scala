@@ -40,18 +40,27 @@ class CompactPersistSpec extends SparkSpec {
     } finally compact.unpersist(blocking = false)
   }
 
-  private def operatorSource(file: String): String =
-    new String(Files.readAllBytes(Paths.get(s"src/main/scala/graft/operators/$file")), "UTF-8")
+  private def source(dir: String, file: String): String =
+    new String(Files.readAllBytes(Paths.get(s"src/main/scala/graft/$dir/$file")), "UTF-8")
+
+  private def operatorSource(file: String): String = source("operators", file)
+
+  private def scalaFiles(dir: String): Seq[String] =
+    new java.io.File(s"src/main/scala/graft/$dir").listFiles()
+      .map(_.getName).filter(_.endsWith(".scala")).sorted.toSeq
+
+  /** The non-comment lines of `src`, trimmed, with their 1-based numbers. */
+  private def codeLines(src: String): Seq[(Int, String)] =
+    src.split("\n").toSeq.zipWithIndex
+      .map { case (l, i) => (i + 1, l.trim) }
+      .filterNot { case (_, l) => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**") }
 
   /** Direct materialization calls on non-comment lines. Calls on the scope
     * itself (`m.persist(...)`) are the sanctioned form and do not count.
     */
   private def directCalls(src: String): Seq[String] = {
     val call = """(?<!\bm)\.(persist|unpersist|localCheckpoint)\(""".r
-    src.split("\n").toSeq
-      .map(_.trim)
-      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**"))
-      .flatMap(l => call.findAllMatchIn(l.split("//").head).map(_ => l))
+    codeLines(src).flatMap { case (_, l) => call.findAllMatchIn(l.split("//").head).map(_ => l) }
   }
 
   /** The only operator code allowed to materialize directly: the region of
@@ -73,8 +82,7 @@ class CompactPersistSpec extends SparkSpec {
         "non-total UDFs from seeing unvalidated rows"))
 
   test("operators materialize only through Materialize (source convention)") {
-    val files = new java.io.File("src/main/scala/graft/operators").listFiles()
-      .map(_.getName).filter(_.endsWith(".scala")).sorted.toSeq
+    val files = scalaFiles("operators")
     assert(files.contains("GraphQueries.scala"))
     val outside = files.flatMap { f =>
       val src = operatorSource(f)
@@ -108,5 +116,19 @@ class CompactPersistSpec extends SparkSpec {
     val lines = bare.map(c => src.substring(0, c.start).count(_ == '\n') + 1)
     assert(bare.isEmpty,
       s"copurchasePairs call(s) at GraphQueries.scala line(s) $lines bypass m.compact")
+  }
+
+  test("operators and streaming code never read the environment (source convention)") {
+    // an entry's answer depends only on its inputs and its session conf
+    val read = """\b(sys\.env|System\.getenv|sys\.props)\b""".r
+    val hits = for {
+      dir <- Seq("operators", "streaming")
+      f <- scalaFiles(dir)
+      (n, l) <- codeLines(source(dir, f))
+      if read.findFirstIn(l.split("//").head).isDefined
+    } yield s"$dir/$f:$n: $l"
+    assert(hits.isEmpty,
+      s"operator/streaming code reads the environment — pass it as a parameter or " +
+        s"a session conf instead:\n${hits.mkString("\n")}")
   }
 }

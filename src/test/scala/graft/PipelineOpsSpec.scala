@@ -1269,22 +1269,19 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got == Seq((101L, 102L, 3L, 3L, 3L, 1000000L)), got.mkString(", "))
   }
 
-  test("g12 basketCap drops oversized baskets whole: pairs AND degrees exclude the flood order") {
+  test("g12 edge Jaccard: a 5-item flood basket counts in pairs AND degrees") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g12capspec").toString
+    val dir = java.nio.file.Files.createTempDirectory("g12floodspec").toString
     // three tight 2-item orders {p1,p2} plus one 5-item flood order
-    // {p1..p5}: uncapped, the flood inflates degrees (p1/p2 -> 4) and
-    // mints support-1 pairs; capped at 4 the flood vanishes WHOLE, so
-    // (p1,p2) reads support 3, degrees 3/3, jaccard 1e6 — not a mixed
-    // capped-numerator/uncapped-denominator 3/(4+4-3)
+    // {p1..p5}: the flood raises (p1,p2) to support 4 and degrees 4/4,
+    // and its support-1 pairs drop
     val flood = (101L to 105L).map(p => (9L, p))
     (Seq((1L, 101L), (1L, 102L), (2L, 101L), (2L, 102L), (3L, 101L), (3L, 102L)) ++ flood)
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    def rows(cap: Int) = graft.operators.GraphQueries.edgeJaccard(spark, dir, cap).collect()
+    val got = graft.operators.GraphQueries.edgeJaccard(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    assert(rows(0) == Seq((101L, 102L, 4L, 4L, 4L, 1000000L)), s"uncapped: ${rows(0)}")
-    assert(rows(4) == Seq((101L, 102L, 3L, 3L, 3L, 1000000L)), s"capped: ${rows(4)}")
+    assert(got == Seq((101L, 102L, 4L, 4L, 4L, 1000000L)), got.mkString(", "))
   }
 
   test("t30 Gopher rules: each planted violation trips exactly its own flag") {
@@ -2131,69 +2128,23 @@ class PipelineOpsSpec extends SparkSpec {
     assert(a2s1 > a2s23, "the shared authority must outrank the solo ones")
   }
 
-  test("g15 broadcastRanks knob: both positions bit-identical; false pins a BroadcastHashJoin-free co-partitioned plan") {
+  test("g15 HITS broadcasts its node-sized rank tables (the measured bench plan)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("g15knob").toString
-    // a less symmetric graph than the trace above so a strategy bug that
-    // reorders or drops a rank join cannot cancel out
+    val dir = java.nio.file.Files.createTempDirectory("g15plan").toString
     val orders = (1L to 6L).map(k => (k, (k - 1) / 2 + 1)) // 3 customers, 2 orders each
     orders.toDF("o_orderkey", "o_custkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Seq((1L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 3L), (4L, 2L),
       (5L, 1L), (6L, 4L)).toDF("l_orderkey", "l_suppkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val bcast = GraphQueries.hitsRanking(spark, dir, broadcastRanks = true)
-    val copart = GraphQueries.hitsRanking(spark, dir, broadcastRanks = false)
-    val a = bcast.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val b = copart.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(a == b, s"knob changed the answer:\n true=$a\nfalse=$b")
-    assert(a.nonEmpty)
-    // the knob moves strategy only: false must not broadcast any RANK
-    // table. The edge BUILD (orders x lineitem) may broadcast — that join
-    // is unhinted, AQE's call at spec scale — and the 1-row normalization
-    // scalars ride BroadcastNestedLoopJoin (a scalar cross join, not a
-    // node-table materialization); so the pin is (a) every remaining
-    // BroadcastHashJoin keys on the fact build's o_orderkey/l_orderkey,
-    // never on the c/s rank keys, and (b) the four hinted joins (h0, a1,
-    // h1, deg) all run ShuffledHashJoin.
-    // Plan shape reads off the LAZY twin (r18: the eager registry form
-    // materializes per level, so its final plan is cache reads); clear the
-    // eager runs' caches first or CacheManager's hint-insensitive matching
-    // would substitute them into the twin's plan.
-    // The twin is the SOLE plan witness by design (r18 ADVICE #3,
-    // considered and declined): the eager path builds each level from the
-    // SAME rankSide()/hint expressions the twin plans — a hint dropped only
-    // in the eager path cannot exist without diverging the shared code —
-    // and per-level executed-plan capture via a QueryExecutionListener
-    // would pin AQE's level-local choices at spec scale, which the knob
-    // deliberately leaves to AQE. The result equality above plus the twin's
-    // strategy pins are the contract.
-    bcast.unpersist(blocking = true)
-    copart.unpersist(blocking = true)
-    val plan = GraphQueries.hitsRanking(spark, dir, broadcastRanks = false, m = Materialize.Lazy)
+    // plan shape reads off the LAZY twin (r18: the eager registry form
+    // materializes per level, so its final plan is cache reads)
+    val plan = GraphQueries.hitsRanking(spark, dir, m = Materialize.Lazy)
       .queryExecution.executedPlan.toString
-    val bhjKeys = """BroadcastHashJoin \[(\w+)#""".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(bhjKeys.forall(k => k == "o_orderkey" || k == "l_orderkey"),
-      s"broadcastRanks=false still broadcast a rank table (BHJ keys: $bhjKeys):\n$plan")
-    val shjCount = "ShuffledHashJoin".r.findAllIn(plan).size
-    assert(shjCount >= 4,
-      s"expected 4 shuffle-hash rank joins, saw $shjCount:\n$plan")
-    val planTrue = GraphQueries.hitsRanking(spark, dir, broadcastRanks = true, m = Materialize.Lazy)
-      .queryExecution.executedPlan.toString
-    assert(planTrue.contains("BroadcastHashJoin"),
-      s"broadcastRanks=true lost the measured bench plan:\n$planTrue")
-    // and at sf0.001 — the oracle's own grain — the two positions stay
-    // bit-identical: the knob moves the join strategy, never the arithmetic
-    val sfTrue = GraphQueries.hitsRanking(spark, sf0001, broadcastRanks = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val sfFalse = GraphQueries.hitsRanking(spark, sf0001, broadcastRanks = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(sfTrue == sfFalse, s"knob changed the sf0.001 answer:\n true=$sfTrue\nfalse=$sfFalse")
-    assert(sfTrue.size == 10) // sf0.001 has 10 suppliers; LIMIT 20 keeps all
+    assert(plan.contains("BroadcastHashJoin"), s"g15 lost the measured bench plan:\n$plan")
   }
 
-  test("g17 weighted PageRank: hand-traced 4-node graph — repeat business outweighs drive-bys, duplicate lineitems don't inflate weights, knob positions agree") {
+  test("g17 weighted PageRank: hand-traced 4-node graph — repeat business outweighs drive-bys, duplicate lineitems don't inflate weights") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("g17spec").toString
     // c1 -[w=3]- s1, c1 -[w=1]- s2, c2 -[w=1]- s1; order 1 carries TWO
@@ -2208,36 +2159,13 @@ class PipelineOpsSpec extends SparkSpec {
     // r1 = 37.5e9 + 85%*m: 409375000000 / 90625000000
     // round 2: m(c1)=m(s1)=307031250000+90625000000, m(c2)=m(s2)=102343750000
     // r2: 375507812500 / 124492187500
-    val gotDf = SparkEntry.queries("g17_weighted_pagerank")(spark, dir)
-    val got = gotDf.collect()
+    val got = SparkEntry.queries("g17_weighted_pagerank")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq(
       (1L, 4L, 375507812500L),
       (1000001L, 4L, 375507812500L),
       (2L, 1L, 124492187500L),
       (1000002L, 1L, 124492187500L)), got.mkString(", "))
-    // drop the true position's cached edge build first: Spark's cache
-    // matching is HINT-INSENSITIVE, so the false position would silently
-    // reuse the true build's broadcast pre-join subtree and the plan
-    // assert below would read the wrong plan
-    gotDf.unpersist(blocking = true)
-    val copartDf = GraphQueries.weightedPageRank(spark, dir, broadcastRanks = false)
-    val copart = copartDf.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(copart == got, s"knob changed the answer: $copart")
-    // g15's plan pin, inherited: false must not broadcast any RANK table —
-    // remaining BroadcastHashJoins may key only on the fact build's keys.
-    // Plan shape reads off the LAZY twin (r18: the eager form materializes
-    // per level); clear the eager runs' caches first (hint-insensitive
-    // cache matching, as above).
-    copartDf.unpersist(blocking = true)
-    val plan = GraphQueries.weightedPageRank(spark, dir, broadcastRanks = false, m = Materialize.Lazy)
-      .queryExecution.executedPlan.toString
-    val bhjKeys = """BroadcastHashJoin \[(\w+)#""".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(bhjKeys.forall(k => k == "o_orderkey" || k == "l_orderkey"),
-      s"broadcastRanks=false still broadcast a rank table (BHJ keys: $bhjKeys):\n$plan")
-    assert("ShuffledHashJoin".r.findAllIn(plan).size >= 4,
-      s"expected shuffle-hash rank rounds:\n$plan")
   }
 
   test("g16 HyperBall: register-merge estimates track g10's exact balls within the HLL envelope at sf0.01") {

@@ -2,29 +2,23 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{DedupQueries, GraphQueries, MultimodalQueries, RelationalQueries, SimilarityQueries}
+import graft.operators.{DedupQueries, GraphQueries, TextQueries}
 import graft.functions.{HashFunctions, TextFunctions}
 import org.apache.spark.sql.functions._
 
-/** Measured banding-join skew defence (r12 verdict #4: "measure the
-  * df-cap + AQE claim instead of arguing it").
+/** Planted skew (r12 verdict #4: "measure the skew-defence claim
+  * instead of arguing it").
   *
-  * SURVEY §9 claims d04's stop-gram/flood skew is handled by the df-cap
-  * prefilter plus AQE's skew split. This suite PLANTS the skew — a flood
-  * of identical documents whose signatures collide in every band, the
-  * worst case for a banding join (quadratic candidate blowup concentrated
-  * in single buckets) — and pins both defences:
+  * SURVEY §9's banding-join skew — a flood of identical documents whose
+  * signatures collide in every band, the worst case for a banding join
+  * (quadratic candidate blowup concentrated in single buckets) — has one
+  * defence: AQE's skew-join handling, which at deployment-shaped
+  * thresholds splits the oversized banding-join partition (plan shows
+  * `skew=true` on the sort-merge join). This suite plants the flood and
+  * pins that split, and pins the hand-traced answers d04, g05/g14 and p22
+  * give on their planted flood, hub and single-source corpora.
   *
-  *  1. the df-cap (`lshNearDups(bucketCap=...)`) drops exactly the flood
-  *     buckets: candidate volume collapses from O(flood²) to the
-  *     background level with ZERO recall loss outside the flood;
-  *  2. AQE's skew-join handling, at deployment-shaped thresholds, splits
-  *     the oversized banding-join partition (plan shows `skew=true` on
-  *     the sort-merge join) — the runtime defence for floods that survive
-  *     a mis-set cap.
-  *
-  * The measured numbers (candidate counts, split engagement) are recorded
-  * in README's skew-defence note.
+  * The measured numbers are recorded in README's skew-defence note.
   */
 class SkewSpec extends SparkSpec {
 
@@ -53,22 +47,14 @@ class SkewSpec extends SparkSpec {
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("df-cap prefilter drops exactly the flood buckets (zero recall loss outside the flood)") {
-    val uncapped = pairSet(DedupQueries.lshNearDups(spark, plantedDir))
-    val capped = pairSet(DedupQueries.lshNearDups(spark, plantedDir, bucketCap = 32))
+  test("d04 on a planted flood: C(64,2) flood pairs and the near-dup pair outside it") {
+    val pairs = pairSet(DedupQueries.lshNearDups(spark, plantedDir))
     val floodIds = (1000L until 1064L).toSet
-    val floodPairs = uncapped.filter { case (a, b) => floodIds(a) && floodIds(b) }
-    // the flood contributes its full quadratic pair set when uncapped
+    val floodPairs = pairs.filter { case (a, b) => floodIds(a) && floodIds(b) }
+    // the flood contributes its full quadratic pair set
     assert(floodPairs.size === 64 * 63 / 2,
       s"expected C(64,2)=2016 flood pairs, got ${floodPairs.size}")
-    // the planted near-dup outside the flood is found by BOTH runs
-    assert(uncapped.contains((3000L, 3001L)) && capped.contains((3000L, 3001L)),
-      "planted near-dup pair must survive the cap")
-    // the cap removes the flood pairs and NOTHING else
-    assert(capped === uncapped -- floodPairs,
-      "df-cap must drop exactly the flood-internal pairs")
-    info(s"candidate-pair volume: uncapped=${uncapped.size}, capped=${capped.size} " +
-      s"(flood contribution ${floodPairs.size})")
+    assert(pairs.contains((3000L, 3001L)), "planted near-dup pair must be found")
   }
 
   test("AQE skew-join split engages on the flood bucket at deployment-shaped thresholds") {
@@ -125,92 +111,9 @@ class SkewSpec extends SparkSpec {
       s"join rows=$n")
   }
 
-  /** Identical-VECTOR flood for s20 (r13 verdict #1): SemDeDup's input is
-    * a pre-dedup corpus, so duplicate embeddings colliding in ALL tables'
-    * buckets is the NORM for knnGraph, not a corner case. 64 identical
-    * vectors (the flood), 10 background clusters of 4 near-identical
-    * vectors each (every background vector has 3 true neighbors that
-    * share most buckets), flood direction chosen with low cosine to every
-    * cluster so it never competes for a background top-3 slot.
-    */
-  private lazy val vecFloodDir: String = {
-    import spark.implicits._
-    val dim = 64
-    val floodVec = Array.tabulate(dim)(j => if (j < dim / 2) 1.0f else -1.0f)
-    val flood = (0 until 64).map(i => (1000L + i, floodVec, 0))
-    val background = for (c <- 0 until 10; m <- 0 until 4) yield {
-      val v = Array.tabulate(dim) { j =>
-        // mod 11 with a 5c offset keeps the 10 cluster bases pairwise
-        // distinct (mod 7 made clusters c and c+7 coincide)
-        val base = ((c * 5 + j * 17) % 11 - 5).toFloat
-        // alternate-sign base cancels against the flood's half-split signs;
-        // per-member noise small enough to preserve most hyperplane signs
-        base * (if (j % 2 == 0) 1.0f else -1.0f) +
-          0.01f * (((c * 13 + m * 7 + j * 3) % 5) - 2)
-      }
-      (2000L + c * 4 + m, v, 1)
-    }
-    val dir = Files.createTempDirectory("graft-skew-vec").toString
-    (flood ++ background).toDF("vec_id", "embedding", "label")
-      .repartition(8)
-      .write.parquet(s"$dir/embeddings.parquet")
-    dir
-  }
-
-  test("s20 bucketCap collapses an identical-vector flood's candidates (zero recall loss outside the flood)") {
-    val floodIds = (1000L until 1064L).toSet
-    def candSet(cap: Int): Set[(Long, Long)] =
-      SimilarityQueries.knnGraphCandidates(spark, vecFloodDir, bucketCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = candSet(0)
-    val capped = candSet(32)
-    val floodCands = uncapped.filter { case (a, b) => floodIds(a) || floodIds(b) }
-    // identical vectors collide in EVERY table: the flood contributes its
-    // full quadratic ordered-pair set when uncapped
-    assert(floodCands.size >= 64 * 63,
-      s"expected >= 4032 flood candidate ids, got ${floodCands.size}")
-    // every bucket holding a flood vector holds >= 64 > cap members, so
-    // the cap removes all flood-touching candidates...
-    assert(capped.forall { case (a, b) => !floodIds(a) && !floodIds(b) },
-      "capped candidates must not touch the flood")
-    // ...and only ever removes: the cap is a prefilter, never a generator.
-    // Unlike d04's 64-bit band keys, the 4-bit signature space makes
-    // background vectors COHABIT flood buckets, so a background pair whose
-    // only shared bucket was a flood bucket loses that candidate — the
-    // recall claim therefore lives at the graph output grain (below),
-    // where the lost low-sim cross-cluster candidates never held a top-3
-    // slot.
-    assert(capped.subsetOf(uncapped -- floodCands),
-      "df-cap must only remove candidates, all flood-touching ones among them")
-    val collateral = (uncapped -- floodCands) -- capped
-
-    // the GRAPH outside the flood is bit-identical capped vs uncapped
-    def graphRows(cap: Int): Set[(Long, Long, Long, Double)] =
-      SimilarityQueries.knnGraph(spark, vecFloodDir, bucketCap = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-    val gUncapped = graphRows(0)
-    val gCapped = graphRows(32)
-    assert(gCapped === gUncapped.filterNot { case (q, _, n, _) => floodIds(q) || floodIds(n) },
-      "neighbor graph outside the flood must be identical capped vs uncapped")
-    // every background vector still finds its 3 planted cluster-mates
-    val mates = gCapped.groupBy(_._1).view.mapValues(_.map(_._3)).toMap
-    for (c <- 0 until 10; m <- 0 until 4) {
-      val id = 2000L + c * 4 + m
-      val expected = (0 until 4).map(x => 2000L + c * 4 + x).toSet - id
-      assert(mates.getOrElse(id, Set.empty[Long]).toSet === expected,
-        s"vector $id must keep its cluster-mates as top-3 under the cap")
-    }
-    info(s"candidate ids: uncapped=${uncapped.size}, capped=${capped.size} " +
-      s"(flood contribution ${floodCands.size}, collateral background drops " +
-      s"${collateral.size} — none of them top-3 edges); " +
-      s"graph rows ${gUncapped.size} -> ${gCapped.size}")
-  }
-
-  /** Planted HUB for the g05/g14 wedge-middle cap (r14 verdict #1): one
-    * part (999) in EVERY order, so its co-purchase degree is the whole
-    * part universe — the mega-hub the g13 power-law fit says is the norm
-    * at corpus scale. 10 disjoint 6-part "cliques", 6 orders each:
+  /** Planted HUB for g05/g14 (r14 verdict #1): one part (999) in EVERY
+    * order, so its co-purchase degree is the whole part universe — the
+    * mega-hub the g13 power-law fit says is the norm at corpus scale. 10 disjoint 6-part "cliques", 6 orders each:
     * orders 1-2 = {p0..p3}, 3-4 = {p0,p1,q0}, 5-6 = {p0,p1,q1} (+hub in
     * all). Hand-traced graph: in-clique degrees p0/p1=6, p2/p3=4,
     * q0/q1=3, hub=60; the 50 output pairs (5 per clique: (q0,q1),
@@ -236,261 +139,28 @@ class SkewSpec extends SparkSpec {
     dir
   }
 
-  test("g05/g14 middleCap collapses a planted hub's wedge candidates (non-hub contributions bit-identical)") {
-    val hub = 999L
-    val cap = 16 // above every in-clique degree (<= 6), far below hub's 60
-    def candSet(c: Int): Set[(Long, Long, Long)] =
-      GraphQueries.wedgeCandidates(spark, hubDir, middleCap = c)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val uncapped = candSet(0)
-    val capped = candSet(cap)
-    val hubWedges = uncapped.filter(_._1 == hub)
-    // the hub centers C(60,2) wedges — 79% of the whole candidate volume
-    assert(hubWedges.size === 60 * 59 / 2,
-      s"expected C(60,2)=1770 hub wedges, got ${hubWedges.size}")
-    assert(uncapped.size === 1770 + 480,
-      s"hand-traced candidate volume 2250, got ${uncapped.size}")
-    // the cap removes exactly the hub-centered wedges and nothing else
-    assert(capped === uncapped -- hubWedges,
-      "middleCap must drop exactly the hub-middle wedges")
-
-    // g05: same 50 non-edge pairs survive (their {p0,p1} support stands
-    // without the hub); each loses exactly the hub's +1 common, and the
-    // Jaccard denominator keeps TRUE degrees
-    def g05Rows(c: Int): Map[(Long, Long), (Long, Double)] =
-      GraphQueries.commonNeighbors(spark, hubDir, middleCap = c)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val g05U = g05Rows(0)
-    val g05C = g05Rows(cap)
-    assert(g05U.size === 50 && g05C.keySet === g05U.keySet,
-      s"same 50 candidate pairs capped vs uncapped, got ${g05U.size}/${g05C.size}")
-    for ((pair, (cu, _)) <- g05U)
-      assert(g05C(pair)._1 === cu - 1, s"$pair must lose exactly the hub middle")
-    // hand-traced rows for clique 0's (q0,q1)=(14,15): deg 3 and 3,
-    // uncapped common {p0,p1,hub}=3 (jaccard 3/3=1.0), capped 2 with the
-    // TRUE-degree denominator (2/(3+3-2)=0.5)
-    assert(g05U((14L, 15L)) === ((3L, 1.0)))
-    assert(g05C((14L, 15L)) === ((2L, 0.5)))
-    // and (q0,p2)=(12,14): degs 4,3 -> uncapped 3/4=0.75, capped 2/5=0.4
-    assert(g05U((12L, 14L)) === ((3L, 0.75)))
-    assert(g05C((12L, 14L)) === ((2L, 0.4)))
-
-    // g14: every pair's AA score drops by exactly the hub's ln-grid
-    // weight (degree stays the FULL-graph 60), leaving 2·w(6) — the two
-    // p0/p1 middles — for every surviving pair
+  test("g05/g14 on a planted hub: hand-traced rows, every hub-centred wedge counted") {
+    // g05: the 50 non-edge pairs, each with common middles {p0, p1, hub};
+    // clique 0's (q0,q1)=(14,15): deg 3 and 3, common 3, jaccard 3/3=1.0;
+    // (q0,p2)=(12,14): degs 4,3 -> 3/4=0.75
+    val g05 = GraphQueries.commonNeighbors(spark, hubDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    assert(g05.size === 50, s"expected 50 candidate pairs, got ${g05.size}")
+    assert(g05((14L, 15L)) === ((3L, 1.0)))
+    assert(g05((12L, 14L)) === ((3L, 0.75)))
+    // g14: every pair's AA score is the two p0/p1 middles' ln-grid weight
+    // w(6) plus the hub's w(60)
     def w(d: Long): Long = 1000000000000L / math.round(math.log(d.toDouble) * 1e6)
-    def g14Rows(c: Int): Map[(Long, Long), (Long, Long)] =
-      GraphQueries.adamicAdar(spark, hubDir, middleCap = c)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val g14U = g14Rows(0)
-    val g14C = g14Rows(cap)
-    assert(g14C.keySet === g14U.keySet && g14U.keySet === g05U.keySet)
-    for ((pair, (cu, au)) <- g14U) {
-      assert(g14C(pair) === ((cu - 1, au - w(60))),
-        s"$pair must lose exactly the hub's weight w(60)=${w(60)}")
-      assert(g14C(pair)._2 === 2 * w(6), s"$pair capped AA must be 2*w(6)")
-    }
-    info(s"wedge candidates: uncapped=${uncapped.size}, capped=${capped.size} " +
-      s"(hub contribution ${hubWedges.size}); 50 output pairs kept, " +
-      s"common -1 and aa -${w(60)} each, Jaccard on true degrees")
-  }
-
-  /** q120 long-history corpus: one part with 200 receipt lots and 200
-    * issues interleaved by arrival (the unbounded-history shape TPC-H's
-    * fixed lines-per-part contract forbids — exactly what the rectangle
-    * form's per-part cross product cannot survive), plus 10 background
-    * parts with contract-sized histories.
-    */
-  private lazy val fifoDir: String = {
-    import spark.implicits._
-    val d0 = java.time.LocalDate.of(1992, 1, 1)
-    val hub = (1 to 400).map { i =>
-      (1L, if (i % 2 == 0) "N" else "R", 10.0, 10.00,
-        java.sql.Date.valueOf(d0.plusDays(i)), i.toLong, 1)
-    }
-    val bg = for {
-      p <- 10L to 19L
-      i <- 1 to 5
-    } yield (p, if (i <= 3) "N" else "R", 5.0, 5.00,
-      java.sql.Date.valueOf(d0.plusDays(i)), 1000 + p * 10 + i, 1)
-    val dir = Files.createTempDirectory("graft-skew-fifo").toString
-    (hub ++ bg).toDF("l_partkey", "l_returnflag", "l_quantity",
-      "l_extendedprice", "l_shipdate", "l_orderkey", "l_linenumber")
-      .repartition(8)
-      .write.parquet(s"$dir/lineitem.parquet")
-    dir
-  }
-
-  test("q120 bucketUnits collapses a planted long-history part's evaluated pairs (output bit-identical)") {
-    val rect = RelationalQueries.fifoEvaluatedPairs(spark, fifoDir, bucketUnits = 0)
-    val strips = RelationalQueries.fifoEvaluatedPairs(spark, fifoDir, bucketUnits = 64)
-    // hand-traced rectangle: hub 200 lots x 200 issues + 10 background
-    // parts at 3 x 2 — the quadratic term is 99.9% of the volume
-    assert(rect === 200L * 200 + 10 * (3 * 2),
-      s"hand-traced rectangle volume 40060, got $rect")
-    // width-10 intervals span <= 2 width-64 buckets, so each strip holds
-    // ~64/10 intervals a side: the hub's quadratic term collapses to
-    // O(history x interval/bucket) — well over 10x here, and the ratio
-    // GROWS linearly with history length while the strips stay flat
-    assert(strips < rect / 10,
-      s"expected > 10x evaluated-pair collapse, got $rect -> $strips")
-    val rectOut = RelationalQueries.fifoMatching(spark, fifoDir, bucketUnits = 0)
-      .collect().map(_.toSeq).toSeq
-    val stripOut = RelationalQueries.fifoMatching(spark, fifoDir, bucketUnits = 64)
-      .collect().map(_.toSeq).toSeq
-    assert(rectOut === stripOut, "bucketing must not change the FIFO answer")
-    // and on the real corpus: the knob is strategy, never arithmetic
-    val sfRect = RelationalQueries.fifoMatching(spark, "/root/testdata/sf0.001", bucketUnits = 0)
-      .collect().map(_.toSeq).toSeq
-    val sfStrip = RelationalQueries.fifoMatching(spark, "/root/testdata/sf0.001", bucketUnits = 64)
-      .collect().map(_.toSeq).toSeq
-    assert(sfRect === sfStrip, "sf0.001 outputs diverged under bucketing")
-    info(s"evaluated pairs: rectangle=$rect, strips(W=64)=$strips " +
-      f"(${rect.toDouble / strips}%.1fx collapse); outputs bit-identical on " +
-      s"planted + sf0.001 corpora")
-  }
-
-  /** m14 single-bucket corpus: 171 images (doc_id multiples of 3 — the
-    * packBlobs image lane) whose 8-byte headers all parse to the SAME
-    * square geometry, so every one snaps to ladder bucket 3 — the
-    * worst-case for the global per-bucket assembly window (one partition
-    * holds the whole corpus) and exactly the shape batchShards exists
-    * for. 171 = 21·8 + 3 exercises the ragged tail in both positions.
-    */
-  private lazy val m14Dir: String = {
-    import spark.implicits._
-    // header bytes: "PQ" magic, version, flags, width hi/lo, height hi/lo
-    // = 'A','A' twice → width = height = 16705 → aspect_ppm = 1e6 →
-    // bucket 3 (1024×1024, rung aspect exactly 1e6, |diff| = 0)
-    val imgs = (0 until 171).map(i => (3L * i, "PQvfAAAA padding-body"))
-    val dir = Files.createTempDirectory("graft-skew-m14").toString
-    imgs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("planted"))
-      .withColumn("n_chars", length(col("text")))
-      .repartition(8)
-      .write.parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("m14 batchShards collapses the per-bucket assembly window (batch invariants pinned)") {
-    val S = 8L
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    val global = MultimodalQueries.aspectBuckets(spark, m14Dir).collect()
-    val sharded = MultimodalQueries.aspectBuckets(spark, m14Dir, batchShards = S).collect()
-    // identical doc set, geometry, and bucket assignment in both positions
-    // — the knob moves batch ASSEMBLY, never which images land where
-    assert(global.map(key).toSet === sharded.map(key).toSet)
-    assert(global.length === 171 && global.forall(_.getLong(4) == 3L),
-      "planted corpus must land every image in bucket 3")
-    // global form: 21 full batches of 8, tail of exactly 3
-    assert(global.count(_.getLong(7) == -1L) === 3)
-    assert(global.filter(_.getLong(7) >= 0).groupBy(_.getLong(7)).forall {
-      case (_, rows) => rows.length == 8 && rows.map(_.getLong(8)).sorted.toSeq == (0L to 7L)
-    })
-    // sharded form: per-shard batch + tail arithmetic exact, replayed from
-    // the same splitmix shard assignment the operator uses
-    val byShard = sharded.groupBy(r =>
-      graft.functions.HashOps.priorityHash(r.getLong(0), 23L) % S)
-    assert(byShard.keySet.subsetOf((0L until S).toSet))
-    for ((shard, rows) <- byShard) {
-      val tails = rows.count(_.getLong(7) == -1L)
-      assert(tails === rows.length % 8, s"shard $shard tail must be n mod 8")
-      val batches = rows.filter(_.getLong(7) >= 0).groupBy(_.getLong(7))
-      assert(batches.size === rows.length / 8)
-      for ((bIdx, members) <- batches) {
-        assert(bIdx / 1000000000000L === shard,
-          s"sharded batch_idx must encode its shard ($bIdx vs $shard)")
-        assert(members.length === 8 && members.map(_.getLong(8)).sorted.toSeq == (0L to 7L),
-          s"batch $bIdx must hold exactly slots 0..7")
-      }
-    }
-    // the measured collapse: the quantity batchShards bounds is max rows
-    // per assembly-window partition — corpus-sized global, ~corpus/S sharded
-    val maxGlobal = MultimodalQueries.aspectBatchMaxPartition(spark, m14Dir)
-    val maxSharded = MultimodalQueries.aspectBatchMaxPartition(spark, m14Dir, batchShards = S)
-    assert(maxGlobal === 171L, "global assembly funnels the whole bucket into one partition")
-    assert(maxSharded <= maxGlobal / 4,
-      s"expected >= 4x assembly-partition collapse at S=$S, got $maxGlobal -> $maxSharded")
-    // and on the real corpus: same doc set + geometry under both positions
-    val sfG = MultimodalQueries.aspectBuckets(spark, "/root/testdata/sf0.001").collect()
-    val sfS = MultimodalQueries.aspectBuckets(spark, "/root/testdata/sf0.001", batchShards = 4).collect()
-    assert(sfG.map(key).toSet === sfS.map(key).toSet, "sf0.001 geometry diverged under sharding")
-    assert(sfG.length === sfS.length)
-    info(s"assembly max partition: global=$maxGlobal, sharded(S=$S)=$maxSharded " +
-      f"(${maxGlobal.toDouble / maxSharded}%.1fx collapse); batch/tail invariants " +
-      s"hold per shard; doc set + geometry bit-identical on planted + sf0.001")
-  }
-
-  /** m15 flood corpus: 64 identical "blank" images (one byte value →
-    * every aHash bit 0 → collision in EVERY band, the worst case for the
-    * banding join), plus one true near-dup image pair and distinct
-    * background images outside the flood.
-    */
-  private lazy val m15FloodDir: String = {
-    import spark.implicits._
-    val header = "HDvfAAAA"
-    def pay(block: Int => String) = (0 until 64).map(block).mkString
-    val base = pay(b => if (b % 2 == 0) "zzz" else "aaa")
-    // blocks 0,2 flipped: hamming exactly 2 vs base (the m15spec trace)
-    val near = pay(b => if (b % 2 == 0 && b > 2) "zzz" else "aaa")
-    val flood = (0 until 64).map(i => (3000L + 3 * i, header + "m" * 192))
-    // backgrounds with HAND-KNOWN band keys (0xAAAA / 0x1111 / 0x0F0F per
-    // band — never 0, the flood's key, and never each other's), so no
-    // accidental bucket sharing can perturb the exact asserts below
-    val backgrounds = Seq(
-      (6000L, header + pay(b => if (b % 2 == 0) "aaa" else "zzz")),
-      (6003L, header + pay(b => if (b % 4 == 0) "zzz" else "aaa")),
-      (6006L, header + pay(b => if (b % 8 < 4) "zzz" else "aaa")))
-    val docs = Seq((300L, header + base), (303L, header + near)) ++ flood ++ backgrounds
-    val dir = Files.createTempDirectory("graft-skew-m15").toString
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("planted"))
-      .withColumn("n_chars", length(col("text")))
-      .repartition(8)
-      .write.parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("m15 bucketCap drops exactly the blank-image flood buckets (non-flood rows bit-identical)") {
-    import graft.operators.MultimodalQueries
-    val floodIds = (0 until 64).map(i => 3000L + 3 * i).toSet
-    // a uniform payload hashes to all-zero bits: every flood image shares
-    // all 4 band keys -> 64*63 directed pairs per band class
-    val uncappedVol = MultimodalQueries.imageCandidateVolume(spark, m15FloodDir)
-    val cappedVol = MultimodalQueries.imageCandidateVolume(spark, m15FloodDir, bucketCap = 32)
-    assert(uncappedVol >= 4L * 64 * 63,
-      s"flood must dominate the uncapped candidate volume: $uncappedVol")
-    assert(cappedVol < uncappedVol / 10,
-      s"expected > 10x candidate collapse, got $uncappedVol -> $cappedVol")
-    def rows(cap: Int) = MultimodalQueries.imageNearDup(spark, m15FloodDir, bucketCap = cap)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    val uncapped = rows(0)
-    val capped = rows(32)
-    assert(uncapped.keySet === capped.keySet, "the cap must not change the audit domain")
-    // flood members: 63 partners and hamming 0 uncapped; sentinels capped
-    for (id <- floodIds) {
-      assert(uncapped(id)._1 === 63L && uncapped(id)._3 === 0L && uncapped(id)._4 === 1L,
-        s"flood member $id uncapped: ${uncapped(id)}")
-      assert(capped(id) === ((0L, -1L, -1L, 0L)),
-        s"flood member $id must report sentinels under the cap: ${capped(id)}")
-    }
-    // every non-flood row is bit-identical in both positions, and the
-    // planted near-dup pair survives the cap with its exact distance
-    val nonFlood = uncapped.keySet -- floodIds
-    assert(nonFlood.forall(id => uncapped(id) === capped(id)),
-      "the cap changed a non-flood row")
-    assert(capped(300L)._2 === 303L && capped(300L)._3 === 2L && capped(300L)._4 === 1L,
-      s"near-dup pair lost under the cap: ${capped(300L)}")
-    info(s"directed candidate volume: uncapped=$uncappedVol, capped(32)=$cappedVol " +
-      f"(${uncappedVol.toDouble / math.max(cappedVol, 1)}%.1fx collapse); " +
-      s"64 flood members -> sentinels, ${nonFlood.size} non-flood rows bit-identical")
+    val g14 = GraphQueries.adamicAdar(spark, hubDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    assert(g14.keySet === g05.keySet)
+    for ((pair, aa) <- g14)
+      assert(aa === ((3L, 2 * w(6) + w(60))), s"$pair: $aa")
   }
 
   /** p22 single-source corpus: 160 docs of exactly 100 tokens each, all
     * in ONE source — the whole corpus flows through one packing
-    * cumulative-sum window partition in the default position.
+    * cumulative-sum window partition.
     */
   private lazy val packDir: String = {
     import spark.implicits._
@@ -505,39 +175,11 @@ class SkewSpec extends SparkSpec {
     dir
   }
 
-  test("p22 packShards collapses the per-source packing window (totals invariant, bounded excess windows)") {
-    import graft.operators.TextQueries
-    val S = 8L
-    def row(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getLong(5), r.getLong(6))).toSeq
-    val global = row(TextQueries.contextPacking(spark, packDir))
-    val sharded = row(TextQueries.contextPacking(spark, packDir, packShards = S))
-    assert(global.size === 1 && sharded.size === 1)
-    // hand trace: 160 docs x 100 tokens = 16000 tokens -> 32 windows of
-    // 512 (31 full + a 128-token tail), fill 16000e6/(32*512) = 976562
-    assert(global.head._2 === 160L && global.head._3 === 16000L)
-    assert(global.head._4 === 32L && global.head._7 === 976562L)
-    // the knob moves WHERE packing streams run, never what is packed:
-    // docs and tokens are invariant; windows grow by at most one partial
-    // tail per shard, and fill honestly drops with the extra tails
-    assert(sharded.head._2 === 160L && sharded.head._3 === 16000L)
-    assert(sharded.head._4 >= global.head._4 && sharded.head._4 <= global.head._4 + S,
-      s"sharded windows ${sharded.head._4} outside [${global.head._4}, ${global.head._4 + S}]")
-    assert(sharded.head._7 <= global.head._7)
-    // the measured collapse of the quantity the knob bounds
-    val maxGlobal = TextQueries.packMaxPartition(spark, packDir)
-    val maxSharded = TextQueries.packMaxPartition(spark, packDir, packShards = S)
-    assert(maxGlobal === 160L)
-    assert(maxSharded <= maxGlobal / 4,
-      s"expected >= 4x packing-partition collapse at S=$S, got $maxGlobal -> $maxSharded")
-    // real corpus: totals invariant under the knob at sf0.001
-    val sfG = row(TextQueries.contextPacking(spark, "/root/testdata/sf0.001"))
-    val sfS = row(TextQueries.contextPacking(spark, "/root/testdata/sf0.001", packShards = 4))
-    assert(sfG.map(r => (r._1, r._2, r._3)) === sfS.map(r => (r._1, r._2, r._3)),
-      "sf0.001 per-source doc/token totals diverged under sharding")
-    info(s"packing max partition: global=$maxGlobal, sharded(S=$S)=$maxSharded; " +
-      s"windows ${global.head._4} -> ${sharded.head._4} (tail excess " +
-      s"${sharded.head._4 - global.head._4} <= $S), fill ${global.head._7} -> ${sharded.head._7} ppm")
+  test("p22 on a single-source corpus: hand-traced windows and fill") {
+    val got = TextQueries.contextPacking(spark, packDir).collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(6))).toSeq
+    // 160 docs x 100 tokens = 16000 tokens -> 32 windows of 512 (31 full +
+    // a 128-token tail), fill 16000e6/(32*512) = 976562
+    assert(got === Seq(("s0", 160L, 16000L, 32L, 976562L)))
   }
 }

@@ -733,67 +733,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("st19 fingerprint keys: flag sets identical to raw-string keys at fixture SF; verify pass re-derives exact counts") {
-    // The knob contract (r17 ask #2): fp mode's per-doc evidence multiset
-    // equals raw-string mode's on the real fixture corpus (collision
-    // probability ~3e-11 at its ~25k distinct windows), and the
-    // verify-on-collision batch pass re-derives the SAME exact counts
-    // from d20's raw-string index — so the fp path stays oracle-exact
-    // even when a collision ever does over-flag.
-    EventStreams.withRocksDBStateStore(spark) {
-      val path = s"$sf0001/documents.parquet"
-      val schema = spark.read.parquet(path).schema
-      def stream() = spark.readStream.schema(schema).parquet(s"$path*")
-        .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
-      def run(fp: Boolean, name: String): Map[Long, Long] = {
-        val q = DocStreams.substringDupMonitor(spark, stream(), fingerprintKeys = fp)
-          .toDF()
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        spark.table(name).groupBy("doc_id").count().collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
-      val raw = run(fp = false, "st19_knob_raw")
-      val fpm = run(fp = true, "st19_knob_fp")
-      assert(raw == fpm,
-        s"knob positions diverge: raw-only=${(raw.keySet -- fpm.keySet).toSeq.sorted}, " +
-          s"fp-only=${(fpm.keySet -- raw.keySet).toSeq.sorted}")
-      assert(raw.nonEmpty, "fixture must produce evidence rows")
-      val verified = DocStreams.verifyStaleFlags(spark,
-          spark.table("st19_knob_fp").select("doc_id").distinct(),
-          spark.read.parquet(path))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(verified == raw,
-        "verify pass must re-derive exactly the raw-key evidence counts")
-    }
-  }
-
-  test("st19 fingerprint keys: a planted fingerprint-style over-flag is removed by the verify pass") {
-    // Soundness direction the fixture cannot exercise (no real collisions
-    // at 2^-64): plant a flagged set CONTAINING an innocent doc and assert
-    // verifyStaleFlags reranks it to zero (drops it) while preserving the
-    // guilty doc's exact count.
-    val boiler = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-    val corpus = Seq(
-      (1L, "first doc carries " + boiler + " with a unique tail"),
-      (2L, "second doc also has " + boiler + " plus other words"),
-      (3L, "an innocent doc sharing no verbatim runs with anything else"))
-      .toDF("doc_id", "text")
-    val flagged = Seq(2L, 3L).toDF("doc_id") // 3 = the simulated collision victim
-    val v = DocStreams.verifyStaleFlags(spark, flagged, corpus)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(!v.contains(3L), s"innocent doc must drop out: $v")
-    def windows(t: String): Set[String] =
-      (1 to t.length - 32).filter(i => t.charAt(i - 1) == ' ')
-        .map(i => t.substring(i, i + 32)).toSet
-    val d1 = "first doc carries " + boiler + " with a unique tail"
-    val d2 = "second doc also has " + boiler + " plus other words"
-    val shared = (windows(d1) intersect windows(d2)).size.toLong
-    assert(shared > 0 && v.get(2L).contains(shared),
-      s"guilty doc must keep its exact stale count ($shared): $v")
-  }
-
   test("Kinesis transport declares its wiring but refuses to run without the connector") {
     val k = KinesisStreamIO()
     assert(k.sourceOptions("kinesis.streamName") == "java-test-stream")
