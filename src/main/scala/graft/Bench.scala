@@ -13,8 +13,10 @@ import java.nio.file.{Files, Paths}
   * `BENCH_DETAIL.json` in the working directory; the final line carries
   * the total plus a fixed headline subset.
   *
-  * Every take is [[GraftSession.Timer.take]], the same take QueryTime
-  * prints, so in-battery and fresh-JVM numbers measure one quantity.
+  * Every entry gets the same treatment: two warm takes through
+  * [[GraftSession.Timer.take]] (the take QueryTime prints), published
+  * under one rule, [[publish]]. Bench starts no other process and takes
+  * no extra samples for particular entries.
   *
   * Session settings mirror the 100 TB posture scaled to one host:
   * shuffle partitions = cores (not 200), AQE on (runtime join re-planning
@@ -38,25 +40,40 @@ object Bench {
   private def r3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
+  /** What one entry publishes from its takes. `wall` and `cpu` are each
+    * the minimum over the takes that succeeded, so a fast crash never
+    * reads as the best time. If every take failed, `wall` is their max
+    * (breakage reads as a regression, not a win) and `cpu` is 0.0.
+    * `error` is set when any take failed; such entries are listed in
+    * `errors`.
+    */
+  private[graft] final case class Published(wall: Double, cpu: Double, error: Boolean)
+
+  private[graft] def publish(takes: Seq[GraftSession.Take]): Published = {
+    val ok = takes.filter(_.ok)
+    if (ok.isEmpty) Published(takes.map(_.wall).max, 0.0, error = true)
+    else Published(ok.map(_.wall).min, ok.map(_.cpu).min, error = ok.size < takes.size)
+  }
+
   /** Battery-level weather index (r15 advisory #2): the median
     * wall-ratio vs the previous round's detail over the common
-    * above-floor entries. Per-query requalification cannot outrun a
-    * window where the whole HOST is contended (r15: 56 >2x movers on
-    * untouched code, identical-build totals swinging 201 -> 327 s, and
-    * even fresh-JVM takes read 24-50 s for a 1 s query) — but the
-    * MEDIAN ratio is exactly the signal a storm cannot hide: genuine
-    * plan changes move a handful of entries, a storm moves the middle
-    * of the distribution (r15 read 1.31 while clean-common cpu was
+    * above-floor entries. No per-query re-measure outruns a window where
+    * the whole HOST is contended (r15: 56 >2x movers on untouched code,
+    * identical-build totals swinging 201 -> 327 s, and even fresh-JVM
+    * takes read 24-50 s for a 1 s query) — but the MEDIAN ratio is
+    * exactly the signal a storm cannot hide: genuine plan changes move a
+    * handful of entries, a storm moves the middle of the distribution (r15 read 1.31 while clean-common cpu was
     * 0.996). None = no comparable prior (missing/other-sf detail, or
     * fewer than [[WeatherMinCommon]] common entries — too few for a
     * median to mean anything).
     *
-    * `exclude` (r16 ADVICE #3): entries requalified in the PREVIOUS round
-    * published fresh-JVM walls, while this round's side of the ratio is a
-    * raw in-bench take — mixing timing bases inflates those entries'
-    * ratios near the threshold, so the previous round's requalified set
-    * is dropped from the common set. Even-count ratio lists average the
-    * two middle elements (a true median, not the upper-biased pick).
+    * `exclude` (r16 ADVICE #3): entries the baseline round requalified
+    * (its `requalified` key; rounds up to r19 re-measured >2x movers in a
+    * fresh JVM) published fresh-JVM walls, while this round's side of the
+    * ratio is an in-bench take — mixing timing bases inflates those
+    * entries' ratios near the threshold, so that set is dropped from the
+    * common set. Even-count ratio lists average the two middle elements
+    * (a true median, not the upper-biased pick).
     */
   private[graft] def weatherIndex(prevWalls: Map[String, Double],
       now: Seq[(String, Double)], floorS: Double,
@@ -76,10 +93,10 @@ object Bench {
 
   /** Median wall ratio above which the battery is stamped
     * weather-degraded: cpu_s (which host steal barely moves) becomes the
-    * round-over-round basis of record and requalification is skipped —
-    * fresh takes in the same window inherit the same storm, so "min of
-    * available takes" would still publish storm numbers as if clean
-    * (r15's t29: 13.16 s published against a 0.94-1.6 s warm norm).
+    * round-over-round basis of record — more takes in the same window
+    * inherit the same storm, so "min of available takes" would still
+    * publish storm numbers as if clean (r15's t29: 13.16 s published
+    * against a 0.94-1.6 s warm norm).
     * 1.25 sits well above calm-window jitter on this host (calm rounds
     * read ~0.9-1.1) and well below the r15 storm's 1.31.
     */
@@ -96,34 +113,31 @@ object Bench {
   private[graft] val BaselineFilePattern = """BENCH_DETAIL_r(\d+)\.json""".r
 
   /** Baseline-selection rule (r17 advisory #1): the round-over-round
-    * comparison (weather index, requalifier mover filter, and the
-    * tool-emitted `cpu_comparison`) must read against an IMMUTABLE,
-    * identity-stamped artifact — never the mutable `BENCH_DETAIL.json`,
-    * which in the driver's window holds the builder's SAME-round calm
-    * take, so the r17 `cpu_comparison` published builder-calm vs
-    * driver-warm window weather (ratio 1.214) for a round whose committed
-    * round-over-round bases read 0.988. Selection order:
+    * comparison (weather index and the tool-emitted `cpu_comparison`)
+    * must read against an IMMUTABLE, identity-stamped artifact — never
+    * the mutable `BENCH_DETAIL.json`, which in the driver's window holds
+    * the builder's SAME-round calm take, so the r17 `cpu_comparison`
+    * published builder-calm vs driver-warm window weather (ratio 1.214)
+    * for a round whose committed round-over-round bases read 0.988.
+    * Selection order:
     *
-    *  1. `SPARK_GRAFT_BENCH_BASELINE` (explicit override — the builder's
-    *     local take-chaining during iteration);
-    *  2. the highest-round `BENCH_DETAIL_r<N>.json` present (the driver
-    *     path: round N's bench baselines on round N−1's committed run —
-    *     driver-to-driver, the judge's round-over-round basis);
-    *  3. `BENCH_DETAIL.json` (legacy fallback when no stamped snapshot
-    *     exists).
+    *  1. the highest-round `BENCH_DETAIL_r<N>.json` present (round N's
+    *     bench baselines on round N−1's committed run — the
+    *     round-over-round basis);
+    *  2. `BENCH_DETAIL.json` in the working directory, when no stamped
+    *     snapshot exists. Run from a scratch directory to chain local
+    *     runs: each run then compares against the previous one's detail.
     *
     * Whichever file wins, its identity (name, parsed round, its own
     * weather index and timing tag) is stamped into the emitted
     * `cpu_comparison`/`weather` fields so the basis can never silently
     * change meaning again.
     */
-  private[graft] def selectBaseline(candidates: Seq[String],
-      envOverride: Option[String]): Option[String] =
-    envOverride.orElse {
-      val stamped = candidates.collect { case n @ BaselineFilePattern(r) => (r.toInt, n) }
-      if (stamped.nonEmpty) Some(stamped.maxBy(_._1)._2)
-      else candidates.find(_ == "BENCH_DETAIL.json")
-    }
+  private[graft] def selectBaseline(candidates: Seq[String]): Option[String] = {
+    val stamped = candidates.collect { case n @ BaselineFilePattern(r) => (r.toInt, n) }
+    if (stamped.nonEmpty) Some(stamped.maxBy(_._1)._2)
+    else candidates.find(_ == "BENCH_DETAIL.json")
+  }
 
   /** One-line code-cache occupancy summary (r17 advisory #2 forensics):
     * the reserved size actually in force (from the JVM args — proves
@@ -131,9 +145,8 @@ object Bench {
     * and the sweeper's `full_count` from the `Compiler.codecache` dcmd
     * (non-zero = the JIT stopped compiling at least once — the r5-r7
     * storm signature where no-table queries run interpreted at 80-200 s
-    * cpu). Printed by QueryTime after its takes and captured into the
-    * requalified record, so a driver-env fresh-JVM storm carries its own
-    * root-cause evidence.
+    * cpu). Stamped into Bench's env block and printed by QueryTime after
+    * its takes, so a slow run carries its own root-cause evidence.
     */
   private[graft] def codeCacheSummary(): String = {
     import scala.jdk.CollectionConverters._
@@ -190,77 +203,32 @@ object Bench {
       graft.streaming.Envelope.decode(graft.streaming.Envelope.encode(trades))
         .write.format("noop").mode("overwrite").save()
     }
-    // Best-of-2 per query: single-shot timings on this shared VM swing
-    // ~2-4× with JIT first-touch, GC, and host contention (r03 showed
-    // unchanged trivial plans "regressing" 0.5 s → 8 s). Take 1 doubles
-    // as the JIT/codegen warm-up for take 2; the min is the number with
-    // signal. Both takes land in BENCH_DETAIL.json for the record.
-    // Every timed take records driver GC and stage metrics (r6 judged
+    // Two takes per entry: single-shot timings on this shared VM swing
+    // ~2-4x with JIT first-touch, GC and host contention (r03 showed
+    // unchanged trivial plans "regressing" 0.5 s -> 8 s). Take 1 doubles
+    // as the JIT/codegen warm-up for take 2, and [[publish]] picks the
+    // numbers with signal. Both takes land in BENCH_DETAIL.json for the
+    // record. Every take records driver GC and stage metrics (r6 judged
     // wall-only numbers unusable: identical builds measured 70-128 s total).
     val timer = new GraftSession.Timer(spark)
-    import GraftSession.Take
-    def timeOnce(q: GraftQuery): Take = {
-      val t = timer.take(q.fn(spark, sfDir))
-      t.error.foreach(e => System.err.println(s"[bench] ${q.name}: ${e.getMessage}"))
-      t
-    }
     val takes = SparkEntry.registry.map { q =>
-      val a = timeOnce(q); val b = timeOnce(q)
-      // a failed take must not win the min: a fast crash would otherwise
-      // report a broken query as its best time. A query failing BOTH takes
-      // reports the max (so breakage reads as a regression, not a win) and
-      // lands in the errors list.
-      val best = (a.ok, b.ok) match {
-        case (true, true) => math.min(a.wall, b.wall)
-        case (true, false) => a.wall
-        case (false, true) => b.wall
-        case (false, false) => math.max(a.wall, b.wall)
+      q.name -> Seq.fill(2) {
+        val t = timer.take(q.fn(spark, sfDir))
+        t.error.foreach(e => System.err.println(s"[bench] ${q.name}: ${e.getMessage}"))
+        t
       }
-      (q.name, best, a, b)
     }
-    val errors = takes.collect { case (n, _, a, b) if !(a.ok && b.ok) => n }
-    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
+    val published = takes.map { case (n, ts) => n -> publish(ts) }
+    val errors = published.collect { case (n, p) if p.error => n }
+    val results = published.map { case (n, p) => n -> p.wall }
+    val cpuBest = published.map { case (n, p) => n -> p.cpu }
     // Host noise floor: a min-of-takes below this is dominated by scheduler
-    // jitter, not plan cost. Shared by the headline stabilizer here and the
-    // requalifier's mover filter below.
+    // jitter, not plan cost; the weather index ignores such entries.
     val floorS = 0.5
-    // Sub-floor headline stabilization (r12 verdict #7): headline entries
-    // whose best-of-2 lands under the noise floor (q60/m04/tr00 class)
-    // showed ±25% round-over-round "deltas" that were pure noise — when
-    // the measured quantity is smaller than the jitter, min-of-2 still has
-    // high variance. Those entries get 3 extra takes and publish the
-    // min-of-5; bounded cost (sub-second queries, headline subset only).
-    // The extra takes are recorded (the "stabilizer" detail field below) so
-    // a published sub-floor min below both regular takes stays auditable
-    // from BENCH_DETAIL.json alone (r13 advice).
-    val stabilizerTakes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Take]]
-    // Streaming-entry wall stabilization (r16 verdict #7): st-family walls
-    // are trigger-cadence-dominated — under host load they swing 5-7x on
-    // FLAT cpu (r16: st03 published 16.98 s wall on 1.45 s cpu) and the
-    // headline total absorbs pure scheduler noise. When an st entry's best
-    // wall reads > 3x its best cpu (work the plan actually did), take up
-    // to 2 extra real takes and publish the min — more samples of the same
-    // measured quantity on the same best-of-warm basis, never a synthetic
-    // number; recorded in "stabilizer" so the published min stays
-    // auditable from BENCH_DETAIL.json alone.
-    val results = takes.map { case (n, best, a, b) =>
-      val bestCpu = Seq(a, b).filter(_.ok).map(_.cpu) match {
-        case Nil => 0.0
-        case cs => cs.min
-      }
-      val headlineSubFloor = Headline.contains(n) && (a.ok || b.ok) && best < floorS
-      val stTriggerNoise = n.startsWith("st") && (a.ok || b.ok) &&
-        best >= floorS && bestCpu > 0 && best > 3 * bestCpu
-      if (headlineSubFloor || stTriggerNoise) {
-        val extraAll = (1 to (if (headlineSubFloor) 3 else 2)).map(_ => timeOnce(byName(n)))
-        stabilizerTakes(n) = extraAll
-        val extra = extraAll.filter(_.ok).map(_.wall)
-        n -> (if (extra.isEmpty) best else math.min(best, extra.min))
-      } else n -> best
-    }
     // Previous round's per-query walls + cpu + requalified set (same sf
-    // only): the baseline for the weather index, the requalifier's mover
-    // filter, and the tool-emitted cpu comparison (r16 advisory #4).
+    // only): the baseline for the weather index and the tool-emitted cpu
+    // comparison (r16 advisory #4). The requalified set is read from
+    // stamped baselines of rounds that re-measured movers (r17).
     // Resolved via [[selectBaseline]] (r17 advisory #1) and identity-
     // stamped into both emitted artifacts.
     final case class PrevDetail(walls: Map[String, Double],
@@ -268,8 +236,7 @@ object Bench {
         file: String, round: Option[Int], weather: Option[Double], timing: String)
     val baselineFile: Option[String] = selectBaseline(
       Option(new java.io.File(".").listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isFile).map(_.getName),
-      sys.env.get("SPARK_GRAFT_BENCH_BASELINE"))
+        .filter(_.isFile).map(_.getName))
     val prevDetail: Option[PrevDetail] = try {
       val prevFile = Paths.get(baselineFile.getOrElse("BENCH_DETAIL.json"))
       if (baselineFile.isEmpty || !Files.exists(prevFile)) None else {
@@ -312,113 +279,16 @@ object Bench {
       System.err.println(s"[bench-weather] prev detail unreadable: ${e.getMessage}")
       None
     }
-    val prevWalls: Option[Map[String, Double]] = prevDetail.map(_.walls)
-    // Weather stamp (r15 advisory #2): computed BEFORE requalification so
-    // a storm-degraded window skips the fresh-JVM passes entirely — they
-    // inherit the same storm and would publish contended numbers as clean.
-    // Entries requalified LAST round are excluded (r16 ADVICE #3): their
-    // prev walls are fresh-JVM takes, a different timing basis.
+    // Weather stamp (r15 advisory #2). Entries the baseline requalified are
+    // excluded (r16 ADVICE #3): their prev walls are fresh-JVM takes, a
+    // different timing basis.
     val weather = prevDetail.flatMap(pd =>
       weatherIndex(pd.walls, results, floorS, exclude = pd.requalified))
     val weatherDegraded = weather.exists(_ > WeatherDegradedThreshold)
     if (weatherDegraded) System.err.println(
       f"[bench-weather] DEGRADED window: median wall ratio ${weather.get}%.3f > " +
-        f"$WeatherDegradedThreshold — requalification skipped, cpu_s is the basis of record")
-    // Fresh-JVM requalifier (r9 verdict #3, mechanizing the round-9 memory
-    // rule "only fresh-JVM warm takes settle a regression"): any query
-    // whose in-bench best-of-2 moved >2× in either direction vs the
-    // PREVIOUS round's BENCH_DETAIL.json (still on disk — this round's
-    // copy is written below) gets an automatic `graft.QueryTime` pass in a
-    // brand-new JVM, replaying this JVM's exact flags and classpath. The
-    // in-session standalone arbiter below is NOT sufficient: r9 proved it
-    // inherits the bench session's weather (the g02 gap inverted direction
-    // with no plan change). Recorded as "requalified": {name: {"prev": s,
-    // "best2": s, "fresh": [[wall,exec,cpu] per take], "published": s}}.
-    //
-    // Published basis (r14 advisory #2): the requalifier's fresh takes used
-    // to be record-only, so an entry whose in-bench takes were inflated by
-    // session weather PUBLISHED the inflated number while the fresh-JVM
-    // warm takes showing the true norm sat in a side field — r14's total
-    // mixed bases (a06 published 6.87 s against fresh warm takes of 2.47).
-    // Now the WARM fresh takes (take 1 pays JVM + Spark-session startup and
-    // is excluded; takes 2+ are warm) fold back into the published wall and
-    // cpu via min, so `queries`/`cpu_s`/total stay on one warm basis and
-    // the full fresh record stays auditable in "requalified".
-    val (requalified: String, requalPub: Map[String, (Double, Double)]) = {
-      import scala.jdk.CollectionConverters._
-      // r15 advisory #2: a flat cap of 8 under a 56-mover storm silently
-      // left 48 entries on contended numbers. Storms now skip requalify
-      // wholesale (the weather stamp above); in a CALM window movers are
-      // genuine plan/code changes and historically few (r14: 8), so the
-      // cap covers twice that before the stderr overflow note fires.
-      val cap = 16
-      // Also returns the child's one-line code-cache summary (r17 advisory
-      // #2): the requalified record proves whether the reserved size
-      // reached the fresh JVM and whether its sweeper ever hit full_count.
-      def freshTakes(name: String): (Seq[(Double, Double, Double)], String) = {
-        val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-        val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.asScala.toSeq
-        val cmd = Seq(javaBin) ++ jvmArgs ++
-          Seq("-cp", sys.props("java.class.path"), "graft.QueryTime", name, "3")
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-        // Spark's startup INFO logs go to stderr; an undrained pipe fills
-        // and deadlocks the child, so discard it (QueryTime's payload is
-        // stdout-only).
-        pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        val done = p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
-        if (!done) { p.destroyForcibly(); System.err.println(s"[bench-requalify] $name: timed out") }
-        val cc = """\[querytime\] codecache: (.*)""".r
-          .findFirstMatchIn(out).map(_.group(1).trim).getOrElse("unreported")
-        (GraftSession.parseTakes(out), cc)
-      }
-      try {
-        if (prevWalls.isEmpty || weatherDegraded)
-          ("{}", Map.empty[String, (Double, Double)])
-        else {
-          val prevQ: Map[String, Double] = prevWalls.get
-          locally {
-            val movers = results.flatMap { case (n, now) =>
-              prevQ.get(n).collect {
-                case prev if math.max(prev, now) >= floorS && prev > 0 && now > 0 &&
-                  math.max(now / prev, prev / now) > 2.0 =>
-                  (n, prev, now, math.abs(math.log(now / prev)))
-              }
-            }.sortBy(-_._4)
-            if (movers.size > cap) System.err.println(
-              s"[bench-requalify] cap $cap: dropped ${movers.drop(cap).map(_._1).mkString(",")}")
-            val recs = movers.take(cap).map { case (n, prev, now, _) =>
-              System.err.println(f"[bench-requalify] $n: ${prev}%.2f -> ${now}%.2f s, fresh-JVM takes...")
-              val (fresh, childCc) = freshTakes(n)
-              val warm = if (fresh.size > 1) fresh.drop(1) else fresh
-              val pubWall = (now +: warm.map(_._1)).min
-              val pubCpu = warm.map(_._3) match {
-                case Nil => Double.MaxValue
-                case cs => cs.min
-              }
-              val freshJson = fresh
-                .map { case (w, e, c) => s"[${r3(w)},${r3(e)},${r3(c)}]" }
-                .mkString("[", ",", "]")
-              val rec = "\"" + n + "\":{\"prev\":" + r3(prev) + ",\"best2\":" + r3(now) +
-                ",\"fresh\":" + freshJson + ",\"published\":" + r3(pubWall) +
-                ",\"codecache\":\"" + childCc.replace("\"", "'") + "\"}"
-              (rec, n -> (pubWall, pubCpu))
-            }
-            (recs.map(_._1).mkString("{", ",", "}"), recs.map(_._2).toMap)
-          }
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-requalify] skipped: ${e.getMessage}")
-        ("{}", Map.empty[String, (Double, Double)])
-      }
-    }
-    val resultsPub = results.map { case (n, v) =>
-      n -> requalPub.get(n).map { case (w, _) => math.min(v, w) }.getOrElse(v) }
-    val total = resultsPub.map(_._2).sum
+        f"$WeatherDegradedThreshold — cpu_s is the basis of record")
+    val total = results.map(_._2).sum
     def json(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     // Per-query take records. Schema (documented here, the only authority):
@@ -428,49 +298,12 @@ object Bench {
     // the take; exec = sum of executorRunTime over the take's stages (s);
     // cpu = sum of executorCpuTime (s). cpu is the regression metric.
     val detailTakes = takes
-      .map { case (n, _, a, b) =>
-        "\"" + n + "\":{\"wall\":[" + r3(a.wall) + "," + r3(b.wall) +
-          "],\"gc\":[" + r3(a.gc) + "," + r3(b.gc) +
-          "],\"exec\":[" + r3(a.exec) + "," + r3(b.exec) +
-          "],\"cpu\":[" + r3(a.cpu) + "," + r3(b.cpu) + "]}" }
-      .mkString("{", ",", "}")
-    // Stabilizer extra-take records (headline sub-floor entries only):
-    //   "stabilizer": {name: {"wall":[t3,t4,t5], "ok":[b,b,b]}}
-    // the published headline min is min(best_of_2, min of ok stabilizer
-    // walls) — reproducible from this field plus "takes".
-    val stabilizerJson = stabilizerTakes
       .map { case (n, ts) =>
-        "\"" + n + "\":{\"wall\":[" + ts.map(t => r3(t.wall)).mkString(",") +
-          "],\"ok\":[" + ts.map(_.ok).mkString(",") + "]}" }
+        def arr(f: GraftSession.Take => Double) = ts.map(t => r3(f(t))).mkString("[", ",", "]")
+        "\"" + n + "\":{\"wall\":" + arr(_.wall) + ",\"gc\":" + arr(_.gc) +
+          ",\"exec\":" + arr(_.exec) + ",\"cpu\":" + arr(_.cpu) + "}" }
       .mkString("{", ",", "}")
-    // min-cpu per query: the steady-state plan cost, robust to the
-    // 70-128 s wall variance this host shows across identical builds.
-    // Requalified entries fold in their warm fresh-JVM cpu (same basis
-    // rule as resultsPub above).
-    val cpuBest = takes.map { case (n, _, a, b) =>
-      n -> math.min(
-        math.min(if (a.ok) a.cpu else Double.MaxValue,
-                 if (b.ok) b.cpu else Double.MaxValue),
-        requalPub.get(n).map(_._2).getOrElse(Double.MaxValue)) }
-      .map { case (n, v) => n -> (if (v == Double.MaxValue) 0.0 else v) }
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Standalone arbiter pass: this host's in-window best-of-2 still swings
-    // ~30% with correlated weather (r4 tr02, r5 m01/m02 were both "repro-
-    // ducible" regressions that vanished standalone), so the 10 most
-    // expensive queries get a third, fully-warm take with stage-metric
-    // attribution. wall >> executor/cores ⇒ scheduler/host latency;
-    // executor >> cpu ⇒ JIT/interpreter first-touch; recorded here so
-    // regress-vs-noise triage reads one artifact instead of a judge round.
-    // r6 lesson (g01): the arbiter inherits a JVM that just ran 125×2
-    // queries — System.gc() before each arbiter take so accumulated garbage
-    // is not billed to the arbitrated query.
-    val standalone = resultsPub.sortBy(-_._2).take(10).map { case (n, _) =>
-      System.gc()
-      val t = timer.take(byName(n).fn(spark, sfDir))
-      t.error.foreach(e => System.err.println(s"[bench-standalone] $n: ${e.getMessage}"))
-      "\"" + n + "\":[" + r3(t.wall) + "," + r3(t.exec) + "," + r3(t.cpu) + "]"
-    }.mkString("{", ",", "}")
-    val nRequalified = requalified.count(_ == '{') - 1
     // Resolved env-driven knobs: published timings are not reproducible
     // unless the effective values ride along with them (ADVICE r6).
     def conf(k: String): String = spark.conf.getOption(k).getOrElse("unset")
@@ -491,7 +324,7 @@ object Bench {
     // Weather stamp, in BOTH artifacts (r15 advisory #2): index = median
     // wall ratio vs prev detail over common above-floor entries (null =
     // no comparable prior); degraded => cpu_s is the round-over-round
-    // basis of record and requalification was skipped for this window.
+    // basis of record for this window.
     val nCommon = prevDetail.map(pd => results.count { case (n, w) =>
       !pd.requalified(n) &&
         pd.walls.get(n).exists(pv => pv > 0 && w > 0 && math.max(pv, w) >= floorS)
@@ -499,9 +332,9 @@ object Bench {
     // Tool-emitted round-over-round cpu basis (r16 advisory #4): the
     // README's cpu claim must be derivable from the committed artifacts
     // alone, so the comparison is computed HERE, over the common set of
-    // entries with positive cpu in both rounds that were requalified in
-    // NEITHER round (the judge's never-requalified basis), and lands in
-    // both BENCH_DETAIL.json and the driver's final line.
+    // entries with positive cpu in both rounds that the baseline did not
+    // requalify (the judge's never-requalified basis), and lands in both
+    // BENCH_DETAIL.json and the driver's final line.
     // Baseline identity stamp (r17 advisory #1): the comparison's meaning
     // travels WITH the number — file, parsed round, the baseline run's own
     // weather index and timing tag — so an auditor reading BENCH_r{N}.json
@@ -516,9 +349,8 @@ object Bench {
           """"prev_round":null,"prev_weather":null,"prev_timing":"incomparable_or_missing"}"""
     }
     val cpuComparison = prevDetail.map { pd =>
-      val excl = pd.requalified ++ requalPub.keySet
       val common = cpuBest.collect {
-        case (n, c) if c > 0 && !excl(n) && pd.cpu.get(n).exists(_ > 0) => (pd.cpu(n), c)
+        case (n, c) if c > 0 && !pd.requalified(n) && pd.cpu.get(n).exists(_ > 0) => (pd.cpu(n), c)
       }
       if (common.isEmpty) s"""{"common_set_size":0,$baselineJson}"""
       else {
@@ -531,12 +363,11 @@ object Bench {
     val weatherJson =
       s"""{"index":${weather.map(r3).getOrElse("null")},"n_common":$nCommon,""" +
         s""""threshold":$WeatherDegradedThreshold,"degraded":$weatherDegraded,""" +
-        s""""basis":"${if (weatherDegraded) "cpu_s" else "wall"}",""" +
-        s""""requalify":"${if (weatherDegraded) "skipped_storm" else "normal"}",$baselineJson}"""
+        s""""basis":"${if (weatherDegraded) "cpu_s" else "wall"}",$baselineJson}"""
     Files.writeString(Paths.get("BENCH_DETAIL.json"),
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","timing":"best_of_warm","n_queries":${results.size},"errors":$errJson,"weather":$weatherJson,"cpu_comparison":$cpuComparison,"queries":${json(resultsPub)},"cpu_s":${json(cpuBest)},"takes":$detailTakes,"stabilizer":$stabilizerJson,"standalone":$standalone,"requalified":$requalified,"env":$envJson,"sf":"$sfDir"}""")
-    val head = resultsPub.filter { case (k, _) => Headline.contains(k) }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"requalified":$nRequalified,"weather":${weather.map(r3).getOrElse("null")},"degraded":$weatherDegraded,"cpu_comparison":$cpuComparison,"queries":${json(head)},"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","timing":"best_of_warm","n_queries":${results.size},"errors":$errJson,"weather":$weatherJson,"cpu_comparison":$cpuComparison,"queries":${json(results)},"cpu_s":${json(cpuBest)},"takes":$detailTakes,"env":$envJson,"sf":"$sfDir"}""")
+    val head = results.filter { case (k, _) => Headline.contains(k) }
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"weather":${weather.map(r3).getOrElse("null")},"degraded":$weatherDegraded,"cpu_comparison":$cpuComparison,"queries":${json(head)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

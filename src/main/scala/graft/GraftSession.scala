@@ -149,24 +149,14 @@ object GraftSession {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).sum
 
-  /** The take line QueryTime prints and Bench's fresh-JVM requalifier reads
-    * back through [[parseTakes]].
-    */
+  /** The line QueryTime prints for each take: wall, executor and cpu seconds. */
   def takeLine(name: String, i: Int, t: Take): String =
     f"[querytime] $name take $i: ${t.wall}%.2f s wall, ${t.exec}%.2f s executor, ${t.cpu}%.2f s cpu"
 
-  /** A per-stage line printed after its take line; [[parseTakes]] skips it. */
+  /** A per-stage line QueryTime prints after its take line. */
   def stageLine(s: StageRecord): String =
     f"[querytime]   stage=${s.id}%4d tasks=${s.tasks}%3d run=${s.runS}%8.2f cpu=${s.cpuS}%8.2f " +
       f"inRec=${s.inputRecords}%10d shRead=${s.shuffleReadRecords}%10d " +
       f"shWrite=${s.shuffleWriteRecords}%10d spillMB=${s.spillBytes >> 20}%6d " +
       f"gcMs=${s.gcMs}%6d :: ${s.name.take(80)}"
-
-  private val TakeLine =
-    """\[querytime\] \S+ take \d+: ([0-9.]+) s wall, ([0-9.]+) s executor, ([0-9.]+) s cpu""".r
-
-  /** (wall, exec, cpu) of every take line in `out`, in order. */
-  def parseTakes(out: String): Seq[(Double, Double, Double)] =
-    TakeLine.findAllMatchIn(out)
-      .map(m => (m.group(1).toDouble, m.group(2).toDouble, m.group(3).toDouble)).toSeq
 }

@@ -28,8 +28,7 @@ object QueryTime {
       println(GraftSession.takeLine(name, i, t))
       t.stages.foreach(s => println(GraftSession.stageLine(s)))
     }
-    // Code-cache forensics line (r17 advisory #2): captured by the bench
-    // requalifier into the published record, so a fresh-JVM cpu storm
+    // Code-cache forensics line (r17 advisory #2): a slow re-measure
     // carries evidence of whether the reserved size reached this JVM and
     // whether the sweeper ever stopped compilation (full_count > 0 — the
     // no-table-query-at-80s interpreted-execution signature).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Materialize}
-import graft.GraftQuery.{rowsOnly, sql, sqlEager}
+import graft.GraftQuery.{sql, sqlEager}
 import graft.Materialize.cacheParts
 import graft.functions.{HashFunctions, TextFunctions}
 import graft.functions.VectorFunctions._

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.GraftQuery
-import graft.GraftQuery.{rowsOnly, sql}
+import graft.GraftQuery.sql
 import graft.sources.Tables
 import graft.operators.Det._
 import org.apache.spark.sql.expressions.Window

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Materialize}
-import graft.GraftQuery.{rowsOnly, sql, sqlEager}
+import graft.GraftQuery.{sql, sqlEager}
 import graft.multimodal.Multimodal
 import graft.sources.Tables
 import graft.operators.Det._

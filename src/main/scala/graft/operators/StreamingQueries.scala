@@ -214,7 +214,6 @@ object StreamingQueries {
         |FROM events
         |GROUP BY user_id
         |ORDER BY user_id""") { (s, dir) =>
-      import s.implicits._
       EventStreams.withRocksDBStateStore(s) {
         val events = typedEventStream(s, dir)
         val out = runToMemory(s,

@@ -2415,11 +2415,6 @@ object TextQueries {
         sum("nt").cast("long").as("total_tokens"),
         expr("(sum(nt) + 511) div 512").cast("long").as("n_windows"),
         sum("crosses").cast("long").as("n_boundary_docs"))
-      .groupBy("source")
-      .agg(sum("n_docs").cast("long").as("n_docs"),
-        sum("total_tokens").cast("long").as("total_tokens"),
-        sum("n_windows").cast("long").as("n_windows"),
-        sum("n_boundary_docs").cast("long").as("n_boundary_docs"))
       .select(col("source"), col("n_docs"), col("total_tokens"), col("n_windows"),
         col("n_boundary_docs"),
         expr("(n_boundary_docs * 1000000) div n_docs").as("boundary_ppm"),

@@ -80,7 +80,7 @@ object TradeQueries {
         |       floor(max(price) * 100 + 0.5) / 100 AS max_price,
         |       CAST(sum(quantity) AS BIGINT) AS sum_qty,
         |       floor((sum(CASE WHEN tradeType = 'SELL' THEN 1 ELSE 0 END) * 1.0 / count(*)) * 10000 + 0.5) / 10000 AS sell_share
-        |FROM trades GROUP BY tickerSymbol ORDER BY tickerSymbol""") { (s, dir) =>
+        |FROM trades GROUP BY tickerSymbol ORDER BY tickerSymbol""") { (s, _) =>
       TradeSource.trades(s, N).toDF()
         .groupBy("tickerSymbol")
         .agg(count(lit(1)).as("n_trades"),
@@ -97,7 +97,7 @@ object TradeQueries {
       "JSON wire round-trip (C1+C2): to_json → from_json loses nothing. Oracle since r9: the expected output is the regenerated trade set's per-type counts with a zero null column — any row the PERMISSIVE decode dropped, duplicated, or nulled would break the compare, so the identity claim is oracle-checked rather than spec-only. Perf note (r04 4.7s-both-takes investigated): warm intrinsic cost is 0.44s wall / 1.7s executor / 1.1s CPU over 4 stages (QueryTime stage attribution) — ~11µs/row through the double Jackson pass; to_json/from_json are CodegenFallback so the kernel is interpreted, and under shared-host CPU steal a 32-way interpreted stage serializes, which is what r04's bench window hit (a later window showed the inverse: tr00 9.6s while tr02 1.7s). Not a plan defect",
       s"""${tradesSql(N)}
         |SELECT tradeType, CAST(count(*) AS BIGINT) AS n, CAST(0 AS BIGINT) AS n_nulls
-        |FROM trades GROUP BY tradeType ORDER BY tradeType""") { (s, dir) =>
+        |FROM trades GROUP BY tradeType ORDER BY tradeType""") { (s, _) =>
       val trades = TradeSource.trades(s, N).toDF()
       // Producer leg rides the codegen'd encodeFast template (CodecSpec
       // proves it byte-identical to to_json over the full generated
@@ -126,7 +126,7 @@ object TradeQueries {
         |-- same 2-decimal rendering
         |SELECT id, printf('ID %d: %s %d shares of %s for $$%.2f',
         |                  id, tradeType, quantity, tickerSymbol, price) AS display
-        |FROM trades ORDER BY id LIMIT 20""") { (s, dir) =>
+        |FROM trades ORDER BY id LIMIT 20""") { (s, _) =>
       TradeSource.trades(s, 1000).toDF()
         .select(col("id"),
           format_string("ID %d: %s %d shares of %s for $%.02f",

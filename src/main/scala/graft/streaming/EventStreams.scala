@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}

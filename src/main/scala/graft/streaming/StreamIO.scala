@@ -2,9 +2,7 @@ package graft.streaming
 
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Stream transport abstraction (SURVEY.md §7 M2).
   *

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * window stays under the degraded threshold, a storm-grade window (the
   * r15 shape — the MIDDLE of the wall distribution inflated, not a few
   * movers) breaches it, and a few genuine plan regressions cannot breach
-  * it on their own — that is the property separating "requalify the
-  * movers" from "stamp the battery and fall back to cpu_s".
+  * it on their own — that is the property separating "a few entries
+  * moved" from "stamp the battery and fall back to cpu_s". Also the one
+  * take rule every entry is published under, and the baseline selection.
   */
 class BenchWeatherSpec extends AnyFunSuite {
   private val floorS = 0.5
@@ -86,6 +87,30 @@ class BenchWeatherSpec extends AnyFunSuite {
     assert(Bench.weatherIndex(enough.toMap, enough, floorS).isDefined)
   }
 
+  // --- the one take rule ---
+
+  private def take(wall: Double, cpu: Double, ok: Boolean = true) =
+    GraftSession.Take(wall, 0.0, cpu, cpu, Seq.empty,
+      if (ok) None else Some(new RuntimeException("take failed")))
+
+  test("take rule: a failed take never wins wall or cpu") {
+    // the crash is faster and cheaper than the good take on both metrics
+    for (ts <- Seq(Seq(take(0.1, 0.01, ok = false), take(2.0, 1.5)),
+                   Seq(take(2.0, 1.5), take(0.1, 0.01, ok = false))))
+      assert(Bench.publish(ts) == Bench.Published(2.0, 1.5, error = true), ts)
+  }
+
+  test("take rule: both takes failed publish the max wall, 0.0 cpu, and an error") {
+    val p = Bench.publish(Seq(take(0.3, 0.2, ok = false), take(0.7, 0.1, ok = false)))
+    assert(p == Bench.Published(0.7, 0.0, error = true))
+  }
+
+  test("take rule: two good takes publish each metric's own minimum") {
+    // the faster take burned more cpu: wall and cpu come from different takes
+    val p = Bench.publish(Seq(take(1.0, 3.0), take(2.0, 2.5)))
+    assert(p == Bench.Published(1.0, 2.5, error = false))
+  }
+
   // --- baseline-selection rule (r17 advisory #1 / r18 ask #1) ---
 
   test("baseline: the highest-round stamped snapshot wins over the mutable detail") {
@@ -94,22 +119,16 @@ class BenchWeatherSpec extends AnyFunSuite {
     // BENCH_DETAIL.json (the builder's same-round calm take in the driver
     // window — the r17 aliasing) must NOT be picked while any stamped
     // round snapshot exists; among snapshots the newest round wins
-    assert(Bench.selectBaseline(files, None).contains("BENCH_DETAIL_r17.json"))
+    assert(Bench.selectBaseline(files).contains("BENCH_DETAIL_r17.json"))
     // non-baseline bench artifacts (BENCH_r17, canonical copies) never match
     assert(Bench.selectBaseline(
-      Seq("BENCH_r17.json", "BENCH_CANONICAL_r17.json"), None).isEmpty)
-  }
-
-  test("baseline: explicit env override beats the stamped rule (builder take-chaining)") {
-    val files = Seq("BENCH_DETAIL.json", "BENCH_DETAIL_r17.json")
-    assert(Bench.selectBaseline(files, Some("BENCH_DETAIL.json"))
-      .contains("BENCH_DETAIL.json"))
+      Seq("BENCH_r17.json", "BENCH_CANONICAL_r17.json")).isEmpty)
   }
 
   test("baseline: with no stamped snapshot the legacy mutable detail is the fallback") {
-    assert(Bench.selectBaseline(Seq("BENCH_DETAIL.json", "README.md"), None)
+    assert(Bench.selectBaseline(Seq("BENCH_DETAIL.json", "README.md"))
       .contains("BENCH_DETAIL.json"))
-    assert(Bench.selectBaseline(Seq("README.md"), None).isEmpty)
+    assert(Bench.selectBaseline(Seq("README.md")).isEmpty)
   }
 
   test("code-cache summary reports reserved size, CodeHeap pools, and full_count") {
