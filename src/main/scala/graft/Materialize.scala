@@ -4,19 +4,20 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
-/** The materialization scope of a registry entry: the only way an operator
-  * persists, fills, compacts or checkpoints an intermediate (outside the
-  * pair-RDD loops of g01 and d08 and MlLsh's validation barrier, which
-  * CompactPersistSpec allowlists). The entry's body is written once against
-  * this trait and runs in two forms:
+/** The materialization scope of a registry entry: the only code that
+  * persists, fills, compacts, checkpoints or releases an intermediate,
+  * whether a DataFrame or a pair-RDD loop's RDD (g01, d08);
+  * CompactPersistSpec fails on any such call elsewhere in `src/main`. The
+  * entry's body is written once against this trait and runs in two forms:
   *
   *   - [[Materialize.eager]] — what the registry `fn` runs. Each method
   *     persists, counts or checkpoints as named and records the cache or
-  *     checkpoint blocks it builds; [[result]] fills the result and then
-  *     releases every recorded cache and checkpoint, so no intermediate
-  *     outlives the call and only the result's own cache remains (the
-  *     runner's `clearCache()` frees that one).
+  *     RDD blocks it builds; [[result]] fills the result and then releases
+  *     every recorded cache and RDD, so no intermediate outlives the call
+  *     and only the result's own cache remains (the runner's `clearCache()`
+  *     frees that one).
   *   - [[Materialize.Lazy]] — the plan twin PlanAudit audits and PlanDump
   *     dumps. Every method hands its frame back unchanged and runs no job,
   *     so the twin's plan is the real dataflow instead of
@@ -71,8 +72,15 @@ sealed trait Materialize {
   /** Releases one recorded cache before the result is built. */
   def release(df: DataFrame): Unit
 
-  /** Persists and fills the result, then releases every recorded cache and
-    * then every recorded checkpoint, each in the order they were recorded.
+  /** Persists `rdd` at `MEMORY_AND_DISK` without filling it. */
+  def persist[T](rdd: RDD[T]): RDD[T]
+
+  /** Releases one RDD recorded by [[persist]] before the result is built. */
+  def release(rdd: RDD[_]): Unit
+
+  /** Persists and fills the result (a frame this scope already persisted
+    * is taken as is), then releases every recorded cache and then every
+    * recorded checkpoint and RDD, each in the order they were recorded.
     */
   def result(df: DataFrame): DataFrame
 }
@@ -98,7 +106,8 @@ object Materialize {
 
   private final class Eager extends Materialize {
     private val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private val checkpoints = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    // checkpoint and persisted RDDs, released alike
+    private val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
     private def coalesced(df: DataFrame, parts: Int) = if (parts > 0) df.coalesce(parts) else df
 
@@ -113,7 +122,7 @@ object Materialize {
     // the checkpoint's blocks live in the RDD behind its LogicalRDD leaf
     def checkpoint(df: DataFrame, parts: Int): DataFrame = {
       val c = coalesced(df, parts).localCheckpoint(true)
-      checkpoints ++= c.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      rdds ++= c.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
       c
     }
 
@@ -139,11 +148,14 @@ object Materialize {
       df.unpersist(blocking = false)
     }
 
+    def persist[T](rdd: RDD[T]): RDD[T] = { rdds += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
+    def release(rdd: RDD[_]): Unit = { rdds -= rdd; rdd.unpersist(blocking = false) }
+
     def result(df: DataFrame): DataFrame = {
-      val out = df.persist()
-      out.count()
+      val out = if (caches.contains(df)) df else fill(df)
+      caches -= out
       caches.foreach(_.unpersist(blocking = false))
-      checkpoints.foreach(_.unpersist(blocking = false))
+      rdds.foreach(_.unpersist(blocking = false))
       out
     }
   }
@@ -156,6 +168,8 @@ object Materialize {
     def compact(wide: DataFrame, key: Option[String], rowsUpper: => Long): (DataFrame, Int) =
       (wide, 1)
     def release(df: DataFrame): Unit = ()
+    def persist[T](rdd: RDD[T]): RDD[T] = rdd
+    def release(rdd: RDD[_]): Unit = ()
     def result(df: DataFrame): DataFrame = df
   }
 }

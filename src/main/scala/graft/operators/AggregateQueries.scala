@@ -42,12 +42,12 @@ object AggregateQueries {
 
     rowsOnly(
       "a02_approx_distinct",
-      "HLL++ sketch (approx_count_distinct); no oracle: sketch estimates are engine-specific — AggregatorSpec asserts <5% relative error vs exact")(
+      "HLL++ sketch (approx_count_distinct at rsd 0.02); no oracle: sketch estimates are engine-specific — AggregatorSpec asserts <5% relative error per group vs exact at sf0.001 and sf0.01")(
       (s, dir) => {
         Tables.lineitem(s, dir)
           .groupBy("l_returnflag")
-          .agg(approx_count_distinct(col("l_partkey")).as("approx_parts"),
-            approx_count_distinct(col("l_orderkey")).as("approx_orders"))
+          .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
+            approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"))
           .orderBy("l_returnflag")
       }),
 
@@ -320,7 +320,7 @@ object AggregateQueries {
 
     rowsOnly(
       "a04_approx_percentile",
-      "quantile sketch (approx_percentile); no oracle: sketch estimates are engine-specific — AggregatorSpec asserts <2% error vs exact percentile")(
+      "quantile sketch (approx_percentile); no oracle: sketch estimates are engine-specific — AggregatorSpec asserts <2% error vs exact percentile at sf0.001 and sf0.01")(
       (s, dir) => {
         Tables.orders(s, dir)
           .agg(approx_percentile(col("o_totalprice"), lit(0.5), lit(1000)).as("approx_median"),

@@ -237,20 +237,21 @@ object DedupQueries {
     * sf0.1 — physical planning, per-round codegen, and AQE barriers for
     * single-task stages — ~5× its executor time; the RDD loop pays only
     * job launch (~50 ms/round) and runs the same shuffle pattern a 1000-
-    * executor cluster would want. Each round persists its labels RDD and
-    * unpersists the superseded one, so at most two label generations hold
-    * storage at any time; the final RDD is dropped after the result
-    * DataFrame is materialized through a Dataset-level persist (which
-    * `spark.catalog.clearCache()` DOES cover, unlike RDD storage).
+    * executor cluster would want. Every loop RDD persists through the
+    * caller's scope `m`, and each round releases the superseded labels, so
+    * at most two label generations hold storage at any time. The clusters
+    * frame comes back filled through `m`; the loop's last blocks are
+    * released once it is, and the caller's `m.result` releases the frame
+    * (or hands it over, when it is the result).
     */
-  def dupClusters(s: SparkSession, dir: String, threshold: Double = 0.3,
-      maxIters: Int = 20): DataFrame = {
+  def dupClusters(s: SparkSession, dir: String, m: Materialize): DataFrame = {
+    val maxIters = 20
     val e = Tables.embeddings(s, dir)
     val a = e.select(col("label"), col("vec_id").as("id_a"), col("embedding").as("e_a"))
     val b = e.select(col("label"), col("vec_id").as("id_b"), col("embedding").as("e_b"))
     val pairs = a.join(b, "label")
       .filter(col("id_a") < col("id_b"))
-      .filter(cosineSim(col("e_a"), col("e_b")) > threshold)
+      .filter(cosineSim(col("e_a"), col("e_b")) > 0.3)
       .select("id_a", "id_b")
     // Emit both directions from ONE projection over the join output: a
     // `pairs union pairs.swapped` plan references the cosine join from two
@@ -263,7 +264,6 @@ object DedupQueries {
       .select(col("e.u").as("u"), col("e.v").as("v"))
     import s.implicits._
     import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
     // |V| sizes the loop's partitioner (~1M labels per partition at scale;
     // 1 partition at fixture scale, where more is pure task overhead).
     val nV = e.count()
@@ -274,17 +274,16 @@ object DedupQueries {
     // partitioned ONCE; every subsequent round joins against it narrowly
     // (the edge list never moves again — at 100 TB this is the difference
     // between shuffling the edges ~16 times and shuffling them once).
-    val edgeRdd = edges.select(col("v"), col("u")).as[(Long, Long)].rdd
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    val edgeRdd = m.persist(edges.select(col("v"), col("u")).as[(Long, Long)].rdd
+      .partitionBy(part))
     edgeRdd.count()
     // Seed: lbl(u) = min(u, min over neighbors) — the first neighbor hop
     // fused with initialization (a pointer jump on fresh labels is the
     // identity, so round 0 needs no jump). reduceByKey(part, min) leaves
     // the labels co-partitioned with the edges for every later join.
-    var labels = e.select(col("vec_id"), col("vec_id")).as[(Long, Long)].rdd
+    var labels = m.persist(e.select(col("vec_id"), col("vec_id")).as[(Long, Long)].rdd
       .union(edgeRdd)
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      .persist()
+      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
     var prevSum = labels.values.fold(0L)(_ + _)
     var converged = false
     var i = 0
@@ -295,34 +294,28 @@ object DedupQueries {
       // combined and restores the loop partitioning. No identity branch:
       // the jump emits every node (its key lbl(n) is itself a node) and
       // labels only decrease, so identity rows can never win the min.
-      val next = edgeRdd.join(labels, part)
+      val next = m.persist(edgeRdd.join(labels, part)
         .map { case (_, (u, lbl)) => (u, lbl) }
         .union(labels.map { case (n, l) => (l, n) }
           .join(labels, part)
           .map { case (_, (n, ll)) => (n, ll) })
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        .persist()
+        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)))
       // Convergence scalar: one tiny per-round action (cheap now that a
       // round is one RDD job, ~50 ms — the r04 check-every-2-rounds
       // batching existed to amortize ~0.5 s SQL-planning rounds).
       val nextSum = next.values.fold(0L)(_ + _)
-      labels.unpersist()
+      m.release(labels)
       labels = next
       converged = nextSum == prevSum
       prevSum = nextSum
       i += 1
     }
     require(converged, s"label propagation did not converge in $maxIters rounds")
-    // Materialize the result through a Dataset-level persist (CacheManager,
-    // which Verify/Bench's `spark.catalog.clearCache()` DOES cover), then
-    // drop the loop-side blocks — otherwise they leak past this query
-    // until the ContextCleaner eventually GCs them.
-    val out = labels.toDF("doc_id", "cluster_id")
-      .orderBy("doc_id")
-      .persist()
-    out.count()
-    labels.unpersist()
-    edgeRdd.unpersist()
+    // once the clusters frame is filled its rows live in the frame's cache,
+    // so the loop's blocks go now rather than with the caller's result
+    val out = m.fill(labels.toDF("doc_id", "cluster_id").orderBy("doc_id"))
+    m.release(labels)
+    m.release(edgeRdd)
     out
   }
 
@@ -515,7 +508,10 @@ object DedupQueries {
         |  WHERE r.lbl < e.u)
         |SELECT node AS doc_id, min(lbl) AS cluster_id
         |FROM reach GROUP BY node
-        |ORDER BY doc_id""") { (s, dir) => dupClusters(s, dir) },
+        |ORDER BY doc_id""") { (s, dir) =>
+      val m = Materialize.eager()
+      m.result(dupClusters(s, dir, m))
+    },
 
     sql(
       "p06_cluster_representative",
@@ -547,12 +543,13 @@ object DedupQueries {
         |       CAST(total_chars - n_chars AS BIGINT) AS dropped_chars
         |FROM members WHERE rn = 1
         |ORDER BY cluster_id""") { (s, dir) =>
-      val clusters = dupClusters(s, dir)
+      val m = Materialize.eager()
+      val clusters = dupClusters(s, dir, m)
       val members = clusters
         .join(Tables.documents(s, dir)
           .select(col("doc_id"), coalesce(col("n_chars"), lit(0L)).as("n_chars")), "doc_id")
       val byCluster = Window.partitionBy("cluster_id")
-      members
+      m.result(members
         .withColumn("rn", row_number().over(
           byCluster.orderBy(desc("n_chars"), col("doc_id"))))
         .withColumn("n_members", count(lit(1)).over(byCluster).cast("long"))
@@ -561,7 +558,7 @@ object DedupQueries {
         .select(col("cluster_id"), col("doc_id").as("rep_doc_id"), col("n_members"),
           col("n_chars").cast("long").as("kept_chars"),
           (col("total_chars") - col("n_chars")).cast("long").as("dropped_chars"))
-        .orderBy("cluster_id")
+        .orderBy("cluster_id"))
     },
 
     sql(
@@ -1040,16 +1037,17 @@ object DedupQueries {
         |FROM sizes CROSS JOIN tot t
         |GROUP BY sz, t.n
         |ORDER BY cluster_size""") { (s, dir) =>
-      val clusters = dupClusters(s, dir)
+      val m = Materialize.eager()
+      val clusters = dupClusters(s, dir, m)
       val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).cast("long").as("sz"))
       val tot = clusters.agg(count(lit(1)).cast("long").as("n"))
-      sizes.groupBy("sz")
+      m.result(sizes.groupBy("sz")
         .agg(count(lit(1)).cast("long").as("n_clusters"))
         .crossJoin(broadcast(tot))
         .select(col("sz").as("cluster_size"), col("n_clusters"),
           (col("sz") * col("n_clusters")).cast("long").as("n_docs"),
           expr("sz * n_clusters * 1000000 div n").as("doc_share_ppm"))
-        .orderBy("cluster_size")
+        .orderBy("cluster_size"))
     },
 
     sql(

@@ -327,16 +327,9 @@ object GraphQueries {
       // division truncates identically in Scala, Spark SQL and DuckDB for
       // the all-positive values here), so ranks remain bit-identical to the
       // oracle.
-      // r7 reconciliation (fresh-JVM QueryTime, 4 takes): warm wall
-      // 4.0-4.8 s, warm executor 13.5-16.9 s, cpu 12.9-14.7 s. Two r6
-      // numbers were both artifacts: the "5-12 s executor" port-win claim
-      // came from a partially-warm JVM window (too low), and the 24.8 s
-      // final-arbiter reading inherited a JVM that had just run the full
-      // 125-query bench (too high; the arbiter now System.gc()s before
-      // each take). Honest statement: the RDD port's executor CPU is
-      // ≈ the SQL form's (13-17 s vs 16-19 s) — its real win is WALL
-      // (in-bench 7.4 → ~2.8-4.0 s) from building/partitioning the edge
-      // list once and keeping every round's join narrow.
+      // r7 (fresh-JVM QueryTime): the port's executor cpu was ≈ the SQL
+      // form's (13-17 s vs 16-19 s); its win was wall (7.4 → ~2.8-4.0 s),
+      // from partitioning the edge list once and keeping every join narrow.
       // r9 phase attribution (warm takes): of ~6-9 s
       // in-query cpu, the relational edge derivation (orders⋈lineitem →
       // distinct → degree join) is ~2.6-2.8 s, the .rdd pack + partitionBy
@@ -351,7 +344,7 @@ object GraphQueries {
       // corpus-sized derivation, not of the iteration design.
       import s.implicits._
       import org.apache.spark.HashPartitioner
-      import org.apache.spark.storage.StorageLevel
+      val m = Materialize.eager()
       // shared edge derivation (tradeEdges — its scaladoc carries the r7
       // do-not-persist A/B); the RDD-side persist of edgeRdd below (row
       // format, loop-side) is the one that pays off.
@@ -393,19 +386,18 @@ object GraphQueries {
       val DegBits = 21 // degree < 2^21; node ids < 2^42 (guarded below)
       val DegMask = (1L << DegBits) - 1
       val degDf = edgesDf.groupBy("src").agg(count(lit(1)).cast("long").as("d"))
-      val edgeRdd = edgesDf.join(degDf, "src")
+      val edgeRdd = m.persist(edgesDf.join(degDf, "src")
         .select(col("src"), col("dst"), col("d")).as[(Long, Long, Long)].rdd
         .map { case (src, dst, d) =>
           require(d <= DegMask && dst >= 0 && dst < (1L << (63 - DegBits)),
             s"g01 pack overflow: dst=$dst d=$d")
           (src, (dst << DegBits) | d)
         }
-        .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+        .partitionBy(part))
       edgeRdd.count()
       // (node, degree), co-partitioned with the edges: narrow derivation
       // (keys already grouped by part), no extra shuffle.
-      val nodeDeg = edgeRdd.mapValues(_ & DegMask).reduceByKey(part, (a, _) => a)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nodeDeg = m.persist(edgeRdd.mapValues(_ & DegMask).reduceByKey(part, (a, _) => a))
       val n = nodeDeg.count()
       val base = 150000000000L / n
       var ranks = nodeDeg.mapValues(_ => 1000000000000L / n) // r0, co-partitioned
@@ -433,22 +425,15 @@ object GraphQueries {
         // dangling-node left join is also a narrow zipPartitions
         ranks = nodeDeg.zipPartitions(contrib, preservesPartitioning = true) {
           (ns, cs) =>
-            val m = scala.collection.mutable.LongMap.empty[Long]
-            cs.foreach { kv => m(kv._1) = kv._2 }
-            ns.map { kv => (kv._1, base + (85L * m.getOrElse(kv._1, 0L)) / 100L) }
+            val got = scala.collection.mutable.LongMap.empty[Long]
+            cs.foreach { kv => got(kv._1) = kv._2 }
+            ns.map { kv => (kv._1, base + (85L * got.getOrElse(kv._1, 0L)) / 100L) }
         }
       }
-      // Materialize through a Dataset-level persist (covered by
-      // `spark.catalog.clearCache()`), then drop the loop-side RDD blocks —
-      // same lifecycle discipline as d08.
-      val out = ranks.toDF("node", "rank_scaled")
+      // the scope fills the result, then releases edgeRdd and nodeDeg
+      m.result(ranks.toDF("node", "rank_scaled")
         .orderBy(desc("rank_scaled"), col("node"))
-        .limit(20)
-        .persist()
-      out.count()
-      edgeRdd.unpersist()
-      nodeDeg.unpersist()
-      out
+        .limit(20))
     },
 
     sqlEager(

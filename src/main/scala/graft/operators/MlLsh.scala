@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import graft.sources.Tables
 import graft.operators.Det.r6
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
@@ -20,7 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object MlLsh {
 
-  def knn(s: SparkSession, dir: String, k: Int = 5, nq: Int = 10): DataFrame = {
+  def knn(s: SparkSession, dir: String): DataFrame = {
+    val (k, nq) = (5, 10)
+    val m = Materialize.eager()
     val raw = Tables.embeddings(s, dir)
     // Ingest validation (AnsiEdgeSpec): MLlib's Vector encoder asserts
     // non-null elements and BucketedRandomProjectionLSH requires a uniform
@@ -42,12 +45,11 @@ object MlLsh {
     // internal UDF filters can only ever see validated rows. (MLlib's LSH
     // guide recommends caching the input before approxSimilarityJoin
     // anyway; this materializes the same pass.)
-    val e = raw
+    val e = m.checkpoint(raw
       .filter(col("embedding").isNotNull &&
         size(col("embedding")) === dim &&
         !exists(col("embedding"), _.isNull))
-      .withColumn("features", array_to_vector(col("embedding").cast("array<double>")))
-      .localCheckpoint()
+      .withColumn("features", array_to_vector(col("embedding").cast("array<double>"))))
     val lsh = new BucketedRandomProjectionLSH()
       .setInputCol("features")
       .setOutputCol("hashes")
@@ -66,10 +68,10 @@ object MlLsh {
         col("dist"))
       .filter(col("q_id") =!= col("neighbor_id"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("neighbor_id"))
-    joined
+    m.result(joined
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), r6(col("dist")).as("dist"))
-      .orderBy("q_id", "rnk")
+      .orderBy("q_id", "rnk"))
   }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * registration through GraftExtensions.
   */
 class AggregatorSpec extends SparkSpec {
-  import spark.implicits._
 
   test("TopK aggregator == window-function top-k") {
     val top2 = udaf(new Aggregators.TopK(2))
@@ -56,6 +55,29 @@ class AggregatorSpec extends SparkSpec {
         countDistinct("l_orderkey").as("exact")).head()
     val (approx, exact) = (df.getLong(0), df.getLong(1))
     assert(math.abs(approx - exact).toDouble / exact < 0.05, s"approx=$approx exact=$exact")
+  }
+
+  Seq("sf0.001", "sf0.01").foreach { scale =>
+    test(s"a02 per-group approx distinct counts within 5% of exact at $scale") {
+      def byFlag(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) -> Seq(r.getLong(1), r.getLong(2))).toMap
+      val approx = byFlag(SparkEntry.queries("a02_approx_distinct")(spark, sf(scale)))
+      val exact = byFlag(Tables.lineitem(spark, sf(scale)).groupBy("l_returnflag")
+        .agg(countDistinct("l_partkey"), countDistinct("l_orderkey")))
+      assert(approx.keySet == exact.keySet)
+      for ((flag, ex) <- exact; (a, e) <- approx(flag).zip(ex))
+        assert(math.abs(a - e).toDouble / e < 0.05, s"l_returnflag=$flag: approx=$a exact=$e")
+    }
+
+    test(s"a04 approx median and p99 within 2% of exact percentile at $scale") {
+      val approx = SparkEntry.queries("a04_approx_percentile")(spark, sf(scale)).head()
+      val exact = Tables.orders(spark, sf(scale))
+        .agg(expr("percentile(o_totalprice, array(0.5, 0.99))")).head().getSeq[Double](0)
+      Seq(0 -> "median", 1 -> "p99").foreach { case (i, q) =>
+        val (a, e) = (approx.getDouble(i), exact(i))
+        assert(math.abs(a - e) / e < 0.02, s"$q: approx=$a exact=$e")
+      }
+    }
   }
 
   test("HllDistinct: accuracy, partition-layout independence, linear-counting floor") {

@@ -3,17 +3,19 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** The compact-cache convention (r10 verdict #2): a small expensive result
   * cached at full shuffle parallelism charges every downstream stage the
   * full near-empty task count (cached plans keep their materialized
   * partitioning — AQE shuffle coalescing does not apply to cache scans).
   * The fix pattern lives in [[Materialize.compact]]; these tests pin BOTH
-  * its behavior and the source convention that operators materialize only
-  * through a [[Materialize]] scope — every copurchasePairs consumer
-  * compacts, and no operator persists, unpersists or checkpoints directly —
-  * so a future graph query cannot regress the way r10's g06 did, nor leak
-  * an intermediate past its entry.
+  * its behavior and the source convention that [[Materialize]] is the one
+  * owner of every cache and checkpoint — every copurchasePairs consumer
+  * compacts, and no code under `src/main` outside `Materialize.scala`
+  * persists, unpersists, checkpoints or caches directly, pair-RDD loops
+  * included — so a future graph query cannot regress the way r10's g06
+  * did, nor leak an intermediate past its entry.
   */
 class CompactPersistSpec extends SparkSpec {
 
@@ -40,74 +42,38 @@ class CompactPersistSpec extends SparkSpec {
     } finally compact.unpersist(blocking = false)
   }
 
-  private def source(dir: String, file: String): String =
-    new String(Files.readAllBytes(Paths.get(s"src/main/scala/graft/$dir/$file")), "UTF-8")
-
-  private def operatorSource(file: String): String = source("operators", file)
-
-  private def scalaFiles(dir: String): Seq[String] =
-    new java.io.File(s"src/main/scala/graft/$dir").listFiles()
-      .map(_.getName).filter(_.endsWith(".scala")).sorted.toSeq
-
   /** The non-comment lines of `src`, trimmed, with their 1-based numbers. */
   private def codeLines(src: String): Seq[(Int, String)] =
     src.split("\n").toSeq.zipWithIndex
       .map { case (l, i) => (i + 1, l.trim) }
       .filterNot { case (_, l) => l.startsWith("//") || l.startsWith("*") || l.startsWith("/**") }
 
-  /** Direct materialization calls on non-comment lines. Calls on the scope
-    * itself (`m.persist(...)`) are the sanctioned form and do not count.
-    */
-  private def directCalls(src: String): Seq[String] = {
-    val call = """(?<!\bm)\.(persist|unpersist|localCheckpoint)\(""".r
-    codeLines(src).flatMap { case (_, l) => call.findAllMatchIn(l.split("//").head).map(_ => l) }
+  /** Every `.scala` file under `src/main/scala/graft`, as (path under it, source). */
+  private def mainSources: Seq[(String, String)] = {
+    val root = Paths.get("src/main/scala/graft")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+      .map(p => (root.relativize(p).toString, new String(Files.readAllBytes(p), "UTF-8")))
+    finally walk.close()
   }
 
-  /** The only operator code allowed to materialize directly: the region of
-    * one file from anchor `from` to anchor `to` (or the end of the file),
-    * with the number of direct calls it holds and why.
-    */
-  private case class Allowed(file: String, from: String, to: Option[String], calls: Int,
-      reason: String)
-
-  private val allowlist = Seq(
-    Allowed("GraphQueries.scala", "\"g01_pagerank\",", Some("\"g09_personalized_pagerank\","), 5,
-      "g01's primitive pair-RDD loop persists its partitioned edge and degree RDDs and " +
-        "unpersists them itself once its result is persisted"),
-    Allowed("DedupQueries.scala", "def dupClusters(", Some("def exactNearDups("), 7,
-      "d08's pair-RDD label-propagation loop keeps at most two label generations and " +
-        "unpersists its own RDD blocks once its result is persisted"),
-    Allowed("MlLsh.scala", "object MlLsh", None, 1,
-      "the validation localCheckpoint is a correctness barrier: it keeps MLlib's " +
-        "non-total UDFs from seeing unvalidated rows"))
-
   test("operators materialize only through Materialize (source convention)") {
-    val files = scalaFiles("operators")
-    assert(files.contains("GraphQueries.scala"))
-    val outside = files.flatMap { f =>
-      val src = operatorSource(f)
-      val regions = allowlist.filter(_.file == f).map { a =>
-        val start = src.indexOf(a.from)
-        assert(start >= 0, s"allowlist anchor ${a.from} not found in $f")
-        val end = a.to.map(src.indexOf(_, start)).getOrElse(src.length)
-        assert(end > start, s"allowlist anchor ${a.to} not found after ${a.from} in $f")
-        val n = directCalls(src.substring(start, end)).size
-        assert(n == a.calls,
-          s"$f region ${a.from}: $n direct materialization calls, allowlist says ${a.calls} (${a.reason})")
-        (start, end)
-      }
-      val rest = regions.sorted.foldRight(src) { case ((s, e), acc) =>
-        acc.substring(0, s) + acc.substring(e)
-      }
-      directCalls(rest).map(l => s"$f: $l")
-    }
-    assert(outside.isEmpty,
-      "direct materialization outside the allowlist — route it through the entry's " +
-        s"Materialize scope:\n${outside.mkString("\n")}")
+    // Materialize.scala is the one owner; everywhere else a persist,
+    // unpersist, checkpoint or cache() is a call on the scope (`m.`)
+    val call = """(?<!\bm)\.(persist|unpersist|localCheckpoint|checkpoint)\(|(?<!\bm)\.cache\(\)""".r
+    val files = mainSources.filterNot(_._1 == "Materialize.scala")
+    val direct = for {
+      (f, src) <- files
+      (n, l) <- codeLines(src)
+      if call.findFirstIn(l.split("//").head).isDefined
+    } yield s"$f:$n: $l"
+    assert(direct.isEmpty,
+      "direct materialization outside Materialize — route it through the entry's " +
+        s"Materialize scope:\n${direct.mkString("\n")}")
 
     // every copurchasePairs consumer caches the thresholded edge list
     // compactly (the r10 g06 regression class)
-    val src = operatorSource("GraphQueries.scala")
+    val src = files.collectFirst { case ("operators/GraphQueries.scala", g) => g }.get
     val calls = "copurchasePairs\\(s, dir\\)".r.findAllMatchIn(src).toList
     assert(calls.nonEmpty, "expected copurchasePairs call sites in GraphQueries")
     val bare = calls.filterNot { c =>
@@ -122,11 +88,11 @@ class CompactPersistSpec extends SparkSpec {
     // an entry's answer depends only on its inputs and its session conf
     val read = """\b(sys\.env|System\.getenv|sys\.props)\b""".r
     val hits = for {
-      dir <- Seq("operators", "streaming")
-      f <- scalaFiles(dir)
-      (n, l) <- codeLines(source(dir, f))
+      (f, src) <- mainSources
+      if f.startsWith("operators/") || f.startsWith("streaming/")
+      (n, l) <- codeLines(src)
       if read.findFirstIn(l.split("//").head).isDefined
-    } yield s"$dir/$f:$n: $l"
+    } yield s"$f:$n: $l"
     assert(hits.isEmpty,
       s"operator/streaming code reads the environment — pass it as a parameter or " +
         s"a session conf instead:\n${hits.mkString("\n")}")

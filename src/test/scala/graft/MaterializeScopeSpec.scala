@@ -12,8 +12,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * PlanAudit and PlanDump read. The twin must also return the eager `fn`'s
   * rows, and the eager scope must release every intermediate cache and
   * checkpoint, so only the result's own cache is left once `fn` returns.
-  * Entries whose loops stop on a data-dependent fixpoint own an eager scope
-  * with no twin; the same release contract holds for them.
+  * Entries whose loops stop on a data-dependent fixpoint or run on pair
+  * RDDs own an eager scope with no twin; the same release contract holds
+  * for them.
   */
 class MaterializeScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -77,9 +78,12 @@ class MaterializeScopeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  // fixpoint loops (g03, g11), s07's k-means rounds and t24/t25's BPE
-  // training own an eager scope inside fn and declare no twin
-  Seq("g03_kcore", "g11_truss", "s07_kmeans_centroids", "t24_bpe_merges", "t25_bpe_segment")
+  // fixpoint loops (g03, g11), the pair-RDD loops (g01, and d08 with its
+  // p06/d18 consumers), s06's validation barrier, s07's k-means rounds and
+  // t24/t25's BPE training own an eager scope inside fn and declare no twin
+  Seq("g01_pagerank", "g03_kcore", "g11_truss", "d08_dup_clusters", "p06_cluster_representative",
+    "d18_cluster_size_histogram", "s06_knn_mllib_lsh", "s07_kmeans_centroids", "t24_bpe_merges",
+    "t25_bpe_segment")
     .foreach { name =>
       test(s"$name: fn's own scope leaves only its result cached") {
         spark.catalog.clearCache()

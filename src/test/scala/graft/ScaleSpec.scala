@@ -34,7 +34,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("AQE splits a skewed sort-merge join at runtime") {
-    import spark.implicits._
     val confs = Map(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",

@@ -186,7 +186,8 @@ class SimilarityRecallSpec extends SparkSpec {
   test("dup clusters agree with the pairwise near-dup graph") {
     val pairs = SparkEntry.queries("d06_embedding_sim_pairs")(spark, sf0001)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val clusters = DedupQueries.dupClusters(spark, sf0001)
+    val m = Materialize.eager()
+    val clusters = m.result(DedupQueries.dupClusters(spark, sf0001, m))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pairs.nonEmpty)
     pairs.foreach { case (a, b) =>

@@ -11,16 +11,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The tools' own session at `local[8]`, so specs run under the conf,
+    * log filter and checkpoint file manager every main gets.
+    */
+  lazy val session: SparkSession = GraftSession.build("8")
 }

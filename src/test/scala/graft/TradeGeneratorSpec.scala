@@ -1,7 +1,6 @@
 package graft
 
 import graft.model.{StockTrade, TradeGenerator}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Distribution invariants from the reference generator
   * (`StockTradeGenerator.java:47-83`), under a fixed seed, plus the two
